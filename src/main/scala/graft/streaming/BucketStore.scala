@@ -47,7 +47,15 @@ import org.apache.spark.sql.types.StructType
   * manifest — a crash anywhere below it leaves an invisible partial
   * dir that the replayed batch deletes and rewrites; a crash between
   * the marker and the streaming offset log is the replay-skip case
-  * ([[replaySkip]]). Versions are vacuumed only when NO retained
+  * ([[StreamMerge.replaySkip]]). A commit is two calls, stage then
+  * publish ([[stageVersion]] writes data + manifest, [[publishVersion]]
+  * the marker; [[writeVersion]] is the two back to back), so a caller
+  * that owns two stores can stage one, commit the other, and publish
+  * the first only then: a [[StreamMatview]] trigger stages its
+  * snapshot merge on a second driver thread while it folds and
+  * commits the view, and publishes the snapshot marker strictly after
+  * the view's — the aggregate-first order, with the two halves'
+  * work overlapped. Versions are vacuumed only when NO retained
   * manifest references their buckets, so a seed version that still
   * owns cold buckets outlives `retain` by design (its superseded
   * buckets are the compaction story — [[graft.ext.Layout.compact]]
@@ -93,11 +101,13 @@ object BucketStore {
     * Callers whose batches are large enough to want runtime
     * coalescing/skew handling back set spark.graft.microbatch.aqe=true
     * (the operators still run correctly either way — this toggles plan
-    * mechanics only). Deliberately NOT used around
-    * [[graft.streaming.StreamMatview.applyBatchMinMax]]'s view fold:
-    * mergeAggMinMax's no-retraction path relies on AQE's
-    * empty-relation propagation to collapse the full-store recompute
-    * scan (PlanShapeSpec pins that collapse).
+    * mechanics only). Every maintenance body is wrapped, the min/max
+    * fold included: [[graft.ext.Changelog.mergeAggMinMax]] gates its
+    * recompute branch itself (eager checkpoint + retraction test, pinned
+    * by PlanShapeSpec's poisoned-source test), so it no longer leans on
+    * AQE's empty-relation propagation. A matview trigger's snapshot
+    * merge thread runs inside its caller's bracket and opens none of
+    * its own.
     */
   private[graft] def noAqe[A](spark: SparkSession)(body: => A): A = {
     if (spark.conf.getOption("spark.graft.microbatch.aqe").contains("true")) body
@@ -332,10 +342,10 @@ object BucketStore {
   /** Commit `df` as version `id`: write its rows partitioned by
     * `bucketOf(key)`, merge the bucket map (buckets actually written
     * take owner `id`, the rest keep their previous owner), then the
-    * marker. `df` must hold the COMPLETE new content of every bucket
-    * it touches — for a merge that is `mergeBatch(touched-buckets
-    * read, batch)`. Deletes any uncommitted leftover of `id` first
-    * (the replay-overwrite window).
+    * marker — [[stageVersion]] then [[publishVersion]]. `df` must hold
+    * the COMPLETE new content of every bucket it touches — for a merge
+    * that is `mergeBatch(touched-buckets read, batch)`. Deletes any
+    * uncommitted leftover of `id` first (the replay-overwrite window).
     *
     * `batch` is the ingest watermark the manifest records (defaults
     * to `id` — the streaming case, where this version IS batch `id`);
@@ -348,21 +358,32 @@ object BucketStore {
   def writeVersion(df: DataFrame, storeDir: String, id: Long, key: Column,
                    nBuckets: Int, batch: Option[Long] = None,
                    claim: Set[Long] = Set.empty,
-                   note: Option[String] = None): Unit =
-    writeVersionImpl(df, storeDir, id, key, nBuckets, batch, claim,
-      migrating = false, note = note)
+                   note: Option[String] = None): Unit = {
+    stageVersion(df, storeDir, id, key, nBuckets, batch, claim, note)
+    publishVersion(df.sparkSession, storeDir, id)
+  }
 
-  /** Shared body of [[writeVersion]] and [[rebucket]]'s migration
-    * commit. `migrating = true` relaxes the fixed-bucket-count
-    * invariant for ONE version and drops the previous manifest's
-    * owners instead of merging them — old-count bucket ids are
-    * meaningless under the new count, and carrying them would make
-    * [[read]] double-read rows through stale entries.
+  /** The first half of [[writeVersion]]: the data and the manifest of
+    * version `id`, WITHOUT the marker — a staged version is invisible
+    * to every reader, to [[versions]] and to [[vacuum]] until
+    * [[publishVersion]] runs, and a replay that never publishes it
+    * deletes it on its own stage (the leftover delete below). The
+    * manifest carries the owners of the latest COMMITTED version, so
+    * nothing may commit to `storeDir` between the stage and the
+    * publish (the one-writer contract).
+    *
+    * `migrating = true` ([[rebucket]]'s migration commit) relaxes the
+    * fixed-bucket-count invariant for ONE version and drops the
+    * previous manifest's owners instead of merging them — old-count
+    * bucket ids are meaningless under the new count, and carrying
+    * them would make [[read]] double-read rows through stale entries.
     */
-  private def writeVersionImpl(df: DataFrame, storeDir: String, id: Long,
-                               key: Column, nBuckets: Int, batch: Option[Long],
-                               claim: Set[Long], migrating: Boolean,
-                               note: Option[String] = None): Unit = {
+  private[graft] def stageVersion(df: DataFrame, storeDir: String, id: Long,
+                                  key: Column, nBuckets: Int,
+                                  batch: Option[Long] = None,
+                                  claim: Set[Long] = Set.empty,
+                                  note: Option[String] = None,
+                                  migrating: Boolean = false): Unit = {
     require(nBuckets >= 1, s"nBuckets=$nBuckets must be positive")
     val spark = df.sparkSession
     require(!df.columns.contains(BucketCol),
@@ -412,6 +433,19 @@ object BucketStore {
       written.map(_ -> id)
     writeManifest(spark, storeDir, id,
       Manifest(nBuckets, df.schema, owners, batch.getOrElse(id), note))
+  }
+
+  /** The second half of [[writeVersion]]: the `_SUCCESS` marker that
+    * makes the staged version `id` exist. Refuses a version that was
+    * never staged (no manifest), so a marker can never point at a
+    * half-written dir.
+    */
+  private[graft] def publishVersion(spark: SparkSession, storeDir: String,
+                                    id: Long): Unit = {
+    val (fs, _) = fsOf(spark, storeDir)
+    val vdir = new org.apache.hadoop.fs.Path(versionDir(storeDir, id))
+    require(fs.exists(new org.apache.hadoop.fs.Path(vdir, "manifest")),
+      s"version $id under $storeDir was never staged")
     fs.create(new org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), true).close()
   }
 
@@ -472,8 +506,9 @@ object BucketStore {
     val m = readManifest(spark, storeDir, v)
     if (m.nBuckets == newBuckets) return // already migrated (crash re-run)
     val cur = read(spark, storeDir).get
-    writeVersionImpl(cur, storeDir, v + 1, col(keyCol), newBuckets,
-      batch = Some(m.batch), claim = Set.empty, migrating = true)
+    stageVersion(cur, storeDir, v + 1, col(keyCol), newBuckets,
+      batch = Some(m.batch), migrating = true)
+    publishVersion(spark, storeDir, v + 1)
     vacuum(spark, storeDir, retain)
   }
 

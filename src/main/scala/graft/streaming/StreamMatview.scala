@@ -37,6 +37,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    ZERO ([[Changelog.aggDelta]]'s max_by argument), so even a
   *    double-applied delta of a replayed batch is a no-op, not a
   *    double-count.
+  *
+  * The order is kept per trigger as stage → view commit → publish,
+  * which lets the two halves' work overlap: after the probe, the
+  * touched buckets' pre-image is read once (persisted) for both; a
+  * second driver thread STAGES the snapshot merge from it (data +
+  * manifest, no `_SUCCESS` — [[BucketStore.stageVersion]]) while the
+  * calling thread folds and commits the view; only after the view's
+  * `_SUCCESS` does the trigger join the thread and publish the
+  * snapshot's marker ([[BucketStore.publishVersion]]). A crash
+  * before the view commit leaves the staged snapshot dir invisible
+  * (the replay deletes and re-stages it); a crash between the two
+  * markers is the aggregate-ahead window above.
   */
 object StreamMatview {
 
@@ -69,8 +81,8 @@ object StreamMatview {
   }
 
   /** Apply one changelog microbatch to the view and the snapshot
-    * store, in that order — the foreachBatch body, public for reuse
-    * and direct testing.
+    * store — the view published first — as the foreachBatch body,
+    * public for reuse and direct testing.
     */
   def applyBatch(batch: DataFrame, id: Long, storeDir: String, aggDir: String,
                  keyCol: String, opCol: String, seqCols: Seq[String],
@@ -78,104 +90,167 @@ object StreamMatview {
                  nCol: String = "n", sumCol: String = "sum",
                  retain: Int = 2,
                  nBuckets: Int = BucketStore.DefaultBuckets,
-                 maxBroadcastKeys: Long = 10000000L): Unit = {
+                 maxBroadcastKeys: Long = 10000000L): Unit =
+    trigger(batch, id, storeDir, aggDir, keyCol, opCol, seqCols, dims.head,
+      retain, nBuckets, maxBroadcastKeys, "matview", "view commit", "seed",
+      Changelog.aggSnapshot(batch.limit(0), opCol, dims, valCol, nCol = nCol,
+        sumCol = sumCol)) { (storeTouched, agg) =>
+      val delta = Changelog.aggDelta(storeTouched, batch, keyCol, opCol,
+        seqCols, dims, valCol, nCol = nCol, sumCol = sumCol,
+        maxBroadcastKeys = 0L) // guarded by the probe job
+      Changelog.mergeAggDelta(agg, delta, dims, nCol, sumCol)
+    }
+
+  /** The trigger the three applyBatch flavours share: the two-store,
+    * aggregate-first, exactly-once protocol of the object doc, with
+    * the flavour's view fold as `fold(storeTouched, agg)` → the view's
+    * new content.
+    *
+    * One probe job (touched buckets, broadcast-guard pre-count and the
+    * exchange-sizing key count), then ONE persisted read of the
+    * touched buckets' pre-batch content, shared by both halves: a
+    * second driver thread stages the snapshot merge from it
+    * ([[StreamMerge.stageMerge]] — data + manifest, no marker) while
+    * this thread folds and commits the view; then the trigger joins
+    * the thread, publishes the snapshot's marker, and vacuums. The
+    * thread inherits this thread's local properties (the stream's job
+    * group, so a query stop cancels its jobs too, and any caller
+    * tags), runs inside this trigger's `noAqe`/`withShufflePartitions`
+    * bracket, and labels its jobs `<tag> b<id>: snapshot merge`.
+    *
+    * A view already at `id` (a crash between the two commits) replays
+    * the snapshot half alone through [[StreamMerge.applyBatch]].
+    * `foldPhase` labels the fold's jobs; `emptyView` is the view of
+    * an unseeded pair; `seedName` names the seed call in the error for
+    * a seeded snapshot with no view.
+    */
+  private def trigger(batch: DataFrame, id: Long, storeDir: String,
+                      aggDir: String, keyCol: String, opCol: String,
+                      seqCols: Seq[String], viewKey: String, retain: Int,
+                      nBuckets: Int, maxBroadcastKeys: Long, tag: String,
+                      foldPhase: String, seedName: String,
+                      emptyView: => DataFrame)
+                     (fold: (DataFrame, DataFrame) => DataFrame): Unit = {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
-    var probed: Option[Set[Long]] = None
-    var keyCount = -1L
-    var guarded = false
+    if (StreamMerge.replaySkip(spark, aggDir, id)) {
+      StreamMerge.applyBatch(batch, id, storeDir, keyCol, opCol, seqCols,
+        retain, nBuckets, maxBroadcastKeys)
+      return
+    }
+    val sc = spark.sparkContext
     // one persist for the WHOLE trigger: the batch feeds the probe,
-    // the delta (latest + guard pre-count), and then every consumer
-    // inside the snapshot merge — re-reading the source slice per
+    // the fold and the merge — re-reading the source slice per
     // consumer is the repeated I/O this removes
     batch.persist()
     try BucketStore.noAqe(spark) {
-      if (!StreamMerge.replaySkip(spark, aggDir, id)) {
-        requirePurgeSettled(spark, storeDir, aggDir)
-        // the delta needs the PRE-batch snapshot — guaranteed by the
-        // aggregate-first commit order; a snapshot already at/above
-        // this batch means the two stores were driven independently
-        require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
-          s"snapshot store $storeDir already absorbed batch $id but the view " +
-            s"$aggDir has not — the stores were driven out of order; drive " +
-            "both through StreamMatview only")
-        val sv = BucketStore.latestVersion(spark, storeDir)
-        val nb = sv
-          .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
-          .getOrElse(nBuckets)
-        spark.sparkContext.setJobDescription(s"matview b$id: probe")
-        // probe, broadcast-guard pre-count, and the exchange-sizing
-        // key count in ONE job (the fold and the merge below both
-        // skip their own guard counts, and every exchange this
-        // trigger runs is sized to the count)
-        val (touched, nKeys) =
-          BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
-        require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
-          s"batch has more than $maxBroadcastKeys distinct keys — too large " +
-            "to broadcast against the store; split the batch (or raise " +
-            "maxBroadcastKeys)")
-        // the probe is only reusable downstream if the snapshot store
-        // will bucket at the same count (it will: nb IS its count)
-        probed = Some(touched)
-        keyCount = nKeys
-        BucketStore.withShufflePartitions(spark,
-          BucketStore.microbatchPartitions(spark, nKeys)) {
+      requirePurgeSettled(spark, storeDir, aggDir)
+      // the fold needs the PRE-batch snapshot — guaranteed by the
+      // aggregate-first commit order; a snapshot already at/above
+      // this batch means the two stores were driven independently
+      require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
+        s"snapshot store $storeDir already absorbed batch $id but the view " +
+          s"$aggDir has not — the stores were driven out of order; drive " +
+          "both through StreamMatview only")
+      val sv = BucketStore.latestVersion(spark, storeDir)
+      val nb = StreamMerge.bucketCount(spark, storeDir, nBuckets)
+      sc.setJobDescription(s"$tag b$id: probe")
+      val (touched, nKeys) =
+        BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
+      require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
+        s"batch has more than $maxBroadcastKeys distinct keys — too large " +
+          "to broadcast against the store; split the batch (or raise " +
+          "maxBroadcastKeys)")
+      BucketStore.withShufflePartitions(spark,
+        BucketStore.microbatchPartitions(spark, nKeys)) {
         val storeTouched = BucketStore.read(spark, storeDir, Some(touched))
-          .getOrElse(batch.limit(0)) // unseeded snapshot store
-        // trigger-scoped persist: the delta references the pre-images
-        // under two exchanges (winner max_by + the -1 side of the
-        // telescoping union) — one touched-bucket scan, not two
+          .getOrElse(batch.limit(0))
+        // trigger-scoped persist: the fold references the pre-image under
+        // two exchanges (winner max_by + the -1 side of the signed
+        // union) and the merge under two more (anti + semi join) — one
+        // touched-bucket scan for all four
         storeTouched.persist()
-        val agg = BucketStore.read(spark, aggDir).getOrElse {
-          // both stores unseeded: start the view empty (right shape).
-          // A SEEDED snapshot with an unseeded view must fail loudly:
-          // the empty fallback would start the fold at zero and the
-          // seed's contributions would be missing from every state
-          // the telescoping invariant can ever reach.
-          require(sv.isEmpty,
-            s"snapshot store $storeDir has committed versions but the view " +
-              s"$aggDir has none — an empty-view fallback would permanently " +
-              "drop the snapshot seed's contributions; seed both stores " +
-              "through StreamMatview.seed")
-          Changelog.aggSnapshot(batch.limit(0), opCol, dims, valCol,
-            nCol = nCol, sumCol = sumCol)
-        }
-        spark.sparkContext.setJobDescription(s"matview b$id: view commit")
-        val delta = Changelog.aggDelta(storeTouched, batch, keyCol, opCol,
-          seqCols, dims, valCol, nCol = nCol, sumCol = sumCol,
-          maxBroadcastKeys = 0L) // guarded by the probe job above
-        guarded = maxBroadcastKeys > 0
-        val av = BucketStore.latestVersion(spark, aggDir)
-        // claim bucket 0 (the aggregate's only bucket): a batch that
-        // drives every dim's n to 0 writes NO rows, and an unclaimed
-        // commit would leave the previous version as bucket owner —
-        // viewSnapshot would silently serve the stale pre-batch
-        // aggregate and every later delta would fold onto wrong state
-        // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
-        try BucketStore.writeVersion(
-          Changelog.mergeAggDelta(agg, delta, dims, nCol, sumCol),
-          aggDir, av.map(_ + 1L).getOrElse(id), col(dims.head), nBuckets = 1,
-          batch = Some(id), claim = Set(0L))
-        finally storeTouched.unpersist(false)
-        BucketStore.vacuum(spark, aggDir, retain)
-        }
+        try {
+          val staged = alongside(spark, s"$tag b$id: snapshot merge") {
+            StreamMerge.stageMerge(storeTouched, batch, id, storeDir, keyCol,
+              opCol, seqCols, nb)
+          } {
+            val agg = BucketStore.read(spark, aggDir).getOrElse {
+              // both stores unseeded: start the view empty (right shape).
+              // A SEEDED snapshot with an unseeded view must fail loudly:
+              // the empty fallback would start the fold at zero and the
+              // seed's contributions would be missing from every state
+              // the telescoping invariant can ever reach.
+              require(sv.isEmpty,
+                s"snapshot store $storeDir has committed versions but the view " +
+                  s"$aggDir has none — an empty-view fallback would permanently " +
+                  "drop the snapshot seed's contributions; seed both stores " +
+                  s"through StreamMatview.$seedName")
+              emptyView
+            }
+            val av = BucketStore.latestVersion(spark, aggDir)
+            sc.setJobDescription(s"$tag b$id: $foldPhase")
+            val folded = fold(storeTouched, agg)
+            sc.setJobDescription(s"$tag b$id: view commit")
+            // claim bucket 0 (the aggregate's only bucket): a batch that
+            // drives every dim's n to 0 writes NO rows, and an unclaimed
+            // commit would leave the previous version as bucket owner —
+            // viewSnapshot would silently serve the stale pre-batch
+            // aggregate and every later delta would fold onto wrong state
+            // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
+            BucketStore.writeVersion(folded, aggDir, av.map(_ + 1L).getOrElse(id),
+              col(viewKey), nBuckets = 1, batch = Some(id), claim = Set(0L))
+            BucketStore.vacuum(spark, aggDir, retain)
+          }
+          // strictly after the view's marker: aggregate-first
+          BucketStore.publishVersion(spark, storeDir, staged)
+        } finally storeTouched.unpersist(false)
       }
-      spark.sparkContext.setJobDescription(s"matview b$id: snapshot merge")
-      // the probe already pre-counted THIS batch's distinct keys at
-      // the same cap, so the merge skips its duplicate guard — and
-      // sizes its exchanges from the same count
-      StreamMerge.applyBatch(batch, id, storeDir, keyCol, opCol, seqCols,
-        retain, nBuckets, touchedHint = probed, managePersist = false,
-        maxBroadcastKeys = if (guarded) 0L else maxBroadcastKeys,
-        keyCountHint = keyCount)
     } finally {
       // clear the thread-local phase label HERE, not on the success
       // path: a throwing fold would otherwise leak a stale label onto
       // every later job scheduled from this stream thread
-      spark.sparkContext.setJobDescription(null)
+      sc.setJobDescription(null)
       batch.unpersist(false)
     }
+    BucketStore.vacuum(spark, storeDir, retain)
+  }
+
+  /** Run `side` on a new driver thread whose jobs carry the description
+    * `label` while `main` runs on this one, and return `side`'s result
+    * once both are done. The thread is joined even when `main` throws
+    * (then `main`'s exception wins, `side`'s result is dropped and its
+    * failure, if any, is attached as suppressed), and even when this
+    * thread is interrupted meanwhile (the interrupt is re-asserted
+    * after the join), so no job of the trigger outlives it.
+    */
+  private def alongside[A](spark: SparkSession, label: String)(side: => A)
+                          (main: => Unit): A = {
+    val sc = spark.sparkContext
+    @volatile var result: Either[Throwable, A] = null
+    val t = new Thread(() => {
+      sc.setJobDescription(label)
+      try result = Right(side)
+      catch { case e: Throwable => result = Left(e) }
+      finally sc.setJobDescription(null)
+    }, label)
+    t.setDaemon(true)
+    t.start()
+    def join(): Unit = {
+      var interrupted = false
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    try main catch {
+      case e: Throwable =>
+        join()
+        result.left.foreach(e.addSuppressed)
+        throw e
+    }
+    join()
+    result.fold(e => throw e, identity)
   }
 
   /** Order-independent fingerprint of a purge's distinct key list —
@@ -298,8 +373,9 @@ object StreamMatview {
     * from the TOUCHED buckets, but a batch that retracts a dim's
     * boundary recomputes that dim from the FULL store read
     * (`recomputeStore` — an affected dim's other rows live in every
-    * bucket); a batch that retracts nothing broadcasts an empty dim
-    * list and AQE collapses the recompute scan. Re-delivered batches
+    * bucket); a batch that retracts nothing commits a plan with no
+    * store scan at all (the fold checkpoints its state and tests for
+    * retractions before it builds the recompute branch). Re-delivered batches
     * stay idempotent (count/sum delta zero; min/max recompute lands on
     * identical values — ChangelogSpec pins both).
     */
@@ -311,93 +387,25 @@ object StreamMatview {
                        minCol: String = "min", maxCol: String = "max",
                        retain: Int = 2,
                        nBuckets: Int = BucketStore.DefaultBuckets,
-                       maxBroadcastKeys: Long = 10000000L): Unit = {
-    require(retain >= 1,
-      s"retain=$retain: the vacuum must keep at least the version just written")
-    val spark = batch.sparkSession
-    var probed: Option[Set[Long]] = None
-    var keyCount = -1L
-    var guarded = false
-    batch.persist()
-    // noAqe joined the sketch/count-sum twins in round 16:
-    // mergeAggMinMax's no-retraction path no longer relies on AQE's
-    // empty-relation propagation — the fold gates the recompute
-    // branch itself (eager checkpoint + retraction test; PlanShapeSpec
-    // pins it with a poisoned source), so AQE has nothing structural
-    // left to decide here either.
-    try BucketStore.noAqe(spark) {
-      if (!StreamMerge.replaySkip(spark, aggDir, id)) {
-        requirePurgeSettled(spark, storeDir, aggDir)
-        require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
-          s"snapshot store $storeDir already absorbed batch $id but the view " +
-            s"$aggDir has not — the stores were driven out of order; drive " +
-            "both through StreamMatview only")
-        val sv = BucketStore.latestVersion(spark, storeDir)
-        val nb = sv
-          .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
-          .getOrElse(nBuckets)
-        spark.sparkContext.setJobDescription(s"matview-minmax b$id: probe")
-        // probe, broadcast-guard pre-count, and the exchange-sizing
-        // key count in ONE job (the fold and the merge below both
-        // skip their own guard counts)
-        val (touched, nKeys) =
-          BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
-        require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
-          s"batch has more than $maxBroadcastKeys distinct keys — too large " +
-            "to broadcast against the store; split the batch (or raise " +
-            "maxBroadcastKeys)")
-        probed = Some(touched)
-        keyCount = nKeys
-        BucketStore.withShufflePartitions(spark,
-          BucketStore.microbatchPartitions(spark, nKeys)) {
-        val storeTouched = BucketStore.read(spark, storeDir, Some(touched))
-          .getOrElse(batch.limit(0))
-        // trigger-scoped persist: the fused fold references the
-        // pre-images under two exchanges (winner max_by + the -1 side
-        // of the signed union) — one touched-bucket scan, not two
-        storeTouched.persist()
+                       maxBroadcastKeys: Long = 10000000L): Unit =
+    trigger(batch, id, storeDir, aggDir, keyCol, opCol, seqCols, dims.head,
+      retain, nBuckets, maxBroadcastKeys, "matview-minmax", "view commit",
+      "seedMinMax",
+      Changelog.aggSnapshotMinMax(batch.limit(0), opCol, dims, valCol,
+        nCol = nCol, sumCol = sumCol, minCol = minCol, maxCol = maxCol)) {
+      (storeTouched, agg) =>
         // the RETRACTION-ONLY recompute source: a lazy plan
         // mergeAggMinMax never executes (or references) on the
-        // no-retraction path
-        val storeFull = BucketStore.read(spark, storeDir)
+        // no-retraction path. Bound to the PRE-batch version: the
+        // snapshot merge running alongside is staged, not published.
+        val storeFull = BucketStore.read(batch.sparkSession, storeDir)
           .getOrElse(batch.limit(0))
-        val agg = BucketStore.read(spark, aggDir).getOrElse {
-          require(sv.isEmpty,
-            s"snapshot store $storeDir has committed versions but the view " +
-              s"$aggDir has none — an empty-view fallback would permanently " +
-              "drop the snapshot seed's contributions; seed both stores " +
-              "through StreamMatview.seedMinMax")
-          Changelog.aggSnapshotMinMax(batch.limit(0), opCol, dims, valCol,
-            nCol = nCol, sumCol = sumCol, minCol = minCol, maxCol = maxCol)
-        }
-        val av = BucketStore.latestVersion(spark, aggDir)
-        spark.sparkContext.setJobDescription(s"matview-minmax b$id: view commit")
-        try BucketStore.writeVersion(
-          Changelog.mergeAggMinMax(agg, storeTouched, batch, keyCol, opCol,
-            seqCols, dims, valCol, nCol = nCol, sumCol = sumCol,
-            minCol = minCol, maxCol = maxCol,
-            maxBroadcastKeys = 0L, // guarded by the probe job above
-            recomputeStore = Some(storeFull)),
-          aggDir, av.map(_ + 1L).getOrElse(id), col(dims.head), nBuckets = 1,
-          batch = Some(id), claim = Set(0L))
-        finally storeTouched.unpersist(false)
-        guarded = maxBroadcastKeys > 0
-        BucketStore.vacuum(spark, aggDir, retain)
-        }
-      }
-      spark.sparkContext.setJobDescription(s"matview-minmax b$id: snapshot merge")
-      StreamMerge.applyBatch(batch, id, storeDir, keyCol, opCol, seqCols,
-        retain, nBuckets, touchedHint = probed, managePersist = false,
-        maxBroadcastKeys = if (guarded) 0L else maxBroadcastKeys,
-        keyCountHint = keyCount)
-    } finally {
-      // clear the thread-local phase label HERE, not on the success
-      // path: a throwing fold would otherwise leak a stale label onto
-      // every later job scheduled from this stream thread
-      spark.sparkContext.setJobDescription(null)
-      batch.unpersist(false)
+        Changelog.mergeAggMinMax(agg, storeTouched, batch, keyCol, opCol,
+          seqCols, dims, valCol, nCol = nCol, sumCol = sumCol,
+          minCol = minCol, maxCol = maxCol,
+          maxBroadcastKeys = 0L, // guarded by the probe job
+          recomputeStore = Some(storeFull))
     }
-  }
 
   /** [[start]]'s MIN/MAX twin. */
   def startMinMax(changelog: DataFrame, storeDir: String, aggDir: String,
@@ -469,89 +477,24 @@ object StreamMatview {
                        minCol: String = "min", maxCol: String = "max",
                        retain: Int = 2,
                        nBuckets: Int = BucketStore.DefaultBuckets,
-                       maxBroadcastKeys: Long = 10000000L): Unit = {
-    require(retain >= 1,
-      s"retain=$retain: the vacuum must keep at least the version just written")
-    val spark = batch.sparkSession
-    var probed: Option[Set[Long]] = None
-    var keyCount = -1L
-    var guarded = false
-    batch.persist()
-    try BucketStore.noAqe(spark) {
-      if (!StreamMerge.replaySkip(spark, aggDir, id)) {
-        requirePurgeSettled(spark, storeDir, aggDir)
-        require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
-          s"snapshot store $storeDir already absorbed batch $id but the view " +
-            s"$aggDir has not — the stores were driven out of order; drive " +
-            "both through StreamMatview only")
-        val sv = BucketStore.latestVersion(spark, storeDir)
-        val nb = sv
-          .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
-          .getOrElse(nBuckets)
-        spark.sparkContext.setJobDescription(s"matview-sketch b$id: probe")
-        // probe, broadcast-guard pre-count, and the exchange-sizing
-        // key count in ONE job (the fold and the merge below both
-        // skip their own guard counts)
-        val (touched, nKeys) =
-          BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
-        require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
-          s"batch has more than $maxBroadcastKeys distinct keys — too large " +
-            "to broadcast against the store; split the batch (or raise " +
-            "maxBroadcastKeys)")
-        probed = Some(touched)
-        keyCount = nKeys
-        BucketStore.withShufflePartitions(spark,
-          BucketStore.microbatchPartitions(spark, nKeys)) {
-        val storeTouched = BucketStore.read(spark, storeDir, Some(touched))
-          .getOrElse(batch.limit(0))
-        // trigger-scoped persist: the fused fold references the
-        // pre-images under two exchanges (winner max_by + the -1 side
-        // of the signed union) — one touched-bucket scan, not two
-        storeTouched.persist()
-        // the DRAIN-ONLY rebuild source: a lazy plan mergeAggSketch
-        // never executes (or references) on the no-drain path
-        val storeFull = BucketStore.read(spark, storeDir)
-          .getOrElse(batch.limit(0))
-        val agg = BucketStore.read(spark, aggDir).getOrElse {
-          require(sv.isEmpty,
-            s"snapshot store $storeDir has committed versions but the view " +
-              s"$aggDir has none — an empty-view fallback would permanently " +
-              "drop the snapshot seed's contributions; seed both stores " +
-              "through StreamMatview.seedSketch")
-          Changelog.aggSnapshotSketch(batch.limit(0), opCol, dims, valCol,
-            k = k, nCol = nCol, sumCol = sumCol, minCol = minCol,
-            maxCol = maxCol)
-        }
-        val av = BucketStore.latestVersion(spark, aggDir)
-        spark.sparkContext.setJobDescription(s"matview-sketch b$id: fold")
-        try {
-          val folded = Changelog.mergeAggSketch(agg, storeTouched, batch,
-            keyCol, opCol, seqCols, dims, valCol, k = k, nCol = nCol,
-            sumCol = sumCol, minCol = minCol, maxCol = maxCol,
-            maxBroadcastKeys = 0L, // guarded by the probe job above
-            recomputeStore = Some(storeFull))
-          guarded = maxBroadcastKeys > 0
-          spark.sparkContext.setJobDescription(s"matview-sketch b$id: view commit")
-          BucketStore.writeVersion(folded,
-            aggDir, av.map(_ + 1L).getOrElse(id), col(dims.head), nBuckets = 1,
-            batch = Some(id), claim = Set(0L))
-        } finally storeTouched.unpersist(false)
-        BucketStore.vacuum(spark, aggDir, retain)
-        }
-      }
-      spark.sparkContext.setJobDescription(s"matview-sketch b$id: snapshot merge")
-      StreamMerge.applyBatch(batch, id, storeDir, keyCol, opCol, seqCols,
-        retain, nBuckets, touchedHint = probed, managePersist = false,
-        maxBroadcastKeys = if (guarded) 0L else maxBroadcastKeys,
-        keyCountHint = keyCount)
-    } finally {
-      // clear the thread-local phase label HERE, not on the success
-      // path: a throwing fold would otherwise leak a stale label onto
-      // every later job scheduled from this stream thread
-      spark.sparkContext.setJobDescription(null)
-      batch.unpersist(false)
+                       maxBroadcastKeys: Long = 10000000L): Unit =
+    trigger(batch, id, storeDir, aggDir, keyCol, opCol, seqCols, dims.head,
+      retain, nBuckets, maxBroadcastKeys, "matview-sketch", "fold",
+      "seedSketch",
+      Changelog.aggSnapshotSketch(batch.limit(0), opCol, dims, valCol,
+        k = k, nCol = nCol, sumCol = sumCol, minCol = minCol,
+        maxCol = maxCol)) { (storeTouched, agg) =>
+      // the DRAIN-ONLY rebuild source: a lazy plan mergeAggSketch never
+      // executes (or references) on the no-drain path; pre-batch, as
+      // for the min/max fold
+      val storeFull = BucketStore.read(batch.sparkSession, storeDir)
+        .getOrElse(batch.limit(0))
+      Changelog.mergeAggSketch(agg, storeTouched, batch,
+        keyCol, opCol, seqCols, dims, valCol, k = k, nCol = nCol,
+        sumCol = sumCol, minCol = minCol, maxCol = maxCol,
+        maxBroadcastKeys = 0L, // guarded by the probe job
+        recomputeStore = Some(storeFull))
     }
-  }
 
   /** [[start]]'s SKETCHED twin. */
   def startSketch(changelog: DataFrame, storeDir: String, aggDir: String,

@@ -140,29 +140,15 @@ object StreamMerge {
     * body, public for reuse and for direct testing. Skips batches at
     * or below the committed version (restart replay); reads and
     * rewrites ONLY the buckets the batch's keys touch; vacuums
-    * versions no retained manifest references.
-    */
-  /** `touchedHint`: a caller that already probed the batch's touched
-    * buckets at the SAME bucket count (StreamMatview runs the probe
-    * for its delta read) passes it through so the trigger pays one
-    * probe job, not two — `keyCountHint` carries that probe's
-    * distinct-key count alongside (−1 = unknown), which sizes this
-    * trigger's exchanges. `managePersist = false` says the caller
-    * already holds the batch persisted for the whole trigger (a
-    * second persist() would warn and do nothing). `maxBroadcastKeys`
-    * feeds [[Changelog.mergeBatch]]'s broadcast guard; a caller whose
-    * own fold already pre-counted THIS batch's distinct keys at the
-    * same cap (the StreamMatview family) passes 0 so the trigger pays
-    * one guard job, not two.
+    * versions no retained manifest references. `maxBroadcastKeys`
+    * caps the batch's distinct keys (the merge broadcasts them against
+    * the store; 0 = no cap).
     */
   def applyBatch(batch: DataFrame, id: Long, storeDir: String,
                  keyCol: String, opCol: String, seqCols: Seq[String],
                  retain: Int = 2,
                  nBuckets: Int = BucketStore.DefaultBuckets,
-                 touchedHint: Option[Set[Long]] = None,
-                 managePersist: Boolean = true,
-                 maxBroadcastKeys: Long = 10000000L,
-                 keyCountHint: Long = -1L): Unit = {
+                 maxBroadcastKeys: Long = 10000000L): Unit = {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
@@ -170,32 +156,19 @@ object StreamMerge {
     // the microbatch feeds four consumers (touched-bucket probe +
     // mergeBatch's latest/anti/semi) — pin it for the one action
     // instead of re-running the source slice each time
-    if (managePersist) batch.persist()
+    batch.persist()
     try BucketStore.noAqe(spark) {
-      // the store's own bucket count wins over the parameter: the
-      // mapping key→bucket must never move across versions
-      val latest = latestVersion(spark, storeDir)
-      val nb = latest
-        .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
-        .getOrElse(nBuckets)
+      val nb = bucketCount(spark, storeDir, nBuckets)
       // probe, broadcast-guard pre-count, AND the exchange-sizing key
       // count share ONE job: buckets, the guard's distinct-key count,
       // and the width every groupBy below should fan to all come out
-      // of the same single-pass aggregate. Phase labels only when this
-      // body owns the trigger (a StreamMatview caller labels its own
-      // phases and must not be clobbered).
-      val ownLabels = managePersist
-      if (ownLabels) spark.sparkContext.setJobDescription(s"merge b$id: probe")
-      val (touched, nKeys) = touchedHint match {
-        case Some(t) => (t, keyCountHint)
-        case None =>
-          val (t, n) = BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
-          if (maxBroadcastKeys > 0) require(n <= maxBroadcastKeys,
-            s"batch has more than $maxBroadcastKeys distinct keys — too large to " +
-              "broadcast against the store; split the batch (or raise maxBroadcastKeys)")
-          (t, n)
-      }
-      if (ownLabels) spark.sparkContext.setJobDescription(s"merge b$id: store commit")
+      // of the same single-pass aggregate
+      spark.sparkContext.setJobDescription(s"merge b$id: probe")
+      val (touched, nKeys) = BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
+      require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
+        s"batch has more than $maxBroadcastKeys distinct keys — too large to " +
+          "broadcast against the store; split the batch (or raise maxBroadcastKeys)")
+      spark.sparkContext.setJobDescription(s"merge b$id: store commit")
       // size this trigger's exchanges to the batch's key cardinality
       // (guide §2: every groupBy here partial-aggregates map-side, so
       // at most one row per key crosses any exchange — partitions past
@@ -210,18 +183,11 @@ object StreamMerge {
         // unpersisted cur scans the touched buckets' parquet twice per
         // trigger — once through the cache instead, at any store size
         cur.persist()
-        // version id = next in the store's own sequence (maintenance
-        // commits may have advanced it past the batch ids); the batch
-        // id lands in the manifest as the exactly-once watermark
-        try BucketStore.writeVersion(
-          Changelog.mergeBatch(cur, batch, keyCol, opCol, seqCols,
-            maxBroadcastKeys =
-              if (touchedHint.isEmpty) 0L else maxBroadcastKeys),
-          storeDir, latest.map(_ + 1L).getOrElse(id), col(keyCol), nb,
-          batch = Some(id))
+        try BucketStore.publishVersion(spark, storeDir,
+          stageMerge(cur, batch, id, storeDir, keyCol, opCol, seqCols, nb))
         finally cur.unpersist(false)
       }
-    } finally if (managePersist) {
+    } finally {
       // clear the thread-local phase label in the SAME finally as the
       // unpersist: a throw would otherwise leak the stale label onto
       // every later job scheduled from this stream thread
@@ -229,6 +195,36 @@ object StreamMerge {
       batch.unpersist(false)
     }
     BucketStore.vacuum(spark, storeDir, retain)
+  }
+
+  /** The store's own bucket count, or `nBuckets` for a store with no
+    * committed version: the mapping key→bucket must never move across
+    * versions, so the manifest wins over the caller's parameter.
+    */
+  private[streaming] def bucketCount(spark: SparkSession, storeDir: String,
+                                     nBuckets: Int): Int =
+    latestVersion(spark, storeDir)
+      .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
+      .getOrElse(nBuckets)
+
+  /** The one merge body: stage batch `id` folded into the store's
+    * touched buckets (`cur`, their pre-image, read at bucket count
+    * `nb`) as the store's next version, and return that version's id
+    * for [[BucketStore.publishVersion]]. The version id is the next in
+    * the store's own sequence (maintenance commits may have advanced
+    * it past the batch ids); the batch id lands in the manifest as the
+    * exactly-once watermark. The caller holds the batch's guard count,
+    * so mergeBatch skips its own.
+    */
+  private[streaming] def stageMerge(cur: DataFrame, batch: DataFrame, id: Long,
+                                    storeDir: String, keyCol: String,
+                                    opCol: String, seqCols: Seq[String],
+                                    nb: Int): Long = {
+    val v = latestVersion(batch.sparkSession, storeDir).map(_ + 1L).getOrElse(id)
+    BucketStore.stageVersion(
+      Changelog.mergeBatch(cur, batch, keyCol, opCol, seqCols, maxBroadcastKeys = 0L),
+      storeDir, v, col(keyCol), nb, batch = Some(id))
+    v
   }
 
   /** Start the continuous merge of a streaming `changelog` into

@@ -688,4 +688,195 @@ class BucketStoreSpec extends SparkSpec {
       0L, storeDir, aggDir, "k", "op", Seq("seq"), Seq("seg"), "cents")
     assert(canonView == canonRecompute)
   }
+
+  /** One maintained-view flavour behind a common face: its seed, its
+    * trigger, its job-label tag, and its served view and recompute as
+    * sorted rows.
+    */
+  private final case class Flavour(name: String, tag: String,
+                                   seed: (DataFrame, String, String) => Unit,
+                                   apply: (DataFrame, Long, String, String) => Unit,
+                                   view: String => Seq[String],
+                                   recompute: String => Seq[String])
+
+  private def rows(df: DataFrame, cols: String*): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.mkString("|")).toSeq.sorted
+
+  private lazy val flavours: Seq[Flavour] = {
+    import graft.streaming.StreamMatview
+    val mm = Seq("seg", "n", "sum", "min", "max")
+    def store(dir: String) = StreamMerge.readStore(spark, dir).get
+    Seq(
+      Flavour("count/sum", "matview",
+        (s, st, ag) => StreamMatview.seed(s, st, ag, "k", "op", Seq("seg"), "cents"),
+        (b, id, st, ag) => StreamMatview.applyBatch(b, id, st, ag, "k", "op",
+          Seq("seq"), Seq("seg"), "cents"),
+        ag => rows(StreamMatview.viewSnapshot(spark, ag), "seg", "n", "sum"),
+        st => rows(Changelog.aggSnapshot(store(st), "op", Seq("seg"), "cents"),
+          "seg", "n", "sum")),
+      Flavour("min/max", "matview-minmax",
+        (s, st, ag) => StreamMatview.seedMinMax(s, st, ag, "k", "op", Seq("seg"), "cents"),
+        (b, id, st, ag) => StreamMatview.applyBatchMinMax(b, id, st, ag, "k", "op",
+          Seq("seq"), Seq("seg"), "cents"),
+        ag => rows(StreamMatview.viewSnapshot(spark, ag), mm: _*),
+        st => rows(Changelog.aggSnapshotMinMax(store(st), "op", Seq("seg"), "cents"),
+          mm: _*)),
+      Flavour("sketch", "matview-sketch",
+        (s, st, ag) => StreamMatview.seedSketch(s, st, ag, "k", "op", Seq("seg"),
+          "cents", k = 4),
+        (b, id, st, ag) => StreamMatview.applyBatchSketch(b, id, st, ag, "k", "op",
+          Seq("seq"), Seq("seg"), "cents", k = 4),
+        ag => rows(StreamMatview.viewSnapshotServed(spark, ag), mm: _*),
+        st => rows(Changelog.aggSnapshotMinMax(store(st), "op", Seq("seg"), "cents"),
+          mm: _*)))
+  }
+
+  private def seedSnapshot: DataFrame = spark.range(0, 40).select(
+    col("id").as("k"), concat(lit("seg"), col("id") % 4).as("seg"),
+    (col("id") * 10).as("cents"), lit("U").as("op"), lit(-1L).as("seq"))
+
+  // batch 0 deletes seg0's max holder (k=36) and seg1's min holder
+  // (k=1) — the recompute / sketch-pop paths — updates one key and
+  // inserts another; batch 1 touches two more dims
+  private def crashBatch(id: Long): DataFrame = (id match {
+    case 0L => Seq((36L, "seg0", 0L, "D", 0L), (1L, "seg1", 0L, "D", 0L),
+      (5L, "seg1", 7L, "U", 0L), (100L, "seg2", 999L, "U", 0L))
+    case _ => Seq((2L, "seg2", 3L, "U", 1L), (7L, "seg3", 0L, "D", 1L))
+  }).toDF("k", "seg", "cents", "op", "seq")
+
+  /** Local path of version `v`'s `name` file under `dir`. */
+  private def versionFile(dir: String, v: Long, name: String): java.io.File =
+    new java.io.File(s"${new org.apache.hadoop.fs.Path(dir).toUri.getPath}/v$v/$name")
+
+  /** Every marker CrashFs logged under `storeDir` or `aggDir` whose
+    * version is still on disk, as (batch watermark, is-view), in
+    * creation order.
+    */
+  private def publishOrder(storeDir: String, aggDir: String): Seq[(Long, Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    CrashFs.markers.asScala.toSeq.map(new org.apache.hadoop.fs.Path(_)).flatMap { m =>
+      val isView = CrashFs.under(aggDir)(m)
+      val dir = if (isView) aggDir else storeDir
+      val v = m.getParent.getName.stripPrefix("v").toLong
+      if (!CrashFs.under(dir)(m) || !versionFile(dir, v, "manifest").isFile) None
+      else Some((BucketStore.readManifest(spark, dir, v).batch, isView))
+    }
+  }
+
+  flavours.foreach { f =>
+    test(s"staged snapshot commit, ${f.name} view: a crash before the view commit stays invisible; a crash before the snapshot publish replays the snapshot alone") {
+      def storesUnder(prefix: String) = {
+        val st = CrashFs.dir(spark, s"graft_crash_${prefix}_store")
+        val ag = CrashFs.dir(spark, s"graft_crash_${prefix}_agg")
+        f.seed(seedSnapshot, st, ag)
+        (st, ag)
+      }
+      def crashing(fail: org.apache.hadoop.fs.Path => Boolean)(body: => Unit): Unit = {
+        CrashFs.failCreate = fail
+        try intercept[Exception](body) finally CrashFs.failCreate = _ => false
+      }
+      def marker(dir: String)(p: org.apache.hadoop.fs.Path) =
+        CrashFs.isMarker(p) && CrashFs.under(dir)(p)
+
+      // (a) the view's marker never lands: the snapshot was staged
+      // alongside, but stays invisible
+      val (st, ag) = storesUnder("a")
+      crashing(marker(ag)) { f.apply(crashBatch(0L), 0L, st, ag) }
+      assert(BucketStore.latestBatch(spark, ag).contains(-1L))
+      assert(BucketStore.versions(spark, st) == Seq(-1L),
+        "a snapshot version became visible before the view committed")
+      assert(versionFile(st, 0L, "manifest").isFile &&
+        !versionFile(st, 0L, "_SUCCESS").exists,
+        "the snapshot merge should have been staged (data + manifest, no marker)")
+      assert(StreamMerge.readStore(spark, st).get.count() == 40)
+      // re-running the batch deletes both staged dirs and converges
+      f.apply(crashBatch(0L), 0L, st, ag)
+      f.apply(crashBatch(1L), 1L, st, ag)
+      assert(BucketStore.latestBatch(spark, st).contains(1L))
+      assert(f.view(ag) == f.recompute(st), "view diverged after the case (a) replay")
+
+      // (b) the view commits, the snapshot's marker never lands: the
+      // replay skips the view and publishes the snapshot
+      val (st2, ag2) = storesUnder("b")
+      crashing(marker(st2)) { f.apply(crashBatch(0L), 0L, st2, ag2) }
+      assert(BucketStore.latestBatch(spark, ag2).contains(0L))
+      assert(BucketStore.latestBatch(spark, st2).contains(-1L))
+      assert(versionFile(st2, 0L, "manifest").isFile &&
+        !versionFile(st2, 0L, "_SUCCESS").exists)
+      val viewVersions = BucketStore.versions(spark, ag2)
+      f.apply(crashBatch(0L), 0L, st2, ag2)
+      assert(BucketStore.versions(spark, ag2) == viewVersions,
+        "the replay re-committed the view instead of skipping it")
+      assert(BucketStore.latestBatch(spark, st2).contains(0L))
+      assert(f.view(ag2) == f.recompute(st2), "view diverged after the case (b) replay")
+      f.apply(crashBatch(1L), 1L, st2, ag2)
+      assert(f.view(ag2) == f.recompute(st2))
+
+      // across both histories, no snapshot marker for a batch was ever
+      // created before the view's marker for the same batch
+      Seq((st, ag), (st2, ag2)).foreach { case (s, a) =>
+        val order = publishOrder(s, a).filter(_._1 >= 0L) // seeds are not triggers
+        Seq(0L, 1L).foreach { b =>
+          val viewAt = order.indexOf((b, true))
+          val snapAt = order.indexOf((b, false))
+          assert(viewAt >= 0 && snapAt > viewAt,
+            s"batch $b: view marker at $viewAt, snapshot marker at $snapAt in $order")
+        }
+      }
+    }
+  }
+
+  test("matview trigger labels: every job carries its phase; the merge thread's read '<tag> b<id>: snapshot merge'; a throwing fold leaves no label and no thread") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def drained(): Seq[String] = {
+      // every event posted so far has reached the listener once a job
+      // submitted after them has been seen
+      spark.sparkContext.setJobDescription("label spec: barrier")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis + 10000
+      while (!jobs.contains("label spec: barrier") && System.currentTimeMillis < deadline)
+        Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      val seen = jobs.asScala.toSeq.takeWhile(_ != "label spec: barrier")
+      jobs.clear()
+      seen
+    }
+    def mergeThreads = Thread.getAllStackTraces.keySet.toArray.toSeq
+      .map(_.asInstanceOf[Thread].getName).filter(_.endsWith(": snapshot merge"))
+    spark.sparkContext.addSparkListener(listener)
+    try flavours.foreach { f =>
+      val st = CrashFs.dir(spark, "graft_label_store")
+      val ag = CrashFs.dir(spark, "graft_label_agg")
+      f.seed(seedSnapshot, st, ag)
+      drained()
+      f.apply(crashBatch(0L), 0L, st, ag)
+      val labels = drained()
+      val phase = s"${java.util.regex.Pattern.quote(f.tag)} b0: (probe|fold|view commit|snapshot merge)"
+      assert(labels.nonEmpty && labels.forall(_.matches(phase)),
+        s"${f.name}: unlabelled or foreign job in the trigger: $labels")
+      Seq("probe", "view commit", "snapshot merge").foreach { p =>
+        assert(labels.contains(s"${f.tag} b0: $p"), s"${f.name}: no '$p' job in $labels")
+      }
+      // a fold whose write job throws (every part file of the view's
+      // next version fails to create)
+      CrashFs.failCreate = p => CrashFs.under(ag)(p) && p.getName.endsWith(".parquet")
+      try intercept[Exception] { f.apply(crashBatch(1L), 1L, st, ag) }
+      finally CrashFs.failCreate = _ => false
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
+        s"${f.name}: the calling thread kept a job description after the throw")
+      assert(mergeThreads.isEmpty, s"${f.name}: merge thread outlived its trigger: $mergeThreads")
+      val after = drained()
+      assert(after.exists(_ == s"${f.tag} b1: snapshot merge"),
+        s"${f.name}: the merge thread should have run alongside the failed fold: $after")
+      // the next trigger (the replay) runs clean and converges
+      f.apply(crashBatch(1L), 1L, st, ag)
+      assert(f.view(ag) == f.recompute(st))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.TaskContext
 import graft.apps.Apps
 import graft.engine.{MapReduce, SequentialOracle}
@@ -16,10 +13,7 @@ import graft.engine.{MapReduce, SequentialOracle}
   * src/mrapps/jobcount.go:34-46).
   */
 class ChaosSpec extends SparkSpec {
-  private val corpusDir = Paths.get("/root/reference/src/main")
-  private lazy val corpusFiles: Seq[String] =
-    Files.list(corpusDir).iterator().asScala
-      .map(_.toString).filter(_.matches(".*/pg-.*\\.txt")).toSeq.sorted
+  private def corpusFiles: Seq[String] = PgCorpus.files
 
   test("first-attempt map failures are retried to an oracle-equal result") {
     import spark.implicits._
@@ -38,11 +32,7 @@ class ChaosSpec extends SparkSpec {
       .mapGroups((k, rows) => (k, Apps.SortedMultisetAgg.reduce(k, rows.map(_._2))))
       .collect().toSeq
 
-    val corpusInMem = corpusFiles.map { p =>
-      (p.substring(p.lastIndexOf('/') + 1),
-        new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-    }
-    val oracle = SequentialOracle.run(corpusInMem,
+    val oracle = SequentialOracle.run(PgCorpus.inMemory,
       Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
     assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
     // 4 map records per file (SortedMultisetAgg) × 8 files, each counted
@@ -75,11 +65,7 @@ class ChaosSpec extends SparkSpec {
       }
       .collect().toSeq
 
-    val corpusInMem = corpusFiles.map { p =>
-      (p.substring(p.lastIndexOf('/') + 1),
-        new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-    }
-    val oracle = SequentialOracle.run(corpusInMem,
+    val oracle = SequentialOracle.run(PgCorpus.inMemory,
       Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
     assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
     // reduce retries recompute from shuffle files: every map record ran

@@ -7,21 +7,15 @@ import graft.apps.Apps
 import graft.engine.{MapReduce, SequentialOracle}
 
 /** Differential golden tests (SURVEY §5.1): each app runs on the
-  * reference's own 8-book Gutenberg corpus through the distributed
+  * 8-book corpus ([[PgCorpus]]) through the distributed
   * engine AND the in-process sequential oracle; outputs canonicalized
   * exactly like the reference's harness (`sort mr-out* | cmp`,
   * /root/reference/src/main/test-mr.sh:103-110).
   */
 class MapReduceParitySpec extends SparkSpec {
-  private val corpusDir = Paths.get("/root/reference/src/main")
-  private lazy val corpusFiles: Seq[String] =
-    Files.list(corpusDir).iterator().asScala
-      .map(_.toString).filter(_.matches(".*/pg-.*\\.txt")).toSeq.sorted
+  private def corpusFiles: Seq[String] = PgCorpus.files
 
-  private lazy val corpusInMem: Seq[(String, String)] = corpusFiles.map { p =>
-    (p.substring(p.lastIndexOf('/') + 1),
-      new String(Files.readAllBytes(Paths.get(p)), "UTF-8"))
-  }
+  private def corpusInMem: Seq[(String, String)] = PgCorpus.inMemory
 
   /** Canonical job result: all outputs as sorted "key value" lines
     * (test-mr.sh:103 `sort mr-out* | grep .`).

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
 import graft.apps.Apps
@@ -47,10 +45,7 @@ object Probe {
   * maximum concurrency.
   */
 class ParallelismSpec extends SparkSpec {
-  private val corpusDir = Paths.get("/root/reference/src/main")
-  private lazy val corpusFiles: Seq[String] =
-    Files.list(corpusDir).iterator().asScala
-      .map(_.toString).filter(_.matches(".*/pg-.*\\.txt")).toSeq.sorted
+  private def corpusFiles: Seq[String] = PgCorpus.files
 
   test("map stage runs >= 2 tasks concurrently (mtiming parity)") {
     import spark.implicits._
