@@ -13,33 +13,31 @@ import graft.engine.{MapReduce, SequentialOracle}
   * src/mrapps/jobcount.go:34-46).
   */
 class ChaosSpec extends SparkSpec {
+  import ChaosSpec.crashFirstAttempt
+
   private def corpusFiles: Seq[String] = PgCorpus.files
 
-  test("first-attempt map failures are retried to an oracle-equal result") {
-    import spark.implicits._
-    val successfulTasks = spark.sparkContext.longAccumulator("successfulMapTasks")
-    val crashyMap =
-      MapReduce.wholeFiles(spark, corpusFiles)
-        .flatMap { case (file, contents) =>
-          val tc = TaskContext.get()
-          if (tc.attemptNumber() == 0 && tc.partitionId() % 2 == 0)
-            throw new RuntimeException("injected crash (chaos spec)")
-          successfulTasks.add(1)
-          Apps.SortedMultisetAgg.map(file, contents)
-        }
-    val engine = crashyMap
-      .groupByKey(_._1)
-      .mapGroups((k, rows) => (k, Apps.SortedMultisetAgg.reduce(k, rows.map(_._2))))
-      .collect().toSeq
+  private def oracle = SequentialOracle.run(PgCorpus.inMemory,
+    Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
 
-    val oracle = SequentialOracle.run(PgCorpus.inMemory,
-      Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
+  test("first-attempt map failures are retried to an oracle-equal result") {
+    ChaosSpec.crashes.set(0)
+    val successfulTasks = spark.sparkContext.longAccumulator("successfulMapTasks")
+    val crashyMap: MapReduce.MapF = (file, contents) => {
+      crashFirstAttempt("map")
+      successfulTasks.add(1)
+      Apps.SortedMultisetAgg.map(file, contents)
+    }
+    val engine = MapReduce.result(spark, corpusFiles,
+      crashyMap, Apps.SortedMultisetAgg.reduce).collect().toSeq
+
     assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
     // 4 map records per file (SortedMultisetAgg) × 8 files, each counted
     // once per *successful* map execution; retried partitions may double
     // count the accumulator only if a failed attempt got past add() —
     // it cannot, because the throw precedes it.
     assert(successfulTasks.value == 8)
+    assert(ChaosSpec.crashes.get() > 0, "no map task crashed: the retry path went untested")
   }
 
   /** Reference parity: crash.so injects into Reduce as well
@@ -49,28 +47,24 @@ class ChaosSpec extends SparkSpec {
     * the surviving shuffle files, and the map stage must NOT re-run.
     */
   test("first-attempt reduce failures are retried to an oracle-equal result") {
-    import spark.implicits._
+    ChaosSpec.crashes.set(0)
     val mapRuns = spark.sparkContext.longAccumulator("mapRecordRuns")
-    val engine = MapReduce.wholeFiles(spark, corpusFiles)
-      .flatMap { case (file, contents) =>
-        mapRuns.add(1)
-        Apps.SortedMultisetAgg.map(file, contents)
-      }
-      .groupByKey(_._1)
-      .mapGroups { (k, rows) =>
-        val tc = TaskContext.get()
-        if (tc.attemptNumber() == 0 && tc.partitionId() % 2 == 0)
-          throw new RuntimeException("injected reduce crash (chaos spec)")
-        (k, Apps.SortedMultisetAgg.reduce(k, rows.map(_._2)))
-      }
+    val countingMap: MapReduce.MapF = (file, contents) => {
+      mapRuns.add(1)
+      Apps.SortedMultisetAgg.map(file, contents)
+    }
+    val crashyReduce: MapReduce.ReduceF = (key, values) => {
+      crashFirstAttempt("reduce")
+      Apps.SortedMultisetAgg.reduce(key, values)
+    }
+    val engine = MapReduce.result(spark, corpusFiles, countingMap, crashyReduce)
       .collect().toSeq
 
-    val oracle = SequentialOracle.run(PgCorpus.inMemory,
-      Apps.SortedMultisetAgg.map, Apps.SortedMultisetAgg.reduce)
     assert(engine.sortBy(_._1) == oracle.sortBy(_._1))
     // reduce retries recompute from shuffle files: every map record ran
     // exactly once despite the injected reduce-stage failures
     assert(mapRuns.value == 8)
+    assert(ChaosSpec.crashes.get() > 0, "no reduce task crashed: the retry path went untested")
   }
 
   test("iterative graph ops converge oracle-equal under injected task failures") {
@@ -123,5 +117,23 @@ class ChaosSpec extends SparkSpec {
       s"need a PARTIAL core (got ${kcClean.size} of ${prClean.size}) or the peel cascade is untested")
     assert(kcChaos == kcClean,
       "kCore diverged from the clean run under injected task failures")
+  }
+}
+
+object ChaosSpec {
+  /** Crashes injected so far. JVM-global like [[Probe]]: a failed task's
+    * accumulator updates are dropped, so they cannot count crashes.
+    */
+  val crashes = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Fails the first attempt of every even-numbered task. Kept off the
+    * suite instance so that task closures calling it stay serializable.
+    */
+  def crashFirstAttempt(what: String): Unit = {
+    val tc = TaskContext.get()
+    if (tc.attemptNumber() == 0 && tc.partitionId() % 2 == 0) {
+      crashes.incrementAndGet()
+      throw new RuntimeException(s"injected $what crash (chaos spec)")
+    }
   }
 }

@@ -62,15 +62,13 @@ class ParallelismSpec extends SparkSpec {
   }
 
   test("reduce stage runs >= 2 tasks concurrently (rtiming parity)") {
-    import spark.implicits._
     Probe.reset()
-    val out = MapReduce.wholeFiles(spark, corpusFiles)
-      .flatMap { case (file, contents) => Apps.WordCount.map(file, contents) }
-      .groupByKey(_._1)
-      .mapGroups { (k, rows) =>
-        Probe.rendezvous() // first group of each reduce task rendezvouses
-        (k, Apps.WordCount.reduce(k, rows.map(_._2)))
-      }
+    // the first run of each reduce task rendezvouses
+    val probedReduce: MapReduce.ReduceF = (key, values) => {
+      Probe.rendezvous()
+      Apps.WordCount.reduce(key, values)
+    }
+    val out = MapReduce.result(spark, corpusFiles, Apps.WordCount.map, probedReduce)
       .count()
     assert(out > 0)
     assert(Probe.max.get() >= 2,
