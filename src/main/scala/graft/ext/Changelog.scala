@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Corpus versioning: apply a keyed changelog to a snapshot (CDC
   * merge / upsert) and diff two snapshot versions — the operators an
@@ -163,351 +164,221 @@ object Changelog {
       .select(cols.map(col): _*)
   }
 
-  /** Recompute a dimensional (count, sum) aggregate from a
-    * changelog-shaped store — the BASE CASE and the audit twin of the
-    * incremental [[aggDelta]]/[[mergeAggDelta]] maintenance: seed the
-    * materialized aggregate with this over the initial store, then
-    * fold deltas; at any point the folded aggregate must equal this
-    * recompute over the current store. One full scan + one
-    * dim-bounded exchange — what the incremental path exists to
-    * avoid paying per batch.
-    */
-  def aggSnapshot(store: DataFrame, opCol: String, dims: Seq[String],
-                  valCol: String, deleteOp: String = "D",
-                  nCol: String = "n", sumCol: String = "sum"): DataFrame =
-    // SUM0, not SQL SUM: a dimension whose live rows all carry null
-    // values reads 0, never null. Plain SUM would break the
-    // telescoping contract — deleting the only non-null row leaves
-    // the fold at sum=0 (arithmetic cancellation) while a bare
-    // recompute would say null; defining the maintained statistic as
-    // null-as-zero makes fold and recompute agree on every reachable
-    // state. Oracle twins must COALESCE(SUM(x), 0) the same way.
-    store.where(col(opCol) =!= deleteOp)
-      .groupBy(dims.map(col): _*)
-      .agg(count(lit(1)).as(nCol),
-        coalesce(sum(col(valCol)), lit(0L).cast(store.schema(valCol).dataType))
-          .as(sumCol))
 
-  /** Per-dimension aggregate DELTA of one changelog batch against the
-    * standing key store — incremental materialized-view maintenance.
-    * Returns `(dims..., nCol, sumCol)` where the values are the
-    * CHANGE the batch causes in `aggSnapshot(store)`: fold it into
-    * the maintained aggregate with [[mergeAggDelta]] alongside the
-    * [[mergeBatch]] that folds the batch into the store (delta first,
-    * against the PRE-batch store).
+  /** One flavour of incrementally maintained dimensional aggregate —
+    * `(dims..., n, sum)` plus whatever state the flavour keeps — and
+    * the pieces of the ONE fold core ([[foldBatch]], [[foldPurge]])
+    * that differ between flavours. Everything else is shared: the
+    * pre-image/winner build, the signed-union exchange, the view-state
+    * union+groupBy, and (for flavours with state) the eager
+    * checkpoint + recompute-flag test + lazy recompute tail.
     *
-    * Construction: the batch collapses to latest-per-key exactly as
-    * [[mergeBatch]] does; for its keys, the post-merge winner is
-    * `latest(storeTouched ∪ batchLatest)` and the pre-image is the
-    * store's current row — the delta is `+winner − pre` over the
-    * non-deleted rows, grouped by `dims`. Because the winner is the
-    * same max_by [[mergeBatch]] commits, the fold TELESCOPES: after
-    * any sequence of batches the maintained aggregate equals the full
-    * recompute, and a re-delivered batch's delta is exactly ZERO
-    * (its entries all lose the max_by at equal seq — the same
-    * property that makes mergeBatch idempotent), so crash-replay
-    * cannot double-count.
-    *
-    * Only self-maintainable aggregates live here (count/sum — avg
-    * derives); min/max under deletes need a per-dim recompute by
-    * construction. Exactness discipline: pass an integer `valCol`
-    * (cents, not dollars) when the maintained view is gated by hash.
-    *
-    * 100 TB shape: the store is touched ONLY via a broadcast semi-join
-    * on the batch's keys (with [[mergeBatch]]'s bucketed store
-    * underneath, only the touched buckets are even read), every
-    * aggregation partial-aggregates map-side, and the output is
-    * dim-cardinality-sized. The corpus is never rescanned — that is
-    * the entire point.
+    * n and sum are SUM0 statistics on every flavour: a dimension whose
+    * live rows all carry null values reads sum 0, never null. Plain
+    * SUM would break the telescoping contract — deleting the only
+    * non-null row leaves the fold at sum 0 (arithmetic cancellation)
+    * while a bare recompute would say null. Oracle twins must
+    * COALESCE(SUM(x), 0) the same way.
     */
-  /** The shared incremental core of [[aggDelta]] and
-    * [[mergeAggMinMax]]: collapse the batch to latest-per-key, guard
-    * and broadcast its key list, and return (broadcast keys, the
-    * store's PRE-image rows for those keys, the post-merge WINNER
-    * rows — the same max_by [[mergeBatch]] commits). All three
-    * relations are batch-key-sized; the store enters only through the
-    * one broadcast semi-join.
-    */
-  private def preWinner(store: DataFrame, batch: DataFrame, keyCol: String,
-                        opCol: String, seqCols: Seq[String],
-                        dims: Seq[String], valCol: String,
-                        maxBroadcastKeys: Long)
-      : (DataFrame, DataFrame, DataFrame) = {
-    require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
-    require(dims.nonEmpty, "view maintenance needs at least one dimension column")
-    val needed = (keyCol +: opCol +: seqCols) ++ dims :+ valCol
-    needed.foreach(c => require(store.columns.contains(c) &&
-      batch.columns.contains(c), s"store/batch missing column $c"))
-    Seq("__bk", "__m", "__w").foreach(t => require(!needed.contains(t),
-      s"column name $t is reserved by view-maintenance temporaries"))
-    // project BOTH sides to the columns the maintenance needs — the
-    // store side drops its payload before the semi-join, and an
-    // additive schema evolution elsewhere in the row is invisible here
-    val proj = needed.distinct.map(col)
-    val carried = needed.distinct.filterNot(_ == keyCol)
-    def latest(df: DataFrame): DataFrame =
-      df.groupBy(col(keyCol))
-        .agg(max_by(struct(carried.map(col): _*),
-          struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
-        .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*)
-    val bl = latest(batch.select(proj: _*))
-    if (maxBroadcastKeys > 0)
-      require(bl.limit(math.min(maxBroadcastKeys + 1, Int.MaxValue).toInt)
-        .count() <= maxBroadcastKeys,
-        s"batch has more than $maxBroadcastKeys distinct keys — too large to " +
-          "broadcast against the store; split the batch (or raise maxBroadcastKeys)")
-    val bk = broadcast(bl.select(col(keyCol).as("__bk")))
-    val pre = store.select(proj: _*)
-      .join(bk, col(keyCol) <=> col("__bk"), "left_semi")
-    val winner = latest(pre.unionByName(bl))
-    (bk, pre, winner)
+  sealed trait ViewFold {
+    def opCol: String
+    def dims: Seq[String]
+    def valCol: String
+    def deleteOp: String
+    def nCol: String
+    def sumCol: String
+
+    /** The full recompute over a changelog-shaped store — the seed and
+      * the audit twin: at any point the folded view must equal this
+      * over the current store.
+      */
+    def snapshot(store: DataFrame): DataFrame
+
+    /** Aggregates this flavour adds to the signed-union exchange. */
+    private[ext] def deltaAggs: Seq[Column] = Nil
+    /** View-state columns beyond `(dims, n, sum)`. */
+    private[ext] def stateCols: Seq[String] = Nil
+    /** The merged frame's next state plus the `__rc` recompute flag. */
+    private[ext] def step(merged: DataFrame, vt: DataType): DataFrame = merged
+    /** The flagged dims' state recomputed from their post-fold live
+      * `(__dk, valCol)` rows: `__dk`, then one column per
+      * [[stateCols]] entry, in order, under its own name.
+      */
+    private[ext] def rebuilt(live: DataFrame): DataFrame = live
+    /** The committed view's columns after `(dims, n, sum)`. */
+    private[ext] def served(vt: DataType): Seq[Column] = stateCols.map(col)
+
+    private[ext] def live(df: DataFrame): DataFrame =
+      df.where(col(opCol) =!= deleteOp)
+    private[ext] def groups(df: DataFrame) = df.groupBy(dims.map(col): _*)
+    /** `(dims..., n, sum, extra...)` over the store's live rows. */
+    private[ext] def liveAgg(store: DataFrame, extra: Column*): DataFrame =
+      groups(live(store)).agg(count(lit(1)).as(nCol),
+        sum0(col(valCol), store.schema(valCol).dataType).as(sumCol) +: extra: _*)
+    /** `valCol` on one side of the signed union, null on the other. */
+    private[ext] def side(sign: Int): Column = when(col("__sgn") === sign, col(valCol))
   }
 
-  def aggDelta(store: DataFrame, batch: DataFrame, keyCol: String,
-               opCol: String, seqCols: Seq[String], dims: Seq[String],
-               valCol: String, deleteOp: String = "D",
-               nCol: String = "n", sumCol: String = "sum",
-               maxBroadcastKeys: Long = 10000000L): DataFrame = {
-    val (_, pre, winner) = preWinner(store, batch, keyCol, opCol, seqCols,
-      dims, valCol, maxBroadcastKeys)
-    val live = (df: DataFrame, sign: Int) =>
-      df.where(col(opCol) =!= deleteOp)
-        .select((dims.map(col) :+ lit(sign.toLong).as("__w") :+
-          (col(valCol) * sign).as(valCol)): _*)
-    // same SUM0 convention as [[aggSnapshot]] — an all-null
-    // contribution set deltas the sum by 0, not to null
-    live(winner, 1).unionByName(live(pre, -1))
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col("__w")).as(nCol),
-        coalesce(sum(col(valCol)),
-          lit(0L).cast(store.schema(valCol).dataType)).as(sumCol))
+  /** Count/sum: self-maintainable, so the fold is pure delta
+    * arithmetic and stays LAZY (no checkpoint, no extra job).
+    */
+  final case class CountSum(opCol: String, dims: Seq[String], valCol: String,
+                            deleteOp: String = "D", nCol: String = "n",
+                            sumCol: String = "sum") extends ViewFold {
+    def snapshot(store: DataFrame): DataFrame = liveAgg(store)
   }
 
-  /** Fold an [[aggDelta]] into the maintained aggregate: union and
-    * re-aggregate (both relations are dim-cardinality-sized), dropping
-    * dimensions whose live row count reached zero. Null dims group as
-    * ordinary values on both sides — no join, so no null-key
-    * mismatch to guard.
+  /** Count/sum plus boundary-exact MIN/MAX, with no hidden state. A
+    * delete or downward update of the row holding a bound needs other
+    * rows to answer, so per dimension:
+    *
+    *  - dims whose LEAVING values never tie a current bound fold
+    *    self-maintainably: min' = least(min, entering min), max'
+    *    likewise;
+    *  - dims where a leaving value TIES a bound recompute min/max from
+    *    their post-fold live rows — the store is bucketed by KEY, so
+    *    that is a dim-filtered full-store scan, paid once per fold that
+    *    actually retracts a bound. [[Sketch]] is the flavour that
+    *    makes the scan rare instead.
+    *
+    * min/max are null iff the dim's live values are all null (MIN/MAX
+    * skip nulls on both engines). A re-delivered batch may recompute
+    * spuriously (its pre == winner ties the bound) but lands on
+    * identical values.
     */
-  def mergeAggDelta(agg: DataFrame, delta: DataFrame, dims: Seq[String],
-                    nCol: String = "n", sumCol: String = "sum"): DataFrame =
-    agg.unionByName(delta)
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col(nCol)).as(nCol),
-        coalesce(sum(col(sumCol)),
-          lit(0L).cast(agg.schema(sumCol).dataType)).as(sumCol))
-      .where(col(nCol) =!= 0)
-
-  /** [[aggSnapshot]] widened with MIN/MAX — the full recompute (seed
-    * and audit twin) for views maintained by [[mergeAggMinMax]].
-    * min/max are null iff the dimension's live values are all null
-    * (MIN/MAX skip nulls on both engines), so no SUM0-style coalesce.
-    */
-  def aggSnapshotMinMax(store: DataFrame, opCol: String, dims: Seq[String],
-                        valCol: String, deleteOp: String = "D",
-                        nCol: String = "n", sumCol: String = "sum",
-                        minCol: String = "min", maxCol: String = "max")
-      : DataFrame =
-    store.where(col(opCol) =!= deleteOp)
-      .groupBy(dims.map(col): _*)
-      .agg(count(lit(1)).as(nCol),
-        coalesce(sum(col(valCol)), lit(0L).cast(store.schema(valCol).dataType))
-          .as(sumCol),
-        min(col(valCol)).as(minCol),
-        max(col(valCol)).as(maxCol))
-
-  /** Fold one changelog batch into a (count, sum, MIN, MAX) maintained
-    * aggregate — the NON-self-maintainable extension of
-    * [[aggDelta]]+[[mergeAggDelta]]. count/sum telescope exactly as
-    * there; min/max cannot (a delete or downward update of the row
-    * holding the boundary needs other rows to answer), so the fold
-    * splits per dimension:
-    *
-    *  - dims whose LEAVING pre-image values never touch the current
-    *    boundary fold self-maintainably: min' = least(min, entering
-    *    min), max' = greatest(max, entering max) — batch-sized work,
-    *    store untouched beyond [[preWinner]]'s one semi-join;
-    *  - dims where a leaving value TIES the current min or max
-    *    RECOMPUTE min/max from the post-batch live rows of those dims
-    *    only — detected exactly (boundary test against the maintained
-    *    view, dim-cardinality-sized join), recomputed from
-    *    `(store ∖ batch keys) ∪ winners` restricted to the affected
-    *    dims.
-    *
-    * The recompute is the operator's honest cost: the store is
-    * bucketed by KEY, so an affected dim's rows live everywhere and
-    * the recompute is a dim-filtered full scan — O(store rows in
-    * affected dims) once per batch that actually retracts a boundary,
-    * not per batch. (Cheapening it further needs a per-dim top-k
-    * value sketch; out of scope here.) Re-delivered batches may
-    * trigger a spurious recompute (their pre == winner includes the
-    * boundary) but land on identical values — the fold stays
-    * idempotent, and `fold == aggSnapshotMinMax(post-store)` holds
-    * after every batch (the gated contract).
-    *
-    * `agg` is the CURRENT maintained view `(dims..., n, sum, min,
-    * max)` (seed with [[aggSnapshotMinMax]]); `store` is the
-    * PRE-batch store, same as [[aggDelta]]. Returns the new view,
-    * dims with no remaining live rows dropped.
-    *
-    * Shape (mirrors [[mergeAggSketch]]'s, round 16): ONE signed-union
-    * exchange computes the n/sum telescoping delta AND the per-dim
-    * leaving/entering min/max bounds (the previous shape paid three
-    * batch-sized groupBy exchanges — delta, leaving, entering — whose
-    * winner subtrees re-executed per reference); a second dim-bounded
-    * union+groupBy folds that against the view state (n/sum
-    * arithmetic = [[mergeAggDelta]] verbatim), and the boundary test
-    * becomes a column over the folded row. The fold is EAGER: the
-    * dim-bounded state checkpoints inside the call, the retraction
-    * test is a cheap action over it, and ONLY a fold with at least
-    * one retracted boundary builds (or references) the recompute
-    * branch — the common no-retraction commit carries NO store scan
-    * in its plan at all, with no reliance on AQE's empty-relation
-    * propagation (so callers may run it AQE-free), and callers need
-    * no lineage truncation of their own across folds.
-    *
-    * `recomputeStore` splits the two store roles for bucketed layouts:
-    * the pre-image probe only ever matches the batch's keys, so a
-    * caller on a [[graft.streaming.BucketStore]] passes the
-    * TOUCHED-BUCKET read as `store` — but an affected dim's OTHER rows
-    * live in every bucket, so the boundary recompute must read the
-    * FULL store (pass it here; defaults to `store` for unbucketed
-    * callers). It is referenced lazily — a no-retraction fold never
-    * executes it (PlanShapeSpec pins this with a poisoned source).
-    */
-  def mergeAggMinMax(agg: DataFrame, store: DataFrame, batch: DataFrame,
-                     keyCol: String, opCol: String, seqCols: Seq[String],
-                     dims: Seq[String], valCol: String,
-                     deleteOp: String = "D",
-                     nCol: String = "n", sumCol: String = "sum",
-                     minCol: String = "min", maxCol: String = "max",
-                     maxBroadcastKeys: Long = 10000000L,
-                     recomputeStore: Option[DataFrame] = None): DataFrame = {
-    Seq("__lmn", "__lmx", "__emn", "__emx", "__rc", "__rmn", "__rmx", "__dk")
-      .foreach(t => require(!dims.contains(t),
-        s"column name $t is reserved by mergeAggMinMax's temporaries"))
-    val (bk, pre, winner) = preWinner(store, batch, keyCol, opCol, seqCols,
-      dims, valCol, maxBroadcastKeys)
-    val vt = store.schema(valCol).dataType
-    // view-side joins key on the dim tuple as ONE struct column:
-    // struct equality is null-safe field-wise (a null dim is an
-    // ordinary group on both engines — same convention as
-    // mergeAggDelta's union+groupBy), and the join stays a plain
-    // hash-joinable equi-join
-    val dk = struct(dims.map(col): _*).as("__dk")
-    def live(df: DataFrame): DataFrame =
-      df.where(col(opCol) =!= deleteOp)
-        .select(dk, col(valCol))
-    // ONE exchange: tag live winner rows +1 and live pre-image rows
-    // −1; a single groupBy computes the signed count/sum delta AND
-    // the per-side min/max bounds (a when() with no otherwise is null
-    // on the other side's rows and on null values, and MIN/MAX skip
-    // nulls — exactly the old per-side aggregations)
-    val signed = (df: DataFrame, sign: Int) =>
-      df.where(col(opCol) =!= deleteOp)
-        .select((dims.map(col) :+ col(valCol) :+ lit(sign).as("__sgn")): _*)
-    val fused = signed(winner, 1).unionByName(signed(pre, -1))
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col("__sgn").cast("long")).as(nCol),
-        coalesce(sum(col(valCol) * col("__sgn")), lit(0L).cast(vt)).as(sumCol),
-        min(when(col("__sgn") === -1, col(valCol))).as("__lmn"),
-        max(when(col("__sgn") === -1, col(valCol))).as("__lmx"),
-        min(when(col("__sgn") === 1, col(valCol))).as("__emn"),
-        max(when(col("__sgn") === 1, col(valCol))).as("__emx"))
-    // fold against the view state through one dim-bounded
-    // union+groupBy (same single-consumption shape as
-    // [[foldSketchState]]: each side contributes at most one row per
-    // dim, so the null-skipping MAX is pure selection), then the
-    // boundary test is a COLUMN: does any leaving live value tie the
-    // dim's current min/max? (leaving values are store rows, so <=/>=
-    // is equality in disguise; null comparisons coalesce to false —
-    // the old inner-join + where dropped them the same way)
-    val nullV = lit(null).cast(vt)
-    val aggSide = agg.select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-      col(minCol) :+ col(maxCol) :+ nullV.as("__lmn") :+ nullV.as("__lmx") :+
-      nullV.as("__emn") :+ nullV.as("__emx")): _*)
-    val fusedSide = fused.select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-      nullV.as(minCol) :+ nullV.as(maxCol) :+ col("__lmn") :+ col("__lmx") :+
-      col("__emn") :+ col("__emx")): _*)
-    val folded = aggSide.unionByName(fusedSide)
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col(nCol)).as(nCol),
-        coalesce(sum(col(sumCol)),
-          lit(0L).cast(agg.schema(sumCol).dataType)).as(sumCol),
-        max(col(minCol)).as(minCol), max(col(maxCol)).as(maxCol),
-        max(col("__lmn")).as("__lmn"), max(col("__lmx")).as("__lmx"),
-        max(col("__emn")).as("__emn"), max(col("__emx")).as("__emx"))
-      .where(col(nCol) =!= 0)
-      .withColumn("__rc", coalesce(
-        col("__lmn") <= col(minCol) || col("__lmx") >= col(maxCol),
-        lit(false)))
-      .withColumn("__dk", struct(dims.map(col): _*))
-    val rstore = recomputeStore.getOrElse(store)
-    ((keyCol +: opCol +: dims) :+ valCol).foreach(c =>
-      require(rstore.columns.contains(c),
-        s"recomputeStore missing column $c"))
-    require(!rstore.columns.contains("__bk"),
-      "column name __bk is reserved by mergeAggMinMax's key anti-join")
-    // The fold state is dim-bounded — CHECKPOINT it eagerly so the
-    // retraction test below is a cheap action and the common
-    // no-retraction path's committed plan carries NO recompute branch
-    // (and no store scan) at all. Same discipline as [[sketchStep]].
-    val foldedCk = folded.localCheckpoint(true)
-    val rcd = foldedCk.where(col("__rc")).select("__dk")
-    if (rcd.isEmpty)
-      // assemble: least/greatest SKIP nulls, so an untouched dim
-      // keeps (min, max) and a new dim takes the entering bounds
-      return foldedCk.select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
+  final case class MinMax(opCol: String, dims: Seq[String], valCol: String,
+                          deleteOp: String = "D", nCol: String = "n",
+                          sumCol: String = "sum", minCol: String = "min",
+                          maxCol: String = "max") extends ViewFold {
+    def snapshot(store: DataFrame): DataFrame =
+      liveAgg(store, min(col(valCol)).as(minCol), max(col(valCol)).as(maxCol))
+    override private[ext] def deltaAggs = Seq(
+      min(side(-1)).as("__lmn"), max(side(-1)).as("__lmx"),
+      min(side(1)).as("__emn"), max(side(1)).as("__emx"))
+    override private[ext] def stateCols = Seq(minCol, maxCol)
+    // least/greatest skip nulls: an untouched dim keeps its bounds and
+    // a new dim takes the entering ones. Leaving values are store
+    // rows, so <=/>= against the OLD bound is equality in disguise;
+    // null comparisons coalesce to false
+    override private[ext] def step(merged: DataFrame, vt: DataType) =
+      merged.select(dims.map(col) :+ col(nCol) :+ col(sumCol) :+
         least(col(minCol), col("__emn")).as(minCol) :+
-        greatest(col(maxCol), col("__emx")).as(maxCol)): _*)
-    // the retraction path: recompute EXACTLY the affected dims from
-    // the post-batch live rows — untouched keys straight from the
-    // (full) store (anti-join on the broadcast key list), touched
-    // keys from the winners
-    val recomputed = live(rstore.join(bk, col(keyCol) <=> col("__bk"),
-        "left_anti"))
-      .unionByName(live(winner))
-      .join(rcd.hint("broadcast"), Seq("__dk"), "left_semi")
-      .groupBy(col("__dk"))
-      .agg(min(col(valCol)).as("__rmn"), max(col(valCol)).as("__rmx"))
-    foldedCk.join(recomputed, Seq("__dk"), "left")
-      .select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-        when(col("__rc"), col("__rmn"))
-          .otherwise(least(col(minCol), col("__emn"))).as(minCol) :+
-        when(col("__rc"), col("__rmx"))
-          .otherwise(greatest(col(maxCol), col("__emx"))).as(maxCol)): _*)
+        greatest(col(maxCol), col("__emx")).as(maxCol) :+
+        coalesce(col("__lmn") <= col(minCol) || col("__lmx") >= col(maxCol),
+          lit(false)).as("__rc"): _*)
+    override private[ext] def rebuilt(live: DataFrame) =
+      live.groupBy(col("__dk"))
+        .agg(min(col(valCol)).as("__rmn"), max(col(valCol)).as("__rmx"))
   }
 
-  /** Reserved sketch-state column names of the SKETCHED min/max view
-    * ([[aggSnapshotSketch]]/[[mergeAggSketch]]): the k smallest live
-    * values (sorted ascending), the k largest (sorted ascending,
+  /** Reserved state columns of the [[Sketch]] view: the k smallest
+    * live values (sorted ascending), the k largest (sorted ascending,
     * served from the tail), and the two coverage thresholds — null
     * when the sketch is COMPLETE (covers every live non-null value of
     * its side), else the value beyond which live values are untracked.
     */
   val SketchCols: Seq[String] = Seq("__mns", "__mxs", "__mnt", "__mxt")
 
-  private def kSmallestLargest(live: DataFrame, dkCol: String,
-                               valCol: String, k: Int): DataFrame = {
-    // two windows per dim over the (affected) live rows — the rebuild
-    // shuffle; per-dim depth is the skew contract, same class as scd2
-    val wAsc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(dkCol)).orderBy(col(valCol).asc)
-    val wDesc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(dkCol)).orderBy(col(valCol).desc)
+  /** Count/sum plus min/max served from a PER-DIM TOP-K VALUE SKETCH
+    * kept as hidden [[SketchCols]] state. Per dim and side, leaving
+    * live values pop out of the sketch (multiset diff — a leaver
+    * beyond the threshold is simply absent), entering values within
+    * coverage splice in, the sketch re-truncates to k, and ONLY a side
+    * that drains empty while untracked live values remain rebuilds
+    * from the post-fold live rows of that dim: at least k boundary
+    * deletions per side between full-store reads, where [[MinMax]]
+    * reads on every boundary retraction.
+    *
+    * Invariant (property-tested): the sketch is a sub-multiset of the
+    * dim's live values holding every live value within its threshold,
+    * so the served end is the true bound whenever the sketch is
+    * non-empty, and the served view equals [[MinMax]]'s recompute.
+    */
+  final case class Sketch(opCol: String, dims: Seq[String], valCol: String,
+                          k: Int, deleteOp: String = "D", nCol: String = "n",
+                          sumCol: String = "sum", minCol: String = "min",
+                          maxCol: String = "max") extends ViewFold {
+    require(k >= 1, s"sketch k=$k must be positive")
+    def snapshot(store: DataFrame): DataFrame = {
+      val vt = store.schema(valCol).dataType
+      liveAgg(store).withColumn("__dk", struct(dims.map(col): _*))
+        .join(kSmallestLargest(live(store).select(struct(dims.map(col): _*)
+          .as("__dk"), col(valCol)), valCol, k), Seq("__dk"), "left")
+        .select(dims.map(col) ++ Seq(col(nCol), col(sumCol)) ++ served(vt): _*)
+    }
+    override private[ext] def deltaAggs = Seq(
+      sort_array(collect_list(side(-1))).as("__lv"),
+      sort_array(collect_list(side(1))).as("__ev"))
+    override private[ext] def stateCols = SketchCols
+    override private[ext] def step(merged: DataFrame, vt: DataType) = {
+      val e = emptyArr(vt)
+      // candidates land in their own columns FIRST — deriving state in
+      // one chained pass would re-resolve a candidate against the
+      // already-updated sketch column. Max side mirrored (arrays
+      // ascending; the tail is the boundary)
+      // pop the leavers, splice the enterers within the threshold
+      def cand(sk: String, th: String, within: Column => Column) =
+        sort_array(concat(multisetDiff(coalesce(col(sk), e), coalesce(col("__lv"), e)),
+          coalesce(when(col(th).isNull, col("__ev"))
+            .otherwise(filter(col("__ev"), within)), e)))
+      merged.select(dims.map(col) :+ col(nCol) :+ col(sumCol) :+
+          col("__mnt") :+ col("__mxt") :+
+          cand("__mns", "__mnt", _ <= col("__mnt")).as("__mnc") :+
+          cand("__mxs", "__mxt", _ >= col("__mxt")).as("__mxc"): _*)
+        .select(dims.map(col) :+ col(nCol) :+ col(sumCol) :+
+          when(size(col("__mnc")) > k, slice(col("__mnc"), 1, k))
+            .otherwise(col("__mnc")).as("__mns") :+
+          when(size(col("__mnc")) > k, element_at(col("__mnc"), k))
+            .otherwise(col("__mnt")).as("__mnt") :+
+          when(size(col("__mxc")) > k,
+            slice(col("__mxc"), (size(col("__mxc")) - k + 1).cast("int"), lit(k)))
+            .otherwise(col("__mxc")).as("__mxs") :+
+          when(size(col("__mxc")) > k,
+            element_at(col("__mxc"), (size(col("__mxc")) - k + 1).cast("int")))
+            .otherwise(col("__mxt")).as("__mxt"): _*)
+        // a side drains when its sketch is empty but untracked live
+        // values remain (the threshold says truncated)
+        .withColumn("__rc",
+          (size(col("__mns")) === 0 && col("__mnt").isNotNull) ||
+            (size(col("__mxs")) === 0 && col("__mxt").isNotNull))
+    }
+    override private[ext] def rebuilt(live: DataFrame) =
+      kSmallestLargest(live, valCol, k)
+        .toDF("__dk", "__rmns", "__rmxs", "__rmnt", "__rmxt")
+    // serving ends (ANSI: element_at on an empty array throws, so
+    // guard on size); a dim with no tracked value stores empty arrays
+    override private[ext] def served(vt: DataType) = Seq(
+      when(size(col("__mns")) > 0, element_at(col("__mns"), 1))
+        .otherwise(lit(null).cast(vt)).as(minCol),
+      when(size(col("__mxs")) > 0, element_at(col("__mxs"), -1))
+        .otherwise(lit(null).cast(vt)).as(maxCol),
+      coalesce(col("__mns"), emptyArr(vt)).as("__mns"),
+      coalesce(col("__mxs"), emptyArr(vt)).as("__mxs"),
+      col("__mnt"), col("__mxt"))
+  }
+
+  private def sum0(c: Column, t: DataType): Column = coalesce(sum(c), lit(0L).cast(t))
+
+  private def emptyArr(vt: DataType): Column = array().cast(s"array<${vt.sql}>")
+
+  /** Each dim's k smallest and k largest non-null values of `live`
+    * `(__dk, valCol)` as [[SketchCols]]: two windows per dim — the
+    * rebuild shuffle; per-dim depth is the skew contract, same class
+    * as [[scd2]].
+    */
+  private def kSmallestLargest(live: DataFrame, valCol: String, k: Int): DataFrame = {
     val nn = live.where(col(valCol).isNotNull)
-    val smallest = nn.withColumn("__rn", row_number().over(wAsc))
-      .where(col("__rn") <= k + 1) // k+1: the (k+1)th proves truncation
-      .groupBy(col(dkCol))
-      .agg(sort_array(collect_list(col(valCol))).as("__sl"),
-        count(lit(1)).as("__sn"))
-    val largest = nn.withColumn("__rn", row_number().over(wDesc))
-      .where(col("__rn") <= k + 1)
-      .groupBy(col(dkCol))
-      .agg(sort_array(collect_list(col(valCol))).as("__ll"),
-        count(lit(1)).as("__ln"))
-    smallest.join(largest, Seq(dkCol))
-      .select(col(dkCol),
+    def firstK1(order: Column, list: String, n: String) = {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__dk")).orderBy(order)
+      nn.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") <= k + 1) // k+1: the (k+1)th proves truncation
+        .groupBy(col("__dk"))
+        .agg(sort_array(collect_list(col(valCol))).as(list), count(lit(1)).as(n))
+    }
+    firstK1(col(valCol).asc, "__sl", "__sn")
+      .join(firstK1(col(valCol).desc, "__ll", "__ln"), Seq("__dk"))
+      .select(col("__dk"),
         slice(col("__sl"), 1, k).as("__mns"),
         // largest: k+1 collected ascending; keep the LAST k
         when(col("__ln") > k, slice(col("__ll"), 2, k))
@@ -515,53 +386,6 @@ object Changelog {
         when(col("__sn") > k, element_at(col("__sl"), k)).as("__mnt"),
         when(col("__ln") > k, element_at(col("__ll"), 2)).as("__mxt"))
   }
-
-  /** [[aggSnapshotMinMax]] widened with a PER-DIM TOP-K VALUE SKETCH —
-    * the seed and audit twin of [[mergeAggSketch]]. The sketch holds
-    * each dim's k smallest and k largest live values, so the fold can
-    * absorb up to k boundary deletions per side before it ever has to
-    * rescan the store: the [[mergeAggMinMax]] design recomputes on ANY
-    * retraction of a boundary-tying value; here retraction is an O(1)
-    * array pop and the recompute fires only when a side's sketch
-    * DRAINS while untracked live values remain. Serving min/max read
-    * from the sketch ends; n/sum are the usual SUM0 aggregates.
-    */
-  def aggSnapshotSketch(store: DataFrame, opCol: String, dims: Seq[String],
-                        valCol: String, k: Int, deleteOp: String = "D",
-                        nCol: String = "n", sumCol: String = "sum",
-                        minCol: String = "min", maxCol: String = "max")
-      : DataFrame = {
-    require(k >= 1, s"sketch k=$k must be positive")
-    val live = store.where(col(opCol) =!= deleteOp)
-      .select(struct(dims.map(col): _*).as("__dk"), col(valCol))
-    val ns = store.where(col(opCol) =!= deleteOp)
-      .groupBy(dims.map(col): _*)
-      .agg(count(lit(1)).as(nCol),
-        coalesce(sum(col(valCol)), lit(0L).cast(store.schema(valCol).dataType))
-          .as(sumCol))
-      .withColumn("__dk", struct(dims.map(col): _*))
-    val sk = kSmallestLargest(live, "__dk", valCol, k)
-    ns.join(sk, Seq("__dk"), "left")
-      .select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-        serveMin(store.schema(valCol).dataType).as(minCol) :+
-        serveMax(store.schema(valCol).dataType).as(maxCol) :+
-        coalesce(col("__mns"),
-          array().cast(s"array<${store.schema(valCol).dataType.sql}>"))
-          .as("__mns") :+
-        coalesce(col("__mxs"),
-          array().cast(s"array<${store.schema(valCol).dataType.sql}>"))
-          .as("__mxs") :+
-        col("__mnt") :+ col("__mxt")): _*)
-  }
-
-  // serving ends of the sketch (ANSI: element_at on an empty array
-  // throws, so guard on size)
-  private def serveMin(dt: org.apache.spark.sql.types.DataType): Column =
-    when(size(col("__mns")) > 0, element_at(col("__mns"), 1))
-      .otherwise(lit(null).cast(dt))
-  private def serveMax(dt: org.apache.spark.sql.types.DataType): Column =
-    when(size(col("__mxs")) > 0, element_at(col("__mxs"), -1))
-      .otherwise(lit(null).cast(dt))
 
   /** Remove each element of `xs` from sorted array `acc` ONCE
     * (multiset difference) — the retraction pop. Interpreted HOF fold
@@ -576,31 +400,237 @@ object Changelog {
         .otherwise(acc)
     })
 
-  /** Fold one changelog batch into a SKETCHED (count, sum, min, max)
-    * view — [[mergeAggMinMax]] with the recompute made RARE instead of
-    * per-retraction. Per dim and per side:
+  /** What one fold folds in: the changed keys as a broadcast `__bk`
+    * list, the store's PRE-image rows for them, and the post-change
+    * WINNER rows. All three are key-list-sized; the store enters only
+    * through the one broadcast semi-join.
+    */
+  private final case class Change(f: ViewFold, keyCol: String, bk: DataFrame,
+                                  pre: DataFrame, winner: DataFrame)
+
+  private def change(f: ViewFold, store: DataFrame, keyCol: String,
+                     more: Seq[String], keys: DataFrame, maxBroadcastKeys: Long,
+                     what: String)(winner: DataFrame => DataFrame): Change = {
+    require(f.dims.nonEmpty, "view maintenance needs at least one dimension column")
+    // project the store to the columns the maintenance needs — its
+    // payload drops before the semi-join, and an additive schema
+    // evolution elsewhere in the row is invisible here
+    val needed = ((keyCol +: f.opCol +: more) ++ f.dims :+ f.valCol).distinct
+    needed.foreach(c => require(store.columns.contains(c), s"store missing column $c"))
+    Seq("__bk", "__m", "__sgn", "__dk", "__rc").foreach(t => require(!needed.contains(t),
+      s"column name $t is reserved by view-maintenance temporaries"))
+    if (maxBroadcastKeys > 0)
+      require(keys.limit(math.min(maxBroadcastKeys + 1, Int.MaxValue).toInt)
+        .count() <= maxBroadcastKeys,
+        s"$what has more than $maxBroadcastKeys distinct keys — too large to " +
+          s"broadcast against the store; split the $what (or raise maxBroadcastKeys)")
+    val bk = broadcast(keys.select(col(keyCol).as("__bk")))
+    val pre = store.select(needed.map(col): _*)
+      .join(bk, col(keyCol) <=> col("__bk"), "left_semi")
+    Change(f, keyCol, bk, pre, winner(pre))
+  }
+
+  /** A batch's change: the batch collapses to latest-per-key exactly
+    * as [[mergeBatch]] does, and the winner is the same max_by
+    * [[mergeBatch]] commits — so the fold TELESCOPES, and a
+    * re-delivered batch (all entries lose at equal seq) changes
+    * nothing.
+    */
+  private def batchChange(f: ViewFold, store: DataFrame, batch: DataFrame,
+                          keyCol: String, seqCols: Seq[String],
+                          maxBroadcastKeys: Long): Change = {
+    require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
+    val needed = ((keyCol +: f.opCol +: seqCols) ++ f.dims :+ f.valCol).distinct
+    needed.foreach(c => require(batch.columns.contains(c), s"batch missing column $c"))
+    val carried = needed.filterNot(_ == keyCol)
+    def latest(df: DataFrame): DataFrame =
+      df.groupBy(col(keyCol))
+        .agg(max_by(struct(carried.map(col): _*),
+          struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
+        .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*)
+    val bl = latest(batch.select(needed.map(col): _*))
+    change(f, store, keyCol, seqCols, bl, maxBroadcastKeys, "batch")(pre =>
+      latest(pre.unionByName(bl)))
+  }
+
+  /** A purge's change: the purged keys' pre-image with an EMPTY winner
+    * side — so erasure is just a fold.
+    */
+  private def purgeChange(f: ViewFold, store: DataFrame, keys: DataFrame,
+                          keyCol: String, maxBroadcastKeys: Long): Change =
+    change(f, store, keyCol, Nil, keys.select(keyCol).distinct(),
+      maxBroadcastKeys, "purge")(_.where(lit(false)))
+
+  /** THE one exchange of a fold: live winner rows tagged +1 and live
+    * pre-image rows −1, one groupBy for the signed count/sum delta and
+    * the flavour's [[ViewFold.deltaAggs]] (a when() with no otherwise
+    * is null on the other side's rows and on null values, and the
+    * aggregates skip nulls).
+    */
+  private def delta(c: Change): DataFrame = {
+    val f = c.f
+    val signed = (df: DataFrame, sign: Int) =>
+      f.live(df).select(f.dims.map(col) :+ col(f.valCol) :+ lit(sign).as("__sgn"): _*)
+    f.groups(signed(c.winner, 1).unionByName(signed(c.pre, -1)))
+      .agg(sum(col("__sgn").cast("long")).as(f.nCol),
+        sum0(col(f.valCol) * col("__sgn"), c.pre.schema(f.valCol).dataType)
+          .as(f.sumCol) +: f.deltaAggs: _*)
+  }
+
+  /** Fold a delta frame into the view state through ONE dim-bounded
+    * union+groupBy: n/sum add up, and each `extra` column (view state
+    * or delta aggregate) rides along null on the side that lacks it,
+    * picked out by null-skipping MAX — each side contributes at most
+    * one row per dim, so MAX is pure selection. Dims whose live row
+    * count reached zero drop. Null dims group as ordinary values on
+    * both sides — no join, so no null-key mismatch to guard.
+    */
+  private def merge(agg: DataFrame, delta: DataFrame, dims: Seq[String],
+                    nCol: String, sumCol: String, extra: Seq[String]): DataFrame = {
+    def side(df: DataFrame, other: DataFrame) =
+      df.select(dims.map(col) ++ Seq(col(nCol), col(sumCol)) ++ extra.map(c =>
+        if (df.columns.contains(c)) col(c)
+        else lit(null).cast(other.schema(c).dataType).as(c)): _*)
+    side(agg, delta).unionByName(side(delta, agg))
+      .groupBy(dims.map(col): _*)
+      .agg(sum(col(nCol)).as(nCol),
+        sum0(col(sumCol), agg.schema(sumCol).dataType).as(sumCol) +:
+          extra.map(c => max(col(c)).as(c)): _*)
+      .where(col(nCol) =!= 0)
+  }
+
+  /** The fold core: exchange, merge, and — for a flavour with state —
+    * the EAGER tail. The dim-bounded stepped state CHECKPOINTS inside
+    * the call, so the recompute-flag test is a cheap action, the
+    * common unflagged commit carries no recompute branch (and no store
+    * scan) in its plan at all, with no reliance on AQE's
+    * empty-relation propagation, and callers need no lineage
+    * truncation across folds. Only flagged dims recompute, from
+    * `rstore()` — the FULL pre-change store, built lazily — anti-joined
+    * with the changed keys, plus the winners.
+    */
+  private def fold(agg: DataFrame, c: Change, rstore: () => DataFrame): DataFrame = {
+    val f = c.f
+    f.stateCols.foreach(s => require(agg.columns.contains(s),
+      s"agg is missing view-state column $s — seed the view with its own flavour's snapshot"))
+    val d = delta(c)
+    val merged = merge(agg, d, f.dims, f.nCol, f.sumCol,
+      f.stateCols ++ d.columns.drop(f.dims.size + 2))
+    if (f.stateCols.isEmpty) return merged
+    val vt = c.pre.schema(f.valCol).dataType
+    val dk = struct(f.dims.map(col): _*).as("__dk")
+    val ck = f.step(merged, vt).withColumn("__dk", dk).localCheckpoint(true)
+    val flagged = ck.where(col("__rc")).select("__dk")
+    val out = if (flagged.isEmpty) ck else {
+      val rs = rstore()
+      (c.keyCol +: f.opCol +: f.dims :+ f.valCol).foreach(n =>
+        require(rs.columns.contains(n), s"recomputeStore missing column $n"))
+      require(!rs.columns.contains("__bk"),
+        "column name __bk is reserved by the recompute's key anti-join")
+      def live(df: DataFrame) = f.live(df).select(dk, col(f.valCol))
+      val r = f.rebuilt(live(rs.join(c.bk, col(c.keyCol) <=> col("__bk"), "left_anti"))
+        .unionByName(live(c.winner))
+        .join(flagged.hint("broadcast"), Seq("__dk"), "left_semi"))
+      f.stateCols.zip(r.columns.tail).foldLeft(ck.join(r, Seq("__dk"), "left")) {
+        case (df, (s, t)) => df.withColumn(s, when(col("__rc"), col(t)).otherwise(col(s)))
+      }
+    }
+    out.select(f.dims.map(col) ++ Seq(col(f.nCol), col(f.sumCol)) ++ f.served(vt): _*)
+  }
+
+  /** Fold one changelog batch into view `agg` against the PRE-batch
+    * `store` (with a [[graft.streaming.BucketStore]] underneath, the
+    * touched-bucket read: the pre-image probe only ever matches the
+    * batch's keys). `rstore` is the recompute source — an affected
+    * dim's other rows live in every bucket, so a bucketed caller
+    * passes the full store; it is built only on the recompute path.
+    */
+  private[graft] def foldBatch(f: ViewFold, agg: DataFrame, store: DataFrame,
+                               batch: DataFrame, keyCol: String,
+                               seqCols: Seq[String], maxBroadcastKeys: Long,
+                               rstore: () => DataFrame): DataFrame =
+    fold(agg, batchChange(f, store, batch, keyCol, seqCols, maxBroadcastKeys), rstore)
+
+  /** Subtract the purged `keys`' live contributions from view `agg` —
+    * correct VIEW-FIRST against the PRE-purge store: a recompute reads
+    * `rstore()` anti-joined with the keys, i.e. the survivors.
+    */
+  private[graft] def foldPurge(f: ViewFold, agg: DataFrame, store: DataFrame,
+                               keys: DataFrame, keyCol: String,
+                               maxBroadcastKeys: Long,
+                               rstore: () => DataFrame): DataFrame =
+    fold(agg, purgeChange(f, store, keys, keyCol, maxBroadcastKeys), rstore)
+
+  /** [[CountSum]]'s full recompute. */
+  def aggSnapshot(store: DataFrame, opCol: String, dims: Seq[String],
+                  valCol: String, deleteOp: String = "D",
+                  nCol: String = "n", sumCol: String = "sum"): DataFrame =
+    CountSum(opCol, dims, valCol, deleteOp, nCol, sumCol).snapshot(store)
+
+  /** Per-dimension (count, sum) DELTA of one changelog batch against
+    * the PRE-batch store, `(dims..., nCol, sumCol)`: fold it into the
+    * maintained aggregate with [[mergeAggDelta]] alongside the
+    * [[mergeBatch]] that folds the batch into the store. The delta is
+    * `+winner − pre` over the live rows — see [[ViewFold]]. Pass an
+    * integer `valCol` (cents, not dollars) when the view is gated by
+    * hash.
     *
-    *  - leaving live values pop out of the sketch (multiset diff —
-    *    a leaver beyond the coverage threshold is simply absent);
-    *  - entering live values within coverage splice in (an enterer
-    *    beyond a TRUNCATED threshold is untracked by construction —
-    *    it can never be the boundary while covered values remain);
-    *  - the sketch re-truncates to k, tightening the threshold;
-    *  - ONLY a side whose sketch drains empty while untracked live
-    *    values remain (threshold non-null, n > 0) REBUILDS from the
-    *    post-batch live rows of that dim — k boundary deletions per
-    *    side, minimum, between rebuilds.
-    *
-    * Correctness invariant (property-tested): the sketch is always a
-    * sub-multiset of the dim's live values containing every live
-    * value within its threshold, so the served end equals the true
-    * min/max whenever the sketch is non-empty, and
-    * `fold == aggSnapshotSketch(post-store)` on (dims, n, sum, min,
-    * max) after every batch. Same `recomputeStore`, broadcast, and
-    * EAGER contracts as [[mergeAggMinMax]] — the dim-bounded state
-    * checkpoints inside the call (the common no-drain result carries
-    * no rebuild branch and no growing lineage, so callers need no
-    * truncation of their own).
+    * 100 TB shape: the store is touched ONLY via a broadcast semi-join
+    * on the batch's keys, every aggregation partial-aggregates
+    * map-side, and the output is dim-cardinality-sized.
+    */
+  def aggDelta(store: DataFrame, batch: DataFrame, keyCol: String,
+               opCol: String, seqCols: Seq[String], dims: Seq[String],
+               valCol: String, deleteOp: String = "D",
+               nCol: String = "n", sumCol: String = "sum",
+               maxBroadcastKeys: Long = 10000000L): DataFrame =
+    delta(batchChange(CountSum(opCol, dims, valCol, deleteOp, nCol, sumCol),
+      store, batch, keyCol, seqCols, maxBroadcastKeys))
+
+  /** Fold an [[aggDelta]] into the maintained aggregate — the
+    * view-state merge with no extra state.
+    */
+  def mergeAggDelta(agg: DataFrame, delta: DataFrame, dims: Seq[String],
+                    nCol: String = "n", sumCol: String = "sum"): DataFrame =
+    merge(agg, delta, dims, nCol, sumCol, Nil)
+
+  /** [[MinMax]]'s full recompute. */
+  def aggSnapshotMinMax(store: DataFrame, opCol: String, dims: Seq[String],
+                        valCol: String, deleteOp: String = "D",
+                        nCol: String = "n", sumCol: String = "sum",
+                        minCol: String = "min", maxCol: String = "max")
+      : DataFrame =
+    MinMax(opCol, dims, valCol, deleteOp, nCol, sumCol, minCol, maxCol).snapshot(store)
+
+  /** Fold one changelog batch into a [[MinMax]] view `agg` (EAGER —
+    * see [[ViewFold]]). `recomputeStore` is the full store for
+    * bucketed callers (defaults to `store`); a no-retraction fold
+    * never executes it (PlanShapeSpec pins this with a poisoned
+    * source).
+    */
+  def mergeAggMinMax(agg: DataFrame, store: DataFrame, batch: DataFrame,
+                     keyCol: String, opCol: String, seqCols: Seq[String],
+                     dims: Seq[String], valCol: String,
+                     deleteOp: String = "D",
+                     nCol: String = "n", sumCol: String = "sum",
+                     minCol: String = "min", maxCol: String = "max",
+                     maxBroadcastKeys: Long = 10000000L,
+                     recomputeStore: Option[DataFrame] = None): DataFrame =
+    foldBatch(MinMax(opCol, dims, valCol, deleteOp, nCol, sumCol, minCol, maxCol),
+      agg, store, batch, keyCol, seqCols, maxBroadcastKeys,
+      () => recomputeStore.getOrElse(store))
+
+  /** [[Sketch]]'s full recompute. */
+  def aggSnapshotSketch(store: DataFrame, opCol: String, dims: Seq[String],
+                        valCol: String, k: Int, deleteOp: String = "D",
+                        nCol: String = "n", sumCol: String = "sum",
+                        minCol: String = "min", maxCol: String = "max")
+      : DataFrame =
+    Sketch(opCol, dims, valCol, k, deleteOp, nCol, sumCol, minCol, maxCol).snapshot(store)
+
+  /** Fold one changelog batch into a [[Sketch]] view `agg` — same
+    * `recomputeStore`, broadcast and EAGER contracts as
+    * [[mergeAggMinMax]]; the full store is read only on a drain.
     */
   def mergeAggSketch(agg: DataFrame, store: DataFrame, batch: DataFrame,
                      keyCol: String, opCol: String, seqCols: Seq[String],
@@ -609,204 +639,14 @@ object Changelog {
                      nCol: String = "n", sumCol: String = "sum",
                      minCol: String = "min", maxCol: String = "max",
                      maxBroadcastKeys: Long = 10000000L,
-                     recomputeStore: Option[DataFrame] = None): DataFrame = {
-    require(k >= 1, s"sketch k=$k must be positive")
-    (SketchCols ++ Seq("__lv", "__ev", "__dk", "__rs")).foreach(t =>
-      require(!dims.contains(t),
-        s"column name $t is reserved by mergeAggSketch's state/temporaries"))
-    SketchCols.foreach(c => require(agg.columns.contains(c),
-      s"agg is missing sketch-state column $c — seed the view with " +
-        "aggSnapshotSketch, not aggSnapshotMinMax"))
-    val (bk, pre, winner) = preWinner(store, batch, keyCol, opCol, seqCols,
-      dims, valCol, maxBroadcastKeys)
-    val vt = store.schema(valCol).dataType
-    val dk = struct(dims.map(col): _*).as("__dk")
-    def live(df: DataFrame): DataFrame =
-      df.where(col(opCol) =!= deleteOp).select(dk, col(valCol))
-    // ONE exchange computes the n/sum telescoping delta AND the
-    // per-dim leaving/entering live-value arrays: tag each live
-    // pre-image row −1 and each live winner row +1, then a single
-    // groupBy aggregates the signed count/sum while collect_list's
-    // null-skipping splits the value arrays by side (a when() with no
-    // otherwise is null on the other side's rows and on null values —
-    // exactly the old per-side `.where(isNotNull)` filters). The
-    // previous shape paid three batch-sized exchanges (delta, leaving,
-    // entering) plus two extra view-side joins for the same numbers.
-    val signed = (df: DataFrame, sign: Int) =>
-      df.where(col(opCol) =!= deleteOp)
-        .select((dims.map(col) :+ col(valCol) :+ lit(sign).as("__sgn")): _*)
-    val fused = signed(winner, 1).unionByName(signed(pre, -1))
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col("__sgn").cast("long")).as(nCol),
-        coalesce(sum(col(valCol) * col("__sgn")), lit(0L).cast(vt)).as(sumCol),
-        sort_array(collect_list(when(col("__sgn") === -1, col(valCol))))
-          .as("__lv"),
-        sort_array(collect_list(when(col("__sgn") === 1, col(valCol))))
-          .as("__ev"))
-    sketchStep(foldSketchState(agg, fused, dims, nCol, sumCol, vt),
-      () => {
-        val rstore = recomputeStore.getOrElse(store)
-        ((keyCol +: opCol +: dims) :+ valCol).foreach(c =>
-          require(rstore.columns.contains(c),
-            s"recomputeStore missing column $c"))
-        require(!rstore.columns.contains("__bk"),
-          "column name __bk is reserved by mergeAggSketch's key anti-join")
-        live(rstore.join(bk, col(keyCol) <=> col("__bk"), "left_anti"))
-          .unionByName(live(winner))
-      },
-      dims, valCol, vt, k, nCol, sumCol, minCol, maxCol)
-  }
+                     recomputeStore: Option[DataFrame] = None): DataFrame =
+    foldBatch(Sketch(opCol, dims, valCol, k, deleteOp, nCol, sumCol, minCol, maxCol),
+      agg, store, batch, keyCol, seqCols, maxBroadcastKeys,
+      () => recomputeStore.getOrElse(store))
 
-  /** Fold the maintained view's (n, sum) + sketch state with a
-    * caller's `fused` delta frame (n/sum delta + leaving/entering
-    * value arrays, one row per touched dim) in ONE union + groupBy —
-    * the single consumption of `fused`. The n/sum arithmetic is
-    * [[mergeAggDelta]]'s verbatim (same union coercion, same SUM0
-    * fallback, same n≠0 drop); the sketch state and the value arrays
-    * ride the same exchange as null-on-the-other-side columns picked
-    * out by null-skipping MAX (each side contributes at most one row
-    * per dim, so MAX is pure selection, never comparison). The
-    * previous shape LEFT-joined the (n, sum) fold with the prior
-    * sketch and with `fused`'s arrays — two joins whose broadcast
-    * builds re-executed the fused subtree (column pruning specializes
-    * the two references, so exchange reuse never fired): one full
-    * batch+touched-store pass per trigger for nothing.
-    */
-  private def foldSketchState(agg: DataFrame, fused: DataFrame,
-                              dims: Seq[String], nCol: String, sumCol: String,
-                              vt: org.apache.spark.sql.types.DataType)
-      : DataFrame = {
-    val nullArr = lit(null).cast(s"array<${vt.sql}>")
-    val nullV = lit(null).cast(vt)
-    val aggSide = agg.select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-      col("__mns") :+ col("__mxs") :+ col("__mnt") :+ col("__mxt") :+
-      nullArr.as("__lv") :+ nullArr.as("__ev")): _*)
-    val fusedSide = fused.select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-      nullArr.as("__mns") :+ nullArr.as("__mxs") :+ nullV.as("__mnt") :+
-      nullV.as("__mxt") :+ col("__lv") :+ col("__ev")): _*)
-    aggSide.unionByName(fusedSide)
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col(nCol)).as(nCol),
-        coalesce(sum(col(sumCol)),
-          lit(0L).cast(agg.schema(sumCol).dataType)).as(sumCol),
-        max(col("__mns")).as("__mns"), max(col("__mxs")).as("__mxs"),
-        max(col("__mnt")).as("__mnt"), max(col("__mxt")).as("__mxt"),
-        max(col("__lv")).as("__lv"), max(col("__ev")).as("__ev"))
-      .where(col(nCol) =!= 0)
-      .withColumn("__dk", struct(dims.map(col): _*))
-  }
-
-  /** Shared sketch-state stepping of [[mergeAggSketch]] and
-    * [[purgeAggSketch]]: take the [[foldSketchState]] frame (folded
-    * n/sum + prior sketch + the per-dim leaving/entering live-value
-    * arrays, all out of one exchange), pop leavers (multiset diff),
-    * splice coverable enterers, re-truncate to k, and — only for dims
-    * whose sketch side DRAINS while untracked live values remain —
-    * rebuild from `postLive()` (the POST-state live rows of the
-    * store, built lazily: the common no-drain path checkpoints before
-    * the drain test and never references it, so its committed plan
-    * carries no store scan at all).
-    */
-  private def sketchStep(foldedState: DataFrame,
-                         postLive: () => DataFrame,
-                         dims: Seq[String], valCol: String,
-                         vt: org.apache.spark.sql.types.DataType, k: Int,
-                         nCol: String, sumCol: String,
-                         minCol: String, maxCol: String): DataFrame = {
-    val emptyArr = array().cast(s"array<${vt.sql}>")
-    val folded = foldedState
-      .withColumn("__mns", coalesce(col("__mns"), emptyArr))
-      .withColumn("__mxs", coalesce(col("__mxs"), emptyArr))
-      .withColumn("__lv", coalesce(col("__lv"), emptyArr))
-      .withColumn("__ev", coalesce(col("__ev"), emptyArr))
-    // min side: pop leavers, splice coverable enterers, retruncate.
-    // Candidates land in their own columns FIRST — deriving state in
-    // one chained withColumn pass would re-resolve the candidate
-    // expression against the already-updated sketch column.
-    val mnCand = sort_array(concat(
-      multisetDiff(col("__mns"), col("__lv")),
-      when(col("__mnt").isNull, col("__ev"))
-        .otherwise(filter(col("__ev"), v => v <= col("__mnt")))))
-    // max side mirrored (arrays ascending; the tail is the boundary)
-    val mxCand = sort_array(concat(
-      multisetDiff(col("__mxs"), col("__lv")),
-      when(col("__mxt").isNull, col("__ev"))
-        .otherwise(filter(col("__ev"), v => v >= col("__mxt")))))
-    val stepped = folded
-      .withColumn("__mnc", mnCand)
-      .withColumn("__mxc", mxCand)
-      .select((dims.map(col) :+ col("__dk") :+ col(nCol) :+ col(sumCol) :+
-        when(size(col("__mnc")) > k, slice(col("__mnc"), 1, k))
-          .otherwise(col("__mnc")).as("__mns") :+
-        when(size(col("__mnc")) > k, element_at(col("__mnc"), k))
-          .otherwise(col("__mnt")).as("__mnt") :+
-        when(size(col("__mxc")) > k,
-          slice(col("__mxc"), (size(col("__mxc")) - k + 1).cast("int"), lit(k)))
-          .otherwise(col("__mxc")).as("__mxs") :+
-        when(size(col("__mxc")) > k,
-          element_at(col("__mxc"), (size(col("__mxc")) - k + 1).cast("int")))
-          .otherwise(col("__mxt")).as("__mxt")): _*)
-      // a side drains when its sketch is empty but untracked live
-      // values remain (threshold says truncated, n says rows exist)
-      .withColumn("__rs",
-        (size(col("__mns")) === 0 && col("__mnt").isNotNull) ||
-          (size(col("__mxs")) === 0 && col("__mxt").isNotNull))
-    // The fold state is dim-bounded — CHECKPOINT it eagerly so (a) the
-    // drain test below is a cheap action, (b) the common no-drain path
-    // carries NO rebuild branch in its plan at all, and (c) the rare
-    // drain path reads the state once instead of recomputing the whole
-    // fold subtree as the rebuild branch's second input. This makes
-    // mergeAggSketch EAGER (it runs the fold when called) — the shape
-    // every maintenance caller has anyway, and the reason the returned
-    // frame needs no further lineage truncation across folds.
-    val steppedCk = stepped.localCheckpoint(true)
-    def assemble(df: DataFrame): DataFrame =
-      df.select((dims.map(col) :+ col(nCol) :+ col(sumCol) :+
-        serveMin(vt).as(minCol) :+ serveMax(vt).as(maxCol) :+
-        col("__mns") :+ col("__mxs") :+ col("__mnt") :+ col("__mxt")): _*)
-    val rebuildDims = steppedCk.where(col("__rs")).select("__dk")
-    if (rebuildDims.isEmpty) return assemble(steppedCk)
-    // the rare path: REBUILD the drained dims' sketches from the
-    // post-state live rows of those dims only
-    val drainedLive = postLive()
-      .join(rebuildDims.hint("broadcast"), Seq("__dk"), "left_semi")
-    val rebuilt = kSmallestLargest(drainedLive, "__dk", valCol, k)
-      .select(col("__dk"), col("__mns").as("__rmns"),
-        col("__mxs").as("__rmxs"), col("__mnt").as("__rmnt"),
-        col("__mxt").as("__rmxt"))
-    assemble(steppedCk.join(rebuilt, Seq("__dk"), "left")
-      .withColumn("__mns",
-        when(col("__rs"), coalesce(col("__rmns"), emptyArr))
-          .otherwise(col("__mns")))
-      .withColumn("__mxs",
-        when(col("__rs"), coalesce(col("__rmxs"), emptyArr))
-          .otherwise(col("__mxs")))
-      .withColumn("__mnt", when(col("__rs"), col("__rmnt"))
-        .otherwise(col("__mnt")))
-      .withColumn("__mxt", when(col("__rs"), col("__rmxt"))
-        .otherwise(col("__mxt"))))
-  }
-
-  /** Subtract a PURGED key list's live contributions from a SKETCHED
-    * (count, sum, min, max) view — the erasure twin of
-    * [[mergeAggSketch]], sharing its [[sketchStep]]: the purged keys'
-    * live values POP out of each dim's sketch (an O(1) boundary
-    * retraction, where the plain min/max view pays a full recompute
-    * per erasure), n/sum subtract as the usual delta, and only a dim
-    * whose sketch side DRAINS while untracked live values remain
-    * rebuilds — from the store's SURVIVING rows (`recomputeStore`
-    * anti-joined with the purged keys), which makes the call correct
-    * VIEW-FIRST against the PRE-purge store: the crash-recoverable
-    * protocol of [[graft.streaming.StreamMatview.purgeKeys]] extends
-    * to min/max views unchanged.
-    *
-    * `store` may be the touched-buckets read (the pre-image probe only
-    * ever matches the purged keys); `recomputeStore` must be the FULL
-    * store for the same reason as [[mergeAggMinMax]]'s — a drained
-    * dim's surviving rows live in every bucket. A dim purged empty
-    * drops from the view (n reaches 0). Like [[mergeAggSketch]] this
-    * is EAGER: the dim-bounded state checkpoints inside the call, so
-    * the common no-drain path's plan carries no store scan at all.
+  /** Subtract purged `keys` from a [[Sketch]] view — [[foldPurge]]:
+    * the keys' live values pop out of each dim's sketch and only a
+    * drained side rebuilds, from the survivors.
     */
   def purgeAggSketch(agg: DataFrame, store: DataFrame, keys: DataFrame,
                      keyCol: String, opCol: String, dims: Seq[String],
@@ -814,56 +654,10 @@ object Changelog {
                      nCol: String = "n", sumCol: String = "sum",
                      minCol: String = "min", maxCol: String = "max",
                      maxBroadcastKeys: Long = 10000000L,
-                     recomputeStore: Option[DataFrame] = None): DataFrame = {
-    require(k >= 1, s"sketch k=$k must be positive")
-    (SketchCols ++ Seq("__lv", "__ev", "__dk", "__rs", "__bk")).foreach(t =>
-      require(!dims.contains(t),
-        s"column name $t is reserved by purgeAggSketch's state/temporaries"))
-    SketchCols.foreach(c => require(agg.columns.contains(c),
-      s"agg is missing sketch-state column $c — seed the view with " +
-        "aggSnapshotSketch, not aggSnapshotMinMax"))
-    val needed = (keyCol +: opCol +: dims) :+ valCol
-    needed.foreach(c => require(store.columns.contains(c),
-      s"store missing column $c"))
-    val kdf = keys.select(col(keyCol).as("__bk")).distinct()
-    if (maxBroadcastKeys > 0)
-      require(kdf.limit(math.min(maxBroadcastKeys + 1, Int.MaxValue).toInt)
-        .count() <= maxBroadcastKeys,
-        s"purge has more than $maxBroadcastKeys distinct keys — too large to " +
-          "broadcast against the store; split the purge (or raise maxBroadcastKeys)")
-    val bk = broadcast(kdf)
-    val vt = store.schema(valCol).dataType
-    val dk = struct(dims.map(col): _*).as("__dk")
-    def live(df: DataFrame): DataFrame =
-      df.where(col(opCol) =!= deleteOp).select(dk, col(valCol))
-    // pre-images: the purged keys' current store rows — the ONLY store
-    // access of the common path, one broadcast semi-join (with a
-    // bucketed store underneath, touched buckets only)
-    val pre = store.select(needed.distinct.map(col): _*)
-      .join(bk, col(keyCol) <=> col("__bk"), "left_semi")
-    // ONE exchange, same fusion as [[mergeAggSketch]]: the negated
-    // n/sum delta (SUM0 convention as aggDelta; the sum keeps its
-    // natural widened type — mergeAggDelta's union coerces, never a
-    // narrowing cast) and the leaving-value arrays come out of a
-    // single groupBy over the purged pre-images. A purge only removes
-    // rows, so the entering side is a constant empty array.
-    val fused = pre.where(col(opCol) =!= deleteOp)
-      .groupBy(dims.map(col): _*)
-      .agg((count(lit(1)) * -1).as(nCol),
-        (coalesce(sum(col(valCol)), lit(0L).cast(vt)) * -1).as(sumCol),
-        sort_array(collect_list(col(valCol))).as("__lv"))
-      .withColumn("__ev", array().cast(s"array<${vt.sql}>"))
-    sketchStep(foldSketchState(agg, fused, dims, nCol, sumCol, vt),
-      () => {
-        val rstore = recomputeStore.getOrElse(store)
-        needed.foreach(c => require(rstore.columns.contains(c),
-          s"recomputeStore missing column $c"))
-        require(!rstore.columns.contains("__bk"),
-          "column name __bk is reserved by purgeAggSketch's key anti-join")
-        live(rstore.join(bk, col(keyCol) <=> col("__bk"), "left_anti"))
-      },
-      dims, valCol, vt, k, nCol, sumCol, minCol, maxCol)
-  }
+                     recomputeStore: Option[DataFrame] = None): DataFrame =
+    foldPurge(Sketch(opCol, dims, valCol, k, deleteOp, nCol, sumCol, minCol, maxCol),
+      agg, store, keys, keyCol, maxBroadcastKeys,
+      () => recomputeStore.getOrElse(store))
 
   /** Expand a changelog into SCD-type-2 history: one VERSION row per
     * non-delete log entry, valid over [`validFrom`, `validTo`) —

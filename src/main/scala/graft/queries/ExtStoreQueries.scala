@@ -726,9 +726,8 @@ object ExtStoreQueries {
     // ext_stream_forget, now on the DELTA purge path: the view refresh
     // subtracts the purged keys' live contributions read from the
     // pre-purge snapshot's TOUCHED BUCKETS ONLY (BucketStoreSpec pins
-    // the read set; the full-store recompute the previous design paid
-    // per erasure survives only as the rebuildView audit tool),
-    // committed view-first with a crash-recoverable intent note. Two
+    // the read set), committed view-first with a crash-recoverable
+    // intent note. Two
     // 3-trigger phases drive BOTH stores through StreamMatview; the
     // settled VIEW must equal the recompute over the two-phase fold
     // (forgotten keys' contributions gone, post-purge changes for

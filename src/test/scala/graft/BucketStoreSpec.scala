@@ -358,64 +358,6 @@ class BucketStoreSpec extends SparkSpec {
       .where(col("k") === 42L).select("name").as[String].head() == "b1-42")
   }
 
-  test("matview purge: the view delta reads ONLY the touched buckets, and the crash window redoes only the snapshot") {
-    import graft.ext.Changelog
-    import graft.streaming.StreamMatview
-    val storeDir = Files.createTempDirectory("graft_bkmvd_store").toString
-    val aggDir = Files.createTempDirectory("graft_bkmvd_agg").toString
-    StreamMatview.seed(spark.range(0, 64).select(
-      col("id").as("k"), concat(lit("seg"), col("id") % 4).as("seg"),
-      (col("id") * 10).as("cents"), lit("U").as("op"), lit(-1L).as("seq")),
-      storeDir, aggDir, "k", "op", Seq("seg"), "cents")
-    def canonView = StreamMatview.viewSnapshot(spark, aggDir)
-      .select("seg", "n", "sum").as[(String, Long, Long)].collect().toSeq.sorted
-    def canonRecompute = Changelog.aggSnapshot(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents")
-      .select("seg", "n", "sum").as[(String, Long, Long)].collect().toSeq.sorted
-
-    // plan pin: the purge delta's parquet inputs are exactly the
-    // buckets the key list hashes into — never the whole store
-    val keys = Seq(5L, 9L).toDF("k")
-    val (neg, touched, nKeys) = StreamMatview.purgeDelta(spark, storeDir, keys,
-      "k", "op", Seq("seg"), "cents", "n", "sum")
-    assert(nKeys == 2L, s"fused probe must count the distinct keys: $nKeys")
-    val bucketFiles = neg.inputFiles.toIndexedSeq.filter(_.contains("__b="))
-    assert(bucketFiles.nonEmpty)
-    val bucketsRead = bucketFiles
-      .map(f => "__b=(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong).toSet
-    assert(bucketsRead == touched,
-      s"purge delta read buckets $bucketsRead, touched were $touched")
-    assert(touched.size < 16,
-      "fixture degenerate: the key list touched every bucket — the pin is vacuous")
-
-    // CRASH WINDOW: the view-side subtract commits (with the intent
-    // note), the snapshot purge never runs
-    StreamMatview.purgeViewCommit(spark, storeDir, aggDir, keys, "k", "op",
-      Seq("seg"), "cents", "n", "sum")
-    assert(StreamMerge.readStore(spark, storeDir).get
-      .where(col("k").isin(5L, 9L)).count() == 2,
-      "crash-window precondition: the snapshot still holds the keys")
-    // a DIFFERENT purge must refuse until the interrupted one completes
-    val e = intercept[IllegalArgumentException] {
-      StreamMatview.purgeKeys(spark, storeDir, aggDir, Seq(7L).toDF("k"),
-        "k", "op", Seq("seg"), "cents")
-    }
-    assert(e.getMessage.contains("DIFFERENT key list"))
-    // re-running the SAME purge redoes only the snapshot half: no
-    // double subtract, fold == recompute
-    StreamMatview.purgeKeys(spark, storeDir, aggDir, keys, "k", "op",
-      Seq("seg"), "cents")
-    assert(canonView == canonRecompute,
-      "view diverged after the crash-window replay (double subtract?)")
-    assert(canonView.map(_._3).sum ==
-      (0L until 64L).filterNot(Seq(5L, 9L).contains).map(_ * 10).sum)
-    // the protocol is now satisfied: a FRESH purge takes the normal
-    // delta path and stays consistent
-    StreamMatview.purgeKeys(spark, storeDir, aggDir, Seq(7L).toDF("k"),
-      "k", "op", Seq("seg"), "cents")
-    assert(canonView == canonRecompute)
-  }
-
   test("a matview-managed snapshot store survives a rebucket: the view keeps folding at the migrated count") {
     import graft.ext.Changelog
     import graft.streaming.StreamMatview
@@ -568,134 +510,15 @@ class BucketStoreSpec extends SparkSpec {
       .where(col("k") === 6L).select("name").as[String].head() == "b1-6")
   }
 
-  test("sketched-view purge: sketch pops replace the rebuild; the crash window blocks ordinary commits and redoes only the snapshot") {
-    import graft.streaming.StreamMatview
-    val storeDir = Files.createTempDirectory("graft_bksk_store").toString
-    val aggDir = Files.createTempDirectory("graft_bksk_agg").toString
-    StreamMatview.seedSketch(spark.range(0, 64).select(
-      col("id").as("k"), concat(lit("seg"), col("id") % 4).as("seg"),
-      (col("id") * 10).as("cents"), lit("U").as("op"), lit(-1L).as("seq")),
-      storeDir, aggDir, "k", "op", Seq("seg"), "cents", k = 4)
-    def canonView = StreamMatview.viewSnapshotServed(spark, aggDir)
-      .select("seg", "n", "sum", "min", "max")
-      .as[(String, Long, Long, Option[Long], Option[Long])]
-      .collect().toSeq.sorted
-    def canonRecompute = Changelog.aggSnapshotMinMax(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents")
-      .select("seg", "n", "sum", "min", "max")
-      .as[(String, Long, Long, Option[Long], Option[Long])]
-      .collect().toSeq.sorted
-
-    // normal purge: boundary holders of seg0 (60, 63 hold neither; 60
-    // IS seg0's max holder) — an in-sketch pop, view == recompute
-    StreamMatview.purgeKeysSketch(spark, storeDir, aggDir,
-      Seq(60L, 5L).toDF("k"), "k", "op", Seq("seg"), "cents", k = 4)
-    assert(canonView == canonRecompute,
-      "sketched view diverged from the recompute after a normal purge")
-
-    // CRASH WINDOW: the view-side pop commits (with the intent note),
-    // the snapshot purge never runs
-    StreamMatview.purgeViewCommitSketch(spark, storeDir, aggDir,
-      Seq(8L, 12L).toDF("k"), "k", "op", Seq("seg"), "cents", 4,
-      "n", "sum", "min", "max", 10000000L)
-    assert(StreamMerge.readStore(spark, storeDir).get
-      .where(col("k").isin(8L, 12L)).count() == 2,
-      "crash-window precondition: the snapshot still holds the keys")
-    // an ordinary view commit must REFUSE — it would erase the intent
-    // note and the half-applied purge would never complete
-    val eb = intercept[IllegalArgumentException] {
-      StreamMatview.applyBatchSketch(
-        Seq((200L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq"),
-        0L, storeDir, aggDir, "k", "op", Seq("seq"), Seq("seg"), "cents", k = 4)
-    }
-    assert(eb.getMessage.contains("incomplete purge intent"))
-    // a DIFFERENT purge must refuse too
-    val ep = intercept[IllegalArgumentException] {
-      StreamMatview.purgeKeysSketch(spark, storeDir, aggDir,
-        Seq(14L).toDF("k"), "k", "op", Seq("seg"), "cents", k = 4)
-    }
-    assert(ep.getMessage.contains("DIFFERENT key list"))
-    // re-running the SAME purge redoes only the snapshot half
-    StreamMatview.purgeKeysSketch(spark, storeDir, aggDir,
-      Seq(8L, 12L).toDF("k"), "k", "op", Seq("seg"), "cents", k = 4)
-    assert(canonView == canonRecompute,
-      "view diverged after the crash-window replay (double pop?)")
-    // the protocol is satisfied: ordinary maintenance resumes, and a
-    // DRAINING purge (every tracked min of seg1 at k=4: 1,9,13,17 —
-    // with 5 already gone) rebuilds from the survivors
-    StreamMatview.applyBatchSketch(
-      Seq((300L, "seg1", 7L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq"),
-      0L, storeDir, aggDir, "k", "op", Seq("seq"), Seq("seg"), "cents", k = 4)
-    assert(canonView == canonRecompute)
-    StreamMatview.purgeKeysSketch(spark, storeDir, aggDir,
-      Seq(1L, 9L, 13L, 17L, 300L).toDF("k"), "k", "op", Seq("seg"), "cents",
-      k = 4)
-    assert(canonView == canonRecompute,
-      "view diverged after a draining purge (rebuild read the wrong rows?)")
-  }
-
-  test("min/max purge intent: a half-applied purgeKeysMinMax blocks ordinary commits until re-run to completion") {
-    import graft.streaming.StreamMatview
-    val storeDir = Files.createTempDirectory("graft_bkmm_store").toString
-    val aggDir = Files.createTempDirectory("graft_bkmm_agg").toString
-    StreamMatview.seedMinMax(spark.range(0, 48).select(
-      col("id").as("k"), concat(lit("seg"), col("id") % 3).as("seg"),
-      (col("id") * 10).as("cents"), lit("U").as("op"), lit(-1L).as("seq")),
-      storeDir, aggDir, "k", "op", Seq("seg"), "cents")
-    def canonView = StreamMatview.viewSnapshot(spark, aggDir)
-      .select("seg", "n", "sum", "min", "max")
-      .as[(String, Long, Long, Option[Long], Option[Long])]
-      .collect().toSeq.sorted
-    def canonRecompute = Changelog.aggSnapshotMinMax(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents")
-      .select("seg", "n", "sum", "min", "max")
-      .as[(String, Long, Long, Option[Long], Option[Long])]
-      .collect().toSeq.sorted
-    val keys = Seq(6L, 47L).toDF("k") // 47 holds seg2's max — a retraction
-
-    // simulate the crash: the intent note commits, the snapshot purge
-    // lands, the view REBUILD never runs — the view still serves (and
-    // derives) the erased keys' contributions
-    val fp = StreamMatview.keyFingerprint(keys, "k")
-    val av = BucketStore.latestVersion(spark, aggDir).get
-    val ab = BucketStore.readManifest(spark, aggDir, av).batch
-    BucketStore.writeVersion(StreamMatview.viewSnapshot(spark, aggDir),
-      aggDir, av + 1L, col("seg"), nBuckets = 1, batch = Some(ab),
-      claim = Set(0L), note = Some(s"purgemm:fp=$fp"))
-    BucketStore.purgeKeys(spark, storeDir, keys, "k")
-    assert(canonView != canonRecompute,
-      "crash-window precondition: the stale view must still differ")
-    // ordinary maintenance must refuse over the intent
-    val eb = intercept[IllegalArgumentException] {
-      StreamMatview.applyBatchMinMax(
-        Seq((100L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq"),
-        0L, storeDir, aggDir, "k", "op", Seq("seq"), Seq("seg"), "cents")
-    }
-    assert(eb.getMessage.contains("incomplete min/max purge intent"))
-    // a DIFFERENT purge refuses; the SAME one completes and clears
-    val ep = intercept[IllegalArgumentException] {
-      StreamMatview.purgeKeysMinMax(spark, storeDir, aggDir,
-        Seq(9L).toDF("k"), "k", "op", Seq("seg"), "cents")
-    }
-    assert(ep.getMessage.contains("DIFFERENT key list"))
-    StreamMatview.purgeKeysMinMax(spark, storeDir, aggDir, keys,
-      "k", "op", Seq("seg"), "cents")
-    assert(canonView == canonRecompute,
-      "view must equal the recompute after the purge completes")
-    // the note is cleared: ordinary maintenance resumes
-    StreamMatview.applyBatchMinMax(
-      Seq((100L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq"),
-      0L, storeDir, aggDir, "k", "op", Seq("seq"), Seq("seg"), "cents")
-    assert(canonView == canonRecompute)
-  }
-
-  /** One maintained-view flavour behind a common face: its seed, its
-    * trigger, its job-label tag, and its served view and recompute as
-    * sorted rows.
+  /** One maintained-view flavour behind a common face: its fold, its
+    * seed, its trigger, its purge, its job-label tag, and its served
+    * view and recompute as sorted rows.
     */
   private final case class Flavour(name: String, tag: String,
+                                   fold: Changelog.ViewFold,
                                    seed: (DataFrame, String, String) => Unit,
                                    apply: (DataFrame, Long, String, String) => Unit,
+                                   purge: (String, String, DataFrame) => BucketStore.PurgeStats,
                                    view: String => Seq[String],
                                    recompute: String => Seq[String])
 
@@ -708,27 +531,98 @@ class BucketStoreSpec extends SparkSpec {
     def store(dir: String) = StreamMerge.readStore(spark, dir).get
     Seq(
       Flavour("count/sum", "matview",
+        Changelog.CountSum("op", Seq("seg"), "cents"),
         (s, st, ag) => StreamMatview.seed(s, st, ag, "k", "op", Seq("seg"), "cents"),
         (b, id, st, ag) => StreamMatview.applyBatch(b, id, st, ag, "k", "op",
           Seq("seq"), Seq("seg"), "cents"),
+        (st, ag, keys) => StreamMatview.purgeKeys(spark, st, ag, keys, "k", "op",
+          Seq("seg"), "cents"),
         ag => rows(StreamMatview.viewSnapshot(spark, ag), "seg", "n", "sum"),
         st => rows(Changelog.aggSnapshot(store(st), "op", Seq("seg"), "cents"),
           "seg", "n", "sum")),
       Flavour("min/max", "matview-minmax",
+        Changelog.MinMax("op", Seq("seg"), "cents"),
         (s, st, ag) => StreamMatview.seedMinMax(s, st, ag, "k", "op", Seq("seg"), "cents"),
         (b, id, st, ag) => StreamMatview.applyBatchMinMax(b, id, st, ag, "k", "op",
           Seq("seq"), Seq("seg"), "cents"),
+        (st, ag, keys) => StreamMatview.purgeKeysMinMax(spark, st, ag, keys, "k",
+          "op", Seq("seg"), "cents"),
         ag => rows(StreamMatview.viewSnapshot(spark, ag), mm: _*),
         st => rows(Changelog.aggSnapshotMinMax(store(st), "op", Seq("seg"), "cents"),
           mm: _*)),
       Flavour("sketch", "matview-sketch",
+        Changelog.Sketch("op", Seq("seg"), "cents", k = 4),
         (s, st, ag) => StreamMatview.seedSketch(s, st, ag, "k", "op", Seq("seg"),
           "cents", k = 4),
         (b, id, st, ag) => StreamMatview.applyBatchSketch(b, id, st, ag, "k", "op",
           Seq("seq"), Seq("seg"), "cents", k = 4),
+        (st, ag, keys) => StreamMatview.purgeKeysSketch(spark, st, ag, keys, "k",
+          "op", Seq("seg"), "cents", k = 4),
         ag => rows(StreamMatview.viewSnapshotServed(spark, ag), mm: _*),
         st => rows(Changelog.aggSnapshotMinMax(store(st), "op", Seq("seg"), "cents"),
           mm: _*)))
+  }
+
+  flavours.foreach { f =>
+    test(s"${f.name} view purge: the view half reads only the touched buckets; its crash window blocks ordinary commits and redoes only the snapshot") {
+      import scala.jdk.CollectionConverters._
+      import graft.streaming.StreamMatview
+      val st = CrashFs.dir(spark, "graft_purge_store")
+      val ag = CrashFs.dir(spark, "graft_purge_agg")
+      // 64 keys, seg = k % 4, cents = 10k: seg1 holds 10, 50, 90, 130, ...
+      f.seed(spark.range(0, 64).select(
+        col("id").as("k"), concat(lit("seg"), col("id") % 4).as("seg"),
+        (col("id") * 10).as("cents"), lit("U").as("op"), lit(-1L).as("seq")),
+        st, ag)
+      def batch0 = Seq((200L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq")
+
+      // CRASH WINDOW: the view half commits (with the intent note), the
+      // snapshot purge never runs. Keys 5 and 9 (seg1's 50 and 90) tie
+      // no bound and pop from inside the k=4 sketch, so the view half
+      // must read exactly the buckets the key list hashes into
+      val keys = Seq(5L, 9L).toDF("k")
+      val touched = BucketStore.touchedBuckets(keys, col("k"), BucketStore.DefaultBuckets)
+      assert(touched.size < BucketStore.DefaultBuckets,
+        "fixture degenerate: the key list touched every bucket — the pin is vacuous")
+      CrashFs.opened.clear()
+      StreamMatview.purgeViewCommit(spark, st, ag, keys, "k", f.fold)
+      val bucketsRead = CrashFs.opened.asScala.toSet
+        .filter(p => CrashFs.under(st)(new org.apache.hadoop.fs.Path(p)))
+        .flatMap(p => "__b=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toLong))
+      assert(bucketsRead == touched,
+        s"${f.name}: the purge's view half read buckets $bucketsRead, touched were $touched")
+      assert(StreamMerge.readStore(spark, st).get
+        .where(col("k").isin(5L, 9L)).count() == 2,
+        "crash-window precondition: the snapshot still holds the keys")
+      // an ordinary view commit must REFUSE — it would erase the intent
+      // note and the half-applied purge would never complete
+      val eb = intercept[IllegalArgumentException](f.apply(batch0, 0L, st, ag))
+      assert(eb.getMessage.contains("incomplete purge intent"))
+      // a DIFFERENT purge must refuse too
+      val ep = intercept[IllegalArgumentException](f.purge(st, ag, Seq(14L).toDF("k")))
+      assert(ep.getMessage.contains("DIFFERENT key list"))
+      // re-running the SAME purge redoes only the snapshot half
+      val viewVersions = BucketStore.versions(spark, ag)
+      assert(f.purge(st, ag, keys).purgedRows == 2)
+      assert(BucketStore.versions(spark, ag) == viewVersions,
+        "the re-run re-committed the view instead of redoing only the snapshot")
+      assert(f.view(ag) == f.recompute(st),
+        s"${f.name}: view diverged after the crash-window re-run (double subtract?)")
+      // every file under the store, read through the plain local path
+      assert(allBytes(new org.apache.hadoop.fs.Path(st).toUri.getPath)
+        .where(col("k").isin(5L, 9L)).count() == 0)
+
+      // a purge that retracts bounds: seg1's min holder (k=1) and seg0's
+      // max holder (k=60); with k=13 it also empties seg1's min sketch
+      // (10 and 130 were its last tracked values), so the sketch drains
+      // and rebuilds from the survivors
+      f.purge(st, ag, Seq(1L, 13L, 60L).toDF("k"))
+      assert(f.view(ag) == f.recompute(st),
+        s"${f.name}: view diverged after a boundary-retracting purge")
+      // the intent is satisfied: ordinary maintenance resumes
+      f.apply(batch0, 0L, st, ag)
+      assert(f.view(ag) == f.recompute(st))
+    }
   }
 
   private def seedSnapshot: DataFrame = spark.range(0, 40).select(

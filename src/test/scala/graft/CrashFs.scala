@@ -4,7 +4,7 @@ import java.io.OutputStream
 import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * store rooted at `crashfs:///tmp/...` otherwise behaves exactly like
   * one on the local file system. Every version marker written
   * (`.../v<id>/_SUCCESS`) is logged in order, so a spec can check the
-  * order two stores were published in.
+  * order two stores were published in, and every file opened for
+  * reading is logged, so a spec can check which files an operation
+  * read.
   */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = CrashFs.Uri
@@ -28,6 +30,11 @@ class CrashFs extends RawLocalFileSystem {
   override protected def createOutputStreamWithMode(
       f: Path, append: Boolean, permission: FsPermission): OutputStream =
     CrashFs.created(f)(super.createOutputStreamWithMode(f, append, permission))
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CrashFs.opened.add(f.toString)
+    super.open(f, bufferSize)
+  }
 }
 
 object CrashFs {
@@ -39,6 +46,9 @@ object CrashFs {
 
   /** Every version marker created, in order, as a path string. */
   val markers = new ConcurrentLinkedQueue[String]()
+
+  /** Every file opened for reading, in order, as a path string. */
+  val opened = new ConcurrentLinkedQueue[String]()
 
   private val VersionDir = "^v-?\\d+$"
 
