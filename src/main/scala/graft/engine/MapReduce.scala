@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +16,11 @@ import org.apache.spark.sql.functions._
   *
   * The job has the reference worker's shape, with one exchange
   * (mr/worker.go:59-165):
-  *  - E3 map: `flatMap(mapF)` over whole-file records ([[wholeFiles]]).
-  *  - E6 partition: one hash exchange on the key into the reduce
-  *    tasks, `ihash(key) % nReduce` (mr/worker.go:72-79).
+  *  - E3 map: `flatMap(mapF)` over whole-file records ([[wholeFiles]]);
+  *    each call's pairs are counted and leave as one `(key, value, n)`
+  *    row per distinct pair (`runLengths`).
+  *  - E6 partition: one hash exchange of those rows on the key into the
+  *    reduce tasks, `ihash(key) % nReduce` (mr/worker.go:72-79).
   *  - E7 sort: `sortWithinPartitions` on the key (mr/worker.go:136);
   *    Spark's external sort spills instead of holding a task's input.
   *  - E8 group + reduce: one pass over the sorted rows hands each run
@@ -27,7 +31,16 @@ import org.apache.spark.sql.functions._
   * Differences that matter at scale:
   *  - `ReduceF` receives a lazy Iterator over its key's run, not an
   *    in-RAM slice — the reference buffers every group in memory
-  *    (mr/worker.go:145-156); nothing here buffers a group.
+  *    (mr/worker.go:145-156); nothing here buffers a group. The
+  *    iterator repeats each row's value `n` times, so `ReduceF` sees
+  *    exactly the multiset of values the map calls emitted.
+  *  - A map call's output crosses the shuffle run-length encoded, not
+  *    one record per pair (mr/worker.go:72-100 writes every pair): a
+  *    word that occurs 1 000 times in a file is one row, not 1 000.
+  *    This is no combiner — no user function runs on the map side.
+  *    The map side holds at most the distinct pairs of one call; the
+  *    reference holds the call's whole `intermediate` slice
+  *    (mr/worker.go:59-71).
   *  - The shuffle is Spark's binary spillable exchange, not JSON
   *    files on shared NFS (mr/worker.go:81-100).
   *  - The map→reduce phase barrier, straggler re-execution (10 s
@@ -79,32 +92,58 @@ object MapReduce {
                   mapF: MapF, reduceF: ReduceF): Dataset[(String, String)] = {
     import spark.implicits._
     val mapped = wholeFiles(spark, inputs)
-      .flatMap { case (file, contents) => mapF(file, contents) }
-    nReduce.fold(mapped.repartition(col("_1")))(n => mapped.repartition(n, col("_1")))
+      .flatMap { case (file, contents) => runLengths(mapF(file, contents)) }
+    // an explicit width: adaptive execution would coalesce the
+    // run-length-encoded shuffle's few bytes into one reduce task
+    mapped.repartition(nReduce.getOrElse(spark.sessionState.conf.numShufflePartitions), col("_1"))
       .sortWithinPartitions("_1")
       .mapPartitions(reduceRuns(reduceF))
   }
 
-  /** Reduce each run of equal keys in key-sorted rows. `reduceF` reads
-    * the run through a lazy iterator; whatever it leaves unread is
-    * drained before the next run starts.
+  /** One map call's output as one `(key, value, n)` row per distinct
+    * pair, `n` its number of occurrences in the call. Lossless: the
+    * reduce side expands each row back into `n` values.
+    */
+  private def runLengths(kvs: Iterator[(String, String)]): Iterator[(String, String, Long)] = {
+    val counts = new java.util.HashMap[(String, String), Array[Long]]()
+    kvs.foreach { kv =>
+      val n = counts.get(kv)
+      if (n == null) counts.put(kv, Array(1L)) else n(0) += 1
+    }
+    counts.entrySet.iterator.asScala.map(e => (e.getKey._1, e.getKey._2, e.getValue()(0)))
+  }
+
+  /** Reduce each run of equal keys in key-sorted `(key, value, n)` rows.
+    * `reduceF` reads the run through a lazy iterator that repeats each
+    * row's value `n` times; whatever it leaves unread is skipped before
+    * the next run starts.
     */
   private def reduceRuns(reduceF: ReduceF)(
-      rows: Iterator[(String, String)]): Iterator[(String, String)] = {
+      rows: Iterator[(String, String, Long)]): Iterator[(String, String)] = {
     val in = rows.buffered
     new Iterator[(String, String)] {
       def hasNext: Boolean = in.hasNext
       def next(): (String, String) = {
         val key = in.head._1
-        val run = new Iterator[(String, String)] {
-          def hasNext: Boolean = in.hasNext && in.head._1 == key
-          def next(): (String, String) =
-            if (hasNext) in.next()
-            else throw new NoSuchElementException(s"no more values for key '$key'")
+        def sameKey = in.hasNext && in.head._1 == key
+        val values = new Iterator[String] {
+          private var value: String = _
+          private var left = 0L
+          def hasNext: Boolean = left > 0 || sameKey
+          def next(): String = {
+            if (left == 0) {
+              if (!sameKey) throw new NoSuchElementException(s"no more values for key '$key'")
+              val (_, v, n) = in.next()
+              value = v
+              left = n
+            }
+            left -= 1
+            value
+          }
         }
-        val value = reduceF(key, run.map(_._2))
-        while (run.hasNext) run.next()
-        (key, value)
+        val reduced = reduceF(key, values)
+        while (sameKey) in.next()
+        (key, reduced)
       }
     }
   }

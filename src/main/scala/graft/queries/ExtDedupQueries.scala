@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Graph, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
+import graft.ext.{Dedup, Similarity, TextStats}
 import org.apache.spark.sql.functions._
 
 import ExtShared._

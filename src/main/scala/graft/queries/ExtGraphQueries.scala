@@ -1,8 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Graph, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
-import org.apache.spark.sql.functions._
+import graft.ext.{Dedup, Graph}
 
 import ExtShared._
 

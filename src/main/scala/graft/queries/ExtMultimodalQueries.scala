@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Graph, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
+import graft.ext.{Dedup, Multimodal, PlanCache}
 import org.apache.spark.sql.functions._
 
-import ExtShared._
 
 /** Multimodal family: real PNG/WAV/GIF decode, frames,
   * channels, resize, batched featurizer.

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Changelog, Curation, Dedup, Graph, Hashing, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
+import graft.ext.{Curation, Hashing, PlanCache, Sampling}
 import org.apache.spark.sql.functions._
 
 import ExtShared._

@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Graph, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
+import graft.ext.{Skew, Stats, TimeJoin}
 import org.apache.spark.sql.functions._
 
-import ExtShared._
 
 /** Relational family: pivot/cube/rollup, star join, set ops,
   * as-of / range joins, sessionize, skew-salted join, sliding

@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Graph, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
+import graft.ext.{Sampling, Stats}
 import org.apache.spark.sql.functions._
 
-import ExtShared._
 
 /** Profiling/statistics family: cardinality, profile, histogram,
   * skew, correlation, count-min, outliers.

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Hashing, PlanCache}
+import graft.ext.{Curation, Hashing, PlanCache}
 import graft.streaming.{BucketStore, StreamIngest, StreamMatview, StreamMerge}
 import org.apache.spark.sql.functions._
 

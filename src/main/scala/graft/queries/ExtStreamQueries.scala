@@ -3,12 +3,11 @@ package graft.queries
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Hashing, PlanCache}
-import graft.streaming.{BucketStore, Sessionize, StreamIngest, StreamMatview, StreamMerge, StreamingQueries}
+import graft.ext.{Dedup, Hashing}
+import graft.streaming.{Sessionize, StreamingQueries}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import ExtShared._
 
 /** Streaming family: gated `Trigger.AvailableNow` replays of the
   * streaming operators — the rows that put Structured Streaming under

@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Curation, Dedup, Graph, Hashing, Multimodal, PlanCache, Sampling, Search, Similarity, Skew, Stats, TextStats, TimeJoin}
+import graft.ext.{Hashing, Search, Stats, TextStats}
 import org.apache.spark.sql.functions._
 
-import ExtShared._
 
 /** Text-analysis family: langid, quality, tokens, normalize,
   * redact, domains, rolling-hash, repetition, surprisal, quantiles,

@@ -184,7 +184,7 @@ object BucketStore {
       r.getLong(1) + (if (r.isNullAt(2)) 0L else r.getLong(2)))
   }
 
-  private def fsOf(spark: SparkSession, dir: String) = {
+  private[streaming] def fsOf(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }

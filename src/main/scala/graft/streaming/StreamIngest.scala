@@ -83,7 +83,7 @@ object StreamIngest {
     // the version without admitting any new batch)
     val latest = BucketStore.latestBatch(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"no committed store version under $storeDir"))
-    val (fs, docsPath) = fsOf(spark, s"$storeDir/docs")
+    val (fs, docsPath) = BucketStore.fsOf(spark, s"$storeDir/docs")
     val dirs =
       if (!fs.exists(docsPath)) Seq.empty
       else fs.listStatus(docsPath)
@@ -101,11 +101,6 @@ object StreamIngest {
           "to read this state as an empty corpus")
     }
     else spark.read.parquet(dirs: _*)
-  }
-
-  private def fsOf(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
   /** Seed the fingerprint store with a standing corpus's fingerprints
@@ -138,7 +133,7 @@ object StreamIngest {
     if (StreamMerge.replaySkip(spark, storeDir, id)) return
     batch.persist()
     try BucketStore.noAqe(spark) {
-      val latest = StreamMerge.latestVersion(spark, storeDir)
+      val latest = BucketStore.latestVersion(spark, storeDir)
       val nb = latest
         .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
         .getOrElse(nBuckets)

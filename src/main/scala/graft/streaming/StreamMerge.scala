@@ -57,28 +57,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamMerge {
 
-  /** Committed version ids (ascending) — see [[BucketStore.versions]]. */
-  def versions(spark: SparkSession, storeDir: String): Seq[Long] =
-    BucketStore.versions(spark, storeDir)
-
-  /** Latest committed version id, or None for an empty store. */
-  def latestVersion(spark: SparkSession, storeDir: String): Option[Long] =
-    BucketStore.latestVersion(spark, storeDir)
-
-  /** Read the current store (full changelog shape, tombstones
-    * included): the manifest-driven union of every bucket's owning
-    * dir. None when no version has committed.
-    */
-  def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    BucketStore.read(spark, storeDir)
-
   /** Serving snapshot: current store with tombstones elided and the
     * changelog bookkeeping columns dropped — [[Changelog.applyLog]]'s
     * output shape. One map-side filter over the current buckets.
     */
   def snapshot(spark: SparkSession, storeDir: String, opCol: String,
                seqCols: Seq[String], deleteOp: String = "D"): DataFrame = {
-    val store = readStore(spark, storeDir).getOrElse(
+    val store = BucketStore.read(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"no committed store version under $storeDir"))
     store.where(col(opCol) =!= deleteOp).drop((opCol +: seqCols): _*)
   }
@@ -102,7 +87,7 @@ object StreamMerge {
     // and the first batch commit (nothing has consumed the store
     // yet). Post-ingest versions make the guard fire — there the
     // seed WOULD be invisible.
-    val existing = versions(snapshot.sparkSession, storeDir).filter(_ != -1L)
+    val existing = BucketStore.versions(snapshot.sparkSession, storeDir).filter(_ != -1L)
     require(existing.isEmpty,
       s"seed: store $storeDir already has committed ingest versions " +
         s"(${existing.mkString(", ")}) — the seed would be invisible; " +
@@ -203,7 +188,7 @@ object StreamMerge {
     */
   private[streaming] def bucketCount(spark: SparkSession, storeDir: String,
                                      nBuckets: Int): Int =
-    latestVersion(spark, storeDir)
+    BucketStore.latestVersion(spark, storeDir)
       .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
       .getOrElse(nBuckets)
 
@@ -220,7 +205,7 @@ object StreamMerge {
                                     storeDir: String, keyCol: String,
                                     opCol: String, seqCols: Seq[String],
                                     nb: Int): Long = {
-    val v = latestVersion(batch.sparkSession, storeDir).map(_ + 1L).getOrElse(id)
+    val v = BucketStore.latestVersion(batch.sparkSession, storeDir).map(_ + 1L).getOrElse(id)
     BucketStore.stageVersion(
       Changelog.mergeBatch(cur, batch, keyCol, opCol, seqCols, maxBroadcastKeys = 0L),
       storeDir, v, col(keyCol), nb, batch = Some(id))

@@ -82,7 +82,7 @@ class BucketStoreSpec extends SparkSpec {
     val flat = batches.map(df).foldLeft(df(Seq.empty[(Long, String, String, Long)])) {
       (store, b) => Changelog.mergeBatch(store, b, "k", "op", Seq("seq"))
     }
-    val got = StreamMerge.readStore(spark, storeDir).get
+    val got = BucketStore.read(spark, storeDir).get
       .select("k", "name", "op", "seq").as[(Long, String, String, Long)]
       .collect().toSeq.sorted
     val want = flat.select("k", "name", "op", "seq")
@@ -173,7 +173,7 @@ class BucketStoreSpec extends SparkSpec {
     val m = BucketStore.readManifest(spark, storeDir, 0L)
     assert(m.schema.fieldNames.contains("lang"),
       s"manifest schema did not adopt the widened shape: ${m.schema.simpleString}")
-    val store = StreamMerge.readStore(spark, storeDir).get
+    val store = BucketStore.read(spark, storeDir).get
     assert(store.columns.toSeq == m.schema.fieldNames.toSeq)
     assert(store.count() == 50)
     assert(store.where(col("k") === 7L).select("lang").as[String].head() == "en")
@@ -289,7 +289,7 @@ class BucketStoreSpec extends SparkSpec {
     def canonView = StreamMatview.viewSnapshot(spark, aggDir)
       .select("seg", "n", "sum").as[(String, Long, Long)].collect().toSeq.sorted
     def canonRecompute = Changelog.aggSnapshot(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents")
+        BucketStore.read(spark, storeDir).get, "op", Seq("seg"), "cents")
       .select("seg", "n", "sum").as[(String, Long, Long)].collect().toSeq.sorted
     assert(canonView == canonRecompute)
     // the erasure: purge keys 3 (just updated) and 12 through the
@@ -383,7 +383,7 @@ class BucketStoreSpec extends SparkSpec {
         .collect().toSeq.sorted
     assert(canon(StreamMatview.viewSnapshot(spark, aggDir)) ==
       canon(Changelog.aggSnapshot(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents")),
+        BucketStore.read(spark, storeDir).get, "op", Seq("seg"), "cents")),
       "view diverged from the recompute across the snapshot migration")
     val v = BucketStore.latestVersion(spark, storeDir).get
     assert(BucketStore.readManifest(spark, storeDir, v).nBuckets == 32)
@@ -403,7 +403,7 @@ class BucketStoreSpec extends SparkSpec {
       .as[(String, Long, Long, Option[Long], Option[Long])]
       .collect().toSeq.sorted
     def canonRecompute = Changelog.aggSnapshotMinMax(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents")
+        BucketStore.read(spark, storeDir).get, "op", Seq("seg"), "cents")
       .select("seg", "n", "sum", "min", "max")
       .as[(String, Long, Long, Option[Long], Option[Long])]
       .collect().toSeq.sorted
@@ -528,7 +528,7 @@ class BucketStoreSpec extends SparkSpec {
   private lazy val flavours: Seq[Flavour] = {
     import graft.streaming.StreamMatview
     val mm = Seq("seg", "n", "sum", "min", "max")
-    def store(dir: String) = StreamMerge.readStore(spark, dir).get
+    def store(dir: String) = BucketStore.read(spark, dir).get
     Seq(
       Flavour("count/sum", "matview",
         Changelog.CountSum("op", Seq("seg"), "cents"),
@@ -591,7 +591,7 @@ class BucketStoreSpec extends SparkSpec {
         .flatMap(p => "__b=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toLong))
       assert(bucketsRead == touched,
         s"${f.name}: the purge's view half read buckets $bucketsRead, touched were $touched")
-      assert(StreamMerge.readStore(spark, st).get
+      assert(BucketStore.read(spark, st).get
         .where(col("k").isin(5L, 9L)).count() == 2,
         "crash-window precondition: the snapshot still holds the keys")
       // an ordinary view commit must REFUSE — it would erase the intent
@@ -682,7 +682,7 @@ class BucketStoreSpec extends SparkSpec {
       assert(versionFile(st, 0L, "manifest").isFile &&
         !versionFile(st, 0L, "_SUCCESS").exists,
         "the snapshot merge should have been staged (data + manifest, no marker)")
-      assert(StreamMerge.readStore(spark, st).get.count() == 40)
+      assert(BucketStore.read(spark, st).get.count() == 40)
       // re-running the batch deletes both staged dirs and converges
       f.apply(crashBatch(0L), 0L, st, ag)
       f.apply(crashBatch(1L), 1L, st, ag)

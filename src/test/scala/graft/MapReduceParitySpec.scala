@@ -95,30 +95,43 @@ class MapReduceParitySpec extends SparkSpec {
     // keys that differ only in case, non-ASCII keys (precomposed and
     // combining forms differ), and one empty key per line
     val texts = Seq(
-      "word Word WORD word über Über 日本語 é e\u0301\nword word ß SS ss\n",
+      "word Word WORD word über Über 日本語 é e\u0301\nword word ß SS ss\nword über\n",
       "Word über über 日本語 日本語 日本語\ne\u0301 é é é é\n",
       "solo\n")
     val files = texts.zipWithIndex.map { case (t, i) =>
       Files.write(dir.resolve(s"edge-$i.txt"), t.getBytes("UTF-8")).toString
     }
     val inMem = files.zip(texts).map { case (f, t) => (Paths.get(f).getFileName.toString, t) }
-    val edgeMap: MapReduce.MapF = (file, contents) =>
-      contents.split("\n").iterator.flatMap { line =>
-        Iterator(("", file)) ++ line.split(" ").iterator.filter(_.nonEmpty).map(w => (w, file))
+    def edgeMap(value: (String, Int) => String): MapReduce.MapF = (file, contents) =>
+      contents.split("\n").iterator.zipWithIndex.flatMap { case (line, lineNo) =>
+        (Iterator("") ++ line.split(" ").iterator.filter(_.nonEmpty)).map(w => (w, value(file, lineNo)))
       }
+    val byLineParity = edgeMap((file, lineNo) => s"$file:${lineNo % 2}")
+    assert(inMem.exists { case (f, c) => byLineParity(f, c).toSeq.distinct.groupBy(_._1).values.exists(_.size > 1) },
+      "no key has two distinct values in one map call")
+    // one value per key and call, then repeated AND distinct values per key and call
+    val mappers: Seq[(String, MapReduce.MapF)] = Seq(
+      "by file" -> edgeMap((file, _) => file),
+      "by line parity" -> byLineParity)
     val reducers: Seq[(String, MapReduce.ReduceF)] = Seq(
       "one" -> ((k, vs) => { vs.next(); k.length.toString }),
       "none" -> ((_, _) => "-"),
       "at most two" -> ((_, vs) => vs.take(2).size.toString),
-      "all" -> ((_, vs) => vs.toSeq.sorted.mkString(",")))
-    reducers.foreach { case (name, reduceF) =>
-      // bounded: a reduce loop that stops advancing fails here, not hangs
-      val engine = MapReduce.result(spark, files, edgeMap, reduceF).limit(1000).collect().toSeq
-      val keys = engine.map(_._1)
-      assert(keys.size == keys.distinct.size, s"$name: a key was reduced twice: ${keys.sorted}")
-      assert(Set("", "word", "Word", "WORD", "über", "Über", "é", "e\u0301").subsetOf(keys.toSet),
-        s"$name: ${keys.sorted}")
-      assert(canon(engine) == canon(SequentialOracle.run(inMem, edgeMap, reduceF)), name)
+      "all" -> ((_, vs) => vs.toSeq.sorted.mkString(",")),
+      "count" -> ((_, vs) => vs.size.toString))
+    for ((mapName, mapF) <- mappers) {
+      // "one" and "at most two" must stop inside a run of one repeated pair
+      assert(inMem.exists { case (f, c) => mapF(f, c).toSeq.groupBy(identity).values.exists(_.size >= 3) },
+        s"$mapName: no pair repeats 3 times in one map call")
+      for ((name, reduceF) <- reducers) {
+        // bounded: a reduce loop that stops advancing fails here, not hangs
+        val engine = MapReduce.result(spark, files, mapF, reduceF).limit(1000).collect().toSeq
+        val keys = engine.map(_._1)
+        assert(keys.size == keys.distinct.size, s"$mapName/$name: a key was reduced twice: ${keys.sorted}")
+        assert(Set("", "word", "Word", "WORD", "über", "Über", "é", "e\u0301").subsetOf(keys.toSet),
+          s"$mapName/$name: ${keys.sorted}")
+        assert(canon(engine) == canon(SequentialOracle.run(inMem, mapF, reduceF)), s"$mapName/$name")
+      }
     }
   }
 
@@ -156,6 +169,10 @@ class MapReduceParitySpec extends SparkSpec {
     val ran = jobs.flatten.distinct.flatMap(id => Option(completed.get(id)))
     val writers = ran.filter(_.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
     assert(writers.size == 1, s"shuffle-writing stages: ${writers.map(s => s.stageId -> s.name)}")
+    // one shuffle record per distinct (file, key, value) of the map
+    // calls, not one per occurrence
+    val distinctPairs = corpusInMem.map { case (f, c) => Apps.WordCount.map(f, c).toSet.size }.sum
+    assert(writers.head.taskMetrics.shuffleWriteMetrics.recordsWritten == distinctPairs)
     // a job's result stage is created after its parents: the highest id
     val result = completed.get(jobs.last.max)
     assert(result != null && result.taskMetrics.shuffleWriteMetrics.bytesWritten == 0)

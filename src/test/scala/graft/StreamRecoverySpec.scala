@@ -405,7 +405,7 @@ class StreamRecoverySpec extends SparkSpec {
     // equal the full recompute over the settled snapshot store AND
     // the uninterrupted twin's view.
     import graft.ext.Changelog
-    import graft.streaming.{StreamMatview, StreamMerge}
+    import graft.streaming.{BucketStore, StreamMatview}
     val srcDir = Files.createTempDirectory("graft_recv_src").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001").select(
       col("user_id").as("k"),
@@ -446,7 +446,7 @@ class StreamRecoverySpec extends SparkSpec {
           .collect().toSeq.sorted
       val view = canon(StreamMatview.viewSnapshot(spark, aggDir))
       val recompute = canon(Changelog.aggSnapshot(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents"))
+        BucketStore.read(spark, storeDir).get, "op", Seq("seg"), "cents"))
       (view, recompute)
     }
 
@@ -467,7 +467,7 @@ class StreamRecoverySpec extends SparkSpec {
     // min/max diverging from the recompute after the deletes-bearing
     // tail of the changelog replays.
     import graft.ext.Changelog
-    import graft.streaming.{StreamMatview, StreamMerge}
+    import graft.streaming.{BucketStore, StreamMatview}
     val srcDir = Files.createTempDirectory("graft_recsk_src").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001").select(
       col("user_id").as("k"),
@@ -509,7 +509,7 @@ class StreamRecoverySpec extends SparkSpec {
           .collect().toSeq.sorted
       val view = canon(StreamMatview.viewSnapshotServed(spark, aggDir))
       val recompute = canon(Changelog.aggSnapshotMinMax(
-        StreamMerge.readStore(spark, storeDir).get, "op", Seq("seg"), "cents"))
+        BucketStore.read(spark, storeDir).get, "op", Seq("seg"), "cents"))
       (view, recompute)
     }
 
@@ -523,14 +523,14 @@ class StreamRecoverySpec extends SparkSpec {
   }
 
   test("StreamMerge guards: batch-id reset fails loudly; exact replay skips; seed refuses a live store") {
-    import graft.streaming.StreamMerge
+    import graft.streaming.{BucketStore, StreamMerge}
     import spark.implicits._
     val storeDir = Files.createTempDirectory("graft_smg_store").toString
     def batch(seq: Long, name: String) =
       Seq((1L, name, "U", seq)).toDF("k", "name", "op", "seq")
     StreamMerge.applyBatch(batch(1L, "a"), 0L, storeDir, "k", "op", Seq("seq"))
     StreamMerge.applyBatch(batch(2L, "b"), 1L, storeDir, "k", "op", Seq("seq"))
-    assert(StreamMerge.latestVersion(spark, storeDir).contains(1L))
+    assert(BucketStore.latestVersion(spark, storeDir).contains(1L))
     // exact replay of the last committed batch (crash between version
     // commit and offset commit) is an idempotent skip
     StreamMerge.applyBatch(batch(99L, "STALE"), 1L, storeDir, "k", "op", Seq("seq"))
