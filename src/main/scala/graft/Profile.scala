@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler: warm-JVM per-query timing (3 runs, min) plus
   * optional formatted plan dump for named queries. Not part of the
   * driver contract — a local tool for iterating on plan quality.
@@ -15,17 +13,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PART", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt, cpus.toInt)
     // warm up codegen/JIT so first-query cost doesn't pollute numbers
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler for MULTI-JOB queries (the streaming/store replays,
   * where one bench "query" runs dozens of Spark jobs plus driver-side
@@ -23,14 +22,7 @@ object ProfileJobs {
     val name = args(1)
     val runs = args.drop(2).headOption.map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt, cpus.toInt)
     final case class J(id: Int, desc: String, start: Long, var end: Long = -1L,
                        var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()

@@ -132,14 +132,21 @@ object Tables {
   private def loadPlain(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     if (name == "events") {
-      // set once per session (the graft mains set it at session build;
-      // this fallback covers ad-hoc sessions) — re-setting the same
-      // value would be racy-looking under concurrent query planning
-      if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      nanosAsLong(spark)
       normalizeEventsTs(spark.read.parquet(path))
     } else spark.read.parquet(path)
   }
+
+  /** Read nanosecond parquet timestamps as longs on this session, once:
+    * [[Session.local]] sets it at session build, and this one-time
+    * fallback covers ad-hoc sessions (re-setting the same value would
+    * be racy-looking under concurrent query planning). The session
+    * keeps the setting; [[normalizeEventsTs]] needs it for every later
+    * events read.
+    */
+  private def nanosAsLong(spark: SparkSession): Unit =
+    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Normalize `events.ts` to native instant TimestampType whatever
     * encoding the fixture writer used (see the doc block above);
@@ -193,9 +200,7 @@ object Tables {
 
   private def loadStreamPlain(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (name == "events" &&
-      !spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (name == "events") nanosAsLong(spark)
     val schema = spark.read.parquet(path).schema
     // the fixture table is a single FILE; FileStreamSource requires
     // its basePath to be a directory, and for a non-glob path the

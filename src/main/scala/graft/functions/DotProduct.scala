@@ -180,7 +180,6 @@ case class LutSum(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val codes = ctx.freshName("codes")
-      val lut = ctx.freshName("lut")
       val row = ctx.freshName("row")
       val c = ctx.freshName("c")
       val i = ctx.freshName("i")

@@ -34,22 +34,11 @@ object ExtStoreQueries {
     dirs
   }
 
-  /** Same narrow-state-partition discipline as
-    * [[ExtStreamQueries]]'s replays (see that scaladoc for the
-    * measurements): the store replays run ~8-16 file-sized
-    * microbatches, so 8 shuffle partitions hold the per-trigger cost
-    * floor down; the restore happens before the returned batch
-    * aggregation executes.
-    */
-  private def statePartitions[A](s: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val before = s.conf.get(key)
-    s.conf.set(key, "8")
-    try body finally s.conf.set(key, before)
-  }
-
+  // the narrow-state-partition discipline of ExtStreamQueries'
+  // replays: the store replays run ~8-16 file-sized microbatches, so 8
+  // shuffle partitions hold the per-trigger cost floor down
   val all: Seq[Declared] = declared.map(q =>
-    q.copy(df = (s, dir) => statePartitions(s)(q.df(s, dir))))
+    q.copy(df = (s, dir) => ExtStreamQueries.statePartitions(s)(q.df(s, dir))))
 
   private def declared: Seq[Declared] = Seq(
 

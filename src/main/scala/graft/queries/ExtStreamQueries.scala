@@ -69,12 +69,8 @@ object ExtStreamQueries {
     * happens before the returned batch aggregation executes, so only
     * the stream itself runs narrow.
     */
-  private def statePartitions[A](s: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val before = s.conf.get(key)
-    s.conf.set(key, "8")
-    try body finally s.conf.set(key, before)
-  }
+  private[queries] def statePartitions[A](s: org.apache.spark.sql.SparkSession)(body: => A): A =
+    graft.Session.withConf(s, "spark.sql.shuffle.partitions" -> "8")(body)
 
   val all: Seq[Declared] = declared.map(q =>
     q.copy(df = (s, dir) => statePartitions(s)(q.df(s, dir))))

@@ -23,36 +23,34 @@ object ExtVersionQueries {
     * most one fold batch — a quarter of the events table — per
     * exchange, and every groupBy partial-aggregates map-side, so
     * parquet batch bytes bound what crosses. Parquet is ~3-4× lighter
-    * than its in-flight rows, so the per-partition target defaults to
-    * 32 MB of parquet (≈ 100+ MB of rows — §2.2's partition-size
-    * band; conf `spark.graft.replay.bytesPerPartition` overrides).
+    * than its in-flight rows, so the per-partition target is 32 MB
+    * of parquet (≈ 100+ MB of rows — §2.2's partition-size band).
     * The session's own count stays the ceiling, so a narrow session
     * is never widened. Applied to the eager rows only — a lazy row's
     * plan executes at the sink, after the restore, so wrapping it
     * would claim an optimization that never runs (ext_pipeline_matview
     * stays at session layout for exactly that reason). The sketch and
-    * minmax rows additionally run their eager folds AQE-free
-    * ([[graft.streaming.BucketStore.noAqe]] — all their joins are
-    * hint-pinned or dim-bounded, and since round 16 the minmax fold
-    * gates its recompute branch itself instead of relying on AQE's
-    * empty-relation propagation).
+    * minmax rows additionally run their eager folds with AQE off
+    * (`extra`), for the reason [[graft.streaming.BucketStore.maintain]]
+    * gives: all their joins are hint-pinned or dim-bounded, and the
+    * minmax fold gates its recompute branch itself instead of relying
+    * on AQE's empty-relation propagation.
     */
-  private def statePartitions[A](s: org.apache.spark.sql.SparkSession,
-                                 dir: String)(body: => A): A = {
-    val target = s.conf.getOption("spark.graft.replay.bytesPerPartition")
-      .map(_.toLong).getOrElse(32L << 20)
+  private def statePartitions[A](s: org.apache.spark.sql.SparkSession, dir: String,
+                                 extra: (String, String)*)(body: => A): A = {
+    val target = 32L << 20
     val batchBytes = Tables.tableBytes(s, dir, "events") / 4
     val n = math.max(1L, math.min(
       s.sessionState.conf.numShufflePartitions.toLong,
-      (batchBytes + target - 1) / target)).toInt
-    graft.streaming.BucketStore.withShufflePartitions(s, n)(body)
+      (batchBytes + target - 1) / target))
+    graft.Session.withConf(s, ("spark.sql.shuffle.partitions" -> n.toString) +: extra: _*)(body)
   }
 
   val all: Seq[Declared] = declared.map { q =>
     q.name match {
       case "ext_pipeline_matview_sketch" | "ext_pipeline_matview_minmax" =>
-        q.copy(df = (s, dir) => statePartitions(s, dir)(
-          graft.streaming.BucketStore.noAqe(s)(q.df(s, dir))))
+        q.copy(df = (s, dir) => statePartitions(s, dir,
+          "spark.sql.adaptive.enabled" -> "false")(q.df(s, dir)))
       case "ext_pipeline_forget" =>
         q.copy(df = (s, dir) => statePartitions(s, dir)(q.df(s, dir)))
       case _ => q

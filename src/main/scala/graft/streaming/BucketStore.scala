@@ -90,71 +90,96 @@ object BucketStore {
   def bucketOf(key: Column, nBuckets: Int): Column =
     pmod(xxhash64(key), lit(nBuckets.toLong))
 
-  /** Run one microbatch/maintenance `body` with AQE off, restoring the
-    * caller's setting after. Rationale (measured on the gated matview
-    * replays, guide §1): every data-scale join in these bodies is
-    * explicitly broadcast-pinned and the per-trigger relations are
-    * batch- or dim-bounded, so AQE has nothing structural to decide —
-    * but it MATERIALIZES EVERY QUERY STAGE AS ITS OWN SPARK JOB, ~40
-    * jobs/trigger vs ~14 on ext_stream_matview_sketch, pure per-job
-    * scheduling+replanning overhead at any deployment's trigger rate.
-    * Callers whose batches are large enough to want runtime
-    * coalescing/skew handling back set spark.graft.microbatch.aqe=true
-    * (the operators still run correctly either way — this toggles plan
-    * mechanics only). Every maintenance body is wrapped, the min/max
-    * fold included: [[graft.ext.Changelog.mergeAggMinMax]] gates its
-    * recompute branch itself (eager checkpoint + retraction test, pinned
-    * by PlanShapeSpec's poisoned-source test), so it no longer leans on
-    * AQE's empty-relation propagation. A matview trigger's snapshot
-    * merge thread runs inside its caller's bracket and opens none of
-    * its own.
+  /** Keys per reduce task of a maintenance body's exchanges: 500k
+    * keys ≈ 100 MB at typical changelog row widths (guide §2.2's
+    * partition-size band).
     */
-  private[graft] def noAqe[A](spark: SparkSession)(body: => A): A = {
-    if (spark.conf.getOption("spark.graft.microbatch.aqe").contains("true")) body
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val before = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try body finally spark.conf.set(key, before)
+  private val KeysPerPartition = 500000L
+
+  /** The one maintenance skeleton every store trigger and purge runs
+    * through ([[StreamMerge.applyBatch]], [[StreamIngest.applyBatch]],
+    * the [[StreamMatview]] trigger and view purge, [[purgeKeys]]). In
+    * order:
+    *
+    *  1. AQE off for the whole scope. Every data-scale join in these
+    *     bodies is broadcast-pinned and the per-trigger relations are
+    *     batch- or dim-bounded, so AQE has nothing structural to
+    *     decide — but it MATERIALIZES EVERY QUERY STAGE AS ITS OWN
+    *     SPARK JOB, ~40 jobs/trigger vs ~14 on ext_stream_matview_sketch
+    *     (measured on the gated matview replays, guide §1). The min/max
+    *     fold gates its recompute branch itself (eager checkpoint +
+    *     retraction test, pinned by PlanShapeSpec's poisoned-source
+    *     test), so nothing leans on AQE's empty-relation propagation.
+    *  1. `label`, if given, as the job description of the probe (the
+    *     body sets its own phase labels after it).
+    *  1. ONE probe job over `probe`, persisted first (the batch or key
+    *     list feeds the probe and the body's joins — one read of the
+    *     source, not one per consumer): the buckets `key` hashes into
+    *     at the store's own bucket count, and its distinct-key count
+    *     ([[touchedBucketsAndKeys]]).
+    *  1. The broadcast guard: more than `maxBroadcastKeys` distinct
+    *     keys (0 = no cap) fails loudly — "split the `noun`" — before
+    *     anything is read.
+    *  1. The exchange width: every groupBy/latest exchange in these
+    *     bodies partial-aggregates map-side, so at most one row per key
+    *     crosses any exchange; the width is ceil(keys /
+    *     [[KeysPerPartition]]), capped by the session's own shuffle
+    *     partitions (a session tuned narrow is never widened). A 10k-key
+    *     trigger runs ONE reduce partition instead of fanning empty task
+    *     waves across the session fan-out; a 100M-key batch gets 200.
+    *  1. The touched buckets' pre-image, read and persisted once for
+    *     every consumer in the body (`empty` stands in for a store with
+    *     no committed version).
+    *  1. `body(pre-image, touched buckets, bucket count)`.
+    *  1. Unpersist both, clear the job label (when one was set) and
+    *     restore the conf, also when the body throws — a stale label would
+    *     otherwise tag every later job of the calling thread.
+    *
+    * AQE and the width are scoped to the body ([[graft.Session.withConf]]),
+    * never left on the session: the same session serves full-size
+    * batch queries between triggers. A second driver thread the body
+    * starts (the matview trigger's snapshot merge) runs inside the
+    * same scope.
+    */
+  private[graft] def maintain[A](storeDir: String, probe: DataFrame, key: Column,
+                                 nBuckets: Int, maxBroadcastKeys: Long, noun: String,
+                                 label: Option[String] = None,
+                                 empty: Option[DataFrame] = None)
+                                (body: (DataFrame, Set[Long], Int) => A): A = {
+    val spark = probe.sparkSession
+    val sc = spark.sparkContext
+    graft.Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      probe.persist()
+      try {
+        label.foreach(sc.setJobDescription)
+        val nb = bucketCount(spark, storeDir, nBuckets)
+        val (touched, nKeys) = touchedBucketsAndKeys(probe, key, nb)
+        require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
+          s"$noun has more than $maxBroadcastKeys distinct keys — too large to " +
+            s"broadcast against the store; split the $noun (or raise maxBroadcastKeys)")
+        val width = math.max(1L, math.min(spark.sessionState.conf.numShufflePartitions.toLong,
+          (nKeys + KeysPerPartition - 1) / KeysPerPartition))
+        graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
+          val pre = read(spark, storeDir, Some(touched)).orElse(empty).getOrElse(
+            throw new IllegalStateException(s"no committed store version under $storeDir"))
+          pre.persist()
+          try body(pre, touched, nb) finally pre.unpersist(false)
+        }
+      } finally {
+        if (label.nonEmpty) sc.setJobDescription(null)
+        probe.unpersist(false)
+      }
     }
   }
 
-  /** Exchange width for a microbatch body whose shuffled relations
-    * are bounded by `nRows` rows — in the maintenance bodies that is
-    * the probe's distinct-key count: every groupBy/latest exchange
-    * partial-aggregates map-side, so at most one row per key crosses
-    * any exchange. Conf `spark.graft.microbatch.rowsPerPartition`
-    * (default 500k keys/task ≈ 100 MB at typical changelog row
-    * widths — guide §2.2's partition-size band) sets the per-task
-    * target; the session's own shuffle-partition count is the
-    * ceiling, so a session already tuned narrow is never widened.
-    * Scale-adaptive by construction instead of a constant tuned for
-    * one box: a 10k-key trigger runs ONE reduce partition instead of
-    * fanning empty task waves across the session fan-out, a 100M-key
-    * batch gets 200. `nRows < 0` = unknown — keep the session layout.
+  /** The store's own bucket count, or `nBuckets` for a store with no
+    * committed version: the mapping key→bucket must never move across
+    * versions, so the manifest wins over the caller's parameter.
     */
-  private[graft] def microbatchPartitions(spark: SparkSession, nRows: Long): Int = {
-    val target = spark.conf.getOption("spark.graft.microbatch.rowsPerPartition")
-      .map(_.toLong).getOrElse(500000L)
-    val session = spark.sessionState.conf.numShufflePartitions
-    if (nRows < 0) session
-    else math.max(1L, math.min(session.toLong,
-      (nRows + target - 1) / math.max(1L, target))).toInt
-  }
-
-  /** Run `body` with the session's shuffle-partition count pinned to
-    * `n`, restoring the caller's setting after — the SCOPED
-    * exchange-sizing bracket for per-trigger maintenance bodies
-    * (never a global conf: the same session serves full-size batch
-    * queries between triggers, and the driver's bench deliberately
-    * varies the session count to measure scaling).
-    */
-  private[graft] def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, before)
-  }
+  private def bucketCount(spark: SparkSession, storeDir: String, nBuckets: Int): Int =
+    latestVersion(spark, storeDir)
+      .map(v => readManifest(spark, storeDir, v).nBuckets)
+      .getOrElse(nBuckets)
 
   /** The distinct buckets `df`'s keys hash into — the driver-side
     * probe that decides which store buckets a batch must read and
@@ -595,24 +620,13 @@ object BucketStore {
     */
   def purgeKeys(spark: SparkSession, storeDir: String, keys: DataFrame,
                 keyCol: String,
-                maxBroadcastKeys: Long = 10000000L): PurgeStats = noAqe(spark) {
+                maxBroadcastKeys: Long = 10000000L): PurgeStats = {
     val v = latestVersion(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"no committed store version under $storeDir"))
     val m = readManifest(spark, storeDir, v)
-    val kdf = keys.select(col(keyCol).as("__pk")).distinct().persist()
-    try {
-      // probe + broadcast guard + exchange-sizing key count in ONE
-      // job over the persisted key list (was two jobs: a
-      // limit().count() guard plus a separate touched-bucket probe —
-      // the probe scans the whole list anyway, so the count is free)
-      val (touched, nKeys) = touchedBucketsAndKeys(kdf, col("__pk"), m.nBuckets)
-      if (maxBroadcastKeys > 0)
-        require(nKeys <= maxBroadcastKeys,
-          s"forget list has more than $maxBroadcastKeys distinct keys — too " +
-            "large to broadcast against the store; split the list (or raise " +
-            "maxBroadcastKeys)")
-      withShufflePartitions(spark, microbatchPartitions(spark, nKeys)) {
-      val cur = read(spark, storeDir, Some(touched)).get
+    val kdf = keys.select(col(keyCol).as("__pk")).distinct()
+    maintain(storeDir, kdf, col("__pk"), m.nBuckets, maxBroadcastKeys,
+        "forget list") { (cur, touched, _) =>
       // null-safe (<=>): a null key is an ordinary key here, exactly
       // as it is in mergeBatch's anti/semi joins
       val purged = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
@@ -638,7 +652,6 @@ object BucketStore {
         }
       }
       PurgeStats(purged, touched, scrubbed)
-      }
-    } finally kdf.unpersist(false)
+    }
   }
 }

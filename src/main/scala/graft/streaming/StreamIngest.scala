@@ -131,45 +131,27 @@ object StreamIngest {
     // guard/skip are StreamMerge's (shared version machinery — one
     // implementation of the exactly-once bookkeeping, not two)
     if (StreamMerge.replaySkip(spark, storeDir, id)) return
-    batch.persist()
-    try BucketStore.noAqe(spark) {
-      val latest = BucketStore.latestVersion(spark, storeDir)
-      val nb = latest
-        .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
-        .getOrElse(nBuckets)
-      // store buckets key on the fingerprint, so the batch's texts
-      // hash straight to the buckets their duplicates must live in —
-      // and the same single-pass probe counts the batch's distinct
-      // fingerprints, which sizes this trigger's exchanges
-      spark.sparkContext.setJobDescription(s"ingest b$id: probe")
-      val (touched, nFps) =
-        BucketStore.touchedBucketsAndKeys(batch, Hashing.h60(col(textCol)), nb)
-      BucketStore.withShufflePartitions(spark,
-        BucketStore.microbatchPartitions(spark, nFps)) {
-        val cur = BucketStore.read(spark, storeDir, Some(touched))
-          .getOrElse(spark.range(0).select(col("id").as("fp")))
-        // trigger-scoped persist: cur feeds BOTH the dedup anti-join and
-        // the rolled-forward version's union — one bucket scan, not two
-        cur.persist()
-        val fresh = Dedup.incrementalExact(batch, idCol, textCol, cur).persist()
-        try {
-          // corpus first, version second: the version commit is the
-          // transaction boundary that makes the docs dir visible
-          spark.sparkContext.setJobDescription(s"ingest b$id: corpus append")
-          fresh.write.mode("overwrite").parquet(docsDir(storeDir, id))
-          spark.sparkContext.setJobDescription(s"ingest b$id: store commit")
-          BucketStore.writeVersion(
-            cur.unionByName(fresh.select(Hashing.h60(col(textCol)).as("fp"))),
-            storeDir, latest.map(_ + 1L).getOrElse(id), col("fp"), nb,
-            batch = Some(id))
-        } finally {
-          fresh.unpersist(false)
-          cur.unpersist(false)
-        }
-      }
-    } finally {
-      spark.sparkContext.setJobDescription(null)
-      batch.unpersist(false)
+    // store buckets key on the fingerprint, so the batch's texts hash
+    // straight to the buckets their duplicates must live in — and the
+    // same single-pass probe counts the batch's distinct fingerprints,
+    // which sizes this trigger's exchanges
+    BucketStore.maintain(storeDir, batch, Hashing.h60(col(textCol)), nBuckets,
+        maxBroadcastKeys = 0L, "batch", Some(s"ingest b$id: probe"),
+        empty = Some(spark.range(0).select(col("id").as("fp")))) { (cur, _, nb) =>
+      // cur feeds BOTH the dedup anti-join and the rolled-forward
+      // version's union — one bucket scan, not two
+      val fresh = Dedup.incrementalExact(batch, idCol, textCol, cur).persist()
+      try {
+        // corpus first, version second: the version commit is the
+        // transaction boundary that makes the docs dir visible
+        spark.sparkContext.setJobDescription(s"ingest b$id: corpus append")
+        fresh.write.mode("overwrite").parquet(docsDir(storeDir, id))
+        spark.sparkContext.setJobDescription(s"ingest b$id: store commit")
+        BucketStore.writeVersion(
+          cur.unionByName(fresh.select(Hashing.h60(col(textCol)).as("fp"))),
+          storeDir, BucketStore.latestVersion(spark, storeDir).map(_ + 1L).getOrElse(id),
+          col("fp"), nb, batch = Some(id))
+      } finally fresh.unpersist(false)
     }
     BucketStore.vacuum(spark, storeDir, retain)
   }

@@ -104,7 +104,8 @@ object StreamMatview {
     * aggregate-first, exactly-once protocol of the object doc, folding
     * with `f`.
     *
-    * One probe job (touched buckets, broadcast-guard pre-count and the
+    * The trigger runs in [[BucketStore.maintain]]'s scope: one probe
+    * job (touched buckets, broadcast-guard pre-count and the
     * exchange-sizing key count), then ONE persisted read of the
     * touched buckets' pre-batch content, shared by both halves: a
     * second driver thread stages the snapshot merge from it
@@ -113,9 +114,9 @@ object StreamMatview {
     * the thread, publishes the snapshot's marker, and vacuums. The
     * thread inherits this thread's local properties (the stream's job
     * group, so a query stop cancels its jobs too, and any caller
-    * tags), runs inside this trigger's `noAqe`/`withShufflePartitions`
-    * bracket, and labels its jobs `<tag> b<id>: snapshot merge`. The
-    * fold's own jobs (the eager checkpoint and flag test of the
+    * tags), runs inside this trigger's scope (AQE off, the trigger's
+    * exchange width), and labels its jobs `<tag> b<id>: snapshot
+    * merge`. The fold's own jobs (the eager checkpoint and flag test of the
     * min/max and sketch folds) run as `<tag> b<id>: fold`; the lazy
     * count/sum fold's run inside the `view commit` write.
     *
@@ -135,84 +136,61 @@ object StreamMatview {
       return
     }
     val sc = spark.sparkContext
-    // one persist for the WHOLE trigger: the batch feeds the probe,
-    // the fold and the merge — re-reading the source slice per
-    // consumer is the repeated I/O this removes
-    batch.persist()
-    try BucketStore.noAqe(spark) {
-      requirePurgeSettled(spark, storeDir, aggDir)
-      // the fold needs the PRE-batch snapshot — guaranteed by the
-      // aggregate-first commit order; a snapshot already at/above
-      // this batch means the two stores were driven independently
-      require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
-        s"snapshot store $storeDir already absorbed batch $id but the view " +
-          s"$aggDir has not — the stores were driven out of order; drive " +
-          "both through StreamMatview only")
-      val sv = BucketStore.latestVersion(spark, storeDir)
-      val nb = StreamMerge.bucketCount(spark, storeDir, nBuckets)
-      sc.setJobDescription(s"${tag(f)} b$id: probe")
-      val (touched, nKeys) =
-        BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
-      require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
-        s"batch has more than $maxBroadcastKeys distinct keys — too large " +
-          "to broadcast against the store; split the batch (or raise " +
-          "maxBroadcastKeys)")
-      BucketStore.withShufflePartitions(spark,
-        BucketStore.microbatchPartitions(spark, nKeys)) {
-        val storeTouched = BucketStore.read(spark, storeDir, Some(touched))
-          .getOrElse(batch.limit(0))
-        // trigger-scoped persist: the fold references the pre-image under
-        // two exchanges (winner max_by + the -1 side of the signed
-        // union) and the merge under two more (anti + semi join) — one
-        // touched-bucket scan for all four
-        storeTouched.persist()
-        try {
-          val staged = alongside(spark, s"${tag(f)} b$id: snapshot merge") {
-            StreamMerge.stageMerge(storeTouched, batch, id, storeDir, keyCol,
-              f.opCol, seqCols, nb)
-          } {
-            val agg = BucketStore.read(spark, aggDir).getOrElse {
-              // both stores unseeded: start the view empty (right shape).
-              // A SEEDED snapshot with an unseeded view must fail loudly:
-              // the empty fallback would start the fold at zero and the
-              // seed's contributions would be missing from every state
-              // the telescoping invariant can ever reach.
-              require(sv.isEmpty,
-                s"snapshot store $storeDir has committed versions but the view " +
-                  s"$aggDir has none — an empty-view fallback would permanently " +
-                  "drop the snapshot seed's contributions; seed both stores " +
-                  "through StreamMatview.seed (or its flavour's seed twin)")
-              f.snapshot(batch.limit(0))
-            }
-            val av = BucketStore.latestVersion(spark, aggDir)
-            sc.setJobDescription(s"${tag(f)} b$id: fold")
-            // the recompute source is the full PRE-batch store (the
-            // merge alongside is staged, not published), read only on
-            // the recompute path
-            val folded = Changelog.foldBatch(f, agg, storeTouched, batch, keyCol,
-              seqCols, 0L, // guarded by the probe job
-              () => BucketStore.read(spark, storeDir).getOrElse(batch.limit(0)))
-            sc.setJobDescription(s"${tag(f)} b$id: view commit")
-            // claim bucket 0 (the aggregate's only bucket): a batch that
-            // drives every dim's n to 0 writes NO rows, and an unclaimed
-            // commit would leave the previous version as bucket owner —
-            // viewSnapshot would silently serve the stale pre-batch
-            // aggregate and every later delta would fold onto wrong state
-            // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
-            BucketStore.writeVersion(folded, aggDir, av.map(_ + 1L).getOrElse(id),
-              col(f.dims.head), nBuckets = 1, batch = Some(id), claim = Set(0L))
-            BucketStore.vacuum(spark, aggDir, retain)
-          }
-          // strictly after the view's marker: aggregate-first
-          BucketStore.publishVersion(spark, storeDir, staged)
-        } finally storeTouched.unpersist(false)
+    requirePurgeSettled(spark, storeDir, aggDir)
+    // the fold needs the PRE-batch snapshot — guaranteed by the
+    // aggregate-first commit order; a snapshot already at/above this
+    // batch means the two stores were driven independently
+    require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
+      s"snapshot store $storeDir already absorbed batch $id but the view " +
+        s"$aggDir has not — the stores were driven out of order; drive " +
+        "both through StreamMatview only")
+    val sv = BucketStore.latestVersion(spark, storeDir)
+    // the scope persists both the batch (it feeds the probe, the fold
+    // and the merge) and storeTouched, the touched buckets' pre-image:
+    // the fold references it under two exchanges (winner max_by + the
+    // -1 side of the signed union) and the merge under two more (anti +
+    // semi join) — one touched-bucket scan for all four
+    BucketStore.maintain(storeDir, batch, col(keyCol), nBuckets,
+        maxBroadcastKeys, "batch", Some(s"${tag(f)} b$id: probe"),
+        empty = Some(batch.limit(0))) { (storeTouched, _, nb) =>
+      val staged = alongside(spark, s"${tag(f)} b$id: snapshot merge") {
+        StreamMerge.stageMerge(storeTouched, batch, id, storeDir, keyCol,
+          f.opCol, seqCols, nb)
+      } {
+        val agg = BucketStore.read(spark, aggDir).getOrElse {
+          // both stores unseeded: start the view empty (right shape).
+          // A SEEDED snapshot with an unseeded view must fail loudly:
+          // the empty fallback would start the fold at zero and the
+          // seed's contributions would be missing from every state
+          // the telescoping invariant can ever reach.
+          require(sv.isEmpty,
+            s"snapshot store $storeDir has committed versions but the view " +
+              s"$aggDir has none — an empty-view fallback would permanently " +
+              "drop the snapshot seed's contributions; seed both stores " +
+              "through StreamMatview.seed (or its flavour's seed twin)")
+          f.snapshot(batch.limit(0))
+        }
+        val av = BucketStore.latestVersion(spark, aggDir)
+        sc.setJobDescription(s"${tag(f)} b$id: fold")
+        // the recompute source is the full PRE-batch store (the merge
+        // alongside is staged, not published), read only on the
+        // recompute path
+        val folded = Changelog.foldBatch(f, agg, storeTouched, batch, keyCol,
+          seqCols, 0L, // guarded by the probe job
+          () => BucketStore.read(spark, storeDir).getOrElse(batch.limit(0)))
+        sc.setJobDescription(s"${tag(f)} b$id: view commit")
+        // claim bucket 0 (the aggregate's only bucket): a batch that
+        // drives every dim's n to 0 writes NO rows, and an unclaimed
+        // commit would leave the previous version as bucket owner —
+        // viewSnapshot would silently serve the stale pre-batch
+        // aggregate and every later delta would fold onto wrong state
+        // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
+        BucketStore.writeVersion(folded, aggDir, av.map(_ + 1L).getOrElse(id),
+          col(f.dims.head), nBuckets = 1, batch = Some(id), claim = Set(0L))
+        BucketStore.vacuum(spark, aggDir, retain)
       }
-    } finally {
-      // clear the thread-local phase label HERE, not on the success
-      // path: a throwing fold would otherwise leak a stale label onto
-      // every later job scheduled from this stream thread
-      sc.setJobDescription(null)
-      batch.unpersist(false)
+      // strictly after the view's marker: aggregate-first
+      BucketStore.publishVersion(spark, storeDir, staged)
     }
     BucketStore.vacuum(spark, storeDir, retain)
   }
@@ -352,36 +330,27 @@ object StreamMatview {
   private[graft] def purgeViewCommit(spark: SparkSession, storeDir: String,
                                      aggDir: String, keys: DataFrame,
                                      keyCol: String, f: ViewFold,
-                                     maxBroadcastKeys: Long = 10000000L): Unit =
-      BucketStore.noAqe(spark) {
+                                     maxBroadcastKeys: Long = 10000000L): Unit = {
     val av = BucketStore.latestVersion(spark, aggDir).getOrElse(
       throw new IllegalStateException(s"no committed view version under $aggDir"))
     val avm = BucketStore.readManifest(spark, aggDir, av)
     val sv = BucketStore.latestVersion(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"no committed store version under $storeDir"))
-    val fp = keyFingerprint(keys, keyCol)
-    // probe + broadcast guard + exchange-sizing key count in ONE job
-    val (touched, nKeys) = BucketStore.touchedBucketsAndKeys(
-      keys.select(col(keyCol).as("__pk")).distinct(), col("__pk"),
-      BucketStore.readManifest(spark, storeDir, sv).nBuckets)
-    require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
-      s"purge list has more than $maxBroadcastKeys distinct keys — too " +
-        "large to broadcast against the store; split the list (or raise " +
-        "maxBroadcastKeys)")
-    BucketStore.withShufflePartitions(spark,
-      BucketStore.microbatchPartitions(spark, nKeys)) {
-      val storeTouched = BucketStore.read(spark, storeDir, Some(touched)).get
-      // same double-reference as the trigger's fold
-      storeTouched.persist()
+    // storeTouched is persisted for the same double reference as the
+    // trigger's fold; the store exists, so its manifest's bucket count
+    // wins over the default passed here
+    BucketStore.maintain(storeDir, keys.select(col(keyCol).as("__pk")).distinct(),
+        col("__pk"), BucketStore.DefaultBuckets, maxBroadcastKeys,
+        "purge list") { (storeTouched, _, _) =>
+      val fp = keyFingerprint(keys, keyCol)
       // claim bucket 0 for the same stale-owner reason as the trigger: a
       // purge that erases every contributing row commits an EMPTY view
-      try BucketStore.writeVersion(
+      BucketStore.writeVersion(
         Changelog.foldPurge(f, viewSnapshot(spark, aggDir), storeTouched, keys,
           keyCol, 0L, () => BucketStore.read(spark, storeDir).get),
         aggDir, av + 1L, col(f.dims.head), nBuckets = 1,
         batch = Some(avm.batch), claim = Set(0L),
         note = Some(s"purge:snapv=${sv + 1}:fp=$fp"))
-      finally storeTouched.unpersist(false)
     }
   }
 

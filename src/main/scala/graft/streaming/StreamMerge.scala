@@ -138,59 +138,19 @@ object StreamMerge {
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
     if (replaySkip(spark, storeDir, id)) return // already applied before the crash
-    // the microbatch feeds four consumers (touched-bucket probe +
-    // mergeBatch's latest/anti/semi) — pin it for the one action
-    // instead of re-running the source slice each time
-    batch.persist()
-    try BucketStore.noAqe(spark) {
-      val nb = bucketCount(spark, storeDir, nBuckets)
-      // probe, broadcast-guard pre-count, AND the exchange-sizing key
-      // count share ONE job: buckets, the guard's distinct-key count,
-      // and the width every groupBy below should fan to all come out
-      // of the same single-pass aggregate
-      spark.sparkContext.setJobDescription(s"merge b$id: probe")
-      val (touched, nKeys) = BucketStore.touchedBucketsAndKeys(batch, col(keyCol), nb)
-      require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
-        s"batch has more than $maxBroadcastKeys distinct keys — too large to " +
-          "broadcast against the store; split the batch (or raise maxBroadcastKeys)")
+    BucketStore.maintain(storeDir, batch, col(keyCol), nBuckets,
+        maxBroadcastKeys, "batch", Some(s"merge b$id: probe"),
+        empty = Some(batch.limit(0))) { (cur, _, nb) =>
+      // cur, the touched buckets' pre-image, is persisted: mergeBatch
+      // references it under TWO exchanges (the anti-joined untouched
+      // rows feed the write directly, the semi-joined touched rows feed
+      // the max_by) — one touched-bucket scan, not two
       spark.sparkContext.setJobDescription(s"merge b$id: store commit")
-      // size this trigger's exchanges to the batch's key cardinality
-      // (guide §2: every groupBy here partial-aggregates map-side, so
-      // at most one row per key crosses any exchange — partitions past
-      // ceil(keys/target) are guaranteed-empty task waves)
-      BucketStore.withShufflePartitions(spark,
-        BucketStore.microbatchPartitions(spark, nKeys)) {
-        val cur = BucketStore.read(spark, storeDir, Some(touched))
-          .getOrElse(batch.limit(0)) // first batch of an unseeded store
-        // trigger-scoped persist: mergeBatch references cur under TWO
-        // exchanges (the anti-joined untouched rows feed the write
-        // directly, the semi-joined touched rows feed the max_by), so an
-        // unpersisted cur scans the touched buckets' parquet twice per
-        // trigger — once through the cache instead, at any store size
-        cur.persist()
-        try BucketStore.publishVersion(spark, storeDir,
-          stageMerge(cur, batch, id, storeDir, keyCol, opCol, seqCols, nb))
-        finally cur.unpersist(false)
-      }
-    } finally {
-      // clear the thread-local phase label in the SAME finally as the
-      // unpersist: a throw would otherwise leak the stale label onto
-      // every later job scheduled from this stream thread
-      spark.sparkContext.setJobDescription(null)
-      batch.unpersist(false)
+      BucketStore.publishVersion(spark, storeDir,
+        stageMerge(cur, batch, id, storeDir, keyCol, opCol, seqCols, nb))
     }
     BucketStore.vacuum(spark, storeDir, retain)
   }
-
-  /** The store's own bucket count, or `nBuckets` for a store with no
-    * committed version: the mapping key→bucket must never move across
-    * versions, so the manifest wins over the caller's parameter.
-    */
-  private[streaming] def bucketCount(spark: SparkSession, storeDir: String,
-                                     nBuckets: Int): Int =
-    BucketStore.latestVersion(spark, storeDir)
-      .map(v => BucketStore.readManifest(spark, storeDir, v).nBuckets)
-      .getOrElse(nBuckets)
 
   /** The one merge body: stage batch `id` folded into the store's
     * touched buckets (`cur`, their pre-image, read at bucket count

@@ -566,19 +566,87 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("gated stream queries restore the session's shuffle partitions after their replay") {
-    // ExtStreamQueries runs replays under 8 state partitions and MUST
-    // restore the session default before returning — a leak would
-    // silently run every later batch query in the same session at 8
-    // partitions, a performance bug no correctness gate would catch
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
+    // ExtStreamQueries runs replays under 8 state partitions, and every
+    // store-maintenance entry point runs its body with AQE off at a
+    // key-count-sized width; each MUST restore the session's settings
+    // before returning, also when it throws — a leak would silently run
+    // every later batch query in the same session narrow or AQE-free, a
+    // performance bug no correctness gate would catch
+    import spark.implicits._
+    import graft.streaming.{BucketStore, StreamIngest, StreamMatview, StreamMerge}
+    val parts = "spark.sql.shuffle.partitions"
+    val aqe = "spark.sql.adaptive.enabled"
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    def snapshot = spark.range(0, 40).select(col("id").as("k"),
+      concat(lit("seg"), col("id") % 4).as("seg"), (col("id") * 10).as("cents"),
+      lit("U").as("op"), lit(-1L).as("seq"))
+    def batch(keys: Long*) = keys.map(k => (k, "seg1", k * 3, "U", 0L))
+      .toDF("k", "seg", "cents", "op", "seq")
+    def purgeList = Seq(5L, 9L).toDF("k")
+    val mergeStore = tmp("graft_conf_merge")
+    StreamMerge.seed(snapshot, mergeStore, "k")
+    val ingestStore = tmp("graft_conf_ingest")
+    StreamIngest.seed(spark.range(0, 20).select(concat(lit("doc "), col("id")).as("text")),
+      "text", ingestStore)
+    // one (store, view) pair per matview flavour: its trigger, then its purge
+    def stores(v: String) = (tmp(s"graft_conf_${v}_store"), tmp(s"graft_conf_${v}_agg"))
+    val (sumSt, sumAg) = stores("sum")
+    StreamMatview.seed(snapshot, sumSt, sumAg, "k", "op", Seq("seg"), "cents")
+    val (mmSt, mmAg) = stores("minmax")
+    StreamMatview.seedMinMax(snapshot, mmSt, mmAg, "k", "op", Seq("seg"), "cents")
+    val (skSt, skAg) = stores("sketch")
+    StreamMatview.seedSketch(snapshot, skSt, skAg, "k", "op", Seq("seg"), "cents", k = 4)
+    val cases: Seq[(String, () => Any)] = Seq(
+      "ext_stream_dedup" -> (() =>
+        SparkEntry.queries("ext_stream_dedup")(spark, "/root/testdata/sf0.001").collect()),
+      "StreamMerge.applyBatch" -> (() => StreamMerge.applyBatch(batch(1L, 50L), 0L,
+        mergeStore, "k", "op", Seq("seq"))),
+      "StreamIngest.applyBatch" -> (() => StreamIngest.applyBatch(
+        Seq((100L, "doc 3"), (101L, "a new doc")).toDF("doc_id", "text"), 0L,
+        ingestStore, "doc_id", "text")),
+      "StreamMatview.applyBatch" -> (() => StreamMatview.applyBatch(batch(1L, 50L), 0L,
+        sumSt, sumAg, "k", "op", Seq("seq"), Seq("seg"), "cents")),
+      "StreamMatview.purgeKeys" -> (() => StreamMatview.purgeKeys(spark, sumSt,
+        sumAg, purgeList, "k", "op", Seq("seg"), "cents")),
+      "StreamMatview.applyBatchMinMax" -> (() => StreamMatview.applyBatchMinMax(
+        batch(1L, 50L), 0L, mmSt, mmAg, "k", "op", Seq("seq"),
+        Seq("seg"), "cents")),
+      "StreamMatview.purgeKeysMinMax" -> (() => StreamMatview.purgeKeysMinMax(spark,
+        mmSt, mmAg, purgeList, "k", "op", Seq("seg"), "cents")),
+      "StreamMatview.applyBatchSketch" -> (() => StreamMatview.applyBatchSketch(
+        batch(1L, 50L), 0L, skSt, skAg, "k", "op", Seq("seq"),
+        Seq("seg"), "cents", k = 4)),
+      "StreamMatview.purgeKeysSketch" -> (() => StreamMatview.purgeKeysSketch(spark,
+        skSt, skAg, purgeList, "k", "op", Seq("seg"), "cents",
+        k = 4)),
+      "BucketStore.purgeKeys" -> (() =>
+        BucketStore.purgeKeys(spark, mergeStore, purgeList, "k")),
+      // the broadcast guard throws after the scope has turned AQE off
+      "StreamMerge.applyBatch over maxBroadcastKeys" -> (() => {
+        val e = intercept[IllegalArgumentException](StreamMerge.applyBatch(
+          batch(2L, 3L, 4L), 1L, mergeStore, "k", "op", Seq("seq"), maxBroadcastKeys = 2L))
+        assert(e.getMessage.contains("split the batch"), e.getMessage)
+      }))
+    val before = Seq(parts, aqe).map(k => k -> spark.conf.get(k))
     try {
-      spark.conf.set(key, "13") // sentinel distinct from the replay's 8
-      SparkEntry.queries("ext_stream_dedup")(spark, "/root/testdata/sf0.001")
-        .collect()
-      assert(spark.conf.get(key) == "13",
-        "statePartitions leaked its 8-partition setting into the session")
-    } finally spark.conf.set(key, before)
+      // sentinels distinct from the replay's 8, the maintenance widths
+      // (1 at these key counts) and the maintenance AQE setting (off)
+      spark.conf.set(parts, "13")
+      spark.conf.set(aqe, "true")
+      cases.foreach { case (name, run) =>
+        run()
+        assert(spark.conf.get(parts) == "13",
+          s"$name leaked shuffle partitions ${spark.conf.get(parts)} into the session")
+        assert(spark.conf.get(aqe) == "true",
+          s"$name leaked AQE = ${spark.conf.get(aqe)} into the session")
+        assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
+          s"$name left a job description on the calling thread")
+      }
+      assert(BucketStore.latestBatch(spark, mergeStore).contains(0L),
+        "the batch over maxBroadcastKeys must not have been applied")
+      assert(StreamMerge.snapshot(spark, mergeStore, "op", Seq("seq"))
+        .where(col("k").isin(5L, 9L)).count() == 0, "the purge must have erased 5 and 9")
+    } finally before.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("gated stream results are identical under the RocksDB state store provider") {
