@@ -49,11 +49,7 @@ object Changelog {
     val carried = payload :+ opCol
     val tag = (Seq("changelog/latest", keyCol, opCol, deleteOp) ++
       seqCols ++ payload).mkString("/")
-    val latest = PlanCache.cached(tag, log)(
-      _.groupBy(col(keyCol))
-        .agg(max_by(struct(carried.map(col): _*),
-          struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
-        .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*))
+    val latest = PlanCache.cached(tag, log)(latestPerKey(_, keyCol, carried, seqCols))
     val untouched = snapshot.join(latest.select(keyCol), Seq(keyCol), "left_anti")
     untouched.unionByName(
       latest.where(col(opCol) =!= deleteOp).drop(opCol))
@@ -138,18 +134,9 @@ object Changelog {
     val batchTypes = batch.schema.fields.map(f => f.name -> f.dataType).toMap
     val widened = cols.filterNot(storeCols.contains)
       .foldLeft(store)((d, c) => d.withColumn(c, lit(null).cast(batchTypes(c))))
-    val carried = cols.filterNot(_ == keyCol)
-    def latest(df: DataFrame): DataFrame =
-      df.groupBy(col(keyCol))
-        .agg(max_by(struct(carried.map(col): _*),
-          struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
-        .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*)
+    def latest(df: DataFrame) = latestPerKey(df, keyCol, cols.filterNot(_ == keyCol), seqCols)
     val bl = latest(batch.select(cols.map(col): _*))
-    if (maxBroadcastKeys > 0)
-      require(bl.limit(math.min(maxBroadcastKeys + 1, Int.MaxValue).toInt)
-        .count() <= maxBroadcastKeys,
-        s"batch has more than $maxBroadcastKeys distinct keys — too large to " +
-          "broadcast against the store; split the batch (or raise maxBroadcastKeys)")
+    requireBroadcastable(bl, maxBroadcastKeys, "batch")
     // NULL-SAFE key comparison (<=>): groupBy already treats null as
     // one key, but a plain equi anti-join would KEEP the store's
     // null-key row (null never equals null in a join) while the
@@ -164,6 +151,30 @@ object Changelog {
       .select(cols.map(col): _*)
   }
 
+  /** Latest-per-key: each `keyCol` group's `carried` columns from its
+    * highest-`seqCols` row (one max_by, partial-aggregated map-side) —
+    * the winner rule [[applyLog]], [[mergeBatch]] and the view folds
+    * share.
+    */
+  private def latestPerKey(df: DataFrame, keyCol: String, carried: Seq[String],
+                           seqCols: Seq[String]): DataFrame =
+    df.groupBy(col(keyCol))
+      .agg(max_by(struct(carried.map(col): _*),
+        struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
+      .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*)
+
+  /** The broadcast guard: `keys` (one row per distinct key) above
+    * `maxBroadcastKeys` (> 0; 0 = no cap) fails with "split the
+    * `what`" before an undeliverable broadcast is built. One cheap
+    * limit+count job.
+    */
+  private def requireBroadcastable(keys: DataFrame, maxBroadcastKeys: Long,
+                                   what: String): Unit =
+    if (maxBroadcastKeys > 0)
+      require(keys.limit(math.min(maxBroadcastKeys + 1, Int.MaxValue).toInt)
+        .count() <= maxBroadcastKeys,
+        s"$what has more than $maxBroadcastKeys distinct keys — too large to " +
+          s"broadcast against the store; split the $what (or raise maxBroadcastKeys)")
 
   /** One flavour of incrementally maintained dimensional aggregate —
     * `(dims..., n, sum)` plus whatever state the flavour keeps — and
@@ -419,11 +430,7 @@ object Changelog {
     needed.foreach(c => require(store.columns.contains(c), s"store missing column $c"))
     Seq("__bk", "__m", "__sgn", "__dk", "__rc").foreach(t => require(!needed.contains(t),
       s"column name $t is reserved by view-maintenance temporaries"))
-    if (maxBroadcastKeys > 0)
-      require(keys.limit(math.min(maxBroadcastKeys + 1, Int.MaxValue).toInt)
-        .count() <= maxBroadcastKeys,
-        s"$what has more than $maxBroadcastKeys distinct keys — too large to " +
-          s"broadcast against the store; split the $what (or raise maxBroadcastKeys)")
+    requireBroadcastable(keys, maxBroadcastKeys, what)
     val bk = broadcast(keys.select(col(keyCol).as("__bk")))
     val pre = store.select(needed.map(col): _*)
       .join(bk, col(keyCol) <=> col("__bk"), "left_semi")
@@ -442,12 +449,7 @@ object Changelog {
     require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
     val needed = ((keyCol +: f.opCol +: seqCols) ++ f.dims :+ f.valCol).distinct
     needed.foreach(c => require(batch.columns.contains(c), s"batch missing column $c"))
-    val carried = needed.filterNot(_ == keyCol)
-    def latest(df: DataFrame): DataFrame =
-      df.groupBy(col(keyCol))
-        .agg(max_by(struct(carried.map(col): _*),
-          struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
-        .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*)
+    def latest(df: DataFrame) = latestPerKey(df, keyCol, needed.filterNot(_ == keyCol), seqCols)
     val bl = latest(batch.select(needed.map(col): _*))
     change(f, store, keyCol, seqCols, bl, maxBroadcastKeys, "batch")(pre =>
       latest(pre.unionByName(bl)))

@@ -98,8 +98,9 @@ object BucketStore {
 
   /** The one maintenance skeleton every store trigger and purge runs
     * through ([[StreamMerge.applyBatch]], [[StreamIngest.applyBatch]],
-    * the [[StreamMatview]] trigger and view purge, [[purgeKeys]]). In
-    * order:
+    * the [[StreamMatview]] trigger, [[purgeKeys]], and the view-first
+    * [[StreamMatview.purgeKeys]], whose view commit and snapshot erase
+    * share one scope). Each runs it exactly once per call. In order:
     *
     *  1. AQE off for the whole scope. Every data-scale join in these
     *     bodies is broadcast-pinned and the per-trigger relations are
@@ -608,50 +609,69 @@ object BucketStore {
     * broadcast of the key list (guarded like
     * [[graft.ext.Changelog.mergeBatch]] — a list above
     * `maxBroadcastKeys` distinct keys fails loudly with "split the
-    * list"), plus driver-side fs metadata for the scrub. A forget
-    * list of any realistic size touches a bounded set of buckets;
-    * the corpus never shuffles.
+    * forget list"), plus driver-side fs metadata for the scrub. A
+    * forget list of any realistic size touches a bounded set of
+    * buckets; the corpus never shuffles. The whole op is one
+    * [[maintain]] scope around [[erase]]; its jobs carry `purge:
+    * probe` and `purge: store commit`.
     *
     * DERIVED STATE: this op rewrites ONE store. A snapshot store with
     * a maintained aggregate ([[StreamMatview]]) must purge through
     * [[StreamMatview.purgeKeys]] instead — purging only the snapshot
     * leaves the erased keys' contributions in the view forever (and
-    * derivable from it), and no watermark guard can notice.
+    * derivable from it), and no watermark guard can notice. That op
+    * runs the view commit and this same [[erase]] body in ONE scope:
+    * one probe, one touched-bucket read for both stores.
     */
   def purgeKeys(spark: SparkSession, storeDir: String, keys: DataFrame,
                 keyCol: String,
                 maxBroadcastKeys: Long = 10000000L): PurgeStats = {
-    val v = latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed store version under $storeDir"))
-    val m = readManifest(spark, storeDir, v)
     val kdf = keys.select(col(keyCol).as("__pk")).distinct()
-    maintain(storeDir, kdf, col("__pk"), m.nBuckets, maxBroadcastKeys,
-        "forget list") { (cur, touched, _) =>
-      // null-safe (<=>): a null key is an ordinary key here, exactly
-      // as it is in mergeBatch's anti/semi joins
-      val purged = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
-        "left_semi").count()
-      val kept = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
-        "left_anti")
-      writeVersion(kept, storeDir, v + 1, col(keyCol), m.nBuckets,
-        batch = Some(m.batch), claim = touched)
-      // scrub superseded copies of the touched buckets from EVERY
-      // other version dir — committed or not (a crashed write's
-      // leftover holds bytes too)
-      val (fs, root) = fsOf(spark, storeDir)
-      var scrubbed = 0L
-      fs.listStatus(root).foreach { s =>
-        s.getPath.getName match {
-          case VersionName(id) if s.isDirectory && id.toLong != v + 1 =>
-            touched.foreach { b =>
-              val bDir = new org.apache.hadoop.fs.Path(
-                s.getPath, s"data/$BucketCol=$b")
-              if (fs.exists(bDir)) { fs.delete(bDir, true); scrubbed += 1 }
-            }
-          case _ => ()
-        }
-      }
-      PurgeStats(purged, touched, scrubbed)
+    // the store exists (erase requires it), so its manifest's bucket
+    // count wins over the default passed here
+    maintain(storeDir, kdf, col("__pk"), DefaultBuckets, maxBroadcastKeys,
+        "forget list", Some("purge: probe")) { (cur, touched, _) =>
+      spark.sparkContext.setJobDescription("purge: store commit")
+      erase(storeDir, cur, kdf, keyCol, touched)
     }
+  }
+
+  /** The one snapshot-erase body, run inside a [[maintain]] scope over
+    * the distinct key list `kdf` (`__pk`): count the keys' rows in
+    * `cur` (the touched buckets' pre-image), commit `cur` without them
+    * as the next version claiming every `touched` bucket, then scrub
+    * the superseded copies. [[purgeKeys]] and the view-first
+    * [[StreamMatview.purgeKeys]] both erase through it.
+    */
+  private[streaming] def erase(storeDir: String, cur: DataFrame, kdf: DataFrame,
+                               keyCol: String, touched: Set[Long]): PurgeStats = {
+    val spark = cur.sparkSession
+    val v = latestVersion(spark, storeDir).get // maintain read cur from it
+    val m = readManifest(spark, storeDir, v)
+    // null-safe (<=>): a null key is an ordinary key here, exactly
+    // as it is in mergeBatch's anti/semi joins
+    val purged = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
+      "left_semi").count()
+    val kept = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
+      "left_anti")
+    writeVersion(kept, storeDir, v + 1, col(keyCol), m.nBuckets,
+      batch = Some(m.batch), claim = touched)
+    // scrub superseded copies of the touched buckets from EVERY
+    // other version dir — committed or not (a crashed write's
+    // leftover holds bytes too)
+    val (fs, root) = fsOf(spark, storeDir)
+    var scrubbed = 0L
+    fs.listStatus(root).foreach { s =>
+      s.getPath.getName match {
+        case VersionName(id) if s.isDirectory && id.toLong != v + 1 =>
+          touched.foreach { b =>
+            val bDir = new org.apache.hadoop.fs.Path(
+              s.getPath, s"data/$BucketCol=$b")
+            if (fs.exists(bDir)) { fs.delete(bDir, true); scrubbed += 1 }
+          }
+        case _ => ()
+      }
+    }
+    PurgeStats(purged, touched, scrubbed)
   }
 }

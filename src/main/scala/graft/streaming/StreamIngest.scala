@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ext.{Dedup, Hashing}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -160,15 +160,7 @@ object StreamIngest {
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
             idCol: String, textCol: String, retain: Int = 2,
             nBuckets: Int = BucketStore.DefaultBuckets,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    require(retain >= 1,
-      s"retain=$retain: the vacuum must keep at least the version just written")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        applyBatch(b, id, storeDir, idCol, textCol, retain, nBuckets)
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    StreamMerge.startStream(docs, checkpointDir, retain, trigger)(
+      applyBatch(_, _, storeDir, idCol, textCol, retain, nBuckets))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ext.Changelog
 import graft.ext.Changelog.{CountSum, MinMax, Sketch, ViewFold}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -56,7 +56,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Erasure follows ONE view-first protocol for all three flavours
   * ([[purgeKeys]]): the view subtracts the purged keys first, with an
-  * intent note, then the snapshot store purges.
+  * intent note, then the snapshot store purges — both halves in ONE
+  * maintenance scope, so the key list is probed once and the touched
+  * buckets are read once for both.
   */
 object StreamMatview {
 
@@ -136,7 +138,8 @@ object StreamMatview {
       return
     }
     val sc = spark.sparkContext
-    requirePurgeSettled(spark, storeDir, aggDir)
+    val sv = BucketStore.latestVersion(spark, storeDir)
+    requirePurgeSettled(spark, aggDir, sv)
     // the fold needs the PRE-batch snapshot — guaranteed by the
     // aggregate-first commit order; a snapshot already at/above this
     // batch means the two stores were driven independently
@@ -144,7 +147,6 @@ object StreamMatview {
       s"snapshot store $storeDir already absorbed batch $id but the view " +
         s"$aggDir has not — the stores were driven out of order; drive " +
         "both through StreamMatview only")
-    val sv = BucketStore.latestVersion(spark, storeDir)
     // the scope persists both the batch (it feeds the probe, the fold
     // and the merge) and storeTouched, the touched buckets' pre-image:
     // the fold references it under two exchanges (winner max_by + the
@@ -238,63 +240,71 @@ object StreamMatview {
                         checkpointDir: String, keyCol: String,
                         seqCols: Seq[String], f: ViewFold, retain: Int,
                         nBuckets: Int, maxBroadcastKeys: Long,
-                        trigger: Trigger): StreamingQuery = {
-    require(retain >= 1,
-      s"retain=$retain: the vacuum must keep at least the version just written")
-    changelog.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        applyView(b, id, storeDir, aggDir, keyCol, seqCols, f, retain,
-          nBuckets, maxBroadcastKeys)
-      }
-      .start()
-  }
+                        trigger: Trigger): StreamingQuery =
+    StreamMerge.startStream(changelog, checkpointDir, retain, trigger)(
+      applyView(_, _, storeDir, aggDir, keyCol, seqCols, f, retain, nBuckets,
+        maxBroadcastKeys))
 
-  /** Order-independent fingerprint of a purge's distinct key list —
-    * the token that lets a crash-interrupted [[purgeKeys]] recognize
-    * its own replay (and refuse a DIFFERENT purge until the first
-    * completes). One small job; null keys hash as an ordinary value.
+  /** Order-independent fingerprint of a purge's DISTINCT key list
+    * `kdf` (`__pk`) — the token that lets a crash-interrupted
+    * [[purgeKeys]] recognize its own replay (and refuse a DIFFERENT
+    * purge until the first completes). One small job over the purge
+    * scope's persisted list; null keys hash as an ordinary value.
     */
-  private def keyFingerprint(keys: DataFrame, keyCol: String): String = {
+  private def keyFingerprint(kdf: DataFrame): String = {
     val p = 1000000007L
-    val r = keys.select(col(keyCol).as("__pk")).distinct()
-      .agg(coalesce(sum(pmod(xxhash64(col("__pk")), lit(p))), lit(0L)),
-        count(lit(1)))
-      .head()
+    val r = kdf.agg(coalesce(sum(pmod(xxhash64(col("__pk")), lit(p))), lit(0L)),
+      count(lit(1))).head()
     s"${r.getLong(1)}x${r.getLong(0)}"
   }
 
   private val PurgeNote = "^purge:snapv=(-?\\d+):fp=(.+)$".r
 
-  /** Refuse to run an ordinary view commit over an UNSATISFIED purge
-    * intent. Manifest notes are not carried forward (each version
-    * writes its own), so an ordinary commit would silently erase the
-    * only record that a purge is half-applied. A [[PurgeNote]] is
-    * unsatisfied while it points PAST the snapshot's latest version —
-    * the view already subtracted contributions whose rows still live
-    * in the snapshot, and a later delete of those keys would
-    * double-subtract with no guard able to fire. The fix is to re-run
-    * the interrupted purge to completion first.
+  /** The purge intent `view` (the view's latest manifest) still
+    * carries: `(snapshot version the purge will create, key-list
+    * fingerprint)` while that version is past the snapshot's latest
+    * `sv` — the view already subtracted contributions whose rows still
+    * live in the snapshot. Manifest notes are not carried forward (each
+    * version writes its own), so an ordinary commit over a pending
+    * intent would silently erase the only record that a purge is
+    * half-applied, and a later delete of those keys would
+    * double-subtract with no guard able to fire.
     */
-  private def requirePurgeSettled(spark: SparkSession, storeDir: String,
-                                  aggDir: String): Unit =
-    BucketStore.latestVersion(spark, aggDir).foreach { av =>
-      BucketStore.readManifest(spark, aggDir, av).note.foreach {
-        case PurgeNote(snapv, fp) =>
-          val sv = BucketStore.latestVersion(spark, storeDir)
-          require(sv.exists(_ >= snapv.toLong),
-            s"view $aggDir carries an incomplete purge intent (fp $fp: view " +
-              s"delta committed, snapshot purge to version $snapv never " +
-              "landed) — an ordinary commit would erase the record and a " +
-              "later delete of those keys would double-subtract; re-run the " +
-              "purge to completion first")
-        case _ => ()
-      }
+  private def pendingPurge(view: BucketStore.Manifest,
+                           sv: Option[Long]): Option[(Long, String)] =
+    view.note.collect {
+      case PurgeNote(snapv, fp) if !sv.exists(_ >= snapv.toLong) => (snapv.toLong, fp)
     }
 
-  /** Erase keys from BOTH stores consistently through fold `f` — see
-    * [[purgeKeys]].
+  /** Refuse an ordinary view commit over a [[pendingPurge]]: the fix
+    * is to re-run the interrupted purge to completion first.
+    */
+  private def requirePurgeSettled(spark: SparkSession, aggDir: String,
+                                  sv: Option[Long]): Unit =
+    BucketStore.latestVersion(spark, aggDir)
+      .flatMap(av => pendingPurge(BucketStore.readManifest(spark, aggDir, av), sv))
+      .foreach { case (snapv, fp) =>
+        throw new IllegalArgumentException(
+          s"view $aggDir carries an incomplete purge intent (fp $fp: view " +
+            s"delta committed, snapshot purge to version $snapv never " +
+            "landed) — an ordinary commit would erase the record and a " +
+            "later delete of those keys would double-subtract; re-run the " +
+            "purge to completion first")
+      }
+
+  /** Erase keys from BOTH stores consistently through fold `f`, in ONE
+    * [[BucketStore.maintain]] scope over the distinct key list — see
+    * [[purgeKeys]]. In order: the probe; the intent (the list's
+    * fingerprint); the view half — the purged keys' live contributions
+    * folded OUT of the view ([[Changelog.foldPurge]]) from the
+    * pre-purge snapshot's TOUCHED BUCKETS and committed with the intent
+    * note — skipped when a pending note names the same list (the crash
+    * window: the view already subtracted it); then the snapshot half,
+    * [[BucketStore.erase]] over the same persisted pre-image, and its
+    * scrub. A min/max dim whose bound a purged value ties, or a sketch
+    * side that drains, recomputes from the full store anti-joined with
+    * the keys (the survivors). Jobs carry `<tag> purge: probe | intent
+    * | fold | view commit | snapshot purge`.
     */
   private def purgeView(spark: SparkSession, storeDir: String, aggDir: String,
                         keys: DataFrame, keyCol: String, f: ViewFold,
@@ -303,54 +313,36 @@ object StreamMatview {
       throw new IllegalStateException(s"no committed view version under $aggDir"))
     val sv = BucketStore.latestVersion(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"no committed store version under $storeDir"))
-    BucketStore.readManifest(spark, aggDir, av).note match {
-      case Some(PurgeNote(snapv, noteFp)) if snapv.toLong > sv =>
-        // crash window: the view already subtracted a purge whose
-        // snapshot commit never landed — redo ONLY the snapshot purge
-        val fp = keyFingerprint(keys, keyCol)
-        require(noteFp == fp,
-          s"view $aggDir carries an incomplete purge of a DIFFERENT key " +
-            s"list (fp $noteFp vs $fp) — re-run that purge to completion " +
-            "before issuing a new one")
-      case _ =>
-        purgeViewCommit(spark, storeDir, aggDir, keys, keyCol, f, maxBroadcastKeys)
-    }
-    BucketStore.purgeKeys(spark, storeDir, keys, keyCol, maxBroadcastKeys)
-  }
-
-  /** The view-side half of a purge — the purged keys' live
-    * contributions folded OUT of the view ([[Changelog.foldPurge]]),
-    * committed with the intent note BEFORE the snapshot purge. The
-    * fold reads the pre-purge snapshot's TOUCHED BUCKETS only; a
-    * min/max dim whose bound a purged value ties, or a sketch side
-    * that drains, recomputes from the full store anti-joined with the
-    * keys (the survivors). private[graft] so the crash-window spec
-    * can stop exactly between the two commits.
-    */
-  private[graft] def purgeViewCommit(spark: SparkSession, storeDir: String,
-                                     aggDir: String, keys: DataFrame,
-                                     keyCol: String, f: ViewFold,
-                                     maxBroadcastKeys: Long = 10000000L): Unit = {
-    val av = BucketStore.latestVersion(spark, aggDir).getOrElse(
-      throw new IllegalStateException(s"no committed view version under $aggDir"))
-    val avm = BucketStore.readManifest(spark, aggDir, av)
-    val sv = BucketStore.latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed store version under $storeDir"))
+    val view = BucketStore.readManifest(spark, aggDir, av)
+    val sc = spark.sparkContext
+    val kdf = keys.select(col(keyCol).as("__pk")).distinct()
     // storeTouched is persisted for the same double reference as the
-    // trigger's fold; the store exists, so its manifest's bucket count
-    // wins over the default passed here
-    BucketStore.maintain(storeDir, keys.select(col(keyCol).as("__pk")).distinct(),
-        col("__pk"), BucketStore.DefaultBuckets, maxBroadcastKeys,
-        "purge list") { (storeTouched, _, _) =>
-      val fp = keyFingerprint(keys, keyCol)
-      // claim bucket 0 for the same stale-owner reason as the trigger: a
-      // purge that erases every contributing row commits an EMPTY view
-      BucketStore.writeVersion(
-        Changelog.foldPurge(f, viewSnapshot(spark, aggDir), storeTouched, keys,
-          keyCol, 0L, () => BucketStore.read(spark, storeDir).get),
-        aggDir, av + 1L, col(f.dims.head), nBuckets = 1,
-        batch = Some(avm.batch), claim = Set(0L),
-        note = Some(s"purge:snapv=${sv + 1}:fp=$fp"))
+    // trigger's fold, and the snapshot erase reads it once more
+    BucketStore.maintain(storeDir, kdf, col("__pk"), BucketStore.DefaultBuckets,
+        maxBroadcastKeys, "purge list", Some(s"${tag(f)} purge: probe")) {
+      (storeTouched, touched, _) =>
+        sc.setJobDescription(s"${tag(f)} purge: intent")
+        val fp = keyFingerprint(kdf)
+        pendingPurge(view, Some(sv)) match {
+          case Some((_, noteFp)) =>
+            require(noteFp == fp,
+              s"view $aggDir carries an incomplete purge of a DIFFERENT key " +
+                s"list (fp $noteFp vs $fp) — re-run that purge to completion " +
+                "before issuing a new one")
+          case None =>
+            sc.setJobDescription(s"${tag(f)} purge: fold")
+            val folded = Changelog.foldPurge(f, viewSnapshot(spark, aggDir),
+              storeTouched, keys, keyCol, 0L, () => BucketStore.read(spark, storeDir).get)
+            sc.setJobDescription(s"${tag(f)} purge: view commit")
+            // claim bucket 0 for the same stale-owner reason as the trigger:
+            // a purge that erases every contributing row commits an EMPTY view
+            BucketStore.writeVersion(folded, aggDir, av + 1L, col(f.dims.head),
+              nBuckets = 1, batch = Some(view.batch), claim = Set(0L),
+              note = Some(s"purge:snapv=${sv + 1}:fp=$fp"))
+        }
+        // strictly after the view's marker: view-first
+        sc.setJobDescription(s"${tag(f)} purge: snapshot purge")
+        BucketStore.erase(storeDir, storeTouched, kdf, keyCol, touched)
     }
   }
 
@@ -402,12 +394,15 @@ object StreamMatview {
     * because a purge deliberately does not advance the batch
     * watermark.
     *
-    * Cost shape: the view refresh is a DELTA — the purged keys' live
-    * contributions, read from the pre-purge snapshot's TOUCHED BUCKETS
-    * only ([[purgeViewCommit]]), folded out of the maintained aggregate
-    * as a maintenance version. O(touched buckets), like the snapshot
-    * purge itself; only a min/max bound a purged value held, or a
-    * drained sketch side, reads the full store.
+    * Cost shape: one maintenance scope ([[purgeView]]) — one probe of
+    * the distinct key list, one persisted read of the pre-purge
+    * snapshot's TOUCHED BUCKETS, shared by both halves. The view
+    * refresh is a DELTA — the purged keys' live contributions, read
+    * from that pre-image, folded out of the maintained aggregate as a
+    * maintenance version — and the snapshot purge rewrites the same
+    * buckets without the keys. O(touched buckets) throughout; only a
+    * min/max bound a purged value held, or a drained sketch side,
+    * reads the full store.
     *
     * Crash discipline, view-first with an INTENT NOTE: the delta must
     * be computed from the PRE-purge store, so the view version

@@ -181,15 +181,25 @@ object StreamMerge {
             keyCol: String, opCol: String, seqCols: Seq[String],
             retain: Int = 2,
             nBuckets: Int = BucketStore.DefaultBuckets,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startStream(changelog, checkpointDir, retain, trigger)(
+      applyBatch(_, _, storeDir, keyCol, opCol, seqCols, retain, nBuckets))
+
+  /** The one stream starter every store stream shares (this merge,
+    * [[StreamIngest.start]], the [[StreamMatview]] starts): check
+    * `retain` up front, then run `apply` on each microbatch of
+    * `source` with its batch id, checkpointed at `checkpointDir` and
+    * fired by `trigger`.
+    */
+  private[streaming] def startStream(source: DataFrame, checkpointDir: String,
+                                     retain: Int, trigger: Trigger)
+                                    (apply: (DataFrame, Long) => Unit): StreamingQuery = {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
-    changelog.writeStream
+    source.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        applyBatch(b, id, storeDir, keyCol, opCol, seqCols, retain, nBuckets)
-      }
+      .foreachBatch((b: Dataset[Row], id: Long) => apply(b, id))
       .start()
   }
 }

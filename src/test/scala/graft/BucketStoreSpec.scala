@@ -510,12 +510,11 @@ class BucketStoreSpec extends SparkSpec {
       .where(col("k") === 6L).select("name").as[String].head() == "b1-6")
   }
 
-  /** One maintained-view flavour behind a common face: its fold, its
-    * seed, its trigger, its purge, its job-label tag, and its served
-    * view and recompute as sorted rows.
+  /** One maintained-view flavour behind a common face: its seed, its
+    * trigger, its purge, its job-label tag, and its served view and
+    * recompute as sorted rows.
     */
   private final case class Flavour(name: String, tag: String,
-                                   fold: Changelog.ViewFold,
                                    seed: (DataFrame, String, String) => Unit,
                                    apply: (DataFrame, Long, String, String) => Unit,
                                    purge: (String, String, DataFrame) => BucketStore.PurgeStats,
@@ -531,7 +530,6 @@ class BucketStoreSpec extends SparkSpec {
     def store(dir: String) = BucketStore.read(spark, dir).get
     Seq(
       Flavour("count/sum", "matview",
-        Changelog.CountSum("op", Seq("seg"), "cents"),
         (s, st, ag) => StreamMatview.seed(s, st, ag, "k", "op", Seq("seg"), "cents"),
         (b, id, st, ag) => StreamMatview.applyBatch(b, id, st, ag, "k", "op",
           Seq("seq"), Seq("seg"), "cents"),
@@ -541,7 +539,6 @@ class BucketStoreSpec extends SparkSpec {
         st => rows(Changelog.aggSnapshot(store(st), "op", Seq("seg"), "cents"),
           "seg", "n", "sum")),
       Flavour("min/max", "matview-minmax",
-        Changelog.MinMax("op", Seq("seg"), "cents"),
         (s, st, ag) => StreamMatview.seedMinMax(s, st, ag, "k", "op", Seq("seg"), "cents"),
         (b, id, st, ag) => StreamMatview.applyBatchMinMax(b, id, st, ag, "k", "op",
           Seq("seq"), Seq("seg"), "cents"),
@@ -551,7 +548,6 @@ class BucketStoreSpec extends SparkSpec {
         st => rows(Changelog.aggSnapshotMinMax(store(st), "op", Seq("seg"), "cents"),
           mm: _*)),
       Flavour("sketch", "matview-sketch",
-        Changelog.Sketch("op", Seq("seg"), "cents", k = 4),
         (s, st, ag) => StreamMatview.seedSketch(s, st, ag, "k", "op", Seq("seg"),
           "cents", k = 4),
         (b, id, st, ag) => StreamMatview.applyBatchSketch(b, id, st, ag, "k", "op",
@@ -566,7 +562,6 @@ class BucketStoreSpec extends SparkSpec {
   flavours.foreach { f =>
     test(s"${f.name} view purge: the view half reads only the touched buckets; its crash window blocks ordinary commits and redoes only the snapshot") {
       import scala.jdk.CollectionConverters._
-      import graft.streaming.StreamMatview
       val st = CrashFs.dir(spark, "graft_purge_store")
       val ag = CrashFs.dir(spark, "graft_purge_agg")
       // 64 keys, seg = k % 4, cents = 10k: seg1 holds 10, 50, 90, 130, ...
@@ -577,20 +572,24 @@ class BucketStoreSpec extends SparkSpec {
       def batch0 = Seq((200L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq")
 
       // CRASH WINDOW: the view half commits (with the intent note), the
-      // snapshot purge never runs. Keys 5 and 9 (seg1's 50 and 90) tie
-      // no bound and pop from inside the k=4 sketch, so the view half
+      // snapshot's marker never lands. Keys 5 and 9 (seg1's 50 and 90)
+      // tie no bound and pop from inside the k=4 sketch, so the purge
       // must read exactly the buckets the key list hashes into
       val keys = Seq(5L, 9L).toDF("k")
       val touched = BucketStore.touchedBuckets(keys, col("k"), BucketStore.DefaultBuckets)
       assert(touched.size < BucketStore.DefaultBuckets,
         "fixture degenerate: the key list touched every bucket — the pin is vacuous")
+      val nextSnapshot = BucketStore.latestVersion(spark, st).get + 1
       CrashFs.opened.clear()
-      StreamMatview.purgeViewCommit(spark, st, ag, keys, "k", f.fold)
+      CrashFs.failCreate = p => CrashFs.isMarker(p) && CrashFs.under(st)(p) &&
+        p.getParent.getName == s"v$nextSnapshot"
+      try intercept[Exception](f.purge(st, ag, keys))
+      finally CrashFs.failCreate = _ => false
       val bucketsRead = CrashFs.opened.asScala.toSet
         .filter(p => CrashFs.under(st)(new org.apache.hadoop.fs.Path(p)))
         .flatMap(p => "__b=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toLong))
       assert(bucketsRead == touched,
-        s"${f.name}: the purge's view half read buckets $bucketsRead, touched were $touched")
+        s"${f.name}: the purge read buckets $bucketsRead, touched were $touched")
       assert(BucketStore.read(spark, st).get
         .where(col("k").isin(5L, 9L)).count() == 2,
         "crash-window precondition: the snapshot still holds the keys")
@@ -744,33 +743,68 @@ class BucketStoreSpec extends SparkSpec {
     def mergeThreads = Thread.getAllStackTraces.keySet.toArray.toSeq
       .map(_.asInstanceOf[Thread].getName).filter(_.endsWith(": snapshot merge"))
     spark.sparkContext.addSparkListener(listener)
-    try flavours.foreach { f =>
-      val st = CrashFs.dir(spark, "graft_label_store")
-      val ag = CrashFs.dir(spark, "graft_label_agg")
-      f.seed(seedSnapshot, st, ag)
-      drained()
-      f.apply(crashBatch(0L), 0L, st, ag)
-      val labels = drained()
-      val phase = s"${java.util.regex.Pattern.quote(f.tag)} b0: (probe|fold|view commit|snapshot merge)"
-      assert(labels.nonEmpty && labels.forall(_.matches(phase)),
-        s"${f.name}: unlabelled or foreign job in the trigger: $labels")
-      Seq("probe", "view commit", "snapshot merge").foreach { p =>
-        assert(labels.contains(s"${f.tag} b0: $p"), s"${f.name}: no '$p' job in $labels")
+    try {
+      flavours.foreach { f =>
+        val st = CrashFs.dir(spark, "graft_label_store")
+        val ag = CrashFs.dir(spark, "graft_label_agg")
+        f.seed(seedSnapshot, st, ag)
+        drained()
+        f.apply(crashBatch(0L), 0L, st, ag)
+        val labels = drained()
+        val phase = s"${java.util.regex.Pattern.quote(f.tag)} b0: (probe|fold|view commit|snapshot merge)"
+        assert(labels.nonEmpty && labels.forall(_.matches(phase)),
+          s"${f.name}: unlabelled or foreign job in the trigger: $labels")
+        Seq("probe", "view commit", "snapshot merge").foreach { p =>
+          assert(labels.contains(s"${f.tag} b0: $p"), s"${f.name}: no '$p' job in $labels")
+        }
+        // a fold whose write job throws (every part file of the view's
+        // next version fails to create)
+        CrashFs.failCreate = p => CrashFs.under(ag)(p) && p.getName.endsWith(".parquet")
+        try intercept[Exception] { f.apply(crashBatch(1L), 1L, st, ag) }
+        finally CrashFs.failCreate = _ => false
+        assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
+          s"${f.name}: the calling thread kept a job description after the throw")
+        assert(mergeThreads.isEmpty, s"${f.name}: merge thread outlived its trigger: $mergeThreads")
+        val after = drained()
+        assert(after.exists(_ == s"${f.tag} b1: snapshot merge"),
+          s"${f.name}: the merge thread should have run alongside the failed fold: $after")
+        // the next trigger (the replay) runs clean and converges
+        f.apply(crashBatch(1L), 1L, st, ag)
+        assert(f.view(ag) == f.recompute(st))
+
+        // the view purge: one scope, so exactly one probe, and every job
+        // labelled with its phase
+        drained()
+        f.purge(st, ag, Seq(5L, 9L, 12L).toDF("k"))
+        val purge = drained()
+        purgeLabels(f.name, purge, s"${f.tag} purge: ",
+          "probe|intent|fold|view commit|snapshot purge",
+          Seq("intent", "view commit", "snapshot purge"))
+        assert(f.view(ag) == f.recompute(st))
       }
-      // a fold whose write job throws (every part file of the view's
-      // next version fails to create)
-      CrashFs.failCreate = p => CrashFs.under(ag)(p) && p.getName.endsWith(".parquet")
-      try intercept[Exception] { f.apply(crashBatch(1L), 1L, st, ag) }
-      finally CrashFs.failCreate = _ => false
-      assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
-        s"${f.name}: the calling thread kept a job description after the throw")
-      assert(mergeThreads.isEmpty, s"${f.name}: merge thread outlived its trigger: $mergeThreads")
-      val after = drained()
-      assert(after.exists(_ == s"${f.tag} b1: snapshot merge"),
-        s"${f.name}: the merge thread should have run alongside the failed fold: $after")
-      // the next trigger (the replay) runs clean and converges
-      f.apply(crashBatch(1L), 1L, st, ag)
-      assert(f.view(ag) == f.recompute(st))
+      // the single-store purge
+      val st = CrashFs.dir(spark, "graft_label_purge")
+      StreamMerge.seed(seedSnapshot, st, "k")
+      drained()
+      BucketStore.purgeKeys(spark, st, Seq(5L, 9L).toDF("k"), "k")
+      purgeLabels("BucketStore.purgeKeys", drained(), "purge: ", "probe|store commit",
+        Seq("store commit"))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A purge's `labels`: all non-empty, each `prefix` + one of
+    * `phases`, exactly ONE probe job, and a job for every `required`
+    * phase.
+    */
+  private def purgeLabels(name: String, labels: Seq[String], prefix: String,
+                          phases: String, required: Seq[String]): Unit = {
+    val phase = s"${java.util.regex.Pattern.quote(prefix)}($phases)"
+    assert(labels.nonEmpty && labels.forall(_.matches(phase)),
+      s"$name: unlabelled or foreign job in the purge: $labels")
+    assert(labels.count(_ == s"${prefix}probe") == 1,
+      s"$name: the purge must probe its key list exactly once: $labels")
+    required.foreach { p =>
+      assert(labels.contains(prefix + p), s"$name: no '$p' job in $labels")
+    }
   }
 }

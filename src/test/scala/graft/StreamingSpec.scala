@@ -626,6 +626,17 @@ class StreamingSpec extends SparkSpec {
         val e = intercept[IllegalArgumentException](StreamMerge.applyBatch(
           batch(2L, 3L, 4L), 1L, mergeStore, "k", "op", Seq("seq"), maxBroadcastKeys = 2L))
         assert(e.getMessage.contains("split the batch"), e.getMessage)
+      }),
+      // the view purge's guard fires inside its one scope, before either
+      // store is written
+      "StreamMatview.purgeKeys over maxBroadcastKeys" -> (() => {
+        val before = Seq(sumSt, sumAg).map(BucketStore.versions(spark, _))
+        val e = intercept[IllegalArgumentException](StreamMatview.purgeKeys(spark,
+          sumSt, sumAg, Seq(1L, 2L, 3L).toDF("k"), "k", "op", Seq("seg"), "cents",
+          maxBroadcastKeys = 2L))
+        assert(e.getMessage.contains("split the purge list"), e.getMessage)
+        assert(Seq(sumSt, sumAg).map(BucketStore.versions(spark, _)) == before,
+          "the purge over maxBroadcastKeys must not have committed a version")
       }))
     val before = Seq(parts, aqe).map(k => k -> spark.conf.get(k))
     try {
