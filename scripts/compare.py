@@ -8,10 +8,13 @@ stringified row-major). Usage:
 
     python3 scripts/compare.py <sfDir> <verifyOutDir>
 """
+import atexit
 import decimal
 import hashlib
 import json
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pyarrow.parquet as pq
@@ -64,7 +67,12 @@ def lint_types(con, name, sql):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    # an in-memory database spills nowhere by default: give it a scratch
+    # directory so an oracle larger than DuckDB's memory limit can page
+    # out
+    spill = tempfile.mkdtemp(prefix="compare_duckdb_")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    con = duckdb.connect(config={"temp_directory": spill})
     create_views(con, sf_dir)  # honors a scaled "<base>@<k>" dir
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)

@@ -503,13 +503,13 @@ object Changelog {
 
   /** The fold core: exchange, merge, and — for a flavour with state —
     * the EAGER tail. The dim-bounded stepped state CHECKPOINTS inside
-    * the call, so the recompute-flag test is a cheap action, the
-    * common unflagged commit carries no recompute branch (and no store
-    * scan) in its plan at all, with no reliance on AQE's
-    * empty-relation propagation, and callers need no lineage
-    * truncation across folds. Only flagged dims recompute, from
-    * `rstore()` — the FULL pre-change store, built lazily — anti-joined
-    * with the changed keys, plus the winners.
+    * the call and counts its recompute flags in the same job, so the
+    * flag test costs no action of its own, the common unflagged commit
+    * carries no recompute branch (and no store scan) in its plan at
+    * all, with no reliance on AQE's empty-relation propagation, and
+    * callers need no lineage truncation across folds. Only flagged
+    * dims recompute, from `rstore()` — the FULL pre-change store, built
+    * lazily — anti-joined with the changed keys, plus the winners.
     */
   private def fold(agg: DataFrame, c: Change, rstore: () => DataFrame): DataFrame = {
     val f = c.f
@@ -521,9 +521,13 @@ object Changelog {
     if (f.stateCols.isEmpty) return merged
     val vt = c.pre.schema(f.valCol).dataType
     val dk = struct(f.dims.map(col): _*).as("__dk")
-    val ck = f.step(merged, vt).withColumn("__dk", dk).localCheckpoint(true)
+    // the flag count rides the checkpoint job as an observed metric
+    // (Dedup.connectedComponents' pattern): no flag-test action
+    val obs = org.apache.spark.sql.Observation()
+    val ck = f.step(merged, vt).withColumn("__dk", dk)
+      .observe(obs, count_if(col("__rc")).as("rc")).localCheckpoint(true)
     val flagged = ck.where(col("__rc")).select("__dk")
-    val out = if (flagged.isEmpty) ck else {
+    val out = if (obs.get("rc") == 0L) ck else {
       val rs = rstore()
       (c.keyCol +: f.opCol +: f.dims :+ f.valCol).foreach(n =>
         require(rs.columns.contains(n), s"recomputeStore missing column $n"))

@@ -195,8 +195,7 @@ object ExtStoreQueries {
         // coverage (every bucket owned, every owner id in range — a
         // stale pre-migration entry would read as out-of-range), and
         // the watermark held across the maintenance version
-        val v = BucketStore.latestVersion(s, storeDir).get
-        val m = BucketStore.readManifest(s, storeDir, v)
+        val m = BucketStore.snapshot(s, storeDir).committed
         val ownersSane = m.owners.keySet.forall(b => b >= 0 && b < m.nBuckets)
         val wmHeld = preWm == postWm
         val manifestRow = s.range(1).select(

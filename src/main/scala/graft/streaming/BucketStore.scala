@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.StructType
   * null-backfill buckets written before a column existed).
   *
   * Cost accounting, measured at fixture scale: the layout adds one
-  * touched-bucket probe JOB ([[touchedBuckets]] — single-pass
+  * touched-bucket probe JOB ([[touchedBucketsAndKeys]] — single-pass
   * collect_set, no row exchange) and one bucket-repartition stage per
   * trigger, ~0.4 s/trigger of pure job-launch floor on the 8-batch
   * gated replays (5.4 → 8.9 s; the data is tiny there). That floor
@@ -40,6 +40,18 @@ import org.apache.spark.sql.types.StructType
   * the crossover is store ≈ batch × B/(B−1) — a few batches in, and
   * six orders of magnitude at a 100 TB store with minutes-level
   * triggers.
+  *
+  * One store SNAPSHOT per operation ([[Snapshot]]): every trigger,
+  * purge and rebucket resolves each store it touches ONCE, at its
+  * start — one listing of the store root, one manifest read — and
+  * passes that value down through the replay/intent guards,
+  * [[maintain]], the touched-bucket read, the stage, the erase and the
+  * vacuum. The version the pre-image is read from is therefore the
+  * version the commit builds on by construction, not by a second
+  * lookup agreeing with the first (snapshot isolation, as a table
+  * format's operation reads one snapshot and commits against it). A
+  * snapshot lives for one call: it is never cached, so a crash replay
+  * always re-resolves.
   *
   * Commit discipline (same self-describing-directory contract the
   * flat layout had): a version exists iff `v<id>/_SUCCESS` exists,
@@ -100,7 +112,9 @@ object BucketStore {
     * through ([[StreamMerge.applyBatch]], [[StreamIngest.applyBatch]],
     * the [[StreamMatview]] trigger, [[purgeKeys]], and the view-first
     * [[StreamMatview.purgeKeys]], whose view commit and snapshot erase
-    * share one scope). Each runs it exactly once per call. In order:
+    * share one scope), over the store snapshot `snap` the caller
+    * resolved at its start. Each runs it exactly once per call. In
+    * order:
     *
     *  1. AQE off for the whole scope. Every data-scale join in these
     *     bodies is broadcast-pinned and the per-trigger relations are
@@ -108,15 +122,18 @@ object BucketStore {
     *     decide — but it MATERIALIZES EVERY QUERY STAGE AS ITS OWN
     *     SPARK JOB, ~40 jobs/trigger vs ~14 on ext_stream_matview_sketch
     *     (measured on the gated matview replays, guide §1). The min/max
-    *     fold gates its recompute branch itself (eager checkpoint +
-    *     retraction test, pinned by PlanShapeSpec's poisoned-source
-    *     test), so nothing leans on AQE's empty-relation propagation.
+    *     fold gates its recompute branch itself (eager checkpoint
+    *     carrying the retraction count, pinned by PlanShapeSpec's
+    *     poisoned-source test), so nothing leans on AQE's empty-relation
+    *     propagation.
     *  1. `label`, if given, as the job description of the probe (the
     *     body sets its own phase labels after it).
     *  1. ONE probe job over `probe`, persisted first (the batch or key
     *     list feeds the probe and the body's joins — one read of the
     *     source, not one per consumer): the buckets `key` hashes into
-    *     at the store's own bucket count, and its distinct-key count
+    *     at the snapshot's bucket count (`nBuckets` for an empty
+    *     store — a key's bucket never moves across versions, so the
+    *     manifest wins), and its distinct-key count
     *     ([[touchedBucketsAndKeys]]).
     *  1. The broadcast guard: more than `maxBroadcastKeys` distinct
     *     keys (0 = no cap) fails loudly — "split the `noun`" — before
@@ -128,9 +145,9 @@ object BucketStore {
     *     partitions (a session tuned narrow is never widened). A 10k-key
     *     trigger runs ONE reduce partition instead of fanning empty task
     *     waves across the session fan-out; a 100M-key batch gets 200.
-    *  1. The touched buckets' pre-image, read and persisted once for
-    *     every consumer in the body (`empty` stands in for a store with
-    *     no committed version).
+    *  1. The touched buckets' pre-image, read from `snap` and persisted
+    *     once for every consumer in the body (`empty` stands in for a
+    *     store with no committed version).
     *  1. `body(pre-image, touched buckets, bucket count)`.
     *  1. Unpersist both, clear the job label (when one was set) and
     *     restore the conf, also when the body throws — a stale label would
@@ -142,7 +159,7 @@ object BucketStore {
     * starts (the matview trigger's snapshot merge) runs inside the
     * same scope.
     */
-  private[graft] def maintain[A](storeDir: String, probe: DataFrame, key: Column,
+  private[graft] def maintain[A](snap: Snapshot, probe: DataFrame, key: Column,
                                  nBuckets: Int, maxBroadcastKeys: Long, noun: String,
                                  label: Option[String] = None,
                                  empty: Option[DataFrame] = None)
@@ -153,7 +170,7 @@ object BucketStore {
       probe.persist()
       try {
         label.foreach(sc.setJobDescription)
-        val nb = bucketCount(spark, storeDir, nBuckets)
+        val nb = snap.nBuckets(nBuckets)
         val (touched, nKeys) = touchedBucketsAndKeys(probe, key, nb)
         require(maxBroadcastKeys <= 0 || nKeys <= maxBroadcastKeys,
           s"$noun has more than $maxBroadcastKeys distinct keys — too large to " +
@@ -161,8 +178,8 @@ object BucketStore {
         val width = math.max(1L, math.min(spark.sessionState.conf.numShufflePartitions.toLong,
           (nKeys + KeysPerPartition - 1) / KeysPerPartition))
         graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
-          val pre = read(spark, storeDir, Some(touched)).orElse(empty).getOrElse(
-            throw new IllegalStateException(s"no committed store version under $storeDir"))
+          val pre = read(spark, snap, Some(touched)).orElse(empty).getOrElse(
+            throw new IllegalStateException(s"no committed version under ${snap.dir}"))
           pre.persist()
           try body(pre, touched, nb) finally pre.unpersist(false)
         }
@@ -173,32 +190,16 @@ object BucketStore {
     }
   }
 
-  /** The store's own bucket count, or `nBuckets` for a store with no
-    * committed version: the mapping key→bucket must never move across
-    * versions, so the manifest wins over the caller's parameter.
-    */
-  private def bucketCount(spark: SparkSession, storeDir: String, nBuckets: Int): Int =
-    latestVersion(spark, storeDir)
-      .map(v => readManifest(spark, storeDir, v).nBuckets)
-      .getOrElse(nBuckets)
-
   /** The distinct buckets `df`'s keys hash into — the driver-side
     * probe that decides which store buckets a batch must read and
-    * rewrite. ONE single-pass job: collect_set partial-aggregates
-    * per partition (at most `nBuckets` values each) into one reduce
-    * row — no exchange of data rows, where a distinct().collect()
-    * would shuffle the projection across the full shuffle-partition
-    * fan-out first.
-    */
-  def touchedBuckets(df: DataFrame, key: Column, nBuckets: Int): Set[Long] =
-    df.agg(collect_set(bucketOf(key, nBuckets)).as("__tb"))
-      .head.getSeq[Long](0).toSet
-
-  /** [[touchedBuckets]] plus the batch's DISTINCT KEY COUNT (null as
-    * one ordinary key, matching the groupBy semantics of the merge) in
-    * the SAME single-pass job — so a caller that needs both the probe
-    * and a broadcast-guard pre-count (every maintenance body does)
-    * pays one job per trigger, not two.
+    * rewrite — plus the batch's DISTINCT KEY COUNT (null as one
+    * ordinary key, matching the groupBy semantics of the merge), in ONE
+    * single-pass job: collect_set partial-aggregates per partition (at
+    * most `nBuckets` values each) into one reduce row — no exchange of
+    * data rows, where a distinct().collect() would shuffle the
+    * projection across the full shuffle-partition fan-out first — so
+    * a caller that needs both the probe and a broadcast-guard
+    * pre-count (every maintenance body does) pays one job per trigger.
     */
   def touchedBucketsAndKeys(df: DataFrame, key: Column,
                             nBuckets: Int): (Set[Long], Long) = {
@@ -221,26 +222,62 @@ object BucketStore {
   private val VersionName = "^v(-?\\d+)$".r
   private val BucketName = s"^${BucketCol}=(\\d+)$$".r
 
-  /** Committed version ids under `storeDir` (a version counts iff its
-    * `_SUCCESS` marker exists), ascending. Driver-side metadata
-    * listing, O(retained versions).
+  /** One operation's view of a store's committed state, resolved
+    * ONCE by [[snapshot]] and passed down through everything the
+    * operation does to that store: the store `dir`, its committed
+    * version ids ascending (a version counts iff its `_SUCCESS` marker
+    * exists), the latest — or pinned — `version` and its `manifest`
+    * (None for an empty store). Immutable, and never cached past the
+    * call that resolved it.
     */
-  def versions(spark: SparkSession, storeDir: String): Seq[Long] = {
-    val (fs, p) = fsOf(spark, storeDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case VersionName(id)
-          if fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")) =>
-            Some(id.toLong)
-        case _ => None
-      }).sorted
+  final case class Snapshot(dir: String, versions: Seq[Long], version: Option[Long],
+                            manifest: Option[Manifest]) {
+    /** The ingest batch watermark ([[latestBatch]]). */
+    def batch: Option[Long] = manifest.map(_.batch)
+
+    /** The store's fixed bucket count, or `default` for an empty store. */
+    def nBuckets(default: Int): Int = manifest.fold(default)(_.nBuckets)
+
+    /** The id the operation commits as: the next in the store's own
+      * sequence (maintenance commits may have advanced it past the
+      * batch ids), or `batch` for a store with no committed version.
+      */
+    def next(batch: Long): Long = version.fold(batch)(_ + 1L)
+
+    /** The manifest of a store that must have a committed version. */
+    def committed: Manifest = manifest.getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir"))
   }
+
+  /** Resolve `dir`'s [[Snapshot]]: ONE listing of the store root and
+    * ONE manifest read, of the latest committed version or of `at`,
+    * which must be committed. Driver-side metadata, O(retained
+    * versions).
+    */
+  def snapshot(spark: SparkSession, dir: String, at: Option[Long] = None): Snapshot = {
+    val (fs, p) = fsOf(spark, dir)
+    val vs =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toIndexedSeq
+        .filter(_.isDirectory)
+        .flatMap(s => s.getPath.getName match {
+          case VersionName(id)
+            if fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")) =>
+              Some(id.toLong)
+          case _ => None
+        }).sorted
+    at.foreach(v => require(vs.contains(v), s"version $v is not committed under $dir"))
+    val v = at.orElse(vs.lastOption)
+    Snapshot(dir, vs, v, v.map(readManifest(spark, dir, _)))
+  }
+
+  /** Committed version ids under `storeDir`, ascending. */
+  def versions(spark: SparkSession, storeDir: String): Seq[Long] =
+    snapshot(spark, storeDir).versions
 
   /** Latest committed version id, or None for an empty store. */
   def latestVersion(spark: SparkSession, storeDir: String): Option[Long] =
-    versions(spark, storeDir).lastOption
+    snapshot(spark, storeDir).version
 
   /** The exactly-once INGEST watermark of the latest committed
     * version: the highest streaming batch id absorbed into the store.
@@ -252,8 +289,7 @@ object BucketStore {
     * real batch).
     */
   def latestBatch(spark: SparkSession, storeDir: String): Option[Long] =
-    latestVersion(spark, storeDir)
-      .map(v => readManifest(spark, storeDir, v).batch)
+    snapshot(spark, storeDir).batch
 
   /** A committed version's bucket map: the fixed bucket count, the
     * store schema as of that version, bucket -> owning version
@@ -330,16 +366,16 @@ object BucketStore {
   def read(spark: SparkSession, storeDir: String,
            only: Option[Set[Long]] = None,
            at: Option[Long] = None): Option[DataFrame] =
-    at.map { v =>
-      require(versions(spark, storeDir).contains(v),
-        s"version $v is not committed under $storeDir")
-      v
-    }.orElse(latestVersion(spark, storeDir)).map { v =>
-      val m = readManifest(spark, storeDir, v)
+    read(spark, snapshot(spark, storeDir, at), only)
+
+  /** [[read]] of the version `snap` resolved. */
+  private[streaming] def read(spark: SparkSession, snap: Snapshot,
+                              only: Option[Set[Long]]): Option[DataFrame] =
+    snap.manifest.map { m =>
       val owners = only.fold(m.owners)(sel => m.owners.filter(kv => sel(kv._1)))
         .filter(_._2 != EmptyOwner) // claimed-empty buckets hold no data
       val paths = owners.toSeq.sorted.map { case (b, owner) =>
-        s"${versionDir(storeDir, owner)}/data/$BucketCol=$b"
+        s"${versionDir(snap.dir, owner)}/data/$BucketCol=$b"
       }
       if (paths.isEmpty) emptyOf(spark, m.schema)
       // read under the manifest's EXPLICIT schema: the parquet reader
@@ -355,15 +391,12 @@ object BucketStore {
     * maintenance surface: per-bucket compaction rewrites one of these
     * dirs in place).
     */
-  def bucketPaths(spark: SparkSession, storeDir: String): Map[Long, String] = {
-    val v = latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed store version under $storeDir"))
-    readManifest(spark, storeDir, v).owners
+  def bucketPaths(spark: SparkSession, storeDir: String): Map[Long, String] =
+    snapshot(spark, storeDir).committed.owners
       .filter(_._2 != EmptyOwner)
       .map { case (b, owner) =>
         b -> s"${versionDir(storeDir, owner)}/data/$BucketCol=$b"
       }
-  }
 
   /** Commit `df` as version `id`: write its rows partitioned by
     * `bucketOf(key)`, merge the bucket map (buckets actually written
@@ -384,19 +417,30 @@ object BucketStore {
   def writeVersion(df: DataFrame, storeDir: String, id: Long, key: Column,
                    nBuckets: Int, batch: Option[Long] = None,
                    claim: Set[Long] = Set.empty,
-                   note: Option[String] = None): Unit = {
-    stageVersion(df, storeDir, id, key, nBuckets, batch, claim, note)
-    publishVersion(df.sparkSession, storeDir, id)
-  }
+                   note: Option[String] = None): Unit =
+    commit(df, snapshot(df.sparkSession, storeDir), id, key, nBuckets, batch, claim, note)
+
+  /** [[writeVersion]] onto the store state `snap`; returns the version
+    * published, as its id and manifest.
+    */
+  private[streaming] def commit(df: DataFrame, snap: Snapshot, id: Long, key: Column,
+                                nBuckets: Int, batch: Option[Long] = None,
+                                claim: Set[Long] = Set.empty,
+                                note: Option[String] = None): (Long, Manifest) =
+    publishVersion(df.sparkSession, snap.dir,
+      stageVersion(df, snap, id, key, nBuckets, batch, claim, note))
 
   /** The first half of [[writeVersion]]: the data and the manifest of
     * version `id`, WITHOUT the marker — a staged version is invisible
     * to every reader, to [[versions]] and to [[vacuum]] until
     * [[publishVersion]] runs, and a replay that never publishes it
     * deletes it on its own stage (the leftover delete below). The
-    * manifest carries the owners of the latest COMMITTED version, so
-    * nothing may commit to `storeDir` between the stage and the
-    * publish (the one-writer contract).
+    * manifest carries the owners of `snap`'s manifest — the latest
+    * COMMITTED version, resolved by the caller — so nothing may commit
+    * to the store between the resolve and the publish (the one-writer
+    * contract); re-staging that version itself (a re-seed of a
+    * seed-only store) carries the committed version below it instead.
+    * Returns `id` and the manifest written.
     *
     * `migrating = true` ([[rebucket]]'s migration commit) relaxes the
     * fixed-bucket-count invariant for ONE version and drops the
@@ -404,27 +448,28 @@ object BucketStore {
     * bucket ids are meaningless under the new count, and carrying
     * them would make [[read]] double-read rows through stale entries.
     */
-  private[graft] def stageVersion(df: DataFrame, storeDir: String, id: Long,
+  private[graft] def stageVersion(df: DataFrame, snap: Snapshot, id: Long,
                                   key: Column, nBuckets: Int,
                                   batch: Option[Long] = None,
                                   claim: Set[Long] = Set.empty,
                                   note: Option[String] = None,
-                                  migrating: Boolean = false): Unit = {
+                                  migrating: Boolean = false): (Long, Manifest) = {
     require(nBuckets >= 1, s"nBuckets=$nBuckets must be positive")
     val spark = df.sparkSession
     require(!df.columns.contains(BucketCol),
       s"column name $BucketCol is reserved by the bucket layout")
-    val (fs, _) = fsOf(spark, storeDir)
-    val vdir = new org.apache.hadoop.fs.Path(versionDir(storeDir, id))
-    fs.delete(vdir, true) // replay of an uncommitted attempt
-    val prev = latestVersion(spark, storeDir)
-      .map(readManifest(spark, storeDir, _))
+    val (fs, _) = fsOf(spark, snap.dir)
+    // replay of an uncommitted attempt
+    fs.delete(new org.apache.hadoop.fs.Path(versionDir(snap.dir, id)), true)
+    val prev =
+      if (!snap.version.contains(id)) snap.manifest
+      else snap.versions.filter(_ < id).lastOption.map(readManifest(spark, snap.dir, _))
     if (!migrating)
       prev.foreach(m => require(m.nBuckets == nBuckets,
-        s"store $storeDir was created with ${m.nBuckets} buckets; a key's " +
+        s"store ${snap.dir} was created with ${m.nBuckets} buckets; a key's " +
           s"bucket must be stable across versions (got $nBuckets) — grow the " +
           "store through rebucket(), the one op allowed to move keys"))
-    val dataDir = s"${versionDir(storeDir, id)}/data"
+    val dataDir = s"${versionDir(snap.dir, id)}/data"
     // repartition ON THE BUCKET before the partitioned write: without
     // it every upstream task splits its rows across every bucket dir
     // it touches — O(shuffle partitions × buckets) files per version,
@@ -457,22 +502,25 @@ object BucketStore {
     val owners = carried ++
       (claim -- written).map(_ -> EmptyOwner) ++
       written.map(_ -> id)
-    writeManifest(spark, storeDir, id,
-      Manifest(nBuckets, df.schema, owners, batch.getOrElse(id), note))
+    val m = Manifest(nBuckets, df.schema, owners, batch.getOrElse(id), note)
+    writeManifest(spark, snap.dir, id, m)
+    id -> m
   }
 
   /** The second half of [[writeVersion]]: the `_SUCCESS` marker that
-    * makes the staged version `id` exist. Refuses a version that was
+    * makes the `staged` version (id and manifest, as [[stageVersion]]
+    * returned it) exist; returns `staged`. Refuses a version that was
     * never staged (no manifest), so a marker can never point at a
     * half-written dir.
     */
   private[graft] def publishVersion(spark: SparkSession, storeDir: String,
-                                    id: Long): Unit = {
+                                    staged: (Long, Manifest)): (Long, Manifest) = {
     val (fs, _) = fsOf(spark, storeDir)
-    val vdir = new org.apache.hadoop.fs.Path(versionDir(storeDir, id))
+    val vdir = new org.apache.hadoop.fs.Path(versionDir(storeDir, staged._1))
     require(fs.exists(new org.apache.hadoop.fs.Path(vdir, "manifest")),
-      s"version $id under $storeDir was never staged")
+      s"version ${staged._1} under $storeDir was never staged")
     fs.create(new org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), true).close()
+    staged
   }
 
   /** Drop version dirs that are neither among the newest `retain`
@@ -481,15 +529,23 @@ object BucketStore {
     * old it is (deleting it would tear data out from under the
     * current store); a version fully superseded is garbage.
     */
-  def vacuum(spark: SparkSession, storeDir: String, retain: Int): Unit = {
-    val vs = versions(spark, storeDir)
+  def vacuum(spark: SparkSession, storeDir: String, retain: Int): Unit =
+    vacuum(spark, snapshot(spark, storeDir), retain)
+
+  /** [[vacuum]] of the store `snap` resolved plus the versions the
+    * operation has since published (`staged`, id -> manifest written):
+    * no listing, and only the retained manifests neither holds are read.
+    */
+  private[streaming] def vacuum(spark: SparkSession, snap: Snapshot, retain: Int,
+                                staged: (Long, Manifest)*): Unit = {
+    val held = Map.from(snap.version.zip(snap.manifest)) ++ staged
+    val vs = (snap.versions ++ staged.map(_._1)).distinct.sorted
     val retained = vs.takeRight(retain)
-    val referenced = retained.toSet ++
-      retained.flatMap(v => readManifest(spark, storeDir, v)
-        .owners.values.filter(_ != EmptyOwner))
-    val (fs, _) = fsOf(spark, storeDir)
+    val referenced = retained.toSet ++ retained.flatMap(v =>
+      held.getOrElse(v, readManifest(spark, snap.dir, v)).owners.values.filter(_ != EmptyOwner))
+    val (fs, _) = fsOf(spark, snap.dir)
     vs.filterNot(referenced).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(versionDir(storeDir, v)), true)
+      fs.delete(new org.apache.hadoop.fs.Path(versionDir(snap.dir, v)), true)
     }
   }
 
@@ -527,15 +583,12 @@ object BucketStore {
     require(newBuckets >= 1, s"newBuckets=$newBuckets must be positive")
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
-    val v = latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed store version under $storeDir"))
-    val m = readManifest(spark, storeDir, v)
+    val snap = snapshot(spark, storeDir)
+    val m = snap.committed
     if (m.nBuckets == newBuckets) return // already migrated (crash re-run)
-    val cur = read(spark, storeDir).get
-    stageVersion(cur, storeDir, v + 1, col(keyCol), newBuckets,
-      batch = Some(m.batch), migrating = true)
-    publishVersion(spark, storeDir, v + 1)
-    vacuum(spark, storeDir, retain)
+    val staged = stageVersion(read(spark, snap, None).get, snap, snap.next(m.batch),
+      col(keyCol), newBuckets, batch = Some(m.batch), migrating = true)
+    vacuum(spark, snap, retain, publishVersion(spark, storeDir, staged))
   }
 
   /** Every row readable from ANY parquet file anywhere under the
@@ -555,9 +608,7 @@ object BucketStore {
       val f = it.next()
       if (f.getPath.getName.endsWith(".parquet")) files += f.getPath.toString
     }
-    val v = latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed version under $storeDir"))
-    val schema = readManifest(spark, storeDir, v).schema
+    val schema = snapshot(spark, storeDir).committed.schema
     if (files.isEmpty) emptyOf(spark, schema)
     else spark.read.schema(schema).parquet(files.toSeq: _*)
   }
@@ -627,43 +678,45 @@ object BucketStore {
                 keyCol: String,
                 maxBroadcastKeys: Long = 10000000L): PurgeStats = {
     val kdf = keys.select(col(keyCol).as("__pk")).distinct()
+    val snap = snapshot(spark, storeDir)
     // the store exists (erase requires it), so its manifest's bucket
     // count wins over the default passed here
-    maintain(storeDir, kdf, col("__pk"), DefaultBuckets, maxBroadcastKeys,
+    maintain(snap, kdf, col("__pk"), DefaultBuckets, maxBroadcastKeys,
         "forget list", Some("purge: probe")) { (cur, touched, _) =>
       spark.sparkContext.setJobDescription("purge: store commit")
-      erase(storeDir, cur, kdf, keyCol, touched)
+      erase(snap, cur, kdf, keyCol, touched)
     }
   }
 
   /** The one snapshot-erase body, run inside a [[maintain]] scope over
     * the distinct key list `kdf` (`__pk`): count the keys' rows in
-    * `cur` (the touched buckets' pre-image), commit `cur` without them
-    * as the next version claiming every `touched` bucket, then scrub
-    * the superseded copies. [[purgeKeys]] and the view-first
+    * `cur` (the touched buckets' pre-image, read from `snap`), commit
+    * `cur` without them onto `snap` as the next version claiming every
+    * `touched` bucket, then scrub the superseded copies — the one
+    * listing of the root past the resolve, since the scrub must also
+    * see uncommitted dirs. [[purgeKeys]] and the view-first
     * [[StreamMatview.purgeKeys]] both erase through it.
     */
-  private[streaming] def erase(storeDir: String, cur: DataFrame, kdf: DataFrame,
+  private[streaming] def erase(snap: Snapshot, cur: DataFrame, kdf: DataFrame,
                                keyCol: String, touched: Set[Long]): PurgeStats = {
     val spark = cur.sparkSession
-    val v = latestVersion(spark, storeDir).get // maintain read cur from it
-    val m = readManifest(spark, storeDir, v)
+    val m = snap.committed
     // null-safe (<=>): a null key is an ordinary key here, exactly
     // as it is in mergeBatch's anti/semi joins
     val purged = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
       "left_semi").count()
     val kept = cur.join(broadcast(kdf), col(keyCol) <=> col("__pk"),
       "left_anti")
-    writeVersion(kept, storeDir, v + 1, col(keyCol), m.nBuckets,
+    val (v, _) = commit(kept, snap, snap.next(m.batch), col(keyCol), m.nBuckets,
       batch = Some(m.batch), claim = touched)
     // scrub superseded copies of the touched buckets from EVERY
     // other version dir — committed or not (a crashed write's
     // leftover holds bytes too)
-    val (fs, root) = fsOf(spark, storeDir)
+    val (fs, root) = fsOf(spark, snap.dir)
     var scrubbed = 0L
     fs.listStatus(root).foreach { s =>
       s.getPath.getName match {
-        case VersionName(id) if s.isDirectory && id.toLong != v + 1 =>
+        case VersionName(id) if s.isDirectory && id.toLong != v =>
           touched.foreach { b =>
             val bDir = new org.apache.hadoop.fs.Path(
               s.getPath, s"data/$BucketCol=$b")

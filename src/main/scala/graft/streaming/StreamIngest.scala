@@ -81,8 +81,7 @@ object StreamIngest {
     // committed = docs batches at or below the manifest's BATCH
     // watermark (not the version id — a maintenance commit advances
     // the version without admitting any new batch)
-    val latest = BucketStore.latestBatch(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed store version under $storeDir"))
+    val latest = BucketStore.snapshot(spark, storeDir).committed.batch
     val (fs, docsPath) = BucketStore.fsOf(spark, s"$storeDir/docs")
     val dirs =
       if (!fs.exists(docsPath)) Seq.empty
@@ -96,8 +95,8 @@ object StreamIngest {
       case Some(schema) =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       case None => throw new IllegalStateException(
-        s"no committed ingest batches under $storeDir/docs (store at " +
-          s"v$latest — seeded but nothing accepted yet); pass emptySchema " +
+        s"no committed ingest batches under $storeDir/docs (store at batch " +
+          s"watermark $latest — seeded but nothing accepted yet); pass emptySchema " +
           "to read this state as an empty corpus")
     }
     else spark.read.parquet(dirs: _*)
@@ -128,14 +127,15 @@ object StreamIngest {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
+    val snap = BucketStore.snapshot(spark, storeDir)
     // guard/skip are StreamMerge's (shared version machinery — one
     // implementation of the exactly-once bookkeeping, not two)
-    if (StreamMerge.replaySkip(spark, storeDir, id)) return
+    if (StreamMerge.replaySkip(snap, id)) return
     // store buckets key on the fingerprint, so the batch's texts hash
     // straight to the buckets their duplicates must live in — and the
     // same single-pass probe counts the batch's distinct fingerprints,
     // which sizes this trigger's exchanges
-    BucketStore.maintain(storeDir, batch, Hashing.h60(col(textCol)), nBuckets,
+    val staged = BucketStore.maintain(snap, batch, Hashing.h60(col(textCol)), nBuckets,
         maxBroadcastKeys = 0L, "batch", Some(s"ingest b$id: probe"),
         empty = Some(spark.range(0).select(col("id").as("fp")))) { (cur, _, nb) =>
       // cur feeds BOTH the dedup anti-join and the rolled-forward
@@ -147,13 +147,12 @@ object StreamIngest {
         spark.sparkContext.setJobDescription(s"ingest b$id: corpus append")
         fresh.write.mode("overwrite").parquet(docsDir(storeDir, id))
         spark.sparkContext.setJobDescription(s"ingest b$id: store commit")
-        BucketStore.writeVersion(
+        BucketStore.commit(
           cur.unionByName(fresh.select(Hashing.h60(col(textCol)).as("fp"))),
-          storeDir, BucketStore.latestVersion(spark, storeDir).map(_ + 1L).getOrElse(id),
-          col("fp"), nb, batch = Some(id))
+          snap, snap.next(id), col("fp"), nb, batch = Some(id))
       } finally fresh.unpersist(false)
     }
-    BucketStore.vacuum(spark, storeDir, retain)
+    BucketStore.vacuum(spark, snap, retain, staged)
   }
 
   /** Start the continuous ingest of a streaming `docs` source. */

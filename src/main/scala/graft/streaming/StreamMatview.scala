@@ -91,22 +91,20 @@ object StreamMatview {
     */
   private def seedView(snapshot: DataFrame, storeDir: String, aggDir: String,
                        keyCol: String, f: ViewFold, nBuckets: Int): Unit = {
-    val spark = snapshot.sparkSession
     StreamMerge.seed(snapshot, storeDir, keyCol, nBuckets)
-    val existing = BucketStore.versions(spark, aggDir).filter(_ != -1L)
-    require(existing.isEmpty,
-      s"seed: view store $aggDir already has committed ingest versions " +
-        s"(${existing.mkString(", ")}) — the seed would be invisible; " +
-        "delete the store first to reset it")
-    BucketStore.writeVersion(f.snapshot(snapshot), aggDir, -1L,
-      col(f.dims.head), nBuckets = 1)
+    // the aggregate is single-bucket: it is dim-cardinality-sized
+    StreamMerge.seed(f.snapshot(snapshot), aggDir, f.dims.head, nBuckets = 1)
   }
 
   /** The trigger every applyBatch flavour shares: the two-store,
     * aggregate-first, exactly-once protocol of the object doc, folding
     * with `f`.
     *
-    * The trigger runs in [[BucketStore.maintain]]'s scope: one probe
+    * Each store is resolved once ([[BucketStore.snapshot]]), the view
+    * first: its watermark decides the replay skip, and the two
+    * snapshots feed the intent and order guards, the reads, both
+    * stages and both vacuums. The trigger runs in
+    * [[BucketStore.maintain]]'s scope: one probe
     * job (touched buckets, broadcast-guard pre-count and the
     * exchange-sizing key count), then ONE persisted read of the
     * touched buckets' pre-batch content, shared by both halves: a
@@ -118,9 +116,10 @@ object StreamMatview {
     * group, so a query stop cancels its jobs too, and any caller
     * tags), runs inside this trigger's scope (AQE off, the trigger's
     * exchange width), and labels its jobs `<tag> b<id>: snapshot
-    * merge`. The fold's own jobs (the eager checkpoint and flag test of the
-    * min/max and sketch folds) run as `<tag> b<id>: fold`; the lazy
-    * count/sum fold's run inside the `view commit` write.
+    * merge`. The fold's own job (the eager checkpoint of the min/max
+    * and sketch folds, which also counts the recompute flags) runs as
+    * `<tag> b<id>: fold`; the lazy count/sum fold's run inside the
+    * `view commit` write.
     *
     * A view already at `id` (a crash between the two commits) replays
     * the snapshot half alone through [[StreamMerge.applyBatch]].
@@ -132,18 +131,28 @@ object StreamMatview {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
-    if (StreamMerge.replaySkip(spark, aggDir, id)) {
+    val view = BucketStore.snapshot(spark, aggDir)
+    if (StreamMerge.replaySkip(view, id)) {
       StreamMerge.applyBatch(batch, id, storeDir, keyCol, f.opCol, seqCols,
         retain, nBuckets, maxBroadcastKeys)
       return
     }
     val sc = spark.sparkContext
-    val sv = BucketStore.latestVersion(spark, storeDir)
-    requirePurgeSettled(spark, aggDir, sv)
+    val store = BucketStore.snapshot(spark, storeDir)
+    // an ordinary commit over a pending purge intent would erase the
+    // record: re-run the interrupted purge to completion first
+    view.manifest.flatMap(pendingPurge(_, store.version)).foreach { case (snapv, fp) =>
+      throw new IllegalArgumentException(
+        s"view $aggDir carries an incomplete purge intent (fp $fp: view " +
+          s"delta committed, snapshot purge to version $snapv never " +
+          "landed) — an ordinary commit would erase the record and a " +
+          "later delete of those keys would double-subtract; re-run the " +
+          "purge to completion first")
+    }
     // the fold needs the PRE-batch snapshot — guaranteed by the
     // aggregate-first commit order; a snapshot already at/above this
     // batch means the two stores were driven independently
-    require(!BucketStore.latestBatch(spark, storeDir).exists(_ >= id),
+    require(!store.batch.exists(_ >= id),
       s"snapshot store $storeDir already absorbed batch $id but the view " +
         s"$aggDir has not — the stores were driven out of order; drive " +
         "both through StreamMatview only")
@@ -152,34 +161,33 @@ object StreamMatview {
     // the fold references it under two exchanges (winner max_by + the
     // -1 side of the signed union) and the merge under two more (anti +
     // semi join) — one touched-bucket scan for all four
-    BucketStore.maintain(storeDir, batch, col(keyCol), nBuckets,
+    val staged = BucketStore.maintain(store, batch, col(keyCol), nBuckets,
         maxBroadcastKeys, "batch", Some(s"${tag(f)} b$id: probe"),
         empty = Some(batch.limit(0))) { (storeTouched, _, nb) =>
       val staged = alongside(spark, s"${tag(f)} b$id: snapshot merge") {
-        StreamMerge.stageMerge(storeTouched, batch, id, storeDir, keyCol,
+        StreamMerge.stageMerge(store, storeTouched, batch, id, keyCol,
           f.opCol, seqCols, nb)
       } {
-        val agg = BucketStore.read(spark, aggDir).getOrElse {
+        val agg = BucketStore.read(spark, view, None).getOrElse {
           // both stores unseeded: start the view empty (right shape).
           // A SEEDED snapshot with an unseeded view must fail loudly:
           // the empty fallback would start the fold at zero and the
           // seed's contributions would be missing from every state
           // the telescoping invariant can ever reach.
-          require(sv.isEmpty,
+          require(store.version.isEmpty,
             s"snapshot store $storeDir has committed versions but the view " +
               s"$aggDir has none — an empty-view fallback would permanently " +
               "drop the snapshot seed's contributions; seed both stores " +
               "through StreamMatview.seed (or its flavour's seed twin)")
           f.snapshot(batch.limit(0))
         }
-        val av = BucketStore.latestVersion(spark, aggDir)
         sc.setJobDescription(s"${tag(f)} b$id: fold")
         // the recompute source is the full PRE-batch store (the merge
         // alongside is staged, not published), read only on the
         // recompute path
         val folded = Changelog.foldBatch(f, agg, storeTouched, batch, keyCol,
           seqCols, 0L, // guarded by the probe job
-          () => BucketStore.read(spark, storeDir).getOrElse(batch.limit(0)))
+          () => BucketStore.read(spark, store, None).getOrElse(batch.limit(0)))
         sc.setJobDescription(s"${tag(f)} b$id: view commit")
         // claim bucket 0 (the aggregate's only bucket): a batch that
         // drives every dim's n to 0 writes NO rows, and an unclaimed
@@ -187,14 +195,14 @@ object StreamMatview {
         // viewSnapshot would silently serve the stale pre-batch
         // aggregate and every later delta would fold onto wrong state
         // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
-        BucketStore.writeVersion(folded, aggDir, av.map(_ + 1L).getOrElse(id),
-          col(f.dims.head), nBuckets = 1, batch = Some(id), claim = Set(0L))
-        BucketStore.vacuum(spark, aggDir, retain)
+        val committed = BucketStore.commit(folded, view, view.next(id), col(f.dims.head),
+          nBuckets = 1, batch = Some(id), claim = Set(0L))
+        BucketStore.vacuum(spark, view, retain, committed)
       }
       // strictly after the view's marker: aggregate-first
       BucketStore.publishVersion(spark, storeDir, staged)
     }
-    BucketStore.vacuum(spark, storeDir, retain)
+    BucketStore.vacuum(spark, store, retain, staged)
   }
 
   /** Run `side` on a new driver thread whose jobs carry the description
@@ -276,22 +284,6 @@ object StreamMatview {
       case PurgeNote(snapv, fp) if !sv.exists(_ >= snapv.toLong) => (snapv.toLong, fp)
     }
 
-  /** Refuse an ordinary view commit over a [[pendingPurge]]: the fix
-    * is to re-run the interrupted purge to completion first.
-    */
-  private def requirePurgeSettled(spark: SparkSession, aggDir: String,
-                                  sv: Option[Long]): Unit =
-    BucketStore.latestVersion(spark, aggDir)
-      .flatMap(av => pendingPurge(BucketStore.readManifest(spark, aggDir, av), sv))
-      .foreach { case (snapv, fp) =>
-        throw new IllegalArgumentException(
-          s"view $aggDir carries an incomplete purge intent (fp $fp: view " +
-            s"delta committed, snapshot purge to version $snapv never " +
-            "landed) — an ordinary commit would erase the record and a " +
-            "later delete of those keys would double-subtract; re-run the " +
-            "purge to completion first")
-      }
-
   /** Erase keys from BOTH stores consistently through fold `f`, in ONE
     * [[BucketStore.maintain]] scope over the distinct key list — see
     * [[purgeKeys]]. In order: the probe; the intent (the list's
@@ -309,21 +301,21 @@ object StreamMatview {
   private def purgeView(spark: SparkSession, storeDir: String, aggDir: String,
                         keys: DataFrame, keyCol: String, f: ViewFold,
                         maxBroadcastKeys: Long): BucketStore.PurgeStats = {
-    val av = BucketStore.latestVersion(spark, aggDir).getOrElse(
-      throw new IllegalStateException(s"no committed view version under $aggDir"))
-    val sv = BucketStore.latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no committed store version under $storeDir"))
-    val view = BucketStore.readManifest(spark, aggDir, av)
+    val view = BucketStore.snapshot(spark, aggDir)
+    val store = BucketStore.snapshot(spark, storeDir)
+    val vm = view.committed
+    // the snapshot version the erase below commits as
+    val purgedSv = store.next(store.committed.batch)
     val sc = spark.sparkContext
     val kdf = keys.select(col(keyCol).as("__pk")).distinct()
     // storeTouched is persisted for the same double reference as the
     // trigger's fold, and the snapshot erase reads it once more
-    BucketStore.maintain(storeDir, kdf, col("__pk"), BucketStore.DefaultBuckets,
+    BucketStore.maintain(store, kdf, col("__pk"), BucketStore.DefaultBuckets,
         maxBroadcastKeys, "purge list", Some(s"${tag(f)} purge: probe")) {
       (storeTouched, touched, _) =>
         sc.setJobDescription(s"${tag(f)} purge: intent")
         val fp = keyFingerprint(kdf)
-        pendingPurge(view, Some(sv)) match {
+        pendingPurge(vm, store.version) match {
           case Some((_, noteFp)) =>
             require(noteFp == fp,
               s"view $aggDir carries an incomplete purge of a DIFFERENT key " +
@@ -331,18 +323,18 @@ object StreamMatview {
                 "before issuing a new one")
           case None =>
             sc.setJobDescription(s"${tag(f)} purge: fold")
-            val folded = Changelog.foldPurge(f, viewSnapshot(spark, aggDir),
-              storeTouched, keys, keyCol, 0L, () => BucketStore.read(spark, storeDir).get)
+            val folded = Changelog.foldPurge(f, BucketStore.read(spark, view, None).get,
+              storeTouched, keys, keyCol, 0L, () => BucketStore.read(spark, store, None).get)
             sc.setJobDescription(s"${tag(f)} purge: view commit")
             // claim bucket 0 for the same stale-owner reason as the trigger:
             // a purge that erases every contributing row commits an EMPTY view
-            BucketStore.writeVersion(folded, aggDir, av + 1L, col(f.dims.head),
-              nBuckets = 1, batch = Some(view.batch), claim = Set(0L),
-              note = Some(s"purge:snapv=${sv + 1}:fp=$fp"))
+            BucketStore.commit(folded, view, view.next(vm.batch), col(f.dims.head),
+              nBuckets = 1, batch = Some(vm.batch), claim = Set(0L),
+              note = Some(s"purge:snapv=$purgedSv:fp=$fp"))
         }
         // strictly after the view's marker: view-first
         sc.setJobDescription(s"${tag(f)} purge: snapshot purge")
-        BucketStore.erase(storeDir, storeTouched, kdf, keyCol, touched)
+        BucketStore.erase(store, storeTouched, kdf, keyCol, touched)
     }
   }
 

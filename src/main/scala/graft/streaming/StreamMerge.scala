@@ -87,16 +87,18 @@ object StreamMerge {
     // and the first batch commit (nothing has consumed the store
     // yet). Post-ingest versions make the guard fire — there the
     // seed WOULD be invisible.
-    val existing = BucketStore.versions(snapshot.sparkSession, storeDir).filter(_ != -1L)
+    val snap = BucketStore.snapshot(snapshot.sparkSession, storeDir)
+    val existing = snap.versions.filter(_ != -1L)
     require(existing.isEmpty,
       s"seed: store $storeDir already has committed ingest versions " +
         s"(${existing.mkString(", ")}) — the seed would be invisible; " +
         "delete the store first to reset it")
-    BucketStore.writeVersion(snapshot, storeDir, -1L, col(keyCol), nBuckets)
+    BucketStore.commit(snapshot, snap, -1L, col(keyCol), nBuckets)
   }
 
   /** Shared exactly-once bookkeeping for versioned-store foreachBatch
-    * sinks ([[applyBatch]], [[StreamIngest.applyBatch]]): returns
+    * sinks ([[applyBatch]], [[StreamIngest.applyBatch]]), on the
+    * store state `snap` the trigger resolved: returns
     * true if the batch must be SKIPPED (exact replay of the last
     * committed version — crash between the version commit and the
     * offset-log commit), throws on a batch-id reset (a fresh
@@ -104,17 +106,16 @@ object StreamMerge {
     * silently skipping until the stream caught up would drop real
     * changes with healthy-looking progress).
     */
-  private[streaming] def replaySkip(spark: SparkSession, storeDir: String,
-                                    id: Long): Boolean = {
+  private[streaming] def replaySkip(snap: BucketStore.Snapshot, id: Long): Boolean = {
     // keyed on the manifest's ingest BATCH watermark, not the version
     // id: a maintenance commit (BucketStore.purgeKeys) advances the
     // version without advancing the watermark, and comparing against
     // the version id there would read the next real batch as "already
     // applied" and silently drop it
-    val latest = BucketStore.latestBatch(spark, storeDir)
+    val latest = snap.batch
     if (latest.exists(_ > id))
       throw new IllegalStateException(
-        s"store $storeDir has absorbed batch ${latest.get} but batch $id " +
+        s"store ${snap.dir} has absorbed batch ${latest.get} but batch $id " +
           "arrived — a new checkpoint was pointed at an existing store " +
           "(batch ids restart at 0). Keep the storeDir<->checkpoint " +
           "mapping 1:1, or reset the store alongside the checkpoint.")
@@ -137,8 +138,9 @@ object StreamMerge {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
-    if (replaySkip(spark, storeDir, id)) return // already applied before the crash
-    BucketStore.maintain(storeDir, batch, col(keyCol), nBuckets,
+    val snap = BucketStore.snapshot(spark, storeDir)
+    if (replaySkip(snap, id)) return // already applied before the crash
+    val staged = BucketStore.maintain(snap, batch, col(keyCol), nBuckets,
         maxBroadcastKeys, "batch", Some(s"merge b$id: probe"),
         empty = Some(batch.limit(0))) { (cur, _, nb) =>
       // cur, the touched buckets' pre-image, is persisted: mergeBatch
@@ -147,30 +149,26 @@ object StreamMerge {
       // the max_by) — one touched-bucket scan, not two
       spark.sparkContext.setJobDescription(s"merge b$id: store commit")
       BucketStore.publishVersion(spark, storeDir,
-        stageMerge(cur, batch, id, storeDir, keyCol, opCol, seqCols, nb))
+        stageMerge(snap, cur, batch, id, keyCol, opCol, seqCols, nb))
     }
-    BucketStore.vacuum(spark, storeDir, retain)
+    BucketStore.vacuum(spark, snap, retain, staged)
   }
 
-  /** The one merge body: stage batch `id` folded into the store's
-    * touched buckets (`cur`, their pre-image, read at bucket count
-    * `nb`) as the store's next version, and return that version's id
-    * for [[BucketStore.publishVersion]]. The version id is the next in
-    * the store's own sequence (maintenance commits may have advanced
-    * it past the batch ids); the batch id lands in the manifest as the
-    * exactly-once watermark. The caller holds the batch's guard count,
-    * so mergeBatch skips its own.
+  /** The one merge body: stage batch `id` folded into the touched
+    * buckets of store state `snap` (`cur`, their pre-image, read at
+    * bucket count `nb`) as the store's next version ([[BucketStore
+    * .Snapshot.next]]), and return that version's id and manifest for
+    * [[BucketStore.publishVersion]] and the vacuum. The batch id lands
+    * in the manifest as the exactly-once watermark. The caller holds
+    * the batch's guard count, so mergeBatch skips its own.
     */
-  private[streaming] def stageMerge(cur: DataFrame, batch: DataFrame, id: Long,
-                                    storeDir: String, keyCol: String,
+  private[streaming] def stageMerge(snap: BucketStore.Snapshot, cur: DataFrame,
+                                    batch: DataFrame, id: Long, keyCol: String,
                                     opCol: String, seqCols: Seq[String],
-                                    nb: Int): Long = {
-    val v = BucketStore.latestVersion(batch.sparkSession, storeDir).map(_ + 1L).getOrElse(id)
+                                    nb: Int): (Long, BucketStore.Manifest) =
     BucketStore.stageVersion(
       Changelog.mergeBatch(cur, batch, keyCol, opCol, seqCols, maxBroadcastKeys = 0L),
-      storeDir, v, col(keyCol), nb, batch = Some(id))
-    v
-  }
+      snap, snap.next(id), col(keyCol), nb, batch = Some(id))
 
   /** Start the continuous merge of a streaming `changelog` into
     * `storeDir`. `Trigger.AvailableNow()` (the default) replays the

@@ -576,7 +576,7 @@ class BucketStoreSpec extends SparkSpec {
       // tie no bound and pop from inside the k=4 sketch, so the purge
       // must read exactly the buckets the key list hashes into
       val keys = Seq(5L, 9L).toDF("k")
-      val touched = BucketStore.touchedBuckets(keys, col("k"), BucketStore.DefaultBuckets)
+      val touched = BucketStore.touchedBucketsAndKeys(keys, col("k"), BucketStore.DefaultBuckets)._1
       assert(touched.size < BucketStore.DefaultBuckets,
         "fixture degenerate: the key list touched every bucket — the pin is vacuous")
       val nextSnapshot = BucketStore.latestVersion(spark, st).get + 1
@@ -782,6 +782,46 @@ class BucketStoreSpec extends SparkSpec {
           Seq("intent", "view commit", "snapshot purge"))
         assert(f.view(ag) == f.recompute(st))
       }
+      // the eager folds count their recompute flags inside the checkpoint
+      // job: a trigger and a purge that retract no bound run TWO `fold`
+      // jobs — the changed keys' broadcast and the checkpoint, no flag
+      // test — and a retracting batch still recomputes from the full store
+      flavours.filter(_.tag != "matview").foreach { f =>
+        import scala.jdk.CollectionConverters._
+        val st = CrashFs.dir(spark, "graft_flag_store")
+        val ag = CrashFs.dir(spark, "graft_flag_agg")
+        f.seed(seedSnapshot, st, ag)
+        drained()
+        // seg0 holds 0, 40, ..., 360: an insert of 5 retracts nothing
+        f.apply(Seq((200L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq"),
+          0L, st, ag)
+        val trigger = drained()
+        assert(trigger.count(_ == s"${f.tag} b0: fold") == 2,
+          s"${f.name}: a no-retraction trigger should run two fold jobs: $trigger")
+        // seg2 holds 20, 60, ..., 380: 60 ties no bound (and pops from
+        // inside the k=4 sketch)
+        f.purge(st, ag, Seq(6L).toDF("k"))
+        val purge = drained()
+        assert(purge.count(_ == s"${f.tag} purge: fold") == 2,
+          s"${f.name}: a no-retraction purge should run two fold jobs: $purge")
+        assert(f.view(ag) == f.recompute(st))
+        // seg1's four smallest (10, 50, 90, 130): min/max loses its min
+        // holder, the sketch's min side drains — both recompute, which
+        // reads buckets beyond the touched ones
+        val deletes = Seq(1L, 5L, 9L, 13L)
+        val touched = BucketStore.touchedBucketsAndKeys(deletes.toDF("k"), col("k"),
+          BucketStore.DefaultBuckets)._1
+        CrashFs.opened.clear()
+        f.apply(deletes.map(k => (k, "seg1", 0L, "D", 1L)).toDF("k", "seg", "cents", "op", "seq"),
+          1L, st, ag)
+        val bucketsRead = CrashFs.opened.asScala.toSet
+          .filter(p => CrashFs.under(st)(new org.apache.hadoop.fs.Path(p)))
+          .flatMap(p => "__b=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toLong))
+        assert(bucketsRead.size > touched.size,
+          s"${f.name}: a retracting batch read only buckets $bucketsRead (touched $touched)")
+        assert(f.view(ag) == f.recompute(st), s"${f.name}: view diverged after the recompute")
+        drained()
+      }
       // the single-store purge
       val st = CrashFs.dir(spark, "graft_label_purge")
       StreamMerge.seed(seedSnapshot, st, "k")
@@ -790,6 +830,71 @@ class BucketStoreSpec extends SparkSpec {
       purgeLabels("BucketStore.purgeKeys", drained(), "purge: ", "probe|store commit",
         Seq("store commit"))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("one store snapshot per call: every trigger, purge, rebucket and pinned read lists a store's root once and opens one of its manifests") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val over = scala.collection.mutable.ArrayBuffer.empty[String]
+    // per store of one call: listings of the store root and opens of any
+    // manifest under it; a `scrubbed` store's erase lists the root once
+    // more, to see uncommitted dirs too
+    def measure(call: String, stores: Seq[(String, String)],
+                scrubbed: Set[String] = Set.empty)(run: => Any): Unit = {
+      CrashFs.listed.clear()
+      CrashFs.opened.clear()
+      run
+      stores.foreach { case (name, dir) =>
+        val root = new Path(dir).toUri.getPath
+        val lists = CrashFs.listed.asScala.count(p => new Path(p).toUri.getPath == root)
+        val opens = CrashFs.opened.asScala.map(new Path(_))
+          .count(p => p.getName == "manifest" && CrashFs.under(dir)(p))
+        val line = s"$call $name: $lists listings, $opens manifest opens"
+        seen += line
+        if (lists > (if (scrubbed(name)) 2 else 1) || opens > 1) over += line
+      }
+    }
+    def batch(id: Long): DataFrame =
+      if (id < 2) crashBatch(id)
+      else Seq((3L, "seg3", 11L, "U", id)).toDF("k", "seg", "cents", "op", "seq")
+    def merge(st: String, id: Long): Unit =
+      StreamMerge.applyBatch(batch(id), id, st, "k", "op", Seq("seq"), retain = 2)
+    def docs(id: Long): DataFrame = Seq((id, s"doc $id"), (100L + id, "standing"))
+      .toDF("id", "text")
+    def ingest(st: String, id: Long): Unit =
+      StreamIngest.applyBatch(docs(id), id, st, "id", "text", retain = 2)
+
+    // every store carries two batches past its seed, so each vacuum has
+    // versions to weigh
+    val st = CrashFs.dir(spark, "graft_meta_merge")
+    StreamMerge.seed(seedSnapshot, st, "k")
+    Seq(0L, 1L).foreach(merge(st, _))
+    measure("StreamMerge.applyBatch", Seq("store" -> st))(merge(st, 2L))
+    val fp = CrashFs.dir(spark, "graft_meta_ingest")
+    StreamIngest.seed(Seq((0L, "standing")).toDF("id", "text"), "text", fp)
+    Seq(0L, 1L).foreach(ingest(fp, _))
+    measure("StreamIngest.applyBatch", Seq("store" -> fp))(ingest(fp, 2L))
+    flavours.foreach { f =>
+      val (vst, vag) = (CrashFs.dir(spark, "graft_meta_vst"), CrashFs.dir(spark, "graft_meta_vag"))
+      f.seed(seedSnapshot, vst, vag)
+      Seq(0L, 1L).foreach(id => f.apply(batch(id), id, vst, vag))
+      val both = Seq("store" -> vst, "view" -> vag)
+      measure(s"${f.name} trigger", both)(f.apply(batch(2L), 2L, vst, vag))
+      measure(s"${f.name} purge", both, Set("store"))(f.purge(vst, vag, Seq(5L, 9L).toDF("k")))
+    }
+    measure("BucketStore.purgeKeys", Seq("store" -> st), Set("store")) {
+      BucketStore.purgeKeys(spark, st, Seq(6L, 10L).toDF("k"), "k")
+    }
+    measure("rebucket", Seq("store" -> st))(BucketStore.rebucket(spark, st, "k", 32, retain = 2))
+    val pinned = BucketStore.versions(spark, st).init.last
+    measure("read(at)", Seq("store" -> st))(BucketStore.read(spark, st, at = Some(pinned)))
+    info(seen.mkString("; "))
+    assert(over.isEmpty, s"more than one resolve per store per call: ${over.mkString("; ")}")
+    // and the measured calls still did their work
+    assert(BucketStore.read(spark, st).get.where(col("k").isin(6L, 10L)).count() == 0)
+    assert(BucketStore.snapshot(spark, st).committed.nBuckets == 32)
+    assert(BucketStore.latestBatch(spark, fp).contains(2L))
   }
 
   /** A purge's `labels`: all non-empty, each `prefix` + one of

@@ -4,7 +4,7 @@ import java.io.OutputStream
 import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   * one on the local file system. Every version marker written
   * (`.../v<id>/_SUCCESS`) is logged in order, so a spec can check the
   * order two stores were published in, and every file opened for
-  * reading is logged, so a spec can check which files an operation
-  * read.
+  * reading and every directory listed is logged, so a spec can check
+  * which files and how much metadata an operation read.
   */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = CrashFs.Uri
@@ -35,6 +35,11 @@ class CrashFs extends RawLocalFileSystem {
     CrashFs.opened.add(f.toString)
     super.open(f, bufferSize)
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CrashFs.listed.add(f.toString)
+    super.listStatus(f)
+  }
 }
 
 object CrashFs {
@@ -49,6 +54,9 @@ object CrashFs {
 
   /** Every file opened for reading, in order, as a path string. */
   val opened = new ConcurrentLinkedQueue[String]()
+
+  /** Every directory listed, in order, as a path string. */
+  val listed = new ConcurrentLinkedQueue[String]()
 
   private val VersionDir = "^v-?\\d+$"
 

@@ -697,8 +697,8 @@ class PlanShapeSpec extends SparkSpec {
       .where(boom(col("k")))
     val agg = BucketStore.read(spark, aggDir).get
     def fold(batch: org.apache.spark.sql.DataFrame) = {
-      val touched = BucketStore.touchedBuckets(batch, col("k"),
-        BucketStore.DefaultBuckets)
+      val touched = BucketStore.touchedBucketsAndKeys(batch, col("k"),
+        BucketStore.DefaultBuckets)._1
       graft.ext.Changelog.mergeAggSketch(agg,
         BucketStore.read(spark, storeDir, Some(touched)).get, batch,
         "k", "op", Seq("seq"), Seq("seg"), "cents", k = 4,
