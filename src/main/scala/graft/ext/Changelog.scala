@@ -113,27 +113,8 @@ object Changelog {
                  opCol: String, seqCols: Seq[String],
                  maxBroadcastKeys: Long = 10000000L): DataFrame = {
     require(seqCols.nonEmpty, "mergeBatch needs at least one seq column")
-    val storeCols = store.columns.toIndexedSeq
-    val batchCols = batch.columns.toIndexedSeq
-    val narrowed = storeCols.filterNot(batchCols.contains)
-    require(narrowed.isEmpty,
-      s"batch narrows the store schema (missing: ${narrowed.mkString(",")}) — " +
-        "evolution is additive-only: a batch may ADD columns, never drop them")
-    val storeTypes = store.schema.fields.map(f => f.name -> f.dataType).toMap
-    val drifted = batch.schema.fields
-      .filter(f => storeTypes.get(f.name).exists(_ != f.dataType))
-    require(drifted.isEmpty,
-      "store/batch column types drifted: " + drifted.map(f =>
-        s"${f.name} (store ${storeTypes(f.name).simpleString} vs " +
-          s"batch ${f.dataType.simpleString})").mkString(", "))
-    // store order first, new batch columns appended — the widened
-    // schema every later version (and reader) sees
-    val cols = storeCols ++ batchCols.filterNot(storeCols.contains)
-    Seq("__bk", "__m").foreach(t => require(!cols.contains(t),
-      s"column name $t is reserved by mergeBatch's join/agg temporaries"))
-    val batchTypes = batch.schema.fields.map(f => f.name -> f.dataType).toMap
-    val widened = cols.filterNot(storeCols.contains)
-      .foldLeft(store)((d, c) => d.withColumn(c, lit(null).cast(batchTypes(c))))
+    val (cols, widen) = evolve(store, batch)
+    val widened = widen(store)
     def latest(df: DataFrame) = latestPerKey(df, keyCol, cols.filterNot(_ == keyCol), seqCols)
     val bl = latest(batch.select(cols.map(col): _*))
     requireBroadcastable(bl, maxBroadcastKeys, "batch")
@@ -151,17 +132,120 @@ object Changelog {
       .select(cols.map(col): _*)
   }
 
+  /** [[mergeBatch]]'s schema evolution: the batch may ADD columns,
+    * never drop one or drift a shared column's type. Returns the
+    * widened column order (store order first, new batch columns
+    * appended — the schema every later version and reader sees) and
+    * the null-backfill that widens a store-shaped frame to it.
+    */
+  private def evolve(store: DataFrame,
+                     batch: DataFrame): (Seq[String], DataFrame => DataFrame) = {
+    val storeCols = store.columns.toIndexedSeq
+    val batchCols = batch.columns.toIndexedSeq
+    val narrowed = storeCols.filterNot(batchCols.contains)
+    require(narrowed.isEmpty,
+      s"batch narrows the store schema (missing: ${narrowed.mkString(",")}) — " +
+        "evolution is additive-only: a batch may ADD columns, never drop them")
+    val storeTypes = store.schema.fields.map(f => f.name -> f.dataType).toMap
+    val drifted = batch.schema.fields
+      .filter(f => storeTypes.get(f.name).exists(_ != f.dataType))
+    require(drifted.isEmpty,
+      "store/batch column types drifted: " + drifted.map(f =>
+        s"${f.name} (store ${storeTypes(f.name).simpleString} vs " +
+          s"batch ${f.dataType.simpleString})").mkString(", "))
+    val cols = storeCols ++ batchCols.filterNot(storeCols.contains)
+    Seq("__bk", "__m", Hit, Pre).foreach(t => require(!cols.contains(t),
+      s"column name $t is reserved by mergeBatch's join/agg temporaries"))
+    val batchTypes = batch.schema.fields.map(f => f.name -> f.dataType).toMap
+    cols -> (df => cols.filterNot(storeCols.contains)
+      .foldLeft(df)((d, c) => d.withColumn(c, lit(null).cast(batchTypes(c)))))
+  }
+
   /** Latest-per-key: each `keyCol` group's `carried` columns from its
     * highest-`seqCols` row (one max_by, partial-aggregated map-side) —
     * the winner rule [[applyLog]], [[mergeBatch]] and the view folds
-    * share.
+    * share. With `preCols`, the rows flagged `__pre` are the store's
+    * pre-image, and each group also collects them, projected to
+    * `preCols`, into a `__pre` array (empty for a key new to the
+    * store): the rows a view fold subtracts, gathered by the same
+    * exchange that picks the winner.
     */
   private def latestPerKey(df: DataFrame, keyCol: String, carried: Seq[String],
-                           seqCols: Seq[String]): DataFrame =
+                           seqCols: Seq[String], preCols: Seq[String] = Nil): DataFrame = {
+    val pre = if (preCols.isEmpty) Nil
+      else Seq(collect_list(when(col(Pre), struct(preCols.map(col): _*))).as(Pre))
     df.groupBy(col(keyCol))
       .agg(max_by(struct(carried.map(col): _*),
-        struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"))
-      .select(col(keyCol) +: carried.map(c => col(s"__m.$c").as(c)): _*)
+        struct(seqCols.toIndexedSeq.map(col): _*)).as("__m"), pre: _*)
+      .select((col(keyCol) +: carried.map(c => col(s"__m.$c").as(c))) ++
+        pre.map(_ => col(Pre)): _*)
+  }
+
+  /** Reserved temporaries of a view trigger's change: `__hit` tags the
+    * pre-image rows whose key the batch changes ([[tagTouched]]; null
+    * elsewhere), and `__pre` marks pre-image rows in the winners'
+    * groupBy and then holds each winner's collected pre-image
+    * ([[latestPerKey]]).
+    */
+  private val Hit = "__hit"
+  private val Pre = "__pre"
+
+  /** Tag each row of a store's touched-bucket pre-image `pre` with
+    * whether `batch` changes its key, through ONE broadcast left-outer
+    * join on the batch's distinct keys (null-safe, like [[mergeBatch]]'s
+    * joins). Persisted once, the tagged pre-image splits into the rows
+    * a view trigger folds against and the rows its merge carries over
+    * untouched, with no further join ([[batchWinners]]).
+    */
+  private[graft] def tagTouched(pre: DataFrame, batch: DataFrame, keyCol: String): DataFrame = {
+    Seq("__bk", Hit).foreach(t => require(!pre.columns.contains(t),
+      s"column name $t is reserved by the touched-key tag"))
+    pre.join(broadcast(batch.select(col(keyCol).as("__bk")).distinct()
+      .withColumn(Hit, lit(true))), col(keyCol) <=> col("__bk"), "left_outer")
+      .drop("__bk")
+  }
+
+  /** One view trigger's change, built once for both of its halves.
+    * `rows` holds the batch's per-key WINNERS: [[mergeBatch]]'s max_by
+    * over the key's pre-image row and its batch entries, as the full
+    * schema-widened row the merge commits, each with the `__pre` list
+    * of pre-image rows the fold subtracts. `untouched` holds the
+    * pre-image rows no batch key touches. Both carry the widened
+    * `cols`.
+    */
+  private[graft] final case class Winners(rows: DataFrame, untouched: DataFrame,
+                                          keyCol: String, cols: Seq[String]) {
+    /** [[mergeBatch]] over the touched buckets: the untouched rows
+      * plus every winner.
+      */
+    def merged: DataFrame = {
+      val c = cols.map(col)
+      untouched.select(c: _*).unionByName(rows.select(c: _*))
+    }
+  }
+
+  /** The [[Winners]] of `batch` over `tagged`, a touched-bucket
+    * pre-image carrying [[tagTouched]]'s tag, for view fold `f`: the
+    * tagged rows and the raw batch entries meet in ONE groupBy by key
+    * (the batch's latest-per-key partial-aggregates map-side inside
+    * it), which picks each winner and collects its pre-image. Schema
+    * evolution as [[mergeBatch]]. Lazy: the caller persists `rows` to
+    * share them.
+    */
+  private[graft] def batchWinners(tagged: DataFrame, batch: DataFrame, keyCol: String,
+                                  seqCols: Seq[String], f: ViewFold): Winners = {
+    require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
+    val (cols, widen) = evolve(tagged.drop(Hit), batch)
+    val pre = needed(f, keyCol, cols, "store")
+    seqCols.foreach(c => require(cols.contains(c), s"batch missing column $c"))
+    val w = widen(tagged)
+    def rows(df: DataFrame, isPre: Boolean) =
+      df.select(cols.map(col) :+ lit(isPre).as(Pre): _*)
+    val winners = latestPerKey(rows(w.where(col(Hit).isNotNull), isPre = true)
+      .unionByName(rows(batch, isPre = false)), keyCol, cols.filterNot(_ == keyCol),
+      seqCols, pre)
+    Winners(winners, w.where(col(Hit).isNull), keyCol, cols)
+  }
 
   /** The broadcast guard: `keys` (one row per distinct key) above
     * `maxBroadcastKeys` (> 0; 0 = no cap) fails with "split the
@@ -178,11 +262,13 @@ object Changelog {
 
   /** One flavour of incrementally maintained dimensional aggregate —
     * `(dims..., n, sum)` plus whatever state the flavour keeps — and
-    * the pieces of the ONE fold core ([[foldBatch]], [[foldPurge]])
-    * that differ between flavours. Everything else is shared: the
-    * pre-image/winner build, the signed-union exchange, the view-state
-    * union+groupBy, and (for flavours with state) the eager
-    * checkpoint + recompute-flag test + lazy recompute tail.
+    * the pieces of the ONE fold core ([[foldBatch]], [[foldWinners]],
+    * [[foldPurge]]) that differ between flavours. Everything else is
+    * shared: the pre-image/winner build, the signed delta rows, the ONE
+    * union+groupBy by dims that folds them into the view state (the
+    * flavour's delta aggregates ride along), and (for flavours with
+    * state) the eager checkpoint + recompute-flag count + lazy
+    * recompute tail.
     *
     * n and sum are SUM0 statistics on every flavour: a dimension whose
     * live rows all carry null values reads sum 0, never null. Plain
@@ -205,7 +291,9 @@ object Changelog {
       */
     def snapshot(store: DataFrame): DataFrame
 
-    /** Aggregates this flavour adds to the signed-union exchange. */
+    /** Aggregates this flavour adds to the fold's one exchange, over
+      * the signed rows ([[side]]).
+      */
     private[ext] def deltaAggs: Seq[Column] = Nil
     /** View-state columns beyond `(dims, n, sum)`. */
     private[ext] def stateCols: Seq[String] = Nil
@@ -226,8 +314,10 @@ object Changelog {
     private[ext] def liveAgg(store: DataFrame, extra: Column*): DataFrame =
       groups(live(store)).agg(count(lit(1)).as(nCol),
         sum0(col(valCol), store.schema(valCol).dataType).as(sumCol) +: extra: _*)
-    /** `valCol` on one side of the signed union, null on the other. */
-    private[ext] def side(sign: Int): Column = when(col("__sgn") === sign, col(valCol))
+    /** The value on one side of the signed rows, null on the other
+      * side's rows and on the view's.
+      */
+    private[ext] def side(sign: Int): Column = when(col("__sgn") === sign, col("__v"))
   }
 
   /** Count/sum: self-maintainable, so the fold is pure delta
@@ -411,113 +501,146 @@ object Changelog {
         .otherwise(acc)
     })
 
-  /** What one fold folds in: the changed keys as a broadcast `__bk`
-    * list, the store's PRE-image rows for them, and the post-change
-    * WINNER rows. All three are key-list-sized; the store enters only
-    * through the one broadcast semi-join.
+  /** What one fold folds in: the changed `keys`, the store's PRE-image
+    * rows for them, and the post-change WINNER rows — all
+    * key-list-sized.
     */
-  private final case class Change(f: ViewFold, keyCol: String, bk: DataFrame,
+  private final case class Change(f: ViewFold, keyCol: String, keys: DataFrame,
                                   pre: DataFrame, winner: DataFrame)
 
-  private def change(f: ViewFold, store: DataFrame, keyCol: String,
-                     more: Seq[String], keys: DataFrame, maxBroadcastKeys: Long,
-                     what: String)(winner: DataFrame => DataFrame): Change = {
+  /** The columns a fold of `f` reads from a changelog-shaped relation
+    * with columns `cols` (plus `more`); fails on a missing one and on
+    * the fold's reserved temporaries.
+    */
+  private def needed(f: ViewFold, keyCol: String, cols: Seq[String], what: String,
+                     more: Seq[String] = Nil): Seq[String] = {
     require(f.dims.nonEmpty, "view maintenance needs at least one dimension column")
-    // project the store to the columns the maintenance needs — its
-    // payload drops before the semi-join, and an additive schema
-    // evolution elsewhere in the row is invisible here
-    val needed = ((keyCol +: f.opCol +: more) ++ f.dims :+ f.valCol).distinct
-    needed.foreach(c => require(store.columns.contains(c), s"store missing column $c"))
-    Seq("__bk", "__m", "__sgn", "__dk", "__rc").foreach(t => require(!needed.contains(t),
-      s"column name $t is reserved by view-maintenance temporaries"))
-    requireBroadcastable(keys, maxBroadcastKeys, what)
-    val bk = broadcast(keys.select(col(keyCol).as("__bk")))
-    val pre = store.select(needed.map(col): _*)
-      .join(bk, col(keyCol) <=> col("__bk"), "left_semi")
-    Change(f, keyCol, bk, pre, winner(pre))
+    val n = ((keyCol +: f.opCol +: more) ++ f.dims :+ f.valCol).distinct
+    n.foreach(c => require(cols.contains(c), s"$what missing column $c"))
+    Seq("__bk", "__m", "__sgn", "__v", "__dk", "__rc", Hit, Pre).foreach(t =>
+      require(!n.contains(t), s"column name $t is reserved by view-maintenance temporaries"))
+    n
   }
 
-  /** A batch's change: the batch collapses to latest-per-key exactly
-    * as [[mergeBatch]] does, and the winner is the same max_by
-    * [[mergeBatch]] commits — so the fold TELESCOPES, and a
-    * re-delivered batch (all entries lose at equal seq) changes
-    * nothing.
+  /** The change `w` ([[batchWinners]]) carries for fold `f`: its keys,
+    * its `__pre` lists unrolled, and the winners projected to what the
+    * fold reads.
+    */
+  private def winnerChange(f: ViewFold, w: Winners): Change =
+    Change(f, w.keyCol, w.rows.select(w.keyCol),
+      w.rows.select(explode(col(Pre)).as(Pre)).select(s"$Pre.*"),
+      w.rows.select(needed(f, w.keyCol, w.cols, "store").map(col): _*))
+
+  /** A batch's change against an untagged `store` (the public folds):
+    * the batch collapses to latest-per-key exactly as [[mergeBatch]]
+    * does, the store enters through one broadcast semi-join on its
+    * keys, and the winner is the same max_by [[mergeBatch]] commits —
+    * so the fold TELESCOPES, and a re-delivered batch (all entries lose
+    * at equal seq) changes nothing. The store's payload drops before
+    * the semi-join, so an additive schema evolution elsewhere in the
+    * row is invisible here.
     */
   private def batchChange(f: ViewFold, store: DataFrame, batch: DataFrame,
                           keyCol: String, seqCols: Seq[String],
                           maxBroadcastKeys: Long): Change = {
     require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
-    val needed = ((keyCol +: f.opCol +: seqCols) ++ f.dims :+ f.valCol).distinct
-    needed.foreach(c => require(batch.columns.contains(c), s"batch missing column $c"))
-    def latest(df: DataFrame) = latestPerKey(df, keyCol, needed.filterNot(_ == keyCol), seqCols)
-    val bl = latest(batch.select(needed.map(col): _*))
-    change(f, store, keyCol, seqCols, bl, maxBroadcastKeys, "batch")(pre =>
-      latest(pre.unionByName(bl)))
+    val n = needed(f, keyCol, store.columns, "store", seqCols)
+    needed(f, keyCol, batch.columns, "batch", seqCols)
+    def latest(df: DataFrame) = latestPerKey(df, keyCol, n.filterNot(_ == keyCol), seqCols)
+    val bl = latest(batch.select(n.map(col): _*))
+    requireBroadcastable(bl, maxBroadcastKeys, "batch")
+    val pre = preImage(store, n, bl, keyCol)
+    Change(f, keyCol, bl.select(keyCol), pre, latest(pre.unionByName(bl)))
   }
+
+  /** `store`'s rows for the (distinct) `keys`, projected to `cols`:
+    * one broadcast semi-join, null-safe like [[mergeBatch]]'s.
+    */
+  private def preImage(store: DataFrame, cols: Seq[String], keys: DataFrame,
+                       keyCol: String): DataFrame =
+    store.select(cols.map(col): _*).join(broadcast(keys.select(col(keyCol).as("__bk"))),
+      col(keyCol) <=> col("__bk"), "left_semi")
 
   /** A purge's change: the purged keys' pre-image with an EMPTY winner
     * side — so erasure is just a fold.
     */
   private def purgeChange(f: ViewFold, store: DataFrame, keys: DataFrame,
-                          keyCol: String, maxBroadcastKeys: Long): Change =
-    change(f, store, keyCol, Nil, keys.select(keyCol).distinct(),
-      maxBroadcastKeys, "purge")(_.where(lit(false)))
+                          keyCol: String, maxBroadcastKeys: Long): Change = {
+    val n = needed(f, keyCol, store.columns, "store")
+    val k = keys.select(keyCol).distinct()
+    requireBroadcastable(k, maxBroadcastKeys, "purge")
+    val pre = preImage(store, n, k, keyCol)
+    Change(f, keyCol, k, pre, pre.where(lit(false)))
+  }
 
-  /** THE one exchange of a fold: live winner rows tagged +1 and live
-    * pre-image rows −1, one groupBy for the signed count/sum delta and
-    * the flavour's [[ViewFold.deltaAggs]] (a when() with no otherwise
-    * is null on the other side's rows and on null values, and the
-    * aggregates skip nulls).
+  /** A change as signed DELTA ROWS: each live winner row becomes `(dims,
+    * n = 1, sum = value)` and each live pre-image row `(dims, n = −1,
+    * sum = −value)`, both carrying the value as `__v` and the sign as
+    * `__sgn` for the flavour's [[ViewFold.deltaAggs]] (a when() with no
+    * otherwise is null on the other side's rows and on null values, and
+    * the aggregates skip nulls).
+    */
+  private def signed(c: Change): DataFrame = {
+    val f = c.f
+    def rows(df: DataFrame, sign: Int) =
+      f.live(df).select(f.dims.map(col) :+ lit(sign.toLong).as(f.nCol) :+
+        (col(f.valCol) * lit(sign)).as(f.sumCol) :+ col(f.valCol).as("__v") :+
+        lit(sign).as("__sgn"): _*)
+    rows(c.winner, 1).unionByName(rows(c.pre, -1))
+  }
+
+  /** [[aggDelta]]'s body: the signed rows summed per dim. A fold never
+    * builds it — its signed rows go straight into [[merge]].
     */
   private def delta(c: Change): DataFrame = {
     val f = c.f
-    val signed = (df: DataFrame, sign: Int) =>
-      f.live(df).select(f.dims.map(col) :+ col(f.valCol) :+ lit(sign).as("__sgn"): _*)
-    f.groups(signed(c.winner, 1).unionByName(signed(c.pre, -1)))
-      .agg(sum(col("__sgn").cast("long")).as(f.nCol),
-        sum0(col(f.valCol) * col("__sgn"), c.pre.schema(f.valCol).dataType)
-          .as(f.sumCol) +: f.deltaAggs: _*)
+    f.groups(signed(c)).agg(sum(col(f.nCol)).as(f.nCol),
+      sum0(col(f.sumCol), c.pre.schema(f.valCol).dataType).as(f.sumCol))
   }
 
-  /** Fold a delta frame into the view state through ONE dim-bounded
-    * union+groupBy: n/sum add up, and each `extra` column (view state
-    * or delta aggregate) rides along null on the side that lacks it,
-    * picked out by null-skipping MAX — each side contributes at most
-    * one row per dim, so MAX is pure selection. Dims whose live row
-    * count reached zero drop. Null dims group as ordinary values on
-    * both sides — no join, so no null-key mismatch to guard.
+  /** Fold delta rows into the view state through ONE dim-bounded
+    * union+groupBy — THE one exchange of a fold. n/sum add up; every
+    * other column rides along null on the side that lacks it. The
+    * view-`state` columns are picked out by null-skipping MAX (the view
+    * holds one row per dim and delta rows carry no state, so MAX is
+    * pure selection), and `aggs` (the flavour's delta aggregates over
+    * the signed rows) skip the view's nulls. `delta` may be an
+    * [[aggDelta]] (one row per dim) or a fold's signed rows. Dims whose
+    * live row count reached zero drop. Null dims group as ordinary
+    * values on both sides — no join, so no null-key mismatch to guard.
     */
   private def merge(agg: DataFrame, delta: DataFrame, dims: Seq[String],
-                    nCol: String, sumCol: String, extra: Seq[String]): DataFrame = {
+                    nCol: String, sumCol: String, state: Seq[String],
+                    aggs: Seq[Column] = Nil): DataFrame = {
+    val cols = (dims ++ Seq(nCol, sumCol) ++ state ++ delta.columns).distinct
     def side(df: DataFrame, other: DataFrame) =
-      df.select(dims.map(col) ++ Seq(col(nCol), col(sumCol)) ++ extra.map(c =>
+      df.select(cols.map(c =>
         if (df.columns.contains(c)) col(c)
         else lit(null).cast(other.schema(c).dataType).as(c)): _*)
     side(agg, delta).unionByName(side(delta, agg))
       .groupBy(dims.map(col): _*)
       .agg(sum(col(nCol)).as(nCol),
         sum0(col(sumCol), agg.schema(sumCol).dataType).as(sumCol) +:
-          extra.map(c => max(col(c)).as(c)): _*)
+          (state.map(c => max(col(c)).as(c)) ++ aggs): _*)
       .where(col(nCol) =!= 0)
   }
 
-  /** The fold core: exchange, merge, and — for a flavour with state —
-    * the EAGER tail. The dim-bounded stepped state CHECKPOINTS inside
-    * the call and counts its recompute flags in the same job, so the
-    * flag test costs no action of its own, the common unflagged commit
-    * carries no recompute branch (and no store scan) in its plan at
-    * all, with no reliance on AQE's empty-relation propagation, and
-    * callers need no lineage truncation across folds. Only flagged
-    * dims recompute, from `rstore()` — the FULL pre-change store, built
-    * lazily — anti-joined with the changed keys, plus the winners.
+  /** The fold core: the signed rows merged into the view and — for a
+    * flavour with state — the EAGER tail. The dim-bounded stepped state
+    * CHECKPOINTS inside the call and counts its recompute flags in the
+    * same job, so the flag test costs no action of its own, the common
+    * unflagged commit carries no recompute branch (and no store scan)
+    * in its plan at all, with no reliance on AQE's empty-relation
+    * propagation, and callers need no lineage truncation across folds.
+    * Only flagged dims recompute, from `rstore()` — the FULL pre-change
+    * store, built lazily — anti-joined with the changed keys, plus the
+    * winners.
     */
   private def fold(agg: DataFrame, c: Change, rstore: () => DataFrame): DataFrame = {
     val f = c.f
     f.stateCols.foreach(s => require(agg.columns.contains(s),
       s"agg is missing view-state column $s — seed the view with its own flavour's snapshot"))
-    val d = delta(c)
-    val merged = merge(agg, d, f.dims, f.nCol, f.sumCol,
-      f.stateCols ++ d.columns.drop(f.dims.size + 2))
+    val merged = merge(agg, signed(c), f.dims, f.nCol, f.sumCol, f.stateCols, f.deltaAggs)
     if (f.stateCols.isEmpty) return merged
     val vt = c.pre.schema(f.valCol).dataType
     val dk = struct(f.dims.map(col): _*).as("__dk")
@@ -534,7 +657,8 @@ object Changelog {
       require(!rs.columns.contains("__bk"),
         "column name __bk is reserved by the recompute's key anti-join")
       def live(df: DataFrame) = f.live(df).select(dk, col(f.valCol))
-      val r = f.rebuilt(live(rs.join(c.bk, col(c.keyCol) <=> col("__bk"), "left_anti"))
+      val bk = broadcast(c.keys.select(col(c.keyCol).as("__bk")))
+      val r = f.rebuilt(live(rs.join(bk, col(c.keyCol) <=> col("__bk"), "left_anti"))
         .unionByName(live(c.winner))
         .join(flagged.hint("broadcast"), Seq("__dk"), "left_semi"))
       f.stateCols.zip(r.columns.tail).foldLeft(ck.join(r, Seq("__dk"), "left")) {
@@ -545,17 +669,24 @@ object Changelog {
   }
 
   /** Fold one changelog batch into view `agg` against the PRE-batch
-    * `store` (with a [[graft.streaming.BucketStore]] underneath, the
-    * touched-bucket read: the pre-image probe only ever matches the
-    * batch's keys). `rstore` is the recompute source — an affected
-    * dim's other rows live in every bucket, so a bucketed caller
-    * passes the full store; it is built only on the recompute path.
+    * `store`. `rstore` is the recompute source — an affected dim's
+    * other rows live in every bucket, so a bucketed caller passes the
+    * full store; it is built only on the recompute path.
     */
   private[graft] def foldBatch(f: ViewFold, agg: DataFrame, store: DataFrame,
                                batch: DataFrame, keyCol: String,
                                seqCols: Seq[String], maxBroadcastKeys: Long,
                                rstore: () => DataFrame): DataFrame =
     fold(agg, batchChange(f, store, batch, keyCol, seqCols, maxBroadcastKeys), rstore)
+
+  /** Fold a trigger's [[Winners]] into view `agg` — [[foldBatch]] over
+    * a change already built (and persisted) for the trigger's merge
+    * too: the signed rows, and on the recompute path the changed keys
+    * and the winners, all read from `w.rows`.
+    */
+  private[graft] def foldWinners(f: ViewFold, agg: DataFrame, w: Winners,
+                                 rstore: () => DataFrame): DataFrame =
+    fold(agg, winnerChange(f, w), rstore)
 
   /** Subtract the purged `keys`' live contributions from view `agg` —
     * correct VIEW-FIRST against the PRE-purge store: a recompute reads

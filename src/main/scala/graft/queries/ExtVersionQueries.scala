@@ -292,9 +292,10 @@ object ExtVersionQueries {
     // those dims only — the operator's honest, documented cost). The
     // gate: folded view == full MIN/MAX recompute over the final
     // merged table, on real data where the error-typed deletes DO
-    // retract segment boundaries. Folds checkpoint between batches
-    // (the maintenance plan references agg and store several times —
-    // see mergeAggMinMax's lineage contract; the streamed twin
+    // retract segment boundaries. The eager fold checkpoints its own
+    // state (mergeAggMinMax's contract), so the view needs no second
+    // checkpoint here; the store checkpoints between batches (the
+    // maintenance plan references it several times; the streamed twin
     // truncates naturally through the committed store).
     Declared(
       "ext_pipeline_matview_minmax",
@@ -320,7 +321,7 @@ object ExtVersionQueries {
             Seq("ts", "event_id"), Seq("c_mktsegment"), "bal_cents",
             nCol = "n", sumCol = "sum_cents",
             minCol = "min_cents", maxCol = "max_cents",
-            maxBroadcastKeys = 0L).localCheckpoint(true)
+            maxBroadcastKeys = 0L)
           store = Changelog.mergeBatch(store, b, "c_custkey", "op",
             Seq("ts", "event_id"), maxBroadcastKeys = 0L)
             .localCheckpoint(true)
@@ -364,7 +365,7 @@ object ExtVersionQueries {
             Seq("ts", "event_id"), Seq("c_mktsegment"), "bal_cents", k = 8,
             nCol = "n", sumCol = "sum_cents",
             minCol = "min_cents", maxCol = "max_cents",
-            maxBroadcastKeys = 0L).localCheckpoint(true)
+            maxBroadcastKeys = 0L)
           store = Changelog.mergeBatch(store, b, "c_custkey", "op",
             Seq("ts", "event_id"), maxBroadcastKeys = 0L)
             .localCheckpoint(true)

@@ -145,9 +145,11 @@ object BucketStore {
     *     partitions (a session tuned narrow is never widened). A 10k-key
     *     trigger runs ONE reduce partition instead of fanning empty task
     *     waves across the session fan-out; a 100M-key batch gets 200.
-    *  1. The touched buckets' pre-image, read from `snap` and persisted
-    *     once for every consumer in the body (`empty` stands in for a
-    *     store with no committed version).
+    *  1. The touched buckets' pre-image, read from `snap` (`empty`
+    *     stands in for a store with no committed version), passed
+    *     through `shape` (the matview trigger tags the rows whose key
+    *     the batch changes) and persisted once for every consumer in
+    *     the body.
     *  1. `body(pre-image, touched buckets, bucket count)`.
     *  1. Unpersist both, clear the job label (when one was set) and
     *     restore the conf, also when the body throws — a stale label would
@@ -162,7 +164,8 @@ object BucketStore {
   private[graft] def maintain[A](snap: Snapshot, probe: DataFrame, key: Column,
                                  nBuckets: Int, maxBroadcastKeys: Long, noun: String,
                                  label: Option[String] = None,
-                                 empty: Option[DataFrame] = None)
+                                 empty: Option[DataFrame] = None,
+                                 shape: DataFrame => DataFrame = identity)
                                 (body: (DataFrame, Set[Long], Int) => A): A = {
     val spark = probe.sparkSession
     val sc = spark.sparkContext
@@ -178,8 +181,8 @@ object BucketStore {
         val width = math.max(1L, math.min(spark.sessionState.conf.numShufflePartitions.toLong,
           (nKeys + KeysPerPartition - 1) / KeysPerPartition))
         graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
-          val pre = read(spark, snap, Some(touched)).orElse(empty).getOrElse(
-            throw new IllegalStateException(s"no committed version under ${snap.dir}"))
+          val pre = shape(read(spark, snap, Some(touched)).orElse(empty).getOrElse(
+            throw new IllegalStateException(s"no committed version under ${snap.dir}")))
           pre.persist()
           try body(pre, touched, nb) finally pre.unpersist(false)
         }

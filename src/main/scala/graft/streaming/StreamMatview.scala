@@ -14,9 +14,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[purgeKeys]]), boundary-exact min/max (the `*MinMax` twins) and
   * sketch-backed min/max (the `*Sketch` twins); each is a
   * [[Changelog.ViewFold]] handed to the one seed, trigger, start and
-  * purge below. Per trigger the view refresh costs the fold's
-  * batch-keys broadcast against the store's touched buckets plus
-  * batch-sized aggregations; the alternative a view over a 100 TB
+  * purge below. Per trigger the view refresh costs one batch-keys
+  * broadcast against the store's touched buckets, shared with the
+  * snapshot merge, plus batch-sized aggregations; the alternative a
+  * view over a 100 TB
   * corpus otherwise forces — a full recompute per refresh interval —
   * is exactly what this operator removes.
   *
@@ -44,10 +45,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * The order is kept per trigger as stage → view commit → publish,
   * which lets the two halves' work overlap: after the probe, the
-  * touched buckets' pre-image is read once (persisted) for both; a
-  * second driver thread STAGES the snapshot merge from it (data +
-  * manifest, no `_SUCCESS` — [[BucketStore.stageVersion]]) while the
-  * calling thread folds and commits the view; only after the view's
+  * touched buckets' pre-image is read once (persisted, tagged with the
+  * batch's keys) and the batch's per-key winners are built once
+  * (persisted, each with the pre-image rows it replaces) for both
+  * halves; a second driver thread STAGES the snapshot merge — the
+  * untouched rows plus the winners (data + manifest, no `_SUCCESS` —
+  * [[BucketStore.stageVersion]]) — while the calling thread folds the
+  * winners into the view and commits it; only after the view's
   * `_SUCCESS` does the trigger join the thread and publish the
   * snapshot's marker ([[BucketStore.publishVersion]]). A crash
   * before the view commit leaves the staged snapshot dir invisible
@@ -107,19 +111,23 @@ object StreamMatview {
     * [[BucketStore.maintain]]'s scope: one probe
     * job (touched buckets, broadcast-guard pre-count and the
     * exchange-sizing key count), then ONE persisted read of the
-    * touched buckets' pre-batch content, shared by both halves: a
-    * second driver thread stages the snapshot merge from it
-    * ([[StreamMerge.stageMerge]] — data + manifest, no marker) while
-    * this thread folds and commits the view; then the trigger joins
-    * the thread, publishes the snapshot's marker, and vacuums. The
-    * thread inherits this thread's local properties (the stream's job
-    * group, so a query stop cancels its jobs too, and any caller
+    * touched buckets' pre-batch content, tagged with the batch's keys
+    * ([[Changelog.tagTouched]]), and ONE persisted winner set
+    * ([[Changelog.batchWinners]]), both materialized by this trigger's
+    * first two `<tag> b<id>: fold` jobs (the key broadcast, the
+    * winners). A second driver thread then stages the snapshot merge
+    * from them ([[StreamMerge.stageMerge]] — data + manifest, no
+    * marker) while this thread folds the winners into the view
+    * ([[Changelog.foldWinners]]) and commits it; then the trigger
+    * joins the thread, publishes the snapshot's marker, and vacuums.
+    * The thread inherits this thread's local properties (the stream's
+    * job group, so a query stop cancels its jobs too, and any caller
     * tags), runs inside this trigger's scope (AQE off, the trigger's
-    * exchange width), and labels its jobs `<tag> b<id>: snapshot
-    * merge`. The fold's own job (the eager checkpoint of the min/max
-    * and sketch folds, which also counts the recompute flags) runs as
-    * `<tag> b<id>: fold`; the lazy count/sum fold's run inside the
-    * `view commit` write.
+    * exchange width), and labels its one write job `<tag> b<id>:
+    * snapshot merge`. The eager checkpoint of the min/max and sketch
+    * folds (which also counts the recompute flags) runs as a third
+    * `fold` job; the lazy count/sum fold's runs inside the `view
+    * commit` write.
     *
     * A view already at `id` (a crash between the two commits) replays
     * the snapshot half alone through [[StreamMerge.applyBatch]].
@@ -156,51 +164,64 @@ object StreamMatview {
       s"snapshot store $storeDir already absorbed batch $id but the view " +
         s"$aggDir has not — the stores were driven out of order; drive " +
         "both through StreamMatview only")
-    // the scope persists both the batch (it feeds the probe, the fold
-    // and the merge) and storeTouched, the touched buckets' pre-image:
-    // the fold references it under two exchanges (winner max_by + the
-    // -1 side of the signed union) and the merge under two more (anti +
-    // semi join) — one touched-bucket scan for all four
+    // the scope persists the batch (it feeds the probe, the key tag and
+    // the winners) and storeTouched, the touched buckets' pre-image
+    // tagged with the batch's keys (one broadcast): the winners read
+    // its hit rows and the merge its untouched rows — one touched-bucket
+    // scan and no further join for either
     val staged = BucketStore.maintain(store, batch, col(keyCol), nBuckets,
         maxBroadcastKeys, "batch", Some(s"${tag(f)} b$id: probe"),
-        empty = Some(batch.limit(0))) { (storeTouched, _, nb) =>
-      val staged = alongside(spark, s"${tag(f)} b$id: snapshot merge") {
-        StreamMerge.stageMerge(store, storeTouched, batch, id, keyCol,
-          f.opCol, seqCols, nb)
-      } {
-        val agg = BucketStore.read(spark, view, None).getOrElse {
-          // both stores unseeded: start the view empty (right shape).
-          // A SEEDED snapshot with an unseeded view must fail loudly:
-          // the empty fallback would start the fold at zero and the
-          // seed's contributions would be missing from every state
-          // the telescoping invariant can ever reach.
-          require(store.version.isEmpty,
-            s"snapshot store $storeDir has committed versions but the view " +
-              s"$aggDir has none — an empty-view fallback would permanently " +
-              "drop the snapshot seed's contributions; seed both stores " +
-              "through StreamMatview.seed (or its flavour's seed twin)")
-          f.snapshot(batch.limit(0))
+        empty = Some(batch.limit(0)),
+        shape = Changelog.tagTouched(_, batch, keyCol)) { (storeTouched, _, nb) =>
+      // ONE winner set for both halves, persisted: building its RDD runs
+      // the key tag's broadcast, and the job materializing it is
+      // submitted, both from this thread (so both carry its `fold`
+      // label) before the merge thread starts; the halves plan while it
+      // runs, and their jobs share its stages instead of rebuilding it
+      sc.setJobDescription(s"${tag(f)} b$id: fold")
+      val w = Changelog.batchWinners(storeTouched, batch, keyCol, seqCols, f)
+      w.rows.persist()
+      val built = w.rows.rdd.foreachPartitionAsync(_ => ())
+      try {
+        val staged = alongside(spark, s"${tag(f)} b$id: snapshot merge") {
+          StreamMerge.stageMerge(store, w.merged, id, keyCol, nb)
+        } {
+          val agg = BucketStore.read(spark, view, None).getOrElse {
+            // both stores unseeded: start the view empty (right shape).
+            // A SEEDED snapshot with an unseeded view must fail loudly:
+            // the empty fallback would start the fold at zero and the
+            // seed's contributions would be missing from every state
+            // the telescoping invariant can ever reach.
+            require(store.version.isEmpty,
+              s"snapshot store $storeDir has committed versions but the view " +
+                s"$aggDir has none — an empty-view fallback would permanently " +
+                "drop the snapshot seed's contributions; seed both stores " +
+                "through StreamMatview.seed (or its flavour's seed twin)")
+            f.snapshot(batch.limit(0))
+          }
+          // the recompute source is the full PRE-batch store (the merge
+          // alongside is staged, not published), read only on the
+          // recompute path
+          val folded = Changelog.foldWinners(f, agg, w,
+            () => BucketStore.read(spark, store, None).getOrElse(batch.limit(0)))
+          sc.setJobDescription(s"${tag(f)} b$id: view commit")
+          // claim bucket 0 (the aggregate's only bucket): a batch that
+          // drives every dim's n to 0 writes NO rows, and an unclaimed
+          // commit would leave the previous version as bucket owner —
+          // viewSnapshot would silently serve the stale pre-batch
+          // aggregate and every later delta would fold onto wrong state
+          // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
+          val committed = BucketStore.commit(folded, view, view.next(id), col(f.dims.head),
+            nBuckets = 1, batch = Some(id), claim = Set(0L))
+          BucketStore.vacuum(spark, view, retain, committed)
         }
-        sc.setJobDescription(s"${tag(f)} b$id: fold")
-        // the recompute source is the full PRE-batch store (the merge
-        // alongside is staged, not published), read only on the
-        // recompute path
-        val folded = Changelog.foldBatch(f, agg, storeTouched, batch, keyCol,
-          seqCols, 0L, // guarded by the probe job
-          () => BucketStore.read(spark, store, None).getOrElse(batch.limit(0)))
-        sc.setJobDescription(s"${tag(f)} b$id: view commit")
-        // claim bucket 0 (the aggregate's only bucket): a batch that
-        // drives every dim's n to 0 writes NO rows, and an unclaimed
-        // commit would leave the previous version as bucket owner —
-        // viewSnapshot would silently serve the stale pre-batch
-        // aggregate and every later delta would fold onto wrong state
-        // (the EmptyOwner hazard BucketStore.purgeKeys claims against)
-        val committed = BucketStore.commit(folded, view, view.next(id), col(f.dims.head),
-          nBuckets = 1, batch = Some(id), claim = Set(0L))
-        BucketStore.vacuum(spark, view, retain, committed)
+        scala.concurrent.Await.result(built, scala.concurrent.duration.Duration.Inf)
+        // strictly after the view's marker: aggregate-first
+        BucketStore.publishVersion(spark, storeDir, staged)
+      } finally {
+        if (!built.isCompleted) built.cancel()
+        w.rows.unpersist(false)
       }
-      // strictly after the view's marker: aggregate-first
-      BucketStore.publishVersion(spark, storeDir, staged)
     }
     BucketStore.vacuum(spark, store, retain, staged)
   }
@@ -308,8 +329,8 @@ object StreamMatview {
     val purgedSv = store.next(store.committed.batch)
     val sc = spark.sparkContext
     val kdf = keys.select(col(keyCol).as("__pk")).distinct()
-    // storeTouched is persisted for the same double reference as the
-    // trigger's fold, and the snapshot erase reads it once more
+    // storeTouched is persisted: the fold's pre-image and the snapshot
+    // erase's count and rewrite all read it
     BucketStore.maintain(store, kdf, col("__pk"), BucketStore.DefaultBuckets,
         maxBroadcastKeys, "purge list", Some(s"${tag(f)} purge: probe")) {
       (storeTouched, touched, _) =>

@@ -148,27 +148,26 @@ object StreamMerge {
       // rows feed the write directly, the semi-joined touched rows feed
       // the max_by) — one touched-bucket scan, not two
       spark.sparkContext.setJobDescription(s"merge b$id: store commit")
-      BucketStore.publishVersion(spark, storeDir,
-        stageMerge(snap, cur, batch, id, keyCol, opCol, seqCols, nb))
+      BucketStore.publishVersion(spark, storeDir, stageMerge(snap,
+        Changelog.mergeBatch(cur, batch, keyCol, opCol, seqCols,
+          maxBroadcastKeys = 0L), // guarded by the probe job
+        id, keyCol, nb))
     }
     BucketStore.vacuum(spark, snap, retain, staged)
   }
 
-  /** The one merge body: stage batch `id` folded into the touched
-    * buckets of store state `snap` (`cur`, their pre-image, read at
-    * bucket count `nb`) as the store's next version ([[BucketStore
-    * .Snapshot.next]]), and return that version's id and manifest for
-    * [[BucketStore.publishVersion]] and the vacuum. The batch id lands
-    * in the manifest as the exactly-once watermark. The caller holds
-    * the batch's guard count, so mergeBatch skips its own.
+  /** The one merge stage: stage `merged`, batch `id` folded into the
+    * touched buckets of store state `snap` (at bucket count `nb`) —
+    * [[Changelog.mergeBatch]] here, a view trigger's shared
+    * [[Changelog.Winners]] in [[StreamMatview]] — as the store's next
+    * version ([[BucketStore.Snapshot.next]]), and return that version's
+    * id and manifest for [[BucketStore.publishVersion]] and the vacuum.
+    * The batch id lands in the manifest as the exactly-once watermark.
     */
-  private[streaming] def stageMerge(snap: BucketStore.Snapshot, cur: DataFrame,
-                                    batch: DataFrame, id: Long, keyCol: String,
-                                    opCol: String, seqCols: Seq[String],
+  private[streaming] def stageMerge(snap: BucketStore.Snapshot, merged: DataFrame,
+                                    id: Long, keyCol: String,
                                     nb: Int): (Long, BucketStore.Manifest) =
-    BucketStore.stageVersion(
-      Changelog.mergeBatch(cur, batch, keyCol, opCol, seqCols, maxBroadcastKeys = 0L),
-      snap, snap.next(id), col(keyCol), nb, batch = Some(id))
+    BucketStore.stageVersion(merged, snap, snap.next(id), col(keyCol), nb, batch = Some(id))
 
   /** Start the continuous merge of a streaming `changelog` into
     * `storeDir`. `Trigger.AvailableNow()` (the default) replays the

@@ -720,13 +720,25 @@ class BucketStoreSpec extends SparkSpec {
   }
 
   test("matview trigger labels: every job carries its phase; the merge thread's read '<tag> b<id>: snapshot merge'; a throwing fold leaves no label and no thread") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // each completed stage under the label of the first job that listed
+    // it (a stage shared by two jobs, or skipped, counts once or never)
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stagesDone = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        e.stageInfos.foreach(si => stageJob.putIfAbsent(si.stageId, d))
+        jobs.add(d)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stagesDone.add(stageJob.getOrDefault(e.stageInfo.stageId, ""))
     }
+    var stages = Seq.empty[String]
     def drained(): Seq[String] = {
       // every event posted so far has reached the listener once a job
       // submitted after them has been seen
@@ -735,11 +747,18 @@ class BucketStoreSpec extends SparkSpec {
       val deadline = System.currentTimeMillis + 10000
       while (!jobs.contains("label spec: barrier") && System.currentTimeMillis < deadline)
         Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
       val seen = jobs.asScala.toSeq.takeWhile(_ != "label spec: barrier")
       jobs.clear()
+      stages = stagesDone.asScala.toSeq.filter(_ != "label spec: barrier")
+      stagesDone.clear()
       seen
     }
+    // completed stages of the first trigger below (crashBatch(0): a
+    // retracting batch, so the eager flavours recompute), measured on
+    // this fixture at the parent of the one-winner / one-exchange fold:
+    // count/sum 16, min/max 24, sketch 17 (the sketch pops inside k);
+    // the one-winner trigger runs 11, 16 and 12
+    val parentStages = Map("matview" -> 16, "matview-minmax" -> 24, "matview-sketch" -> 17)
     def mergeThreads = Thread.getAllStackTraces.keySet.toArray.toSeq
       .map(_.asInstanceOf[Thread].getName).filter(_.endsWith(": snapshot merge"))
     spark.sparkContext.addSparkListener(listener)
@@ -757,6 +776,17 @@ class BucketStoreSpec extends SparkSpec {
         Seq("probe", "view commit", "snapshot merge").foreach { p =>
           assert(labels.contains(s"${f.tag} b0: $p"), s"${f.name}: no '$p' job in $labels")
         }
+        // one winner set and one exchange per fold: at least three
+        // stages fewer than the parent's trigger
+        assert(stages.size <= parentStages(f.tag) - 3,
+          s"${f.name}: ${stages.size} stages per trigger (parent ${parentStages(f.tag)}): $stages")
+        // the winners are built once, by the two `fold` jobs every
+        // trigger opens with (the key tag's broadcast, the winners), and
+        // no phase after them rebuilds the batch keys
+        assert(labels.count(_ == s"${f.tag} b0: fold") == (if (f.tag == "matview") 2 else 3),
+          s"${f.name}: the fold jobs of a trigger: $labels")
+        assert(labels.count(_ == s"${f.tag} b0: snapshot merge") == 1,
+          s"${f.name}: the snapshot merge should be one write job: $labels")
         // a fold whose write job throws (every part file of the view's
         // next version fails to create)
         CrashFs.failCreate = p => CrashFs.under(ag)(p) && p.getName.endsWith(".parquet")
@@ -783,11 +813,14 @@ class BucketStoreSpec extends SparkSpec {
         assert(f.view(ag) == f.recompute(st))
       }
       // the eager folds count their recompute flags inside the checkpoint
-      // job: a trigger and a purge that retract no bound run TWO `fold`
-      // jobs — the changed keys' broadcast and the checkpoint, no flag
-      // test — and a retracting batch still recomputes from the full store
+      // job: a trigger that retracts no bound runs exactly six jobs —
+      // the probe, THREE `fold` jobs (the key tag's broadcast, the
+      // winners, the checkpoint; no flag test), the snapshot merge's
+      // write and the view commit — and a purge that retracts no bound
+      // runs TWO `fold` jobs (the purged keys' broadcast and the
+      // checkpoint); a retracting batch still recomputes from the full
+      // store
       flavours.filter(_.tag != "matview").foreach { f =>
-        import scala.jdk.CollectionConverters._
         val st = CrashFs.dir(spark, "graft_flag_store")
         val ag = CrashFs.dir(spark, "graft_flag_agg")
         f.seed(seedSnapshot, st, ag)
@@ -796,8 +829,10 @@ class BucketStoreSpec extends SparkSpec {
         f.apply(Seq((200L, "seg0", 5L, "U", 0L)).toDF("k", "seg", "cents", "op", "seq"),
           0L, st, ag)
         val trigger = drained()
-        assert(trigger.count(_ == s"${f.tag} b0: fold") == 2,
-          s"${f.name}: a no-retraction trigger should run two fold jobs: $trigger")
+        assert(trigger.groupBy(identity).map { case (l, js) => l -> js.size } ==
+          Map(s"${f.tag} b0: probe" -> 1, s"${f.tag} b0: fold" -> 3,
+            s"${f.tag} b0: snapshot merge" -> 1, s"${f.tag} b0: view commit" -> 1),
+          s"${f.name}: the jobs of a no-retraction trigger: $trigger")
         // seg2 holds 20, 60, ..., 380: 60 ties no bound (and pops from
         // inside the k=4 sketch)
         f.purge(st, ag, Seq(6L).toDF("k"))

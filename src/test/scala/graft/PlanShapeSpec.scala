@@ -741,6 +741,58 @@ class PlanShapeSpec extends SparkSpec {
       s"the draining purge must read the (poisoned) full store: got $e2")
   }
 
+  test("view folds: every flavour's fold plans ONE hash exchange keyed on the dims") {
+    // the signed winner (+1) and pre-image (−1) rows meet the view state
+    // in one union + groupBy by dims, the flavour's delta aggregates
+    // riding along; grouping the signed rows by dims first (a separate
+    // delta) and the view state again would plan two. The eager flavours
+    // run their fold inside the checkpoint action, so the plans are
+    // read from a QueryExecutionListener, with AQE off as in a trigger
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions.concat
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.ext.Changelog
+    import spark.implicits._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val store = spark.range(0, 64).select(col("id").as("k"),
+      concat(lit("seg"), col("id") % 4).as("seg"), (col("id") * 10).as("cents"),
+      lit("U").as("op"), lit(-1L).as("seq")).localCheckpoint(true)
+    // two new keys inside their dims' bounds: no flavour recomputes
+    val batch = Seq((100L, "seg0", 5L, "U", 0L), (101L, "seg1", 15L, "U", 0L))
+      .toDF("k", "seg", "cents", "op", "seq")
+    val dimsExchange = "Exchange hashpartitioning\\(seg#\\d+"
+    Seq(Changelog.CountSum("op", Seq("seg"), "cents"),
+        Changelog.MinMax("op", Seq("seg"), "cents"),
+        Changelog.Sketch("op", Seq("seg"), "cents", k = 4)).foreach { f =>
+      val agg = f.snapshot(store).localCheckpoint(true)
+      spark.listenerManager.register(listener)
+      try {
+        graft.Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+          Changelog.foldBatch(f, agg, store, batch, "k", Seq("seq"), 0L, () => store)
+            .collect()
+        }
+        import scala.jdk.CollectionConverters._
+        // the fold's plans union its rows (an earlier action's plan, a
+        // view snapshot, may still be on its way to the listener)
+        def folds = plans.asScala.toSeq.filter(p => p.contains("Union") &&
+          count(p, dimsExchange) > 0)
+        val deadline = System.currentTimeMillis + 10000
+        while (folds.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(10)
+        assert(folds.nonEmpty, s"$f: no plan grouped by the dims: ${plans.asScala.toSeq}")
+        folds.foreach(p => assert(count(p, dimsExchange) == 1,
+          s"$f: the fold should plan one exchange on the dims:\n$p"))
+      } finally {
+        spark.listenerManager.unregister(listener)
+        plans.clear()
+      }
+    }
+  }
+
   test("correlated subqueries decorrelate to hash joins — never per-row plans or nested loops") {
     // the SQL-surface contract: EXISTS → hash LEFT SEMI, NOT EXISTS →
     // hash LEFT ANTI, a correlated scalar aggregate → ONE grouped
