@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** The session every graft main runs on (`Bench`, `Verify`, the dev
-    * profilers): `local[cpus]`, `partitions` shuffle partitions, UTC,
+    * profiler `Profile`): `local[cpus]`, `partitions` shuffle partitions, UTC,
     * nanosecond parquet timestamps read as longs (see
     * [[Tables.events]]), no UI, WARN logging. Everything else is
     * Spark's default, so a main times the configuration a library

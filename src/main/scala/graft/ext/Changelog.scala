@@ -78,13 +78,13 @@ object Changelog {
     * physically drop (a tombstone may be discarded once every replica
     * of the log below its seq is retired).
     *
-    * Scale shape: the batch collapses to latest-per-key map-side
-    * (same max_by as [[applyLog]]); the 100 TB store then crosses ONE
-    * key anti-join (broadcast under AQE for a typical batch ≪ store —
-    * the store itself never shuffles), and only the TOUCHED store
-    * rows (semi-join, batch-key-sized) re-enter the max_by against
-    * the batch's winners. Same seq contract as [[applyLog]]: the
-    * seqCols tuple is unique and non-null per entry.
+    * Scale shape: the 100 TB store crosses ONE broadcast anti-join and
+    * ONE broadcast semi-join on the batch's distinct keys
+    * ([[storeWinners]] — the store itself never shuffles), and only the
+    * TOUCHED store rows (batch-key-sized) meet the raw batch entries in
+    * ONE max_by by key ([[batchWinners]]; the batch's latest-per-key
+    * partial-aggregates map-side inside it). Same seq contract as
+    * [[applyLog]]: the seqCols tuple is unique and non-null per entry.
     *
     * SCHEMA EVOLUTION is additive-only: a batch whose schema is a
     * SUPERSET of the store's (new columns appended mid-stream — the
@@ -111,26 +111,8 @@ object Changelog {
     */
   def mergeBatch(store: DataFrame, batch: DataFrame, keyCol: String,
                  opCol: String, seqCols: Seq[String],
-                 maxBroadcastKeys: Long = 10000000L): DataFrame = {
-    require(seqCols.nonEmpty, "mergeBatch needs at least one seq column")
-    val (cols, widen) = evolve(store, batch)
-    val widened = widen(store)
-    def latest(df: DataFrame) = latestPerKey(df, keyCol, cols.filterNot(_ == keyCol), seqCols)
-    val bl = latest(batch.select(cols.map(col): _*))
-    requireBroadcastable(bl, maxBroadcastKeys, "batch")
-    // NULL-SAFE key comparison (<=>): groupBy already treats null as
-    // one key, but a plain equi anti-join would KEEP the store's
-    // null-key row (null never equals null in a join) while the
-    // max_by branch independently emits the batch's null-key winner —
-    // two rows for one key, compounding every batch. <=> is still an
-    // equi-join key (hash-joinable; the plan pin holds), so null
-    // behaves as an ordinary key end to end.
-    val bk = broadcast(bl.select(col(keyCol).as("__bk")))
-    val untouched = widened.join(bk, col(keyCol) <=> col("__bk"), "left_anti")
-    val touched = widened.join(bk, col(keyCol) <=> col("__bk"), "left_semi")
-    untouched.unionByName(latest(touched.unionByName(bl)))
-      .select(cols.map(col): _*)
-  }
+                 maxBroadcastKeys: Long = 10000000L): DataFrame =
+    storeWinners(store, batch, keyCol, seqCols, maxBroadcastKeys).merged
 
   /** [[mergeBatch]]'s schema evolution: the batch may ADD columns,
     * never drop one or drift a shared column's type. Returns the
@@ -163,12 +145,12 @@ object Changelog {
 
   /** Latest-per-key: each `keyCol` group's `carried` columns from its
     * highest-`seqCols` row (one max_by, partial-aggregated map-side) —
-    * the winner rule [[applyLog]], [[mergeBatch]] and the view folds
-    * share. With `preCols`, the rows flagged `__pre` are the store's
-    * pre-image, and each group also collects them, projected to
-    * `preCols`, into a `__pre` array (empty for a key new to the
-    * store): the rows a view fold subtracts, gathered by the same
-    * exchange that picks the winner.
+    * the winner rule of [[applyLog]] and of [[batchWinners]] (and so
+    * of every merge and view fold). With `preCols`, the rows flagged
+    * `__pre` are the store's pre-image, and each group also collects
+    * them, projected to `preCols`, into a `__pre` array (empty for a
+    * key new to the store): the rows a view fold subtracts, gathered
+    * by the same exchange that picks the winner.
     */
   private def latestPerKey(df: DataFrame, keyCol: String, carried: Seq[String],
                            seqCols: Seq[String], preCols: Seq[String] = Nil): DataFrame = {
@@ -192,10 +174,10 @@ object Changelog {
 
   /** Tag each row of a store's touched-bucket pre-image `pre` with
     * whether `batch` changes its key, through ONE broadcast left-outer
-    * join on the batch's distinct keys (null-safe, like [[mergeBatch]]'s
-    * joins). Persisted once, the tagged pre-image splits into the rows
-    * a view trigger folds against and the rows its merge carries over
-    * untouched, with no further join ([[batchWinners]]).
+    * join on the batch's distinct keys (null-safe, like [[byKey]]).
+    * Persisted once, the tagged pre-image splits ([[splitTouched]])
+    * into the rows a view trigger's winners compete with and the rows
+    * its merge carries over untouched, with no further join.
     */
   private[graft] def tagTouched(pre: DataFrame, batch: DataFrame, keyCol: String): DataFrame = {
     Seq("__bk", Hit).foreach(t => require(!pre.columns.contains(t),
@@ -205,46 +187,81 @@ object Changelog {
       .drop("__bk")
   }
 
-  /** One view trigger's change, built once for both of its halves.
-    * `rows` holds the batch's per-key WINNERS: [[mergeBatch]]'s max_by
-    * over the key's pre-image row and its batch entries, as the full
-    * schema-widened row the merge commits, each with the `__pre` list
-    * of pre-image rows the fold subtracts. `untouched` holds the
-    * pre-image rows no batch key touches. Both carry the widened
-    * `cols`.
+  /** A [[tagTouched]] pre-image split into the rows whose key the batch
+    * changes and the rest: [[batchWinners]]' two inputs.
+    */
+  private[graft] def splitTouched(tagged: DataFrame): (DataFrame, DataFrame) =
+    (tagged.where(col(Hit).isNotNull).drop(Hit), tagged.where(col(Hit).isNull).drop(Hit))
+
+  /** `df` joined (`how`) with the broadcast distinct `keys` (a frame
+    * with a `keyCol` column). The comparison is NULL-SAFE (<=>):
+    * groupBy treats null as one key, but a plain equi anti-join would
+    * KEEP a store's null-key row (null never equals null in a join)
+    * while the max_by independently emits the batch's null-key winner —
+    * two rows for one key, compounding every batch. <=> is still an
+    * equi-join key (hash-joinable; the plan pins hold), so null behaves
+    * as an ordinary key end to end.
+    */
+  private def byKey(df: DataFrame, keys: DataFrame, keyCol: String, how: String): DataFrame = {
+    require(!df.columns.contains("__bk"), "column name __bk is reserved by the key joins")
+    df.join(broadcast(keys.select(col(keyCol).as("__bk"))), col(keyCol) <=> col("__bk"), how)
+  }
+
+  /** A batch's per-key WINNERS over a store. `rows` holds, per batch
+    * key, the max_by over the key's store row and its batch entries, as
+    * the full schema-widened row the merge commits — and, when built
+    * for a view fold, with the `__pre` list of store rows the fold
+    * subtracts. `untouched` holds the store rows no batch key touches.
+    * Both carry the widened `cols`.
     */
   private[graft] final case class Winners(rows: DataFrame, untouched: DataFrame,
                                           keyCol: String, cols: Seq[String]) {
-    /** [[mergeBatch]] over the touched buckets: the untouched rows
-      * plus every winner.
-      */
+    /** The merged store: the untouched rows plus every winner. */
     def merged: DataFrame = {
       val c = cols.map(col)
       untouched.select(c: _*).unionByName(rows.select(c: _*))
     }
   }
 
-  /** The [[Winners]] of `batch` over `tagged`, a touched-bucket
-    * pre-image carrying [[tagTouched]]'s tag, for view fold `f`: the
-    * tagged rows and the raw batch entries meet in ONE groupBy by key
-    * (the batch's latest-per-key partial-aggregates map-side inside
-    * it), which picks each winner and collects its pre-image. Schema
-    * evolution as [[mergeBatch]]. Lazy: the caller persists `rows` to
-    * share them.
+  /** THE winner build — the one place a batch's per-key winners are
+    * picked, for [[mergeBatch]], the view folds and a matview trigger
+    * alike. `touched` and `untouched` split the store rows by whether
+    * the batch changes their key, however the caller selected them
+    * ([[storeWinners]]' broadcast joins, a trigger's [[splitTouched]]).
+    * The touched rows and the raw batch entries meet in ONE groupBy by
+    * key (the batch's latest-per-key partial-aggregates map-side inside
+    * it), which picks each winner and, for view fold `f`, collects the
+    * touched rows it replaces. Schema evolution as [[mergeBatch]]. Lazy:
+    * a caller that reads `rows` twice persists them.
     */
-  private[graft] def batchWinners(tagged: DataFrame, batch: DataFrame, keyCol: String,
-                                  seqCols: Seq[String], f: ViewFold): Winners = {
-    require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
-    val (cols, widen) = evolve(tagged.drop(Hit), batch)
-    val pre = needed(f, keyCol, cols, "store")
+  private[graft] def batchWinners(touched: DataFrame, untouched: DataFrame, batch: DataFrame,
+                                  keyCol: String, seqCols: Seq[String],
+                                  f: Option[ViewFold]): Winners = {
+    require(seqCols.nonEmpty, "a merge needs at least one seq column")
+    val (cols, widen) = evolve(touched, batch)
+    val pre = f.toSeq.flatMap(needed(_, keyCol, cols, "store"))
     seqCols.foreach(c => require(cols.contains(c), s"batch missing column $c"))
-    val w = widen(tagged)
     def rows(df: DataFrame, isPre: Boolean) =
       df.select(cols.map(col) :+ lit(isPre).as(Pre): _*)
-    val winners = latestPerKey(rows(w.where(col(Hit).isNotNull), isPre = true)
+    val winners = latestPerKey(rows(widen(touched), isPre = true)
       .unionByName(rows(batch, isPre = false)), keyCol, cols.filterNot(_ == keyCol),
       seqCols, pre)
-    Winners(winners, w.where(col(Hit).isNull), keyCol, cols)
+    Winners(winners, widen(untouched), keyCol, cols)
+  }
+
+  /** The [[Winners]] of `batch` over a whole `store`: the store rows
+    * split by ONE broadcast semi-join and ONE broadcast anti-join on the
+    * batch's distinct keys ([[byKey]]; the two joins reuse one
+    * broadcast), behind the broadcast guard.
+    */
+  private[graft] def storeWinners(store: DataFrame, batch: DataFrame, keyCol: String,
+                                  seqCols: Seq[String], maxBroadcastKeys: Long,
+                                  f: Option[ViewFold] = None): Winners = {
+    val keys = batch.select(keyCol).distinct()
+    val w = batchWinners(byKey(store, keys, keyCol, "left_semi"),
+      byKey(store, keys, keyCol, "left_anti"), batch, keyCol, seqCols, f)
+    requireBroadcastable(keys, maxBroadcastKeys, "batch")
+    w
   }
 
   /** The broadcast guard: `keys` (one row per distinct key) above
@@ -531,35 +548,20 @@ object Changelog {
       w.rows.select(explode(col(Pre)).as(Pre)).select(s"$Pre.*"),
       w.rows.select(needed(f, w.keyCol, w.cols, "store").map(col): _*))
 
-  /** A batch's change against an untagged `store` (the public folds):
-    * the batch collapses to latest-per-key exactly as [[mergeBatch]]
-    * does, the store enters through one broadcast semi-join on its
-    * keys, and the winner is the same max_by [[mergeBatch]] commits —
-    * so the fold TELESCOPES, and a re-delivered batch (all entries lose
-    * at equal seq) changes nothing. The store's payload drops before
-    * the semi-join, so an additive schema evolution elsewhere in the
-    * row is invisible here.
+  /** [[storeWinners]] for view fold `f`, over `store` and `batch`
+    * projected to the columns the fold reads: the winner is the max_by
+    * [[mergeBatch]] commits, so the fold TELESCOPES, and a re-delivered
+    * batch (all entries lose at equal seq) changes nothing. An additive
+    * schema evolution elsewhere in the row is invisible here.
     */
-  private def batchChange(f: ViewFold, store: DataFrame, batch: DataFrame,
+  private def viewWinners(f: ViewFold, store: DataFrame, batch: DataFrame,
                           keyCol: String, seqCols: Seq[String],
-                          maxBroadcastKeys: Long): Change = {
-    require(seqCols.nonEmpty, "view maintenance needs at least one seq column")
+                          maxBroadcastKeys: Long): Winners = {
     val n = needed(f, keyCol, store.columns, "store", seqCols)
     needed(f, keyCol, batch.columns, "batch", seqCols)
-    def latest(df: DataFrame) = latestPerKey(df, keyCol, n.filterNot(_ == keyCol), seqCols)
-    val bl = latest(batch.select(n.map(col): _*))
-    requireBroadcastable(bl, maxBroadcastKeys, "batch")
-    val pre = preImage(store, n, bl, keyCol)
-    Change(f, keyCol, bl.select(keyCol), pre, latest(pre.unionByName(bl)))
+    storeWinners(store.select(n.map(col): _*), batch.select(n.map(col): _*), keyCol,
+      seqCols, maxBroadcastKeys, Some(f))
   }
-
-  /** `store`'s rows for the (distinct) `keys`, projected to `cols`:
-    * one broadcast semi-join, null-safe like [[mergeBatch]]'s.
-    */
-  private def preImage(store: DataFrame, cols: Seq[String], keys: DataFrame,
-                       keyCol: String): DataFrame =
-    store.select(cols.map(col): _*).join(broadcast(keys.select(col(keyCol).as("__bk"))),
-      col(keyCol) <=> col("__bk"), "left_semi")
 
   /** A purge's change: the purged keys' pre-image with an EMPTY winner
     * side — so erasure is just a fold.
@@ -569,7 +571,7 @@ object Changelog {
     val n = needed(f, keyCol, store.columns, "store")
     val k = keys.select(keyCol).distinct()
     requireBroadcastable(k, maxBroadcastKeys, "purge")
-    val pre = preImage(store, n, k, keyCol)
+    val pre = byKey(store.select(n.map(col): _*), k, keyCol, "left_semi")
     Change(f, keyCol, k, pre, pre.where(lit(false)))
   }
 
@@ -654,11 +656,8 @@ object Changelog {
       val rs = rstore()
       (c.keyCol +: f.opCol +: f.dims :+ f.valCol).foreach(n =>
         require(rs.columns.contains(n), s"recomputeStore missing column $n"))
-      require(!rs.columns.contains("__bk"),
-        "column name __bk is reserved by the recompute's key anti-join")
       def live(df: DataFrame) = f.live(df).select(dk, col(f.valCol))
-      val bk = broadcast(c.keys.select(col(c.keyCol).as("__bk")))
-      val r = f.rebuilt(live(rs.join(bk, col(c.keyCol) <=> col("__bk"), "left_anti"))
+      val r = f.rebuilt(live(byKey(rs, c.keys, c.keyCol, "left_anti"))
         .unionByName(live(c.winner))
         .join(flagged.hint("broadcast"), Seq("__dk"), "left_semi"))
       f.stateCols.zip(r.columns.tail).foldLeft(ck.join(r, Seq("__dk"), "left")) {
@@ -677,12 +676,13 @@ object Changelog {
                                batch: DataFrame, keyCol: String,
                                seqCols: Seq[String], maxBroadcastKeys: Long,
                                rstore: () => DataFrame): DataFrame =
-    fold(agg, batchChange(f, store, batch, keyCol, seqCols, maxBroadcastKeys), rstore)
+    foldWinners(f, agg, viewWinners(f, store, batch, keyCol, seqCols, maxBroadcastKeys), rstore)
 
-  /** Fold a trigger's [[Winners]] into view `agg` — [[foldBatch]] over
-    * a change already built (and persisted) for the trigger's merge
-    * too: the signed rows, and on the recompute path the changed keys
-    * and the winners, all read from `w.rows`.
+  /** Fold a batch's [[Winners]] into view `agg`: the signed rows, and
+    * on the recompute path the changed keys and the winners, all read
+    * from `w.rows` — persist them when the same winners also feed the
+    * merge (`w.merged`), as a matview trigger and the batch matview
+    * rows do.
     */
   private[graft] def foldWinners(f: ViewFold, agg: DataFrame, w: Winners,
                                  rstore: () => DataFrame): DataFrame =
@@ -720,9 +720,10 @@ object Changelog {
                opCol: String, seqCols: Seq[String], dims: Seq[String],
                valCol: String, deleteOp: String = "D",
                nCol: String = "n", sumCol: String = "sum",
-               maxBroadcastKeys: Long = 10000000L): DataFrame =
-    delta(batchChange(CountSum(opCol, dims, valCol, deleteOp, nCol, sumCol),
-      store, batch, keyCol, seqCols, maxBroadcastKeys))
+               maxBroadcastKeys: Long = 10000000L): DataFrame = {
+    val f = CountSum(opCol, dims, valCol, deleteOp, nCol, sumCol)
+    delta(winnerChange(f, viewWinners(f, store, batch, keyCol, seqCols, maxBroadcastKeys)))
+  }
 
   /** Fold an [[aggDelta]] into the maintained aggregate — the
     * view-state merge with no extra state.

@@ -1,11 +1,15 @@
 package graft.queries
 
+import graft.Tables
+import graft.ext.PlanCache
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Constants, DuckDB CTE text, and checksum projections shared by the
-  * per-family ext query registries (Ext*Queries). Every cap or CTE
-  * here is mirrored verbatim between the Spark queries and their
-  * oracle SQL twins — change one, change both.
+/** Constants, DuckDB CTE text, checksum projections and changelog
+  * fixtures shared by the per-family ext query registries
+  * (Ext*Queries). Every cap or CTE here is mirrored verbatim between
+  * the Spark queries and their oracle SQL twins — change one, change
+  * both.
   */
 object ExtShared {
 
@@ -21,20 +25,51 @@ object ExtShared {
     */
   private[queries] val MaxBucket = 64
 
-  /** The maintained per-segment view's oracle — the full recompute
-    * over the one-shot batch merge of the events changelog into the
-    * customer snapshot. ONE definition shared by
-    * `ext_pipeline_matview` (the 4-batch incremental fold) and
-    * `ext_stream_matview` (the streamed fold): the two rows claim to
-    * gate against the same recompute, and a shared constant makes
-    * that true by construction instead of by parallel editing.
+  /** The customer snapshot as a changelog-shaped store seed, the
+    * starting store of every matview and forget row: `(c_custkey,
+    * c_mktsegment, bal_cents, op = 'U', ts = epoch 0, event_id = -1)`.
     */
-  private[queries] def matviewOracleSql: String = matviewOracle(minmax = false)
+  private[queries] def customerSeed(s: SparkSession, dir: String): DataFrame =
+    Tables.customer(s, dir).select(
+      col("c_custkey"), col("c_mktsegment"),
+      round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
+      lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
+      lit(-1L).as("event_id"))
 
-  /** The same recompute widened with MIN/MAX — the oracle of
-    * `ext_pipeline_matview_minmax` ([[graft.ext.Changelog
-    * .mergeAggMinMax]]'s gate). One generator for both shapes keeps
-    * the three maintained-view rows mutual audits by construction.
+  /** `events` as the changelog those rows fold into [[customerSeed]]:
+    * key `user_id + 1450` (updates to existing customers AND inserts
+    * past the snapshot's key range), the event type as the segment,
+    * the value in cents, an 'error' event as a delete, and the seq
+    * `(ts, event_id)`.
+    */
+  private[queries] def eventsChangelog(events: DataFrame): DataFrame = {
+    val k = col("user_id") + 1450
+    events.select(k.as("c_custkey"), col("event_type").as("c_mktsegment"),
+      round(col("value") * 100).cast("long").as("bal_cents"),
+      when(col("event_type") === "error", "D").otherwise("U").as("op"),
+      col("ts"), col("event_id"))
+  }
+
+  /** The `ext_stream_matview*` rows' file-stream source: the events
+    * changelog range-partitioned by ts into 8 parquet files, written
+    * once per session and events plan ([[PlanCache.artifact]]) — the
+    * replay, not the export, is what a timing measures.
+    */
+  private[queries] def matviewSource(s: SparkSession, dir: String): String =
+    PlanCache.artifact("streamMatview/src/8/1450", Tables.events(s, dir)) { e =>
+      val p = java.nio.file.Files.createTempDirectory("graft_smv_src").toString
+      eventsChangelog(e).repartitionByRange(8, col("ts"))
+        .write.mode("overwrite").parquet(p)
+      p
+    }
+
+  /** The maintained per-segment view's oracle: the full recompute over
+    * the one-shot batch merge of [[eventsChangelog]] into
+    * [[customerSeed]] — `(n, sum_cents)`, widened with MIN/MAX for the
+    * min/max and sketch flavours. ONE generator for the three batch
+    * and the three streamed matview rows: the rows claim to gate
+    * against the same recompute, and a shared definition makes that
+    * true by construction instead of by parallel editing.
     */
   private[queries] def matviewOracle(minmax: Boolean): String = {
     val mm = if (minmax)
@@ -171,7 +206,7 @@ object ExtShared {
     * engine-dependent (scores within 1e-9 of the k-th are excluded on
     * BOTH sides by each engine's own threshold).
     */
-  private[queries] def topkChecksum(listing: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[queries] def topkChecksum(listing: DataFrame): DataFrame = {
     // the k-th score via a window over the SAME partition key the
     // listing's rank window used — one pass, no added shuffle; a
     // groupBy+self-join would execute the (expensive) listing subtree

@@ -457,27 +457,9 @@ object ExtStoreQueries {
     Declared(
       "ext_stream_matview",
       (s, d) => {
-        val k = col("user_id") + 1450
-        val ev = Tables.events(s, d)
-        val srcDir = PlanCache.artifact("streamMatview/src/8/1450", ev) { e =>
-          val p = java.nio.file.Files
-            .createTempDirectory("graft_smv_src").toString
-          e.select(
-              k.as("c_custkey"),
-              col("event_type").as("c_mktsegment"),
-              round(col("value") * 100).cast("long").as("bal_cents"),
-              when(col("event_type") === "error", "D").otherwise("U").as("op"),
-              col("ts"), col("event_id"))
-            .repartitionByRange(8, col("ts"))
-            .write.mode("overwrite").parquet(p)
-          p
-        }
+        val srcDir = matviewSource(s, d)
         val Seq(storeDir, aggDir, ckpt) = freshDirs("smv", 3)
-        StreamMatview.seed(Tables.customer(s, d).select(
-            col("c_custkey"), col("c_mktsegment"),
-            round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-            lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-            lit(-1L).as("event_id")),
+        StreamMatview.seed(customerSeed(s, d),
           storeDir, aggDir, "c_custkey", "op", Seq("c_mktsegment"),
           "bal_cents", nCol = "n", sumCol = "sum_cents")
         val schema = s.read.parquet(srcDir).schema
@@ -489,7 +471,7 @@ object ExtStoreQueries {
         q.awaitTermination()
         StreamMatview.viewSnapshot(s, aggDir).orderBy("c_mktsegment")
       },
-      matviewOracle),
+      Some(matviewOracle(minmax = false))),
 
     // Continuous MIN/MAX view maintenance
     // ([[StreamMatview.applyBatchMinMax]]) — the streaming twin of
@@ -499,34 +481,18 @@ object ExtStoreQueries {
     // aggregate-first exactly-once. Per trigger the pre-images come
     // from the touched buckets; a trigger that retracts a dim's
     // boundary (the error-typed deletes do) recomputes EXACTLY that
-    // dim from the full store read, and one that doesn't broadcasts
-    // an empty dim list (AQE collapses the recompute scan). Settled
-    // view == the MIN/MAX-widened recompute oracle shared with the
-    // batch twin — the three rows stay mutual audits.
+    // dim from the full store read, and one that doesn't commits
+    // straight from the fold's checkpoint, whose job also counts the
+    // recompute flags (an `Observation`), so the recompute branch is
+    // never planned. Settled view == the MIN/MAX-widened recompute
+    // oracle shared with the batch twin — the three rows stay mutual
+    // audits.
     Declared(
       "ext_stream_matview_minmax",
       (s, d) => {
-        val k = col("user_id") + 1450
-        val ev = Tables.events(s, d)
-        val srcDir = PlanCache.artifact("streamMatview/src/8/1450", ev) { e =>
-          val p = java.nio.file.Files
-            .createTempDirectory("graft_smv_src").toString
-          e.select(
-              k.as("c_custkey"),
-              col("event_type").as("c_mktsegment"),
-              round(col("value") * 100).cast("long").as("bal_cents"),
-              when(col("event_type") === "error", "D").otherwise("U").as("op"),
-              col("ts"), col("event_id"))
-            .repartitionByRange(8, col("ts"))
-            .write.mode("overwrite").parquet(p)
-          p
-        }
+        val srcDir = matviewSource(s, d)
         val Seq(storeDir, aggDir, ckpt) = freshDirs("smvmm", 3)
-        StreamMatview.seedMinMax(Tables.customer(s, d).select(
-            col("c_custkey"), col("c_mktsegment"),
-            round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-            lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-            lit(-1L).as("event_id")),
+        StreamMatview.seedMinMax(customerSeed(s, d),
           storeDir, aggDir, "c_custkey", "op", Seq("c_mktsegment"),
           "bal_cents", nCol = "n", sumCol = "sum_cents",
           minCol = "min_cents", maxCol = "max_cents")
@@ -534,8 +500,8 @@ object ExtStoreQueries {
         // 2 files per trigger (4 triggers over the same 8-file log the
         // count/sum twin replays 1-by-1): the minmax refresh carries
         // the widest per-trigger plan in the suite (pre-image probe +
-        // boundary recompute + 4 view joins), so the replay halves the
-        // trigger count — the maintained semantics, the retraction
+        // fold checkpoint + boundary recompute), so the replay halves
+        // the trigger count — the maintained semantics, the retraction
         // recomputes, and the settled view are identical
         val stream = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(srcDir)
@@ -546,7 +512,7 @@ object ExtStoreQueries {
         q.awaitTermination()
         StreamMatview.viewSnapshot(s, aggDir).orderBy("c_mktsegment")
       },
-      Some(ExtShared.matviewOracle(minmax = true))),
+      Some(matviewOracle(minmax = true))),
 
     // SKETCH-backed continuous MIN/MAX view maintenance
     // ([[StreamMatview.applyBatchSketch]]) — the SCALE PATH for the
@@ -568,27 +534,9 @@ object ExtStoreQueries {
     Declared(
       "ext_stream_matview_sketch",
       (s, d) => {
-        val k = col("user_id") + 1450
-        val ev = Tables.events(s, d)
-        val srcDir = PlanCache.artifact("streamMatview/src/8/1450", ev) { e =>
-          val p = java.nio.file.Files
-            .createTempDirectory("graft_smv_src").toString
-          e.select(
-              k.as("c_custkey"),
-              col("event_type").as("c_mktsegment"),
-              round(col("value") * 100).cast("long").as("bal_cents"),
-              when(col("event_type") === "error", "D").otherwise("U").as("op"),
-              col("ts"), col("event_id"))
-            .repartitionByRange(8, col("ts"))
-            .write.mode("overwrite").parquet(p)
-          p
-        }
+        val srcDir = matviewSource(s, d)
         val Seq(storeDir, aggDir, ckpt) = freshDirs("smvsk", 3)
-        StreamMatview.seedSketch(Tables.customer(s, d).select(
-            col("c_custkey"), col("c_mktsegment"),
-            round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-            lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-            lit(-1L).as("event_id")),
+        StreamMatview.seedSketch(customerSeed(s, d),
           storeDir, aggDir, "c_custkey", "op", Seq("c_mktsegment"),
           "bal_cents", k = 8, nCol = "n", sumCol = "sum_cents",
           minCol = "min_cents", maxCol = "max_cents")
@@ -602,7 +550,7 @@ object ExtStoreQueries {
         q.awaitTermination()
         StreamMatview.viewSnapshotServed(s, aggDir).orderBy("c_mktsegment")
       },
-      Some(ExtShared.matviewOracle(minmax = true))),
+      Some(matviewOracle(minmax = true))),
 
     // Erasure INSIDE the streaming lifecycle ([[BucketStore.purgeKeys]]
     // between replays of one checkpointed stream) — the operational
@@ -622,25 +570,15 @@ object ExtStoreQueries {
     Declared(
       "ext_stream_forget",
       (s, d) => {
-        val k = col("user_id") + 1450
         val ev = Tables.events(s, d)
-        def slim(e: org.apache.spark.sql.DataFrame) = e.select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
         // fresh (non-memoized) source dir: phase 2 APPENDS to it mid-
         // run, so a shared artifact would leak phase-2 files into a
         // rerun's phase 1
         val Seq(srcDir, storeDir, ckpt) = freshDirs("sforget", 3)
-        slim(ev.where(pmod(col("event_id"), lit(2)) === 0))
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 0))
           .repartitionByRange(4, col("ts"))
           .write.mode("overwrite").parquet(srcDir)
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
+        val seed = customerSeed(s, d)
         StreamMerge.seed(seed, storeDir, "c_custkey")
         val schema = s.read.parquet(srcDir).schema
         def replay(): Unit = {
@@ -652,10 +590,10 @@ object ExtStoreQueries {
         }
         replay() // phase 1 settles
         val keys = seed.select("c_custkey")
-          .union(slim(ev).select("c_custkey")).distinct()
+          .union(eventsChangelog(ev).select("c_custkey")).distinct()
           .where(col("c_custkey") % 89 === 0)
         BucketStore.purgeKeys(s, storeDir, keys, "c_custkey")
-        slim(ev.where(pmod(col("event_id"), lit(2)) === 1))
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 1))
           .repartitionByRange(4, col("ts"))
           .write.mode("append").parquet(srcDir)
         replay() // phase 2: same checkpoint, only the new files
@@ -724,23 +662,13 @@ object ExtStoreQueries {
     Declared(
       "ext_stream_matview_forget",
       (s, d) => {
-        val k = col("user_id") + 1450
         val ev = Tables.events(s, d)
-        def slim(e: org.apache.spark.sql.DataFrame) = e.select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
         // fresh (non-memoized) source dir: phase 2 APPENDS to it
         val Seq(srcDir, storeDir, aggDir, ckpt) = freshDirs("smvforget", 4)
-        slim(ev.where(pmod(col("event_id"), lit(2)) === 0))
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 0))
           .repartitionByRange(3, col("ts"))
           .write.mode("overwrite").parquet(srcDir)
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
+        val seed = customerSeed(s, d)
         StreamMatview.seed(seed, storeDir, aggDir, "c_custkey", "op",
           Seq("c_mktsegment"), "bal_cents", nCol = "n", sumCol = "sum_cents")
         val schema = s.read.parquet(srcDir).schema
@@ -752,12 +680,12 @@ object ExtStoreQueries {
           nCol = "n", sumCol = "sum_cents").awaitTermination()
         replay() // phase 1 settles into store + view
         val keys = seed.select("c_custkey")
-          .union(slim(ev).select("c_custkey")).distinct()
+          .union(eventsChangelog(ev).select("c_custkey")).distinct()
           .where(col("c_custkey") % 89 === 0)
         StreamMatview.purgeKeys(s, storeDir, aggDir, keys, "c_custkey",
           "op", Seq("c_mktsegment"), "bal_cents",
           nCol = "n", sumCol = "sum_cents")
-        slim(ev.where(pmod(col("event_id"), lit(2)) === 1))
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 1))
           .repartitionByRange(3, col("ts"))
           .write.mode("append").parquet(srcDir)
         replay() // phase 2: same checkpoint, only the new files
@@ -824,23 +752,13 @@ object ExtStoreQueries {
     Declared(
       "ext_stream_matview_minmax_forget",
       (s, d) => {
-        val k = col("user_id") + 1450
         val ev = Tables.events(s, d)
-        def slim(e: org.apache.spark.sql.DataFrame) = e.select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
         // fresh (non-memoized) source dir: phase 2 APPENDS to it
         val Seq(srcDir, storeDir, aggDir, ckpt) = freshDirs("smvmmforget", 4)
-        slim(ev.where(pmod(col("event_id"), lit(2)) === 0))
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 0))
           .repartitionByRange(3, col("ts"))
           .write.mode("overwrite").parquet(srcDir)
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
+        val seed = customerSeed(s, d)
         StreamMatview.seedSketch(seed, storeDir, aggDir, "c_custkey", "op",
           Seq("c_mktsegment"), "bal_cents", k = 8,
           nCol = "n", sumCol = "sum_cents",
@@ -855,13 +773,13 @@ object ExtStoreQueries {
           minCol = "min_cents", maxCol = "max_cents").awaitTermination()
         replay() // phase 1 settles into store + view
         val keys = seed.select("c_custkey")
-          .union(slim(ev).select("c_custkey")).distinct()
+          .union(eventsChangelog(ev).select("c_custkey")).distinct()
           .where(col("c_custkey") % 89 === 0)
         StreamMatview.purgeKeysSketch(s, storeDir, aggDir, keys, "c_custkey",
           "op", Seq("c_mktsegment"), "bal_cents", k = 8,
           nCol = "n", sumCol = "sum_cents",
           minCol = "min_cents", maxCol = "max_cents")
-        slim(ev.where(pmod(col("event_id"), lit(2)) === 1))
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 1))
           .repartitionByRange(3, col("ts"))
           .write.mode("append").parquet(srcDir)
         replay() // phase 2: same checkpoint, only the new files
@@ -912,10 +830,4 @@ object ExtStoreQueries {
               SELECT '__residual', 0, 0, 0, 0
               ORDER BY c_mktsegment"""))
   )
-
-  // a def, not a val: `val all` initializes before file-tail vals
-  // would, and a val here would still be null inside the registry.
-  // The SQL itself lives in [[ExtShared.matviewOracleSql]], shared
-  // with ext_pipeline_matview.
-  private def matviewOracle = Some(ExtShared.matviewOracleSql)
 }

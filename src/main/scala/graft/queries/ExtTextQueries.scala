@@ -627,8 +627,7 @@ object ExtTextQueries {
   )
 
   // a def, not a val: `val all` initializes first and a later val
-  // would still read 0 inside the registry (same trap as
-  // ExtStreamQueries' matviewOracle)
+  // would still read 0 inside the registry
   private def ChkP = 1000000007L
 
   /** Generated DuckDB replay of [[graft.ext.Bpe.train]]: `v0` is the

@@ -18,23 +18,22 @@ object ExtVersionQueries {
     * (ExtStreamQueries/ExtStoreQueries scaladocs carry the
     * measurements), with the width DERIVED from the changelog's input
     * size instead of a tuned constant (guide §2 scale-adaptive
-    * partitioning; round 16): the EAGER store-fold rows below
-    * (per-fold localCheckpoints; forget's store commits) shuffle at
-    * most one fold batch — a quarter of the events table — per
-    * exchange, and every groupBy partial-aggregates map-side, so
-    * parquet batch bytes bound what crosses. Parquet is ~3-4× lighter
-    * than its in-flight rows, so the per-partition target is 32 MB
-    * of parquet (≈ 100+ MB of rows — §2.2's partition-size band).
-    * The session's own count stays the ceiling, so a narrow session
-    * is never widened. Applied to the eager rows only — a lazy row's
-    * plan executes at the sink, after the restore, so wrapping it
-    * would claim an optimization that never runs (ext_pipeline_matview
-    * stays at session layout for exactly that reason). The sketch and
-    * minmax rows additionally run their eager folds with AQE off
-    * (`extra`), for the reason [[graft.streaming.BucketStore.maintain]]
-    * gives: all their joins are hint-pinned or dim-bounded, and the
-    * minmax fold gates its recompute branch itself instead of relying
-    * on AQE's empty-relation propagation.
+    * partitioning; round 16): the EAGER store-fold rows below (the
+    * matview rows' per-batch winner and fold checkpoints; forget's
+    * store commits) shuffle at most one fold batch — a quarter of the
+    * events table — per exchange, and every groupBy partial-aggregates
+    * map-side, so parquet batch bytes bound what crosses. Parquet is
+    * ~3-4× lighter than its in-flight rows, so the per-partition
+    * target is 32 MB of parquet (≈ 100+ MB of rows — §2.2's
+    * partition-size band). The session's own count stays the ceiling,
+    * so a narrow session is never widened. Only the work a row runs
+    * inside the call sees the scope: what stays lazy (the count/sum
+    * view's last fold) executes at the sink, after the restore. The
+    * matview rows additionally run with AQE off (`extra`), for the
+    * reason [[graft.streaming.BucketStore.maintain]] gives: all their
+    * joins are hint-pinned or dim-bounded, and the eager folds gate
+    * their recompute branch themselves instead of relying on AQE's
+    * empty-relation propagation.
     */
   private def statePartitions[A](s: org.apache.spark.sql.SparkSession, dir: String,
                                  extra: (String, String)*)(body: => A): A = {
@@ -48,7 +47,7 @@ object ExtVersionQueries {
 
   val all: Seq[Declared] = declared.map { q =>
     q.name match {
-      case "ext_pipeline_matview_sketch" | "ext_pipeline_matview_minmax" =>
+      case n if n.startsWith("ext_pipeline_matview") =>
         q.copy(df = (s, dir) => statePartitions(s, dir,
           "spark.sql.adaptive.enabled" -> "false")(q.df(s, dir)))
       case "ext_pipeline_forget" =>
@@ -56,6 +55,31 @@ object ExtVersionQueries {
       case _ => q
     }
   }
+
+  /** The batch matview rows' one body, over view fold `f`: the store
+    * and the view start from the customer snapshot, then the events
+    * changelog folds in 4 deterministic batches (`event_id mod 4`). Per
+    * batch the winners are built ONCE over the pre-batch store
+    * ([[Changelog.storeWinners]]) and checkpointed, and feed both the
+    * view fold ([[Changelog.foldWinners]]; an eager flavour checkpoints
+    * its own state and recomputes from the pre-batch store) and the
+    * next store (`merged`). The broadcast pre-count is off: the fixture
+    * bounds the batch sizes. The served view (a sketch's hidden state
+    * dropped) must equal the full recompute over the final store.
+    */
+  private def matview(name: String, f: Changelog.ViewFold): Declared =
+    Declared(name, (s, d) => {
+      val log = ExtShared.eventsChangelog(Tables.events(s, d))
+      val seed = ExtShared.customerSeed(s, d)
+      val (view, _) = (0 until 4).foldLeft((f.snapshot(seed), seed)) {
+        case ((agg, store), i) =>
+          val w = Changelog.storeWinners(store, log.where(pmod(col("event_id"), lit(4)) === i),
+            "c_custkey", Seq("ts", "event_id"), maxBroadcastKeys = 0L, Some(f))
+          val built = w.copy(rows = w.rows.localCheckpoint(true))
+          (Changelog.foldWinners(f, agg, built, () => store), built.merged)
+      }
+      view.drop(Changelog.SketchCols: _*).orderBy("c_mktsegment")
+    }, Some(ExtShared.matviewOracle(minmax = !f.isInstanceOf[Changelog.CountSum])))
 
   private def declared: Seq[Declared] = Seq(
 
@@ -231,108 +255,40 @@ object ExtVersionQueries {
                      CAST(SUM(cents) AS BIGINT) AS cents_checksum
               FROM snap GROUP BY 1 ORDER BY event_type""")),
 
-    // Incremental materialized-view maintenance
-    // ([[Changelog.aggDelta]] / [[Changelog.mergeAggDelta]]): the
-    // per-segment (count, balance-cents sum) view of the SAME merged
-    // table as ext_pipeline_merge, maintained incrementally — seeded
-    // from the customer snapshot, then folded through 4 changelog
-    // batches ALONGSIDE the store fold, each delta computed from the
-    // batch and the pre-batch store only. The gate pins the
-    // telescoping law on real data: the folded aggregate must equal
-    // the full recompute over the final merged table (which is what
-    // the oracle runs). 100 TB shape: per batch, the store is touched
-    // only via a broadcast semi-join on the batch's keys; the corpus
-    // is NEVER rescanned to refresh the view — that full rescan is
-    // exactly what this operator exists to avoid.
-    Declared(
-      "ext_pipeline_matview",
-      (s, d) => {
-        val k = col("user_id") + 1450
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
-        val log = Tables.events(s, d).select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
-        var store = seed
-        var agg = Changelog.aggSnapshot(seed, "op", Seq("c_mktsegment"),
-          "bal_cents", nCol = "n", sumCol = "sum_cents")
-        // 4 deterministic batches; broadcast pre-counts off — the
-        // batch sizes are bounded by the fixture, and the fold's
-        // laziness would re-run the count per downstream step
-        (0 until 4).foreach { i =>
-          val b = log.where(pmod(col("event_id"), lit(4)) === i)
-          val delta = Changelog.aggDelta(store, b, "c_custkey", "op",
-            Seq("ts", "event_id"), Seq("c_mktsegment"), "bal_cents",
-            nCol = "n", sumCol = "sum_cents", maxBroadcastKeys = 0L)
-          agg = Changelog.mergeAggDelta(agg, delta, Seq("c_mktsegment"),
-            nCol = "n", sumCol = "sum_cents")
-          store = Changelog.mergeBatch(store, b, "c_custkey", "op",
-            Seq("ts", "event_id"), maxBroadcastKeys = 0L)
-        }
-        agg.orderBy("c_mktsegment")
-      },
-      // ONE oracle definition shared with ext_stream_matview
-      // (ExtShared.matviewOracleSql): the batch fold, the streamed
-      // fold, and the recompute stay mutual audits by construction
-      Some(ExtShared.matviewOracleSql)),
+    // Incremental materialized-view maintenance ([[matview]] over
+    // [[Changelog.CountSum]]): the per-segment (count, balance-cents
+    // sum) view of the SAME merged table as ext_pipeline_merge,
+    // maintained incrementally — seeded from the customer snapshot,
+    // then folded through 4 changelog batches ALONGSIDE the store
+    // merge, each batch's change computed from the batch and the
+    // pre-batch store only. The gate pins the telescoping law on real
+    // data: the folded aggregate must equal the full recompute over the
+    // final merged table (which is what the oracle runs). 100 TB shape:
+    // per batch, the store is touched only via broadcast joins on the
+    // batch's keys; the corpus is NEVER rescanned to refresh the view —
+    // that full rescan is exactly what this operator exists to avoid.
+    matview("ext_pipeline_matview",
+      Changelog.CountSum("op", Seq("c_mktsegment"), "bal_cents", nCol = "n",
+        sumCol = "sum_cents")),
 
-    // NON-self-maintainable view maintenance
-    // ([[graft.ext.Changelog.mergeAggMinMax]]): the same per-segment
-    // view widened with MIN/MAX, folded through the same 4 changelog
-    // batches. count/sum telescope as above; min/max cannot survive a
-    // boundary retraction incrementally, so the fold recomputes
-    // EXACTLY the dims where a leaving pre-image value tied the
-    // current min or max (detected by a dim-bounded join against the
-    // maintained view; the recompute reads post-batch live rows of
-    // those dims only — the operator's honest, documented cost). The
-    // gate: folded view == full MIN/MAX recompute over the final
-    // merged table, on real data where the error-typed deletes DO
-    // retract segment boundaries. The eager fold checkpoints its own
-    // state (mergeAggMinMax's contract), so the view needs no second
-    // checkpoint here; the store checkpoints between batches (the
-    // maintenance plan references it several times; the streamed twin
-    // truncates naturally through the committed store).
-    Declared(
-      "ext_pipeline_matview_minmax",
-      (s, d) => {
-        val k = col("user_id") + 1450
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
-        val log = Tables.events(s, d).select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
-        var store = seed
-        var agg = Changelog.aggSnapshotMinMax(seed, "op", Seq("c_mktsegment"),
-          "bal_cents", nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        (0 until 4).foreach { i =>
-          val b = log.where(pmod(col("event_id"), lit(4)) === i)
-          agg = Changelog.mergeAggMinMax(agg, store, b, "c_custkey", "op",
-            Seq("ts", "event_id"), Seq("c_mktsegment"), "bal_cents",
-            nCol = "n", sumCol = "sum_cents",
-            minCol = "min_cents", maxCol = "max_cents",
-            maxBroadcastKeys = 0L)
-          store = Changelog.mergeBatch(store, b, "c_custkey", "op",
-            Seq("ts", "event_id"), maxBroadcastKeys = 0L)
-            .localCheckpoint(true)
-        }
-        agg.orderBy("c_mktsegment")
-      },
-      Some(ExtShared.matviewOracle(minmax = true))),
+    // NON-self-maintainable view maintenance ([[matview]] over
+    // [[Changelog.MinMax]]): the same per-segment view widened with
+    // MIN/MAX, folded through the same 4 changelog batches. count/sum
+    // telescope as above; min/max cannot survive a boundary retraction
+    // incrementally, so the fold recomputes EXACTLY the dims where a
+    // leaving pre-image value tied the current min or max (flagged in
+    // the fold's one groupBy by dims; the recompute reads the live rows
+    // of those dims only — the operator's honest, documented cost). The
+    // gate: folded view == full MIN/MAX recompute over the final merged
+    // table, on real data where the error-typed deletes DO retract
+    // segment boundaries.
+    matview("ext_pipeline_matview_minmax",
+      Changelog.MinMax("op", Seq("c_mktsegment"), "bal_cents", nCol = "n",
+        sumCol = "sum_cents", minCol = "min_cents", maxCol = "max_cents")),
 
-    // SKETCHED MIN/MAX view maintenance
-    // ([[graft.ext.Changelog.mergeAggSketch]]): the same 4-batch fold
-    // as ext_pipeline_matview_minmax, but each dim carries its k=8
+    // SKETCHED MIN/MAX view maintenance ([[matview]] over
+    // [[Changelog.Sketch]]): the same 4-batch fold as
+    // ext_pipeline_matview_minmax, but each dim carries its k=8
     // smallest/largest live values, so a boundary retraction is an
     // O(1) sketch pop — the per-retraction store recompute the plain
     // minmax fold pays becomes RARE (only a dim whose sketch side
@@ -341,38 +297,9 @@ object ExtVersionQueries {
     // both the rarity and the drain correctness at k=2). Served
     // (n, sum, min, max) must equal the same full recompute oracle —
     // the sketch is internal state, invisible to the answer.
-    Declared(
-      "ext_pipeline_matview_sketch",
-      (s, d) => {
-        val k = col("user_id") + 1450
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
-        val log = Tables.events(s, d).select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
-        var store = seed
-        var agg = Changelog.aggSnapshotSketch(seed, "op", Seq("c_mktsegment"),
-          "bal_cents", k = 8, nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        (0 until 4).foreach { i =>
-          val b = log.where(pmod(col("event_id"), lit(4)) === i)
-          agg = Changelog.mergeAggSketch(agg, store, b, "c_custkey", "op",
-            Seq("ts", "event_id"), Seq("c_mktsegment"), "bal_cents", k = 8,
-            nCol = "n", sumCol = "sum_cents",
-            minCol = "min_cents", maxCol = "max_cents",
-            maxBroadcastKeys = 0L)
-          store = Changelog.mergeBatch(store, b, "c_custkey", "op",
-            Seq("ts", "event_id"), maxBroadcastKeys = 0L)
-            .localCheckpoint(true)
-        }
-        agg.drop(Changelog.SketchCols: _*).orderBy("c_mktsegment")
-      },
-      Some(ExtShared.matviewOracle(minmax = true))),
+    matview("ext_pipeline_matview_sketch",
+      Changelog.Sketch("op", Seq("c_mktsegment"), "bal_cents", k = 8, nCol = "n",
+        sumCol = "sum_cents", minCol = "min_cents", maxCol = "max_cents")),
 
     // Right-to-be-forgotten ([[BucketStore.purgeKeys]]): the merged
     // customer store — seeded snapshot + one applied changelog batch,
@@ -389,17 +316,8 @@ object ExtVersionQueries {
     Declared(
       "ext_pipeline_forget",
       (s, d) => {
-        val k = col("user_id") + 1450
-        val seed = Tables.customer(s, d).select(
-          col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents"),
-          lit("U").as("op"), timestamp_millis(lit(0L)).as("ts"),
-          lit(-1L).as("event_id"))
-        val log = Tables.events(s, d).select(
-          k.as("c_custkey"), col("event_type").as("c_mktsegment"),
-          round(col("value") * 100).cast("long").as("bal_cents"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts"), col("event_id"))
+        val seed = ExtShared.customerSeed(s, d)
+        val log = ExtShared.eventsChangelog(Tables.events(s, d))
         val storeDir = java.nio.file.Files
           .createTempDirectory("graft_forget_store").toString
         StreamMerge.seed(seed, storeDir, "c_custkey")

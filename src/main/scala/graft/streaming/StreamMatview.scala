@@ -179,7 +179,8 @@ object StreamMatview {
       // label) before the merge thread starts; the halves plan while it
       // runs, and their jobs share its stages instead of rebuilding it
       sc.setJobDescription(s"${tag(f)} b$id: fold")
-      val w = Changelog.batchWinners(storeTouched, batch, keyCol, seqCols, f)
+      val (touched, untouched) = Changelog.splitTouched(storeTouched)
+      val w = Changelog.batchWinners(touched, untouched, batch, keyCol, seqCols, Some(f))
       w.rows.persist()
       val built = w.rows.rdd.foreachPartitionAsync(_ => ())
       try {

@@ -571,6 +571,32 @@ class PlanShapeSpec extends SparkSpec {
       s"expected the batch-keys broadcast to be reused across the two joins:\n$plan")
   }
 
+  test("Changelog.mergeBatch: ONE max_by aggregation, keyed on the key, picks the winners") {
+    // the touched store rows and the RAW batch entries meet in one
+    // groupBy by key — the batch's latest-per-key partial-aggregates
+    // map-side inside it. Collapsing the batch to its latest first and
+    // then grouping touched ∪ latest again would plan a second max_by
+    // aggregation over the same keys
+    import org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.functions.when
+    val store = Tables.customer(spark, sfDir).select(
+      col("c_custkey"), col("c_acctbal"), lit("U").as("op"), lit(0L).as("seq"))
+    val batch = Tables.events(spark, sfDir).limit(200).select(
+      (col("user_id") + 100).as("c_custkey"), col("value").as("c_acctbal"),
+      when(col("event_type") === "error", "D").otherwise("U").as("op"),
+      col("event_id").as("seq"))
+    val m = graft.ext.Changelog.mergeBatch(store, batch, "c_custkey", "op", Seq("seq"),
+      maxBroadcastKeys = 0L)
+    val plan = m.queryExecution.optimizedPlan
+    val maxBys = plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[MaxBy])) => a
+    }
+    assert(maxBys.size == 1, s"expected ONE max_by aggregation:\n$plan")
+    assert(maxBys.head.groupingExpressions.flatMap(_.references.map(_.name)) == Seq("c_custkey"),
+      s"the max_by must group by the key alone:\n$plan")
+  }
+
   test("Changelog.aggDelta: the store is touched only via a broadcast semi-join on batch keys") {
     // the incremental-matview 100 TB contract: refreshing the
     // aggregate costs a batch-keys broadcast against the store and

@@ -454,4 +454,55 @@ class PropertySpec extends SparkSpec {
       assert(got == naive, s"trial $trial: vs naive:\n$got\nvs\n$naive")
     }
   }
+
+  test("eager view folds telescope: min/max and sketch(k = 2) views equal the MIN/MAX recompute after every batch, re-delivery included") {
+    // the same law for the flavours with state: folding mergeAggMinMax
+    // and mergeAggSketch alongside mergeBatch over a random batch split,
+    // delivered in a random order with one batch delivered twice, must
+    // land after EVERY step on aggSnapshotMinMax of the current store —
+    // the boundary recomputes and the k = 2 sketch's drains included
+    import spark.implicits._
+    import graft.ext.Changelog
+    val entryGen = for {
+      k <- Gen.choose(0L, 11L)
+      op <- Gen.frequency(4 -> Gen.const("U"), 1 -> Gen.const("D"))
+      v <- Gen.choose(0L, 999L)
+    } yield (k, k % 3, v, op)
+    val logGen = Gen.listOfN(40, entryGen)
+    def rows(view: org.apache.spark.sql.DataFrame) = view.select("dim", "n", "sum", "min", "max")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
+    sample(logGen, 3).zipWithIndex.foreach { case (entries, trial) =>
+      val rnd = new scala.util.Random(200 + trial)
+      val seqs = rnd.shuffle((1L to entries.size.toLong).toList)
+      val log = entries.zip(seqs).map { case ((k, d, v, op), s) => (k, d, v, op, s) }
+      val nb = 1 + rnd.nextInt(4)
+      val batches0 = log.grouped(math.max(1, (log.size + nb - 1) / nb)).toSeq
+      val delivered = rnd.shuffle(batches0 ++ Seq(batches0(rnd.nextInt(batches0.size))))
+      val store0 = Seq.empty[(Long, Long, Long, String, Long)]
+        .toDF("k", "dim", "v", "op", "seq")
+      var store = store0
+      var minmax = Changelog.aggSnapshotMinMax(store0, "op", Seq("dim"), "v")
+      var sketch = Changelog.aggSnapshotSketch(store0, "op", Seq("dim"), "v", k = 2)
+      delivered.zipWithIndex.foreach { case (b, step) =>
+        val bdf = b.toDF("k", "dim", "v", "op", "seq")
+        minmax = Changelog.mergeAggMinMax(minmax, store, bdf, "k", "op", Seq("seq"),
+          Seq("dim"), "v")
+        sketch = Changelog.mergeAggSketch(sketch, store, bdf, "k", "op", Seq("seq"),
+          Seq("dim"), "v", k = 2)
+        store = Changelog.mergeBatch(store, bdf, "k", "op", Seq("seq")).localCheckpoint(true)
+        val want = rows(Changelog.aggSnapshotMinMax(store, "op", Seq("dim"), "v"))
+        assert(rows(minmax) == want, s"trial $trial step $step: min/max fold diverged")
+        assert(rows(sketch.drop(Changelog.SketchCols: _*)) == want,
+          s"trial $trial step $step: sketch fold diverged")
+      }
+      // and the final view against a pure in-memory oracle
+      val naive = log.groupBy(_._1).map { case (_, es) => es.maxBy(_._5) }
+        .filter(_._4 != "D").toSeq
+        .groupBy(_._2).map { case (d, rs) =>
+          val vs = rs.map(_._3)
+          (d, rs.size.toLong, vs.sum, vs.min, vs.max)
+        }.toSeq.sorted
+      assert(rows(minmax) == naive, s"trial $trial: vs naive")
+    }
+  }
 }
