@@ -130,23 +130,9 @@ object Tables {
   }
 
   private def loadPlain(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    if (name == "events") {
-      nanosAsLong(spark)
-      normalizeEventsTs(spark.read.parquet(path))
-    } else spark.read.parquet(path)
+    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") normalizeEventsTs(raw) else raw
   }
-
-  /** Read nanosecond parquet timestamps as longs on this session, once:
-    * [[Session.local]] sets it at session build, and this one-time
-    * fallback covers ad-hoc sessions (re-setting the same value would
-    * be racy-looking under concurrent query planning). The session
-    * keeps the setting; [[normalizeEventsTs]] needs it for every later
-    * events read.
-    */
-  private def nanosAsLong(spark: SparkSession): Unit =
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Normalize `events.ts` to native instant TimestampType whatever
     * encoding the fixture writer used (see the doc block above);
@@ -199,9 +185,7 @@ object Tables {
   }
 
   private def loadStreamPlain(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    if (name == "events") nanosAsLong(spark)
-    val schema = spark.read.parquet(path).schema
+    val schema = spark.read.parquet(s"$dir/$name.parquet").schema
     // the fixture table is a single FILE; FileStreamSource requires
     // its basePath to be a directory, and for a non-glob path the
     // basePath IS the path. A brace-glob matching exactly that file
@@ -238,6 +222,12 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
+  /** `events`, `ts` normalized to instant TimestampType. A fixture
+    * written with TIMESTAMP(NANOS) `ts` reads only on a session built
+    * with `spark.sql.legacy.parquet.nanosAsLong=true` ([[Session.local]]
+    * sets it; this library never changes a caller's session conf), and
+    * every session should run with `spark.sql.session.timeZone=UTC`.
+    */
   def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

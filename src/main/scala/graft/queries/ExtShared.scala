@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ext.Changelog.{CountSum, MinMax, Sketch, ViewFold}
 import graft.ext.PlanCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,18 +64,33 @@ object ExtShared {
       p
     }
 
-  /** The maintained per-segment view's oracle: the full recompute over
-    * the one-shot batch merge of [[eventsChangelog]] into
-    * [[customerSeed]] — `(n, sum_cents)`, widened with MIN/MAX for the
-    * min/max and sketch flavours. ONE generator for the three batch
-    * and the three streamed matview rows: the rows claim to gate
-    * against the same recompute, and a shared definition makes that
-    * true by construction instead of by parallel editing.
+  /** The per-segment view every matview and forget row maintains over
+    * [[customerSeed]]'s `bal_cents`, one value per flavour:
+    * `(c_mktsegment, n, sum_cents)`, widened with `min_cents` and
+    * `max_cents` by [[SegMinMax]] and [[SegSketch]] (k = 8).
     */
-  private[queries] def matviewOracle(minmax: Boolean): String = {
-    val mm = if (minmax)
-      ", MIN(cents) AS min_cents, MAX(cents) AS max_cents" else ""
-    s"""WITH log AS (
+  private[queries] val SegCountSum =
+    CountSum("op", Seq("c_mktsegment"), "bal_cents", nCol = "n", sumCol = "sum_cents")
+  private[queries] val SegMinMax = MinMax("op", Seq("c_mktsegment"), "bal_cents",
+    nCol = "n", sumCol = "sum_cents", minCol = "min_cents", maxCol = "max_cents")
+  private[queries] val SegSketch = Sketch("op", Seq("c_mktsegment"), "bal_cents", k = 8,
+    nCol = "n", sumCol = "sum_cents", minCol = "min_cents", maxCol = "max_cents")
+
+  /** The oracle aggregates of a view folded with `f`, after `n`, over
+    * a CTE's `cents`: `sum_cents`, plus MIN/MAX for the min/max and
+    * sketch flavours.
+    */
+  private[queries] def viewAggs(f: ViewFold): Seq[String] =
+    "CAST(SUM(cents) AS BIGINT) AS sum_cents" +: (f match {
+      case _: CountSum => Nil
+      case _ => Seq("MIN(cents) AS min_cents", "MAX(cents) AS max_cents")
+    })
+
+  /** DuckDB CTE text: the one-shot batch merge of [[eventsChangelog]]
+    * into [[customerSeed]], its live rows as `merged (k, seg, cents)`.
+    */
+  private[queries] val mergedCte =
+    """log AS (
          SELECT user_id + 1450 AS k, event_type AS seg,
                 CAST(round(value * 100) AS BIGINT) AS cents,
                 CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
@@ -86,14 +102,105 @@ object ExtShared {
              ORDER BY ts DESC, event_id DESC) AS rn FROM log)
          WHERE rn = 1),
        merged AS (
-         SELECT c.c_mktsegment AS seg,
+         SELECT c.c_custkey AS k, c.c_mktsegment AS seg,
                 CAST(round(c.c_acctbal * 100) AS BIGINT) AS cents
          FROM customer c ANTI JOIN latest l ON c.c_custkey = l.k
          UNION ALL
-         SELECT seg, cents FROM latest WHERE op <> 'D')
-       SELECT seg AS c_mktsegment, COUNT(*) AS n,
-              CAST(SUM(cents) AS BIGINT) AS sum_cents$mm
+         SELECT k, seg, cents FROM latest WHERE op <> 'D')"""
+
+  /** The maintained per-segment view's oracle: the full recompute over
+    * [[mergedCte]], with `f`'s aggregates ([[viewAggs]]). ONE
+    * generator for the three batch and the three streamed matview
+    * rows: the rows claim to gate against the same recompute, and a
+    * shared definition makes that true by construction instead of by
+    * parallel editing.
+    */
+  private[queries] def matviewOracle(f: ViewFold): String =
+    s"""WITH $mergedCte
+       SELECT seg AS c_mktsegment, COUNT(*) AS n, ${viewAggs(f).mkString(", ")}
        FROM merged GROUP BY 1 ORDER BY 1"""
+
+  /** The two-phase erasure's oracle, for the three streamed forget
+    * rows: latest-per-key over the seed and the even event ids, drop
+    * the forgotten keys (≡ 0 mod 89), fold the odd event ids on top;
+    * then [[residualOracle]] over the live rows.
+    */
+  private[queries] def forgetOracle(aggs: Seq[String]): String =
+    s"""WITH seedr AS (
+         SELECT c_custkey AS k, c_mktsegment AS seg,
+                CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
+                'U' AS op, TIMESTAMP '1970-01-01 00:00:00' AS ts,
+                CAST(-1 AS BIGINT) AS eid
+         FROM customer),
+       log AS (
+         SELECT user_id + 1450 AS k, event_type AS seg,
+                CAST(round(value * 100) AS BIGINT) AS cents,
+                CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
+                ts, event_id AS eid
+         FROM events),
+       p1 AS (SELECT * FROM seedr
+              UNION ALL SELECT * FROM log WHERE eid % 2 = 0),
+       l1 AS (SELECT k, seg, cents, op, ts, eid FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY k
+                  ORDER BY ts DESC, eid DESC) AS rn FROM p1)
+              WHERE rn = 1),
+       purged AS (SELECT * FROM l1 WHERE k % 89 <> 0),
+       p2 AS (SELECT * FROM purged
+              UNION ALL SELECT * FROM log WHERE eid % 2 = 1),
+       l2 AS (SELECT k, seg, cents, op FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY k
+                  ORDER BY ts DESC, eid DESC) AS rn FROM p2)
+              WHERE rn = 1),
+       snap AS (SELECT * FROM l2 WHERE op <> 'D')
+       ${residualOracle("snap", aggs)}"""
+
+  /** The oracle twin of a forget row's answer ([[withResidual]]): per
+    * segment `n` and `aggs` over the live rows of CTE `live` (`seg`,
+    * `k`, `cents`), plus the `__residual` row pinned to zero in every
+    * column.
+    */
+  private[queries] def residualOracle(live: String, aggs: Seq[String]): String =
+    s"""SELECT seg AS c_mktsegment, COUNT(*) AS n, ${aggs.mkString(", ")}
+       FROM $live GROUP BY 1
+       UNION ALL
+       SELECT '__residual', 0${", 0" * aggs.size}
+       ORDER BY c_mktsegment"""
+
+  /** The forget rows' erasure list: every key of `seed` or the
+    * changelog `log` that is ≡ 0 (mod 89), distinct.
+    */
+  private[queries] def forgetKeys(seed: DataFrame, log: DataFrame): DataFrame =
+    seed.select("c_custkey").union(log.select("c_custkey")).distinct()
+      .where(col("c_custkey") % 89 === 0)
+
+  /** A forget row's census of a settled changelog-shaped store: per
+    * segment the live row count and the key and cents checksums.
+    */
+  private[queries] def census(store: DataFrame): DataFrame =
+    store.groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("n"),
+        sum(col("c_custkey")).as("key_checksum"),
+        sum(col("bal_cents")).as("cents_checksum"))
+
+  /** [[census]]'s checksums as oracle aggregates, after `n`. */
+  private[queries] val censusAggs = Seq("CAST(SUM(k) AS BIGINT) AS key_checksum",
+    "CAST(SUM(cents) AS BIGINT) AS cents_checksum")
+
+  /** A forget row's answer: `served` — per segment `(c_mktsegment, n,
+    * …)` — plus the erasure probe, one `__residual` row counting the
+    * forgotten `keys`' rows in `files` (parquet rows read straight off
+    * the store dir, current, superseded or leftover:
+    * [[graft.streaming.BucketStore.allBytes]]), 0 in served's other
+    * columns. The oracle pins the count to zero, so the erasure
+    * itself, not just the serving view, is under the gate.
+    */
+  private[queries] def withResidual(served: DataFrame, files: DataFrame,
+                                    keys: DataFrame): DataFrame = {
+    val zeros = served.columns.toSeq.filterNot(Set("c_mktsegment", "n")).map(lit(0L).as(_))
+    served.unionByName(files.join(keys, Seq("c_custkey"), "left_semi")
+        .agg(count(lit(1)).as("n"))
+        .select(lit("__residual").as("c_mktsegment") +: col("n") +: zeros: _*))
+      .orderBy("c_mktsegment")
   }
 
   /** Shared DuckDB CTE text: distinct (doc_id, token) with 32-bit hash. */

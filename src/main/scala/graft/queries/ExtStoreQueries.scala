@@ -2,17 +2,18 @@ package graft.queries
 
 import graft.Tables
 import graft.ext.{Curation, Hashing, PlanCache}
+import graft.ext.Changelog.ViewFold
 import graft.streaming.{BucketStore, StreamIngest, StreamMatview, StreamMerge}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import ExtShared._
 
-/** Versioned-STORE-backed continuous rows, split out of
-  * [[ExtStreamQueries]] (round 14, mechanical — blocks moved
-  * verbatim): the gated replays whose state lives in our own
-  * [[BucketStore]] layout rather than Spark's checkpoint — CDC merge,
-  * ingest dedup, epoch-composed near-dedup ingest, matview
-  * maintenance, and erasure. Same replay discipline as the streaming
+/** Versioned-STORE-backed continuous rows: the gated replays whose
+  * state lives in our own [[BucketStore]] layout rather than Spark's
+  * checkpoint — CDC merge, ingest dedup, epoch-composed near-dedup
+  * ingest, matview maintenance ([[streamMatview]]), and erasure
+  * ([[twoPhaseForget]]). Same replay discipline as the streaming
   * family (file-source `Trigger.AvailableNow`, settled result under a
   * batch DuckDB oracle); the difference is the durability story under
   * test: `_SUCCESS`-gated versions, manifest bucket maps, batch
@@ -20,10 +21,10 @@ import ExtShared._
   */
 object ExtStoreQueries {
 
-  /** Fresh on-disk working dirs for `base` (store/checkpoint of the
-    * merge replay), RELEASING the previous run's: Bench replays each
-    * query up to 6x in one JVM, and leaving every replay's store
-    * versions + offset log behind accumulates unboundedly.
+  /** Fresh on-disk working dirs for one row, keyed `base`, RELEASING
+    * the previous run's: Bench replays each query up to 6x in one JVM,
+    * and leaving every replay's store versions + offset log behind
+    * accumulates unboundedly.
     */
   private val lastDirs = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
   private def freshDirs(base: String, n: Int): Seq[String] = {
@@ -33,6 +34,99 @@ object ExtStoreQueries {
       org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(p))))
     dirs
   }
+
+  /** The streamed matview rows' one body, over view fold `f`: the
+    * store and the view start from the customer snapshot
+    * ([[StreamMatview.seedView]]), then the 8-file events changelog
+    * ([[matviewSource]]) replays `filesPerTrigger` files per trigger
+    * ([[StreamMatview.startView]]). The settled served view must equal
+    * the full recompute over the one-shot batch merge
+    * ([[matviewOracle]], shared with the batch rows).
+    */
+  private def streamMatview(name: String, f: ViewFold, filesPerTrigger: Int): Declared =
+    Declared(name, (s, d) => {
+      val srcDir = matviewSource(s, d)
+      val Seq(storeDir, aggDir, ckpt) = freshDirs(name, 3)
+      StreamMatview.seedView(customerSeed(s, d), storeDir, aggDir, "c_custkey", f)
+      val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(srcDir)
+      StreamMatview.startView(stream, storeDir, aggDir, ckpt, "c_custkey",
+        Seq("ts", "event_id"), f).awaitTermination()
+      StreamMatview.viewSnapshotServed(s, aggDir).orderBy("c_mktsegment")
+    }, Some(matviewOracle(f)))
+
+  /** How one streamed forget row drives its stores through
+    * [[twoPhaseForget]].
+    */
+  private trait ForgetStores {
+    /** Seed the stores from the customer snapshot. */
+    def seed(snapshot: DataFrame): Unit
+    /** Drive one phase's file stream to completion on the row's checkpoint. */
+    def replay(stream: DataFrame): Unit
+    /** Erase `keys` (`c_custkey`), the stream stopped. */
+    def forget(keys: DataFrame): Unit
+    /** The settled answer, per segment `(c_mktsegment, n, …)`. */
+    def served: DataFrame
+  }
+
+  /** The streamed forget rows' one lifecycle — the operational sequence
+    * a real right-to-be-forgotten request runs: ingest the even event
+    * ids of the events changelog (`files` ts-ranged files, one per
+    * trigger) over the customer seed, STOP, forget every key ≡ 0
+    * (mod 89) ([[forgetKeys]]), append the odd half to the SAME source
+    * dir and replay the SAME checkpoint (the file source picks up only
+    * the appended files — the purge's maintenance version must neither
+    * skip nor trip the stream's reset guard), settle. `stores` builds
+    * the row's store driver over its `nDirs` fresh working dirs, the
+    * store dir first. The answer is the driver's served rows plus
+    * the `__residual` probe ([[withResidual]]) over the store's rows of
+    * phase-1 provenance, the seed's and the even event ids'.
+    */
+  private def twoPhaseForget(name: String, files: Int, nDirs: Int, oracle: String)
+                            (stores: (SparkSession, Seq[String]) => ForgetStores): Declared =
+    Declared(name, (s, d) => {
+      val ev = Tables.events(s, d)
+      // fresh (non-memoized) source dir: phase 2 APPENDS to it mid-run,
+      // so a shared artifact would leak phase-2 files into a rerun's
+      // phase 1
+      val srcDir +: dirs = freshDirs(name, 1 + nDirs)
+      def write(parity: Int, mode: String): Unit =
+        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === parity))
+          .repartitionByRange(files, col("ts"))
+          .write.mode(mode).parquet(srcDir)
+      write(0, "overwrite")
+      val st = stores(s, dirs)
+      val seed = customerSeed(s, d)
+      st.seed(seed)
+      val schema = s.read.parquet(srcDir).schema
+      def replay(): Unit = st.replay(s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir))
+      replay() // phase 1 settles
+      val keys = forgetKeys(seed, eventsChangelog(ev))
+      st.forget(keys)
+      write(1, "append")
+      replay() // phase 2: same checkpoint, only the new files
+      withResidual(st.served, BucketStore.allBytes(s, dirs.head)
+        .where(col("event_id") === -1L || pmod(col("event_id"), lit(2)) === 0), keys)
+    }, Some(oracle))
+
+  /** The two streamed view-forget rows' one body, over view fold `f`:
+    * [[twoPhaseForget]] driving BOTH stores through [[StreamMatview]]
+    * (3 files per phase), served view against [[forgetOracle]].
+    */
+  private def streamMatviewForget(name: String, f: ViewFold): Declared =
+    twoPhaseForget(name, files = 3, nDirs = 3, forgetOracle(viewAggs(f))) { (s, dirs) =>
+      val Seq(storeDir, aggDir, ckpt) = dirs
+      new ForgetStores {
+        def seed(snapshot: DataFrame): Unit =
+          StreamMatview.seedView(snapshot, storeDir, aggDir, "c_custkey", f)
+        def replay(stream: DataFrame): Unit = StreamMatview.startView(stream, storeDir, aggDir,
+          ckpt, "c_custkey", Seq("ts", "event_id"), f).awaitTermination()
+        def forget(keys: DataFrame): Unit =
+          StreamMatview.purgeView(s, storeDir, aggDir, keys, "c_custkey", f)
+        def served: DataFrame = StreamMatview.viewSnapshotServed(s, aggDir)
+      }
+    }
 
   // the narrow-state-partition discipline of ExtStreamQueries'
   // replays: the store replays run ~8-16 file-sized microbatches, so 8
@@ -443,391 +537,100 @@ object ExtStoreQueries {
                ORDER BY epoch""")),
 
     // Continuous incremental materialized-view maintenance
-    // ([[StreamMatview]]) — the streaming twin of
-    // ext_pipeline_matview, and the completion of the CDC story: the
-    // SAME events changelog replayed over 8 triggers maintains BOTH
-    // the bucketed snapshot store and the per-segment (count,
-    // balance-cents) view, aggregate-first exactly-once. The settled
-    // view must equal the full recompute over the one-shot batch
-    // merge — the oracle IS ext_pipeline_matview's, verbatim, which
-    // makes the three rows (batch fold, streamed fold, recompute)
+    // ([[streamMatview]] over [[graft.ext.Changelog.CountSum]]) — the
+    // streaming twin of ext_pipeline_matview, and the completion of the
+    // CDC story: the SAME events changelog replayed over 8 triggers
+    // maintains BOTH the bucketed snapshot store and the per-segment
+    // (count, balance-cents) view, aggregate-first exactly-once. The
+    // settled view must equal the full recompute over the one-shot
+    // batch merge — the oracle IS ext_pipeline_matview's, verbatim,
+    // which makes the three rows (batch fold, streamed fold, recompute)
     // mutual audits. Per trigger the view refresh is a batch-keys
     // broadcast against touched store buckets plus batch-sized
     // aggregations; the corpus is never rescanned after the seed.
-    Declared(
-      "ext_stream_matview",
-      (s, d) => {
-        val srcDir = matviewSource(s, d)
-        val Seq(storeDir, aggDir, ckpt) = freshDirs("smv", 3)
-        StreamMatview.seed(customerSeed(s, d),
-          storeDir, aggDir, "c_custkey", "op", Seq("c_mktsegment"),
-          "bal_cents", nCol = "n", sumCol = "sum_cents")
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        val q = StreamMatview.start(stream, storeDir, aggDir, ckpt,
-          "c_custkey", "op", Seq("ts", "event_id"), Seq("c_mktsegment"),
-          "bal_cents", nCol = "n", sumCol = "sum_cents")
-        q.awaitTermination()
-        StreamMatview.viewSnapshot(s, aggDir).orderBy("c_mktsegment")
-      },
-      Some(matviewOracle(minmax = false))),
+    streamMatview("ext_stream_matview", SegCountSum, filesPerTrigger = 1),
 
-    // Continuous MIN/MAX view maintenance
-    // ([[StreamMatview.applyBatchMinMax]]) — the streaming twin of
+    // Continuous MIN/MAX view maintenance ([[streamMatview]] over
+    // [[graft.ext.Changelog.MinMax]]) — the streaming twin of
     // ext_pipeline_matview_minmax, completing the non-self-
-    // maintainable story: the same 8-trigger changelog replay
-    // maintains the per-segment (count, sum, MIN, MAX) view
-    // aggregate-first exactly-once. Per trigger the pre-images come
-    // from the touched buckets; a trigger that retracts a dim's
-    // boundary (the error-typed deletes do) recomputes EXACTLY that
-    // dim from the full store read, and one that doesn't commits
-    // straight from the fold's checkpoint, whose job also counts the
-    // recompute flags (an `Observation`), so the recompute branch is
-    // never planned. Settled view == the MIN/MAX-widened recompute
+    // maintainable story: the same changelog replay maintains the
+    // per-segment (count, sum, MIN, MAX) view aggregate-first
+    // exactly-once. Per trigger the pre-images come from the touched
+    // buckets; a trigger that retracts a dim's boundary (the
+    // error-typed deletes do) recomputes EXACTLY that dim from the full
+    // store read, and one that doesn't commits straight from the fold's
+    // checkpoint, whose job also counts the recompute flags (an
+    // `Observation`), so the recompute branch is never planned. 2 files
+    // per trigger (4 triggers over the same 8-file log the other two
+    // rows replay 1-by-1): this refresh carries the widest per-trigger
+    // plan in the suite (pre-image probe + fold checkpoint + boundary
+    // recompute), so the replay halves the trigger count — the
+    // maintained semantics, the retraction recomputes, and the settled
+    // view are identical. Settled view == the MIN/MAX-widened recompute
     // oracle shared with the batch twin — the three rows stay mutual
     // audits.
-    Declared(
-      "ext_stream_matview_minmax",
-      (s, d) => {
-        val srcDir = matviewSource(s, d)
-        val Seq(storeDir, aggDir, ckpt) = freshDirs("smvmm", 3)
-        StreamMatview.seedMinMax(customerSeed(s, d),
-          storeDir, aggDir, "c_custkey", "op", Seq("c_mktsegment"),
-          "bal_cents", nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        val schema = s.read.parquet(srcDir).schema
-        // 2 files per trigger (4 triggers over the same 8-file log the
-        // count/sum twin replays 1-by-1): the minmax refresh carries
-        // the widest per-trigger plan in the suite (pre-image probe +
-        // fold checkpoint + boundary recompute), so the replay halves
-        // the trigger count — the maintained semantics, the retraction
-        // recomputes, and the settled view are identical
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(srcDir)
-        val q = StreamMatview.startMinMax(stream, storeDir, aggDir, ckpt,
-          "c_custkey", "op", Seq("ts", "event_id"), Seq("c_mktsegment"),
-          "bal_cents", nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        q.awaitTermination()
-        StreamMatview.viewSnapshot(s, aggDir).orderBy("c_mktsegment")
-      },
-      Some(matviewOracle(minmax = true))),
+    streamMatview("ext_stream_matview_minmax", SegMinMax, filesPerTrigger = 2),
 
     // SKETCH-backed continuous MIN/MAX view maintenance
-    // ([[StreamMatview.applyBatchSketch]]) — the SCALE PATH for the
-    // row above, closing round 14's one weak: the view store carries
-    // each dim's k=8 smallest/largest live values
+    // ([[streamMatview]] over [[graft.ext.Changelog.Sketch]]) — the
+    // SCALE PATH for the row above: the view store carries each dim's
+    // k=8 smallest/largest live values
     // ([[graft.ext.Changelog.SketchCols]] — internal state, dropped
     // from the served snapshot), so a trigger whose boundary
     // retractions stay inside the sketch commits WITHOUT the
-    // full-store recompute read applyBatchMinMax pays on every
-    // retracting trigger (the error-typed deletes retract per
-    // trigger here); the full store is referenced only as the lazy
+    // full-store recompute read the min/max fold pays on every
+    // retracting trigger (the error-typed deletes retract per trigger
+    // here); the full store is referenced only as the lazy
     // drain-rebuild source (PlanShapeSpec pins the no-drain plan
-    // carries no store scan, via a poisoned source). Same 8-file
-    // replay, 1 file per trigger — the per-trigger plan is NARROWER
-    // than the minmax twin's (no recompute branch), so the halved
-    // trigger count isn't needed. Settled served view == the same
-    // MIN/MAX recompute oracle: batch sketch fold, plain minmax folds,
+    // carries no store scan, via a poisoned source). 1 file per
+    // trigger — the per-trigger plan is NARROWER than the min/max
+    // row's (no recompute branch). Settled served view == the same
+    // MIN/MAX recompute oracle: batch sketch fold, plain min/max folds,
     // and this row stay mutual audits.
-    Declared(
-      "ext_stream_matview_sketch",
-      (s, d) => {
-        val srcDir = matviewSource(s, d)
-        val Seq(storeDir, aggDir, ckpt) = freshDirs("smvsk", 3)
-        StreamMatview.seedSketch(customerSeed(s, d),
-          storeDir, aggDir, "c_custkey", "op", Seq("c_mktsegment"),
-          "bal_cents", k = 8, nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        val q = StreamMatview.startSketch(stream, storeDir, aggDir, ckpt,
-          "c_custkey", "op", Seq("ts", "event_id"), Seq("c_mktsegment"),
-          "bal_cents", k = 8, nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        q.awaitTermination()
-        StreamMatview.viewSnapshotServed(s, aggDir).orderBy("c_mktsegment")
-      },
-      Some(matviewOracle(minmax = true))),
+    streamMatview("ext_stream_matview_sketch", SegSketch, filesPerTrigger = 1),
 
     // Erasure INSIDE the streaming lifecycle ([[BucketStore.purgeKeys]]
-    // between replays of one checkpointed stream) — the operational
-    // sequence a real right-to-be-forgotten request runs: ingest half
-    // the changelog (even event ids, 4 triggers), STOP, purge every
-    // key ≡ 0 (mod 89), ingest the other half against the SAME
-    // checkpoint (the file source picks up only the appended files —
-    // the purge's maintenance version must neither skip nor trip the
-    // stream's reset guard), settle. Semantics under pin: a purge is
-    // not a delete — a forgotten key legitimately REAPPEARS if
-    // post-purge changes arrive for it, while its pre-purge rows are
-    // gone from disk (the `__residual` probe scans every parquet file
-    // under the store for forgotten keys with phase-1 provenance and
-    // the oracle pins it to zero). The oracle replays the same
-    // two-phase fold: latest-per-key over seed+evens, drop forgotten
-    // keys, fold odds on top.
-    Declared(
-      "ext_stream_forget",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        // fresh (non-memoized) source dir: phase 2 APPENDS to it mid-
-        // run, so a shared artifact would leak phase-2 files into a
-        // rerun's phase 1
-        val Seq(srcDir, storeDir, ckpt) = freshDirs("sforget", 3)
-        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 0))
-          .repartitionByRange(4, col("ts"))
-          .write.mode("overwrite").parquet(srcDir)
-        val seed = customerSeed(s, d)
-        StreamMerge.seed(seed, storeDir, "c_custkey")
-        val schema = s.read.parquet(srcDir).schema
-        def replay(): Unit = {
-          val q = StreamMerge.start(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(srcDir),
-            storeDir, ckpt, "c_custkey", "op", Seq("ts", "event_id"))
-          q.awaitTermination()
-        }
-        replay() // phase 1 settles
-        val keys = seed.select("c_custkey")
-          .union(eventsChangelog(ev).select("c_custkey")).distinct()
-          .where(col("c_custkey") % 89 === 0)
-        BucketStore.purgeKeys(s, storeDir, keys, "c_custkey")
-        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 1))
-          .repartitionByRange(4, col("ts"))
-          .write.mode("append").parquet(srcDir)
-        replay() // phase 2: same checkpoint, only the new files
-        val census = StreamMerge
-          .snapshot(s, storeDir, "op", Seq("ts", "event_id"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n"),
-            sum(col("c_custkey")).as("key_checksum"),
-            sum(col("bal_cents")).as("cents_checksum"))
-        val residual = BucketStore.allBytes(s, storeDir)
-          .where(col("event_id") === -1L ||
-            pmod(col("event_id"), lit(2)) === 0)
-          .join(keys, Seq("c_custkey"), "left_semi")
-          .agg(count(lit(1)).as("n"))
-          .select(lit("__residual").as("c_mktsegment"), col("n"),
-            lit(0L).as("key_checksum"), lit(0L).as("cents_checksum"))
-        census.unionByName(residual).orderBy("c_mktsegment")
-      },
-      Some("""WITH seedr AS (
-                SELECT c_custkey AS k, c_mktsegment AS seg,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
-                       'U' AS op, TIMESTAMP '1970-01-01 00:00:00' AS ts,
-                       CAST(-1 AS BIGINT) AS eid
-                FROM customer),
-              log AS (
-                SELECT user_id + 1450 AS k, event_type AS seg,
-                       CAST(round(value * 100) AS BIGINT) AS cents,
-                       CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-                       ts, event_id AS eid
-                FROM events),
-              p1 AS (SELECT * FROM seedr
-                     UNION ALL SELECT * FROM log WHERE eid % 2 = 0),
-              l1 AS (SELECT k, seg, cents, op, ts, eid FROM (
-                       SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                         ORDER BY ts DESC, eid DESC) AS rn FROM p1)
-                     WHERE rn = 1),
-              purged AS (SELECT * FROM l1 WHERE k % 89 <> 0),
-              p2 AS (SELECT * FROM purged
-                     UNION ALL SELECT * FROM log WHERE eid % 2 = 1),
-              l2 AS (SELECT k, seg, cents, op FROM (
-                       SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                         ORDER BY ts DESC, eid DESC) AS rn FROM p2)
-                     WHERE rn = 1),
-              snap AS (SELECT * FROM l2 WHERE op <> 'D')
-              SELECT seg AS c_mktsegment, COUNT(*) AS n,
-                     CAST(SUM(k) AS BIGINT) AS key_checksum,
-                     CAST(SUM(cents) AS BIGINT) AS cents_checksum
-              FROM snap GROUP BY 1
-              UNION ALL
-              SELECT '__residual', 0, 0, 0
-              ORDER BY c_mktsegment""")),
+    // between the two phases of [[twoPhaseForget]]) — semantics under
+    // pin: a purge is not a delete — a forgotten key legitimately
+    // REAPPEARS if post-purge changes arrive for it, while its
+    // pre-purge rows are gone from disk. The settled store's census
+    // must equal the oracle's two-phase fold: latest-per-key over
+    // seed+evens, drop forgotten keys, fold odds on top.
+    twoPhaseForget("ext_stream_forget", files = 4, nDirs = 2,
+        forgetOracle(censusAggs)) { (s, dirs) =>
+      val Seq(storeDir, ckpt) = dirs
+      new ForgetStores {
+        def seed(snapshot: DataFrame): Unit = StreamMerge.seed(snapshot, storeDir, "c_custkey")
+        def replay(stream: DataFrame): Unit = StreamMerge.start(stream, storeDir, ckpt,
+          "c_custkey", "op", Seq("ts", "event_id")).awaitTermination()
+        def forget(keys: DataFrame): Unit = BucketStore.purgeKeys(s, storeDir, keys, "c_custkey")
+        def served: DataFrame = census(StreamMerge.snapshot(s, storeDir, "op", Seq("ts", "event_id")))
+      }
+    },
 
     // Erasure from a store WITH a maintained view
-    // ([[StreamMatview.purgeKeys]] between replays of one checkpointed
-    // maintenance stream) — the view-consistent twin of
-    // ext_stream_forget, now on the DELTA purge path: the view refresh
-    // subtracts the purged keys' live contributions read from the
-    // pre-purge snapshot's TOUCHED BUCKETS ONLY (BucketStoreSpec pins
-    // the read set), committed view-first with a crash-recoverable
-    // intent note. Two
-    // 3-trigger phases drive BOTH stores through StreamMatview; the
-    // settled VIEW must equal the recompute over the two-phase fold
-    // (forgotten keys' contributions gone, post-purge changes for
-    // them legitimately re-counted), and the `__residual` byte-scan
-    // over the snapshot store pins the physical erasure to zero.
-    Declared(
-      "ext_stream_matview_forget",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        // fresh (non-memoized) source dir: phase 2 APPENDS to it
-        val Seq(srcDir, storeDir, aggDir, ckpt) = freshDirs("smvforget", 4)
-        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 0))
-          .repartitionByRange(3, col("ts"))
-          .write.mode("overwrite").parquet(srcDir)
-        val seed = customerSeed(s, d)
-        StreamMatview.seed(seed, storeDir, aggDir, "c_custkey", "op",
-          Seq("c_mktsegment"), "bal_cents", nCol = "n", sumCol = "sum_cents")
-        val schema = s.read.parquet(srcDir).schema
-        def replay(): Unit = StreamMatview.start(
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(srcDir),
-          storeDir, aggDir, ckpt, "c_custkey", "op", Seq("ts", "event_id"),
-          Seq("c_mktsegment"), "bal_cents",
-          nCol = "n", sumCol = "sum_cents").awaitTermination()
-        replay() // phase 1 settles into store + view
-        val keys = seed.select("c_custkey")
-          .union(eventsChangelog(ev).select("c_custkey")).distinct()
-          .where(col("c_custkey") % 89 === 0)
-        StreamMatview.purgeKeys(s, storeDir, aggDir, keys, "c_custkey",
-          "op", Seq("c_mktsegment"), "bal_cents",
-          nCol = "n", sumCol = "sum_cents")
-        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 1))
-          .repartitionByRange(3, col("ts"))
-          .write.mode("append").parquet(srcDir)
-        replay() // phase 2: same checkpoint, only the new files
-        val view = StreamMatview.viewSnapshot(s, aggDir)
-          .select(col("c_mktsegment"), col("n"), col("sum_cents"))
-        val residual = BucketStore.allBytes(s, storeDir)
-          .where(col("event_id") === -1L ||
-            pmod(col("event_id"), lit(2)) === 0)
-          .join(keys, Seq("c_custkey"), "left_semi")
-          .agg(count(lit(1)).as("n"))
-          .select(lit("__residual").as("c_mktsegment"), col("n"),
-            lit(0L).as("sum_cents"))
-        view.unionByName(residual).orderBy("c_mktsegment")
-      },
-      Some("""WITH seedr AS (
-                SELECT c_custkey AS k, c_mktsegment AS seg,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
-                       'U' AS op, TIMESTAMP '1970-01-01 00:00:00' AS ts,
-                       CAST(-1 AS BIGINT) AS eid
-                FROM customer),
-              log AS (
-                SELECT user_id + 1450 AS k, event_type AS seg,
-                       CAST(round(value * 100) AS BIGINT) AS cents,
-                       CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-                       ts, event_id AS eid
-                FROM events),
-              p1 AS (SELECT * FROM seedr
-                     UNION ALL SELECT * FROM log WHERE eid % 2 = 0),
-              l1 AS (SELECT k, seg, cents, op, ts, eid FROM (
-                       SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                         ORDER BY ts DESC, eid DESC) AS rn FROM p1)
-                     WHERE rn = 1),
-              purged AS (SELECT * FROM l1 WHERE k % 89 <> 0),
-              p2 AS (SELECT * FROM purged
-                     UNION ALL SELECT * FROM log WHERE eid % 2 = 1),
-              l2 AS (SELECT k, seg, cents, op FROM (
-                       SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                         ORDER BY ts DESC, eid DESC) AS rn FROM p2)
-                     WHERE rn = 1),
-              snap AS (SELECT * FROM l2 WHERE op <> 'D')
-              SELECT seg AS c_mktsegment, COUNT(*) AS n,
-                     CAST(SUM(cents) AS BIGINT) AS sum_cents
-              FROM snap GROUP BY 1
-              UNION ALL
-              SELECT '__residual', 0, 0
-              ORDER BY c_mktsegment""")),
+    // ([[streamMatviewForget]] over [[graft.ext.Changelog.CountSum]]) —
+    // the view-consistent twin of ext_stream_forget, on the DELTA purge
+    // path: the view refresh subtracts the purged keys' live
+    // contributions read from the pre-purge snapshot's TOUCHED BUCKETS
+    // ONLY (BucketStoreSpec pins the read set), committed view-first
+    // with a crash-recoverable intent note. The settled VIEW must equal
+    // the recompute over the two-phase fold (forgotten keys'
+    // contributions gone, post-purge changes for them legitimately
+    // re-counted).
+    streamMatviewForget("ext_stream_matview_forget", SegCountSum),
 
     // Erasure from a store with a maintained MIN/MAX view
-    // ([[StreamMatview.purgeKeysSketch]] between replays of one
-    // checkpointed sketch-maintenance stream) — round 14's ask #2:
-    // erasure from a min/max view no longer pays the full view
-    // rebuild. The purge is a VIEW-FIRST DELTA with the same
-    // crash-recoverable intent note as the count/sum path: the purged
-    // keys' n/sum contributions subtract and their live values POP out
-    // of each dim's sketch, all read from the pre-purge snapshot's
-    // touched buckets; only a dim whose sketch side drains reads the
-    // full store (anti-joined with the purged keys — correct before
-    // the snapshot purge lands). Two 3-trigger phases drive both
-    // stores through applyBatchSketch; the settled SERVED view must
-    // equal the MIN/MAX recompute over the two-phase fold (forgotten
-    // contributions gone, post-purge changes for those keys
-    // legitimately re-counted — min/max boundaries re-answered), and
-    // the `__residual` byte-scan pins the physical erasure to zero.
-    Declared(
-      "ext_stream_matview_minmax_forget",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        // fresh (non-memoized) source dir: phase 2 APPENDS to it
-        val Seq(srcDir, storeDir, aggDir, ckpt) = freshDirs("smvmmforget", 4)
-        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 0))
-          .repartitionByRange(3, col("ts"))
-          .write.mode("overwrite").parquet(srcDir)
-        val seed = customerSeed(s, d)
-        StreamMatview.seedSketch(seed, storeDir, aggDir, "c_custkey", "op",
-          Seq("c_mktsegment"), "bal_cents", k = 8,
-          nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        val schema = s.read.parquet(srcDir).schema
-        def replay(): Unit = StreamMatview.startSketch(
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(srcDir),
-          storeDir, aggDir, ckpt, "c_custkey", "op", Seq("ts", "event_id"),
-          Seq("c_mktsegment"), "bal_cents", k = 8,
-          nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents").awaitTermination()
-        replay() // phase 1 settles into store + view
-        val keys = seed.select("c_custkey")
-          .union(eventsChangelog(ev).select("c_custkey")).distinct()
-          .where(col("c_custkey") % 89 === 0)
-        StreamMatview.purgeKeysSketch(s, storeDir, aggDir, keys, "c_custkey",
-          "op", Seq("c_mktsegment"), "bal_cents", k = 8,
-          nCol = "n", sumCol = "sum_cents",
-          minCol = "min_cents", maxCol = "max_cents")
-        eventsChangelog(ev.where(pmod(col("event_id"), lit(2)) === 1))
-          .repartitionByRange(3, col("ts"))
-          .write.mode("append").parquet(srcDir)
-        replay() // phase 2: same checkpoint, only the new files
-        val view = StreamMatview.viewSnapshotServed(s, aggDir)
-          .select(col("c_mktsegment"), col("n"), col("sum_cents"),
-            col("min_cents"), col("max_cents"))
-        val residual = BucketStore.allBytes(s, storeDir)
-          .where(col("event_id") === -1L ||
-            pmod(col("event_id"), lit(2)) === 0)
-          .join(keys, Seq("c_custkey"), "left_semi")
-          .agg(count(lit(1)).as("n"))
-          .select(lit("__residual").as("c_mktsegment"), col("n"),
-            lit(0L).as("sum_cents"), lit(0L).as("min_cents"),
-            lit(0L).as("max_cents"))
-        view.unionByName(residual).orderBy("c_mktsegment")
-      },
-      Some("""WITH seedr AS (
-                SELECT c_custkey AS k, c_mktsegment AS seg,
-                       CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
-                       'U' AS op, TIMESTAMP '1970-01-01 00:00:00' AS ts,
-                       CAST(-1 AS BIGINT) AS eid
-                FROM customer),
-              log AS (
-                SELECT user_id + 1450 AS k, event_type AS seg,
-                       CAST(round(value * 100) AS BIGINT) AS cents,
-                       CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-                       ts, event_id AS eid
-                FROM events),
-              p1 AS (SELECT * FROM seedr
-                     UNION ALL SELECT * FROM log WHERE eid % 2 = 0),
-              l1 AS (SELECT k, seg, cents, op, ts, eid FROM (
-                       SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                         ORDER BY ts DESC, eid DESC) AS rn FROM p1)
-                     WHERE rn = 1),
-              purged AS (SELECT * FROM l1 WHERE k % 89 <> 0),
-              p2 AS (SELECT * FROM purged
-                     UNION ALL SELECT * FROM log WHERE eid % 2 = 1),
-              l2 AS (SELECT k, seg, cents, op FROM (
-                       SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                         ORDER BY ts DESC, eid DESC) AS rn FROM p2)
-                     WHERE rn = 1),
-              snap AS (SELECT * FROM l2 WHERE op <> 'D')
-              SELECT seg AS c_mktsegment, COUNT(*) AS n,
-                     CAST(SUM(cents) AS BIGINT) AS sum_cents,
-                     MIN(cents) AS min_cents, MAX(cents) AS max_cents
-              FROM snap GROUP BY 1
-              UNION ALL
-              SELECT '__residual', 0, 0, 0, 0
-              ORDER BY c_mktsegment"""))
+    // ([[streamMatviewForget]] over [[graft.ext.Changelog.Sketch]]) —
+    // erasure from a min/max view without the full view rebuild: the
+    // same view-first delta and intent note as the count/sum row, where
+    // the purged keys' n/sum contributions subtract and their live
+    // values POP out of each dim's sketch, all read from the pre-purge
+    // snapshot's touched buckets; only a dim whose sketch side drains
+    // reads the full store (anti-joined with the purged keys — correct
+    // before the snapshot purge lands). The settled SERVED view must
+    // equal the MIN/MAX recompute over the two-phase fold (min/max
+    // boundaries re-answered).
+    streamMatviewForget("ext_stream_matview_minmax_forget", SegSketch)
   )
 }

@@ -79,7 +79,7 @@ object ExtVersionQueries {
           (Changelog.foldWinners(f, agg, built, () => store), built.merged)
       }
       view.drop(Changelog.SketchCols: _*).orderBy("c_mktsegment")
-    }, Some(ExtShared.matviewOracle(minmax = !f.isInstanceOf[Changelog.CountSum])))
+    }, Some(ExtShared.matviewOracle(f)))
 
   private def declared: Seq[Declared] = Seq(
 
@@ -267,9 +267,7 @@ object ExtVersionQueries {
     // per batch, the store is touched only via broadcast joins on the
     // batch's keys; the corpus is NEVER rescanned to refresh the view —
     // that full rescan is exactly what this operator exists to avoid.
-    matview("ext_pipeline_matview",
-      Changelog.CountSum("op", Seq("c_mktsegment"), "bal_cents", nCol = "n",
-        sumCol = "sum_cents")),
+    matview("ext_pipeline_matview", ExtShared.SegCountSum),
 
     // NON-self-maintainable view maintenance ([[matview]] over
     // [[Changelog.MinMax]]): the same per-segment view widened with
@@ -282,9 +280,7 @@ object ExtVersionQueries {
     // gate: folded view == full MIN/MAX recompute over the final merged
     // table, on real data where the error-typed deletes DO retract
     // segment boundaries.
-    matview("ext_pipeline_matview_minmax",
-      Changelog.MinMax("op", Seq("c_mktsegment"), "bal_cents", nCol = "n",
-        sumCol = "sum_cents", minCol = "min_cents", maxCol = "max_cents")),
+    matview("ext_pipeline_matview_minmax", ExtShared.SegMinMax),
 
     // SKETCHED MIN/MAX view maintenance ([[matview]] over
     // [[Changelog.Sketch]]): the same 4-batch fold as
@@ -297,9 +293,7 @@ object ExtVersionQueries {
     // both the rarity and the drain correctness at k=2). Served
     // (n, sum, min, max) must equal the same full recompute oracle —
     // the sketch is internal state, invisible to the answer.
-    matview("ext_pipeline_matview_sketch",
-      Changelog.Sketch("op", Seq("c_mktsegment"), "bal_cents", k = 8, nCol = "n",
-        sumCol = "sum_cents", minCol = "min_cents", maxCol = "max_cents")),
+    matview("ext_pipeline_matview_sketch", ExtShared.SegSketch),
 
     // Right-to-be-forgotten ([[BucketStore.purgeKeys]]): the merged
     // customer store — seeded snapshot + one applied changelog batch,
@@ -323,51 +317,17 @@ object ExtVersionQueries {
         StreamMerge.seed(seed, storeDir, "c_custkey")
         StreamMerge.applyBatch(log, 0L, storeDir, "c_custkey", "op",
           Seq("ts", "event_id"))
-        val keys = seed.select("c_custkey")
-          .union(log.select("c_custkey")).distinct()
-          .where(col("c_custkey") % 89 === 0)
+        val keys = ExtShared.forgetKeys(seed, log)
         BucketStore.purgeKeys(s, storeDir, keys, "c_custkey")
-        val census = StreamMerge
-          .snapshot(s, storeDir, "op", Seq("ts", "event_id"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n"),
-            sum(col("c_custkey")).as("key_checksum"),
-            sum(col("bal_cents")).as("cents_checksum"))
-        // the erasure probe: every parquet file still under the store
-        // dir — current, superseded, or leftover — semi-joined with
-        // the forgotten keys; must be empty
-        val residual = BucketStore.allBytes(s, storeDir)
-          .join(keys, Seq("c_custkey"), "left_semi")
-          .agg(count(lit(1)).as("n"))
-          .select(lit("__residual").as("c_mktsegment"), col("n"),
-            lit(0L).as("key_checksum"), lit(0L).as("cents_checksum"))
-        census.unionByName(residual).orderBy("c_mktsegment")
+        // the erasure probe reads every parquet file still under the
+        // store dir, of any provenance
+        ExtShared.withResidual(
+          ExtShared.census(StreamMerge.snapshot(s, storeDir, "op", Seq("ts", "event_id"))),
+          BucketStore.allBytes(s, storeDir), keys)
       },
-      Some("""WITH log AS (
-                SELECT user_id + 1450 AS k, event_type AS seg,
-                       CAST(round(value * 100) AS BIGINT) AS cents,
-                       CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-                       ts, event_id
-                FROM events),
-              latest AS (
-                SELECT k, seg, cents, op FROM (
-                  SELECT *, ROW_NUMBER() OVER (PARTITION BY k
-                    ORDER BY ts DESC, event_id DESC) AS rn FROM log)
-                WHERE rn = 1),
-              merged AS (
-                SELECT c.c_custkey AS k, c.c_mktsegment AS seg,
-                       CAST(round(c.c_acctbal * 100) AS BIGINT) AS cents
-                FROM customer c ANTI JOIN latest l ON c.c_custkey = l.k
-                UNION ALL
-                SELECT k, seg, cents FROM latest WHERE op <> 'D'),
+      Some(s"""WITH ${ExtShared.mergedCte},
               kept AS (SELECT * FROM merged WHERE k % 89 <> 0)
-              SELECT seg AS c_mktsegment, COUNT(*) AS n,
-                     CAST(SUM(k) AS BIGINT) AS key_checksum,
-                     CAST(SUM(cents) AS BIGINT) AS cents_checksum
-              FROM kept GROUP BY 1
-              UNION ALL
-              SELECT '__residual', 0, 0, 0
-              ORDER BY c_mktsegment"""))
+              ${ExtShared.residualOracle("kept", ExtShared.censusAggs)}"""))
   )
 
 }

@@ -111,7 +111,7 @@ object BucketStore {
   /** The one maintenance skeleton every store trigger and purge runs
     * through ([[StreamMerge.applyBatch]], [[StreamIngest.applyBatch]],
     * the [[StreamMatview]] trigger, [[purgeKeys]], and the view-first
-    * [[StreamMatview.purgeKeys]], whose view commit and snapshot erase
+    * [[StreamMatview.purgeView]], whose view commit and snapshot erase
     * share one scope), over the store snapshot `snap` the caller
     * resolved at its start. Each runs it exactly once per call. In
     * order:
@@ -299,7 +299,7 @@ object BucketStore {
     * ([[EmptyOwner]] marks a claimed-empty bucket), the ingest batch
     * watermark as of that version, and an optional single-line NOTE a
     * maintenance op attaches to make its two-store protocol
-    * crash-recoverable ([[graft.streaming.StreamMatview.purgeKeys]]'s
+    * crash-recoverable ([[graft.streaming.StreamMatview.purgeView]]'s
     * intent record). Notes are NOT carried forward: each version
     * writes its own manifest, so the next ordinary commit clears it.
     */
@@ -671,7 +671,7 @@ object BucketStore {
     *
     * DERIVED STATE: this op rewrites ONE store. A snapshot store with
     * a maintained aggregate ([[StreamMatview]]) must purge through
-    * [[StreamMatview.purgeKeys]] instead — purging only the snapshot
+    * [[StreamMatview.purgeView]] instead — purging only the snapshot
     * leaves the erased keys' contributions in the view forever (and
     * derivable from it), and no watermark guard can notice. That op
     * runs the view commit and this same [[erase]] body in ONE scope:
@@ -698,7 +698,7 @@ object BucketStore {
     * `touched` bucket, then scrub the superseded copies — the one
     * listing of the root past the resolve, since the scrub must also
     * see uncommitted dirs. [[purgeKeys]] and the view-first
-    * [[StreamMatview.purgeKeys]] both erase through it.
+    * [[StreamMatview.purgeView]] both erase through it.
     */
   private[streaming] def erase(snap: Snapshot, cur: DataFrame, kdf: DataFrame,
                                keyCol: String, touched: Set[Long]): PurgeStats = {

@@ -9,17 +9,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Continuous incremental materialized-view maintenance: fold a
   * change stream into BOTH the keyed snapshot store ([[StreamMerge]])
   * and a dimensional aggregate of it — the view stays consistent with
-  * the snapshot without ever rescanning it. Three view flavours share
-  * one driver: count/sum ([[seed]], [[applyBatch]], [[start]],
-  * [[purgeKeys]]), boundary-exact min/max (the `*MinMax` twins) and
-  * sketch-backed min/max (the `*Sketch` twins); each is a
-  * [[Changelog.ViewFold]] handed to the one seed, trigger, start and
-  * purge below. Per trigger the view refresh costs one batch-keys
-  * broadcast against the store's touched buckets, shared with the
-  * snapshot merge, plus batch-sized aggregations; the alternative a
-  * view over a 100 TB
-  * corpus otherwise forces — a full recompute per refresh interval —
-  * is exactly what this operator removes.
+  * the snapshot without ever rescanning it. A caller picks the view's
+  * flavour by the [[Changelog.ViewFold]] it hands to the one seed
+  * ([[seedView]]), trigger ([[applyView]]), stream start
+  * ([[startView]]) and purge ([[purgeView]]): count/sum
+  * ([[Changelog.CountSum]]), boundary-exact min/max
+  * ([[Changelog.MinMax]]) or sketch-backed min/max
+  * ([[Changelog.Sketch]]). Per trigger the view refresh costs one
+  * batch-keys broadcast against the store's touched buckets, shared
+  * with the snapshot merge, plus batch-sized aggregations; the
+  * alternative a view over a 100 TB corpus otherwise forces — a full
+  * recompute per refresh interval — is exactly what this operator
+  * removes.
   *
   * Layout: the aggregate is its own (single-bucket — it is
   * dim-cardinality-sized) [[BucketStore]] next to the snapshot store,
@@ -59,7 +60,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * markers is the aggregate-ahead window above.
   *
   * Erasure follows ONE view-first protocol for all three flavours
-  * ([[purgeKeys]]): the view subtracts the purged keys first, with an
+  * ([[purgeView]]): the view subtracts the purged keys first, with an
   * intent note, then the snapshot store purges — both halves in ONE
   * maintenance scope, so the key list is probed once and the touched
   * buckets are read once for both.
@@ -73,10 +74,12 @@ object StreamMatview {
     BucketStore.read(spark, aggDir).getOrElse(
       throw new IllegalStateException(s"no committed view version under $aggDir"))
 
-  /** The maintained SKETCHED view with its internal state dropped —
-    * the serving projection of a view kept by [[applyBatchSketch]]:
-    * `(dims..., n, sum, min, max)`, directly comparable to the plain
-    * [[viewSnapshot]] and the recompute oracle.
+  /** The maintained view's serving projection, any flavour: a
+    * [[Changelog.Sketch]] view with its internal state
+    * ([[Changelog.SketchCols]]) dropped — `(dims..., n, sum, min,
+    * max)`, directly comparable to the plain [[viewSnapshot]] and the
+    * recompute oracle — and a count/sum or min/max view unchanged (it
+    * has no such columns).
     */
   def viewSnapshotServed(spark: SparkSession, aggDir: String): DataFrame =
     viewSnapshot(spark, aggDir).drop(Changelog.SketchCols: _*)
@@ -88,21 +91,35 @@ object StreamMatview {
   }
 
   /** Seed BOTH stores from an initial snapshot — the snapshot store
-    * via [[StreamMerge.seed]] (same contract: `opCol` present,
+    * via [[StreamMerge.seed]] (same contract: `f.opCol` present,
     * `seqCols` below any future entry), the aggregate store with the
     * fold's full recompute over the seed (the one full pass, paid once
     * at bootstrap).
     */
-  private def seedView(snapshot: DataFrame, storeDir: String, aggDir: String,
-                       keyCol: String, f: ViewFold, nBuckets: Int): Unit = {
+  def seedView(snapshot: DataFrame, storeDir: String, aggDir: String,
+               keyCol: String, f: ViewFold,
+               nBuckets: Int = BucketStore.DefaultBuckets): Unit = {
     StreamMerge.seed(snapshot, storeDir, keyCol, nBuckets)
     // the aggregate is single-bucket: it is dim-cardinality-sized
     StreamMerge.seed(f.snapshot(snapshot), aggDir, f.dims.head, nBuckets = 1)
   }
 
-  /** The trigger every applyBatch flavour shares: the two-store,
-    * aggregate-first, exactly-once protocol of the object doc, folding
-    * with `f`.
+  /** Apply one changelog microbatch to the view and the snapshot store
+    * — the foreachBatch body of [[startView]], public for reuse and
+    * direct testing: the two-store, aggregate-first, exactly-once
+    * protocol of the object doc, folding with `f`.
+    *
+    * The flavour's cost surfaces in the fold. Count/sum is pure delta
+    * arithmetic. Min/max reads the batch's pre-images from the TOUCHED
+    * buckets, but a batch that retracts a dim's boundary recomputes
+    * that dim from the FULL store read (an affected dim's other rows
+    * live in every bucket); a batch that retracts nothing commits a
+    * plan with no store scan at all. A sketch keeps each dim's k
+    * smallest/largest live values IN the view store (invisible state,
+    * the served columns are identical), so boundary retractions are
+    * O(1) array pops and the full-store scan happens only when a dim's
+    * sketch side DRAINS — at least k boundary deletions per side
+    * between rebuilds.
     *
     * Each store is resolved once ([[BucketStore.snapshot]]), the view
     * first: its watermark decides the replay skip, and the two
@@ -132,10 +149,11 @@ object StreamMatview {
     * A view already at `id` (a crash between the two commits) replays
     * the snapshot half alone through [[StreamMerge.applyBatch]].
     */
-  private def applyView(batch: DataFrame, id: Long, storeDir: String,
-                        aggDir: String, keyCol: String, seqCols: Seq[String],
-                        f: ViewFold, retain: Int, nBuckets: Int,
-                        maxBroadcastKeys: Long): Unit = {
+  def applyView(batch: DataFrame, id: Long, storeDir: String,
+                aggDir: String, keyCol: String, seqCols: Seq[String],
+                f: ViewFold, retain: Int = 2,
+                nBuckets: Int = BucketStore.DefaultBuckets,
+                maxBroadcastKeys: Long = 10000000L): Unit = {
     require(retain >= 1,
       s"retain=$retain: the vacuum must keep at least the version just written")
     val spark = batch.sparkSession
@@ -234,6 +252,15 @@ object StreamMatview {
     * failure, if any, is attached as suppressed), and even when this
     * thread is interrupted meanwhile (the interrupt is re-asserted
     * after the join), so no job of the trigger outlives it.
+    *
+    * Why a second thread, although the two halves then share the
+    * cores in FIFO job order: a same-box A/B (4 cores, otherwise idle;
+    * `scripts/ab_pairs.py`, `view_maintenance`, seeds 911–913, 3 pairs,
+    * every run correct, 0 ops failed) of this trigger against one that
+    * ran [[applyView]] on a single thread — fold, view commit, then
+    * stage and publish the merge, winners persisted, every guard kept —
+    * read the single thread's `op_p50_s` 3.302 → 4.409 s (+33.5 %, it
+    * won 1 of 3 pairs) and its `ops_per_s` 16.8 % lower.
     */
   private def alongside[A](spark: SparkSession, label: String)(side: => A)
                           (main: => Unit): A = {
@@ -264,20 +291,22 @@ object StreamMatview {
   }
 
   /** Start the continuous maintenance of `storeDir` + `aggDir` from a
-    * streaming `changelog`, folding with `f`.
+    * streaming `changelog`, folding with `f`: each microbatch runs
+    * [[applyView]] through [[StreamMerge.startStream]].
     */
-  private def startView(changelog: DataFrame, storeDir: String, aggDir: String,
-                        checkpointDir: String, keyCol: String,
-                        seqCols: Seq[String], f: ViewFold, retain: Int,
-                        nBuckets: Int, maxBroadcastKeys: Long,
-                        trigger: Trigger): StreamingQuery =
+  def startView(changelog: DataFrame, storeDir: String, aggDir: String,
+                checkpointDir: String, keyCol: String,
+                seqCols: Seq[String], f: ViewFold, retain: Int = 2,
+                nBuckets: Int = BucketStore.DefaultBuckets,
+                maxBroadcastKeys: Long = 10000000L,
+                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     StreamMerge.startStream(changelog, checkpointDir, retain, trigger)(
       applyView(_, _, storeDir, aggDir, keyCol, seqCols, f, retain, nBuckets,
         maxBroadcastKeys))
 
   /** Order-independent fingerprint of a purge's DISTINCT key list
     * `kdf` (`__pk`) — the token that lets a crash-interrupted
-    * [[purgeKeys]] recognize its own replay (and refuse a DIFFERENT
+    * [[purgeView]] recognize its own replay (and refuse a DIFFERENT
     * purge until the first completes). One small job over the purge
     * scope's persisted list; null keys hash as an ordinary value.
     */
@@ -306,23 +335,47 @@ object StreamMatview {
       case PurgeNote(snapv, fp) if !sv.exists(_ >= snapv.toLong) => (snapv.toLong, fp)
     }
 
-  /** Erase keys from BOTH stores consistently through fold `f`, in ONE
-    * [[BucketStore.maintain]] scope over the distinct key list — see
-    * [[purgeKeys]]. In order: the probe; the intent (the list's
-    * fingerprint); the view half — the purged keys' live contributions
-    * folded OUT of the view ([[Changelog.foldPurge]]) from the
-    * pre-purge snapshot's TOUCHED BUCKETS and committed with the intent
-    * note — skipped when a pending note names the same list (the crash
-    * window: the view already subtracted it); then the snapshot half,
-    * [[BucketStore.erase]] over the same persisted pre-image, and its
-    * scrub. A min/max dim whose bound a purged value ties, or a sketch
-    * side that drains, recomputes from the full store anti-joined with
-    * the keys (the survivors). Jobs carry `<tag> purge: probe | intent
-    * | fold | view commit | snapshot purge`.
+  /** Erase keys from BOTH stores consistently through fold `f` — the
+    * right-to-be-forgotten op for a store with a maintained view, one
+    * protocol for all three flavours. Calling [[BucketStore.purgeKeys]]
+    * directly on the snapshot store would silently corrupt the view:
+    * the purged rows' contributions stay in the aggregate forever (and
+    * remain derivable from it — defeating the erasure), with no guard
+    * able to notice because a purge deliberately does not advance the
+    * batch watermark.
+    *
+    * Cost shape: ONE [[BucketStore.maintain]] scope over the distinct
+    * key list — one probe, one persisted read of the pre-purge
+    * snapshot's TOUCHED BUCKETS, shared by both halves. In order: the
+    * probe; the intent (the list's fingerprint); the view half — the
+    * purged keys' live contributions folded OUT of the view
+    * ([[Changelog.foldPurge]]) from that pre-image and committed as a
+    * maintenance version with the intent note — skipped when a pending
+    * note names the same list (the crash window: the view already
+    * subtracted it); then the snapshot half, [[BucketStore.erase]]
+    * over the same persisted pre-image, and its scrub. O(touched
+    * buckets) throughout; only a min/max dim whose bound a purged
+    * value ties, or a sketch side that drains, recomputes from the
+    * full store anti-joined with the keys (the survivors). Jobs carry
+    * `<tag> purge: probe | intent | fold | view commit | snapshot
+    * purge`.
+    *
+    * Crash discipline, view-first with an INTENT NOTE: the delta must
+    * be computed from the PRE-purge store, so the view version
+    * commits first, carrying `purge:snapv=<the snapshot version the
+    * purge will create>:fp=<key-list fingerprint>` in its manifest.
+    * A re-run finds the note pointing PAST the snapshot's latest
+    * version and redoes ONLY the snapshot purge (same fingerprint
+    * required — a different key list fails loudly until the
+    * interrupted purge is re-run to completion), and [[applyView]]
+    * refuses to commit over it; once the snapshot commit lands, the
+    * note is satisfied and later purges take the normal path. A crash
+    * below the view commit leaves nothing applied. Run with the stream
+    * stopped, like any maintenance.
     */
-  private def purgeView(spark: SparkSession, storeDir: String, aggDir: String,
-                        keys: DataFrame, keyCol: String, f: ViewFold,
-                        maxBroadcastKeys: Long): BucketStore.PurgeStats = {
+  def purgeView(spark: SparkSession, storeDir: String, aggDir: String,
+                keys: DataFrame, keyCol: String, f: ViewFold,
+                maxBroadcastKeys: Long = 10000000L): BucketStore.PurgeStats = {
     val view = BucketStore.snapshot(spark, aggDir)
     val store = BucketStore.snapshot(spark, storeDir)
     val vm = view.committed
@@ -360,9 +413,12 @@ object StreamMatview {
     }
   }
 
-  /** Seed a count/sum view `(dims..., nCol, sumCol)` and its snapshot
-    * store ([[seedView]]).
-    */
+  // The flavour twins below are one-line forwards to the ViewFold entry
+  // points above, kept because perfbench's view_maintenance workload
+  // and the specs call them by name; a new caller picks a flavour by
+  // its ViewFold instead.
+
+  /** [[seedView]] over [[Changelog.CountSum]]: `(dims..., nCol, sumCol)`. */
   def seed(snapshot: DataFrame, storeDir: String, aggDir: String,
            keyCol: String, opCol: String, dims: Seq[String], valCol: String,
            nCol: String = "n", sumCol: String = "sum",
@@ -370,10 +426,7 @@ object StreamMatview {
     seedView(snapshot, storeDir, aggDir, keyCol,
       CountSum(opCol, dims, valCol, nCol = nCol, sumCol = sumCol), nBuckets)
 
-  /** Apply one changelog microbatch to the count/sum view and the
-    * snapshot store — the view published first ([[applyView]]) — as
-    * the foreachBatch body, public for reuse and direct testing.
-    */
+  /** [[applyView]] over [[Changelog.CountSum]]. */
   def applyBatch(batch: DataFrame, id: Long, storeDir: String, aggDir: String,
                  keyCol: String, opCol: String, seqCols: Seq[String],
                  dims: Seq[String], valCol: String,
@@ -385,52 +438,7 @@ object StreamMatview {
       CountSum(opCol, dims, valCol, nCol = nCol, sumCol = sumCol), retain,
       nBuckets, maxBroadcastKeys)
 
-  /** Start the continuous count/sum maintenance ([[startView]]). */
-  def start(changelog: DataFrame, storeDir: String, aggDir: String,
-            checkpointDir: String, keyCol: String, opCol: String,
-            seqCols: Seq[String], dims: Seq[String], valCol: String,
-            nCol: String = "n", sumCol: String = "sum",
-            retain: Int = 2,
-            nBuckets: Int = BucketStore.DefaultBuckets,
-            maxBroadcastKeys: Long = 10000000L,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startView(changelog, storeDir, aggDir, checkpointDir, keyCol, seqCols,
-      CountSum(opCol, dims, valCol, nCol = nCol, sumCol = sumCol), retain,
-      nBuckets, maxBroadcastKeys, trigger)
-
-  /** Erase keys from BOTH stores consistently — the
-    * right-to-be-forgotten op for a store with a maintained view, one
-    * protocol for all three flavours (this and the `*MinMax`/`*Sketch`
-    * twins). Calling [[BucketStore.purgeKeys]] directly on the
-    * snapshot store would silently corrupt the view: the purged rows'
-    * contributions stay in the aggregate forever (and remain derivable
-    * from it — defeating the erasure), with no guard able to notice
-    * because a purge deliberately does not advance the batch
-    * watermark.
-    *
-    * Cost shape: one maintenance scope ([[purgeView]]) — one probe of
-    * the distinct key list, one persisted read of the pre-purge
-    * snapshot's TOUCHED BUCKETS, shared by both halves. The view
-    * refresh is a DELTA — the purged keys' live contributions, read
-    * from that pre-image, folded out of the maintained aggregate as a
-    * maintenance version — and the snapshot purge rewrites the same
-    * buckets without the keys. O(touched buckets) throughout; only a
-    * min/max bound a purged value held, or a drained sketch side,
-    * reads the full store.
-    *
-    * Crash discipline, view-first with an INTENT NOTE: the delta must
-    * be computed from the PRE-purge store, so the view version
-    * commits first, carrying `purge:snapv=<the snapshot version the
-    * purge will create>:fp=<key-list fingerprint>` in its manifest.
-    * A re-run finds the note pointing PAST the snapshot's latest
-    * version and redoes ONLY the snapshot purge (same fingerprint
-    * required — a different key list fails loudly until the
-    * interrupted purge is re-run to completion), and the applyBatch
-    * family refuses to commit over it; once the snapshot commit lands,
-    * the note is satisfied and later purges take the normal path. A
-    * crash below the view commit leaves nothing applied. Run with the
-    * stream stopped, like any maintenance.
-    */
+  /** [[purgeView]] over [[Changelog.CountSum]]. */
   def purgeKeys(spark: SparkSession, storeDir: String, aggDir: String,
                 keys: DataFrame, keyCol: String, opCol: String,
                 dims: Seq[String], valCol: String,
@@ -440,9 +448,7 @@ object StreamMatview {
       CountSum(opCol, dims, valCol, nCol = nCol, sumCol = sumCol),
       maxBroadcastKeys)
 
-  /** [[seed]]'s MIN/MAX twin: the aggregate store holds `(dims..., n,
-    * sum, min, max)` ([[Changelog.MinMax]]).
-    */
+  /** [[seedView]] over [[Changelog.MinMax]]: `(dims..., n, sum, min, max)`. */
   def seedMinMax(snapshot: DataFrame, storeDir: String, aggDir: String,
                  keyCol: String, opCol: String, dims: Seq[String],
                  valCol: String,
@@ -452,13 +458,7 @@ object StreamMatview {
     seedView(snapshot, storeDir, aggDir, keyCol,
       MinMax(opCol, dims, valCol, "D", nCol, sumCol, minCol, maxCol), nBuckets)
 
-  /** [[applyBatch]]'s MIN/MAX twin. The non-self-maintainable cost
-    * surfaces exactly where the operator's contract says: the batch's
-    * pre-images come from the TOUCHED buckets, but a batch that
-    * retracts a dim's boundary recomputes that dim from the FULL store
-    * read (an affected dim's other rows live in every bucket); a batch
-    * that retracts nothing commits a plan with no store scan at all.
-    */
+  /** [[applyView]] over [[Changelog.MinMax]]. */
   def applyBatchMinMax(batch: DataFrame, id: Long, storeDir: String,
                        aggDir: String, keyCol: String, opCol: String,
                        seqCols: Seq[String], dims: Seq[String],
@@ -472,21 +472,7 @@ object StreamMatview {
       MinMax(opCol, dims, valCol, "D", nCol, sumCol, minCol, maxCol), retain,
       nBuckets, maxBroadcastKeys)
 
-  /** [[start]]'s MIN/MAX twin. */
-  def startMinMax(changelog: DataFrame, storeDir: String, aggDir: String,
-                  checkpointDir: String, keyCol: String, opCol: String,
-                  seqCols: Seq[String], dims: Seq[String], valCol: String,
-                  nCol: String = "n", sumCol: String = "sum",
-                  minCol: String = "min", maxCol: String = "max",
-                  retain: Int = 2,
-                  nBuckets: Int = BucketStore.DefaultBuckets,
-                  maxBroadcastKeys: Long = 10000000L,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startView(changelog, storeDir, aggDir, checkpointDir, keyCol, seqCols,
-      MinMax(opCol, dims, valCol, "D", nCol, sumCol, minCol, maxCol), retain,
-      nBuckets, maxBroadcastKeys, trigger)
-
-  /** [[purgeKeys]]' MIN/MAX twin — the same view-first protocol. */
+  /** [[purgeView]] over [[Changelog.MinMax]]. */
   def purgeKeysMinMax(spark: SparkSession, storeDir: String, aggDir: String,
                       keys: DataFrame, keyCol: String, opCol: String,
                       dims: Seq[String], valCol: String,
@@ -498,10 +484,10 @@ object StreamMatview {
       MinMax(opCol, dims, valCol, "D", nCol, sumCol, minCol, maxCol),
       maxBroadcastKeys)
 
-  /** [[seed]]'s SKETCHED twin: the aggregate store holds `(dims..., n,
-    * sum, min, max, sketch state)` ([[Changelog.Sketch]]) — the scale
-    * path for deletes-bearing changelogs, where [[applyBatchMinMax]]'s
-    * per-retraction full-store recompute becomes an O(1) sketch pop.
+  /** [[seedView]] over [[Changelog.Sketch]]: `(dims..., n, sum, min,
+    * max, sketch state)` — the scale path for deletes-bearing
+    * changelogs, where min/max's per-retraction full-store recompute
+    * becomes an O(1) sketch pop.
     */
   def seedSketch(snapshot: DataFrame, storeDir: String, aggDir: String,
                  keyCol: String, opCol: String, dims: Seq[String],
@@ -512,15 +498,7 @@ object StreamMatview {
     seedView(snapshot, storeDir, aggDir, keyCol,
       Sketch(opCol, dims, valCol, k, "D", nCol, sumCol, minCol, maxCol), nBuckets)
 
-  /** [[applyBatchMinMax]]'s SKETCHED twin: each dim's sketch (k
-    * smallest/largest live values, persisted IN the view store —
-    * invisible state, the served columns are identical) absorbs
-    * boundary retractions as O(1) array pops, so a trigger whose
-    * retractions stay inside every sketch commits a plan with NO
-    * full-store scan at all; the scan happens only when a dim's sketch
-    * side DRAINS — at least k boundary deletions per side between
-    * rebuilds.
-    */
+  /** [[applyView]] over [[Changelog.Sketch]]. */
   def applyBatchSketch(batch: DataFrame, id: Long, storeDir: String,
                        aggDir: String, keyCol: String, opCol: String,
                        seqCols: Seq[String], dims: Seq[String],
@@ -534,24 +512,9 @@ object StreamMatview {
       Sketch(opCol, dims, valCol, k, "D", nCol, sumCol, minCol, maxCol), retain,
       nBuckets, maxBroadcastKeys)
 
-  /** [[start]]'s SKETCHED twin. */
-  def startSketch(changelog: DataFrame, storeDir: String, aggDir: String,
-                  checkpointDir: String, keyCol: String, opCol: String,
-                  seqCols: Seq[String], dims: Seq[String], valCol: String,
-                  k: Int,
-                  nCol: String = "n", sumCol: String = "sum",
-                  minCol: String = "min", maxCol: String = "max",
-                  retain: Int = 2,
-                  nBuckets: Int = BucketStore.DefaultBuckets,
-                  maxBroadcastKeys: Long = 10000000L,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startView(changelog, storeDir, aggDir, checkpointDir, keyCol, seqCols,
-      Sketch(opCol, dims, valCol, k, "D", nCol, sumCol, minCol, maxCol), retain,
-      nBuckets, maxBroadcastKeys, trigger)
-
-  /** [[purgeKeys]]' SKETCHED twin — the same view-first protocol: the
-    * purged keys' live values pop out of each dim's sketch, and only a
-    * drained side reads the full store.
+  /** [[purgeView]] over [[Changelog.Sketch]]: the purged keys' live
+    * values pop out of each dim's sketch, and only a drained side
+    * reads the full store.
     */
   def purgeKeysSketch(spark: SparkSession, storeDir: String, aggDir: String,
                       keys: DataFrame, keyCol: String, opCol: String,

@@ -183,7 +183,7 @@ object StreamMerge {
       applyBatch(_, _, storeDir, keyCol, opCol, seqCols, retain, nBuckets))
 
   /** The one stream starter every store stream shares (this merge,
-    * [[StreamIngest.start]], the [[StreamMatview]] starts): check
+    * [[StreamIngest.start]], [[StreamMatview.startView]]): check
     * `retain` up front, then run `apply` on each microbatch of
     * `source` with its batch id, checkpointed at `checkpointDir` and
     * fired by `trigger`.

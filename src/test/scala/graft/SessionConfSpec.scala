@@ -15,11 +15,9 @@ import scala.jdk.CollectionConverters._
 class SessionConfSpec extends AnyFunSuite {
 
   /** (file name, enclosing def) of every place allowed to set conf:
-    * the scoped helper, and `Tables`' one-time `nanosAsLong` fallback
-    * for sessions not built by [[Session.local]] (it must outlive the
-    * call: every later events read needs it).
+    * the scoped helper only.
     */
-  private val allowed = Set("Session.scala" -> "withConf", "Tables.scala" -> "nanosAsLong")
+  private val allowed = Set("Session.scala" -> "withConf")
 
   private val ConfWrite = """\bconf\.(set|unset)\(|\.setConf\(|setConfString\(""".r
   private val DefName = """\bdef\s+(\w+)""".r

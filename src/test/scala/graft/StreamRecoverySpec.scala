@@ -425,11 +425,11 @@ class StreamRecoverySpec extends SparkSpec {
         col("id").as("cents"), lit("U").as("op"),
         timestamp_millis(lit(0L)).as("ts"), lit(-1L).as("event_id")),
         storeDir, aggDir, "k", "op", Seq("seg"), "cents")
-      def start() = StreamMatview.start(
+      def start() = StreamMatview.startView(
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir),
-        storeDir, aggDir, ckpt, "k", "op", Seq("ts", "event_id"),
-        Seq("seg"), "cents")
+        storeDir, aggDir, ckpt, "k", Seq("ts", "event_id"),
+        Changelog.CountSum("op", Seq("seg"), "cents"))
       if (interrupt) {
         val killedAt = runInterrupted(start())
         assert(killedAt < 7,
@@ -487,11 +487,11 @@ class StreamRecoverySpec extends SparkSpec {
         col("id").as("cents"), lit("U").as("op"),
         timestamp_millis(lit(0L)).as("ts"), lit(-1L).as("event_id")),
         storeDir, aggDir, "k", "op", Seq("seg"), "cents", k = 4)
-      def start() = StreamMatview.startSketch(
+      def start() = StreamMatview.startView(
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir),
-        storeDir, aggDir, ckpt, "k", "op", Seq("ts", "event_id"),
-        Seq("seg"), "cents", k = 4)
+        storeDir, aggDir, ckpt, "k", Seq("ts", "event_id"),
+        Changelog.Sketch("op", Seq("seg"), "cents", k = 4))
       if (interrupt) {
         val killedAt = runInterrupted(start())
         assert(killedAt < 7,

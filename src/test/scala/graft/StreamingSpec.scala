@@ -660,6 +660,63 @@ class StreamingSpec extends SparkSpec {
     } finally before.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("StreamMatview.startView settles every view flavour to the recompute over the settled store") {
+    // one table over the three folds: seed, then a 3-file AvailableNow
+    // replay whose later files retract seg s0's minimum three times
+    // (k = 0, 3, 6) and its maximum once (k = 27) — a min/max recompute
+    // and, at k = 2, a sketch drain. The settled served view must equal
+    // the recompute (MinMax's for the sketch, whose served columns are
+    // min/max's), and dropping the sketch columns must leave the
+    // count/sum and min/max views as they are
+    import spark.implicits._
+    import graft.ext.Changelog
+    import graft.ext.Changelog.{CountSum, MinMax, Sketch}
+    import graft.streaming.{BucketStore, StreamMatview}
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    val snapshot = spark.range(0, 30).select(col("id").as("k"),
+      concat(lit("s"), col("id") % 3).as("seg"), (col("id") * 10).as("cents"),
+      lit("U").as("op"), lit(-1L).as("seq"))
+    val srcDir = tmp("graft_startview_src")
+    Seq(
+      Seq((30L, "s0", 500L, "U"), (31L, "s1", -5L, "U"), (1L, "s1", 15L, "U")),
+      Seq((0L, "s0", 0L, "D"), (27L, "s0", 270L, "D"), (32L, "s2", 7L, "U")),
+      Seq((3L, "s0", 30L, "D"), (6L, "s0", 60L, "D"), (31L, "s1", 900L, "U"))
+    ).zipWithIndex.foreach { case (rows, i) =>
+      rows.map { case (k, seg, cents, op) => (k, seg, cents, op, i.toLong) }
+        .toDF("k", "seg", "cents", "op", "seq")
+        .coalesce(1).write.mode("append").parquet(srcDir)
+    }
+    val schema = spark.read.parquet(srcDir).schema
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.mkString("|")).toSeq.sorted
+    val flavours: Seq[Changelog.ViewFold] = Seq(
+      CountSum("op", Seq("seg"), "cents"),
+      MinMax("op", Seq("seg"), "cents"),
+      Sketch("op", Seq("seg"), "cents", k = 2))
+    flavours.foreach { f =>
+      val (storeDir, aggDir) = (tmp("graft_startview_store"), tmp("graft_startview_agg"))
+      StreamMatview.seedView(snapshot, storeDir, aggDir, "k", f)
+      StreamMatview.startView(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(srcDir),
+        storeDir, aggDir, tmp("graft_startview_ckpt"), "k", Seq("seq"), f)
+        .awaitTermination()
+      assert(BucketStore.latestBatch(spark, aggDir).contains(2L), s"$f: not settled")
+      val recompute = (f match {
+        case cs: CountSum => cs
+        case _ => MinMax("op", Seq("seg"), "cents")
+      }).snapshot(BucketStore.read(spark, storeDir).get)
+      val served = StreamMatview.viewSnapshotServed(spark, aggDir)
+      assert(served.columns.toSeq == recompute.columns.toSeq, s"$f: served columns")
+      assert(rows(served) == rows(recompute), s"$f: settled served view vs the recompute")
+      if (!f.isInstanceOf[Sketch])
+        assert(rows(StreamMatview.viewSnapshot(spark, aggDir)) == rows(served),
+          s"$f: dropping the sketch columns changed a view that has none")
+      // the replay did retract s0's bounds: 7 live rows, min 90 (k = 9),
+      // max 500 (k = 30)
+      if (!f.isInstanceOf[CountSum])
+        assert(rows(served.where(col("seg") === "s0")) == Seq("s0|7|1490|90|500"), s"$f: s0")
+    }
+  }
+
   test("gated stream results are identical under the RocksDB state store provider") {
     // the provider a big-state production deployment runs; not
     // adopted for the bench (measured no win at fixture state sizes)
